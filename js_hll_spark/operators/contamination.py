@@ -303,8 +303,8 @@ def contamination_bloom(
         )
     )
     result = result.filter(F.col("frac") >= min_frac)
-    # sizing introspection (advisory attributes, the _retire_ckpt_id
-    # convention): what the auto-sizer actually built
+    # sizing introspection (advisory attributes on the result): what
+    # the auto-sizer actually built
     result._bloom_n_bits = n_bits
     result._bloom_n_hashes = n_hashes
     result._bloom_n_distinct = int(len(hashes))

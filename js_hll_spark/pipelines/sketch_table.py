@@ -215,8 +215,8 @@ def merge_into_sketch_table(
     spark = df.sparkSession
     # checkpoint the batch aggregation ONCE: the merge plan references
     # it from three places (the affected-partition distinct, the
-    # semi-join probe, and merge_sketch_tables' union read twice), and
-    # an unmaterialized subtree would re-run the full batch aggregation
+    # semi-join probe, and merge_sketch_tables' union), and an
+    # unmaterialized subtree would re-run the full batch aggregation
     # for each — KB-sized sketch rows, so the pin is bounded
     new = hll_sketch(
         df, value_col, by=[partition_col, *by], estimate=False, **sketch_kw
@@ -247,12 +247,9 @@ def merge_into_sketch_table(
         # materialize before the overwrite: merged reads lazily from the
         # very partitions the writer replaces; localCheckpoint forces the
         # read to finish first (bounded — sketch rows are KB-sized)
-        pre = merge_sketch_tables(old, new, [partition_col, *by])
-        merged = pre.localCheckpoint()
-        # merge_sketch_tables checkpoints its internal union (so the two
-        # aggregates share one evaluation) and hands back the RDD id —
-        # now that `merged` is materialized that union is retired
-        unpersist_by_id(spark, getattr(pre, "_retire_ckpt_id", None))
+        merged = merge_sketch_tables(
+            old, new, [partition_col, *by]
+        ).localCheckpoint()
     try:
         (
             merged.write.mode("overwrite")

@@ -1,29 +1,26 @@
-"""Mergeable sketch aggregation over DataFrames — the two-phase harness.
+"""Mergeable sketch aggregation over DataFrames — two engines with
+bit-identical sketches.
 
 Why not a GROUPED_AGG pandas UDF straight on raw rows: that shuffles the
 *raw rows* to their groups — fatal at 10^12 rows (SURVEY.md §4.3-1).
-Instead:
+Both engines reduce each partition before the only raw-data shuffle, so
+a hot key ('en' at 60%) costs at most m register rows or one ~m-byte
+blob per partition, never its raw rows.
 
-1. **Hash JVM-side**: ``F.xxhash64`` (or a murmur column) inside
-   whole-stage codegen; Catalyst prunes the scan down to (keys, value).
-2. **Partial stage** (``mapInPandas``, no shuffle): every input partition
-   reduces to one register file per group key via numpy
-   ``np.maximum.at`` over Arrow batches. Output: one row per
-   (partition, key) carrying ~m bytes of raw registers.
-3. **Optional tree level**: when the partial count per key is large
-   (many input partitions), an intermediate merge keyed by
-   ``(key, partition_id % fanin)`` bounds the final task's input. The
-   union monoid (commutative/associative/idempotent max,
-   /root/reference/src/hll.js:345-346) makes this lossless — the same
-   property that licenses AQE re-merging and salting.
-4. **Final merge + estimate** (``applyInPandas`` after a shuffle of
-   sketches only): element-wise ``np.maximum.reduce``, then the
-   estimator once per group.
+**SQL engine** (``hll_sketch_sql``; default for xxhash64/raw hashes):
+Catalyst hashes, computes rho and aggregates
+``groupBy(keys, idx).agg(max(rho))`` in codegen, then packs each group
+into ONE row with ``collect_list((idx << 8) | val)``. A ``mapInArrow``
+kernel (``hll_assemble``) places the registers, encodes and estimates:
+one Python row per group, keys kept as Arrow columns.
 
-Skew note: the partial stage is itself the skew mitigation — a hot key
-('en' at 60%) still produces exactly one partial row per partition, so
-the merge shuffle is uniform in the number of partitions, never in the
-number of raw rows.
+**Python engine** (``mapInPandas`` harness; required for the AK murmur3
+hash): each partition reduces to one register file per key with numpy
+``np.maximum.at``; an optional tree level keyed by
+``(key, partition_id % fanin)`` bounds the final fan-in (lossless: the
+union is a commutative, associative, idempotent max — reference
+src/hll.js:345-346); the final merge max-reduces the blobs and runs the
+estimator once per group.
 """
 
 from __future__ import annotations
@@ -43,26 +40,14 @@ from pyspark.sql.types import (
 
 from ..config import HLLConfig
 from ..core.hll import HLL, estimate_from_registers, update_registers
-from .blocks import checkpoint_rdd_id as _checkpoint_rdd_id
 from ..hashing import murmur3_64_bytes, murmur3_64_uint64, to_uint64
 
 _HASH_COL = "__h64"
 _SKETCH_COL = "sketch"
 _PID_COL = "__pid"
 _ROWS_COL = "rows_seen"
+_PACKED_COL = "__regs"
 
-
-
-def eq_null_safe_cond(left, right, keys):
-    """Fold an eqNullSafe key-equality join condition — a plain equality
-    join silently DROPS null-keyed groups (NULL = NULL is not true in
-    join conditions), the repo's recurring null-group bug class; every
-    keyed sketch merge joins through this."""
-    cond = None
-    for k in keys:
-        c = left[k].eqNullSafe(right[k])
-        cond = c if cond is None else cond & c
-    return cond
 
 def _null_safe_change_mask(kcols: list[pd.Series]) -> np.ndarray:
     """Row mask marking group boundaries in key-sorted batches, treating
@@ -219,14 +204,15 @@ def _zero_partial_seed(spark, config: HLLConfig, schema: StructType) -> DataFram
 
 
 def keyed_carry_stream(partials, group_cols, schema, *, prepare, fold, finish):
-    """The sorted-stream-with-carry skeleton shared by the r4 batched
-    keyed merges (HLL register merge, tree-fanin intermediate, and the
-    companion-sketch merge in sketch_agg) — ONE implementation of the
+    """The sorted-stream-with-carry skeleton shared by the batched keyed
+    merges of serialized sketches: the python engine's register merge
+    and tree-fanin intermediate, the keyed :func:`hll_rollup` (which
+    ``hll_sketch_explicit`` and ``merge_sketch_tables`` go through) and
+    the companion-sketch merge in sketch_agg — ONE implementation of the
     subtle part: null-safe group boundaries, per-segment folding, the
     cross-Arrow-batch carry, the end-of-iterator flush. (The r3
-    NaN!=NaN null-group-split bug lived exactly in this skeleton; the
-    legacy assembly/rollup streams in this file predate the helper and
-    keep their own proven per-row variants.)
+    NaN!=NaN null-group-split bug lived exactly in this skeleton.) The
+    sql engine needs none of it: Catalyst forms its groups.
 
     ``prepare(pdf) -> batch_ctx`` runs once per Arrow batch (vectorized
     extraction); ``fold(state_or_None, batch_ctx, start, end) -> state``
@@ -402,10 +388,12 @@ def hll_sketch(
     sketches (exact hash sets below the auto threshold — the exactness
     tier, see hll_sketch_explicit). 'auto' picks by hash_method.
 
-    Float/double group keys: NaN and NULL conflate across the Arrow
-    boundary (both surface as NaN in pandas), so a NaN-keyed group
-    merges into the null group in the Python-side assembly — cast such
-    keys to string/int upstream if NaN must stay a distinct group.
+    Group keys with ``engine='python'`` (and in :func:`hll_rollup`):
+    keys cross the Arrow boundary through pandas, where NaN and NULL
+    conflate (a NaN-keyed group merges into the null group) and a
+    nullable bigint key becomes float64 (keys above 2**53 can merge) —
+    cast such keys to string upstream. The sql engine keeps keys as
+    Arrow columns and returns exactly Catalyst's groups.
 
     High-cardinality group keys: both engines carry O(keys x m) state —
     the sql engine in Catalyst's spill-capable HashAggregate, the python
@@ -667,10 +655,6 @@ def hll_sketch_explicit(
             out[_ROWS_COL] = [rows[gk] for gk in sk]
             yield pd.DataFrame(out)
 
-    # materialize partials once: the rollup and the rows_seen aggregate
-    # are two consumers, and without this the full scan + hash-set build
-    # would execute twice (partials are one small row per key per
-    # partition — cheap to pin)
     partials = hashed.mapInPandas(fn, schema=schema)
     if not keys:
         # empty-input seed (see _zero_partial_seed): one EMPTY spec
@@ -685,26 +669,58 @@ def hll_sketch_explicit(
         partials = partials.unionByName(
             df.sparkSession.range(1).mapInPandas(seed_fn, schema=schema)
         )
-    partials = partials.localCheckpoint()
-    merged = hll_rollup(partials, keys, estimate=estimate)
-    _ckpt_id = _checkpoint_rdd_id(partials)
-    if keys:
-        rows_df = partials.groupBy(*keys).agg(F.sum(_ROWS_COL).alias(_ROWS_COL))
-        out = merged.join(rows_df, eq_null_safe_cond(merged, rows_df, keys)).select(
-            *[merged[k] for k in keys],
-            *[merged[c] for c in merged.columns if c not in keys],
-            rows_df[_ROWS_COL],
-        )
-    else:
-        rows_df = partials.groupBy().agg(F.sum(_ROWS_COL).alias(_ROWS_COL))
-        out = merged.crossJoin(rows_df)
+    out = hll_rollup(partials, keys, estimate=estimate, rows_col=_ROWS_COL)
     if not keep_sketch:
         out = out.drop(_SKETCH_COL)
-    # advisory retirement handle (same convention as merge_sketch_tables):
-    # long-lived sessions can release the pinned partials once the result
-    # is materialized — blocks.unpersist_by_id(spark, out._retire_ckpt_id)
-    out._retire_ckpt_id = _ckpt_id
     return out
+
+
+def _assemble_kernel(keys, config, schema, *, estimate, keep_sketch):
+    """mapInArrow kernel for hll_sketch_sql: each input row is one group
+    — its key columns, the ``__regs`` list of packed ``(idx << 8) | val``
+    registers and ``rows_seen`` — and becomes one output row. Key columns
+    pass through as Arrow arrays (never pandas, so NULL, NaN and int64
+    keys above 2**53 stay exactly the groups Catalyst formed).
+
+    Memory is O(m) per group: one register file is reused for every
+    group, and output goes out in chunks of about 4 MB of registers, so
+    neither side ever holds a (batch rows x m) matrix. Input batches are
+    capped by ``spark.sql.execution.arrow.maxBytesPerBatch`` (64 MB by
+    default)."""
+    m = config.m
+    names = [f.name for f in schema.fields]
+    chunk = max(1, (4 << 20) // m)
+
+    def hll_assemble(batches):
+        import pyarrow as pa
+
+        sk = HLL(config, explicit_threshold=0, sparse_on=False)
+        regs = sk._regs
+        for batch in batches:
+            lists = batch.column(_PACKED_COL)
+            offs = lists.offsets.to_numpy()
+            packed = lists.values.to_numpy()
+            for lo in range(0, batch.num_rows, chunk):
+                part = batch.slice(lo, chunk)
+                sketches, ndvs = [], []
+                for i in range(lo, lo + part.num_rows):
+                    p = packed[offs[i] : offs[i + 1]]
+                    regs.fill(0)
+                    # (key, idx) rows are unique after the register agg
+                    regs[p >> 8] = p & 0xFF
+                    if keep_sketch:
+                        sketches.append(sk.to_bytes())
+                    if estimate:
+                        ndvs.append(estimate_from_registers(regs, config))
+                cols = [part.column(k) for k in keys]
+                if keep_sketch:
+                    cols.append(pa.array(sketches, pa.binary()))
+                if estimate:
+                    cols.append(pa.array(ndvs, pa.float64()))
+                cols.append(part.column(_ROWS_COL))
+                yield pa.RecordBatch.from_arrays(cols, names=names)
+
+    return hll_assemble
 
 
 def hll_sketch_sql(
@@ -724,13 +740,18 @@ def hll_sketch_sql(
     with rho = 1 + ctz(h >> log2m) expressed via ``bit_count`` — the
     whole per-row path stays inside whole-stage codegen and the partial
     HashAggregate collapses each partition to <= m rows per key before
-    the shuffle. Python sees only <= m (index, value) rows per group, to
-    assemble registers and run the estimator once.
+    the shuffle. A second aggregate packs each group's registers into
+    one list, so Python sees one row per group: one Arrow map
+    (``hll_assemble``) places the registers, encodes and estimates.
 
     Trade-off vs the mapInPandas harness: no Arrow transfer of raw
-    hashes (wins when rows >> m x partitions), but the shuffle carries
-    up to m rows per (key, partition) instead of one ~m-byte blob.
-    Results are bit-identical between the two paths (tested).
+    hashes (wins when rows >> m x partitions), but the shuffles carry
+    up to m register rows per (key, partition) instead of one ~m-byte
+    blob. Results are bit-identical between the two paths (tested).
+
+    Keyed and unkeyed calls share the one path: the global
+    ``groupBy()`` returns exactly one row even on empty input (an empty
+    list, so ndv 0 — countDistinct semantics).
 
     ``_prehashed``: ``value_col`` already holds the xxhash64 value (used
     by hll_ndv_multi's one-scan long form; caller filtered nulls).
@@ -781,95 +802,26 @@ def hll_sketch_sql(
     # row otherwise updates a count slot beside the max slot in the
     # partial HashAggregate, pure overhead when only ndv survives
     aggs = [F.max("__rho").alias("__val")]
+    rows = F.lit(0).cast("long")
     if _count_rows:
         aggs.append(F.count(F.lit(1)).alias("__n"))
-    per_register = (
-        df.select(*keys, idx, rho).groupBy(*keys, "__idx").agg(*aggs)
+        # a global aggregate over no rows sums to NULL
+        rows = F.coalesce(F.sum("__n"), F.lit(0).cast("long"))
+    # register values fit 8 bits (regwidth <= 8): one long per register
+    packed = F.collect_list(F.shiftleft("__idx", 8).bitwiseOR(F.col("__val")))
+    per_group = (
+        df.select(*keys, idx, rho)
+        .groupBy(*keys, "__idx")
+        .agg(*aggs)
+        .groupBy(*keys)
+        .agg(packed.alias(_PACKED_COL), rows.alias(_ROWS_COL))
     )
-    if not _count_rows:
-        per_register = per_register.withColumn(
-            "__n", F.lit(0).cast("long")
-        )
 
-    def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        regs = np.zeros(config.m, dtype=np.uint8)
-        # max-merge, not assignment: rows are unique per idx post-agg
-        # EXCEPT for the empty-input seed row (idx 0, val 0), which must
-        # never overwrite a real register
-        np.maximum.at(
-            regs, pdf["__idx"].to_numpy(), pdf["__val"].to_numpy()
-        )
-        out = {k: [pdf[k].iloc[0]] for k in keys}
-        if keep_sketch:
-            s = HLL(config, explicit_threshold=0, sparse_on=False)
-            s._regs = regs
-            out[_SKETCH_COL] = [s.to_bytes()]
-        if estimate:
-            out["ndv"] = [estimate_from_registers(regs, config)]
-        out[_ROWS_COL] = [int(pdf["__n"].sum())]
-        return pd.DataFrame(out)
-
-    fields = [df.schema[k] for k in keys]
-    if keep_sketch:
-        fields.append(StructField(_SKETCH_COL, BinaryType(), False))
-    if estimate:
-        fields.append(StructField("ndv", DoubleType(), False))
-    fields.append(StructField(_ROWS_COL, LongType(), False))
-    schema = StructType(fields)
-    if not keys:
-        # seed one (idx 0, val 0, n 0) row: an empty/all-null input must
-        # still produce one global row with ndv 0 (countDistinct
-        # semantics) — regs[0] = max(·, 0) leaves real inputs untouched
-        seed = df.sparkSession.range(1).select(
-            F.lit(0).cast("long").alias("__idx"),
-            F.lit(0).alias("__val"),
-            F.lit(0).cast("long").alias("__n"),
-        )
-        per_register = per_register.unionByName(seed)
-        return per_register.groupBy(F.lit(1).alias("__g")).applyInPandas(
-            lambda pdf: assemble(pdf), schema=schema
-        )
-
-    # Keyed assembly streams WHOLE Arrow batches through one python call
-    # instead of one applyInPandas call per group — per-group python
-    # overhead (~ms) otherwise dominates at high key cardinality (1M
-    # groups x 2 ms = half a python-hour on one stage). Same shuffle
-    # count as groupBy (hash repartition + in-partition sort); registers
-    # and estimates go through the identical numpy code, so outputs stay
-    # bit-identical to the per-group path (tested). Shares the carry
-    # skeleton with the register/companion/rollup merges (r4).
-    def prepare(pdf):
-        return (
-            pdf["__idx"].to_numpy(),
-            pdf["__val"].to_numpy(),
-            pdf["__n"].to_numpy(),
-        )
-
-    def fold(state, ctx, start, end):
-        idx_a, val_a, n_a = ctx
-        if state is None:
-            state = (np.zeros(config.m, dtype=np.uint8), 0)
-        regs, nsum = state
-        # (key, idx) rows are unique post-agg; a key straddling two
-        # batches contributes disjoint idx sets -> assignment
-        regs[idx_a[start:end]] = val_a[start:end]
-        return regs, nsum + int(n_a[start:end].sum())
-
-    def finish(key, state):
-        regs, nsum = state
-        row = list(key)
-        if keep_sketch:
-            s = HLL(config, explicit_threshold=0, sparse_on=False)
-            s._regs = regs
-            row.append(s.to_bytes())
-        if estimate:
-            row.append(estimate_from_registers(regs, config))
-        row.append(nsum)
-        return tuple(row)
-
-    return keyed_carry_stream(
-        per_register, keys, schema, prepare=prepare, fold=fold, finish=finish
+    schema = _merge_schema(df, keys, estimate=estimate, keep_sketch=keep_sketch)
+    kernel = _assemble_kernel(
+        keys, config, schema, estimate=estimate, keep_sketch=keep_sketch
     )
+    return per_group.mapInArrow(kernel, schema=schema)
 
 
 def hll_ndv(
@@ -956,12 +908,16 @@ def hll_rollup(
     sketch_col: str = _SKETCH_COL,
     *,
     estimate: bool = True,
+    rows_col: str | None = None,
 ) -> DataFrame:
     """Re-aggregate a persisted sketch table to a coarser grain without
     touching raw data — the reference's ``union()`` at table scale
     (src/hll.js:328-349). Input sketches are spec-encoded bytes and may
-    mix EXPLICIT/SPARSE/FULL and even shapes (auto-fold applies)."""
+    mix EXPLICIT/SPARSE/FULL and even shapes (auto-fold applies).
+    ``rows_col`` (e.g. ``rows_seen``) is summed per group in the same
+    fold and emitted last."""
     keys = list(by)
+    carried = [rows_col] if rows_col else []  # selected and emitted
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         acc: HLL | None = None
@@ -972,6 +928,8 @@ def hll_rollup(
         out[_SKETCH_COL] = [acc.to_bytes()]
         if estimate:
             out["ndv"] = [acc.algorithm_cardinality()]
+        if rows_col:
+            out[rows_col] = [int(pdf[rows_col].sum())]
         return pd.DataFrame(out)
 
     fields = [df.schema[k] for k in keys] + [
@@ -979,6 +937,7 @@ def hll_rollup(
     ]
     if estimate:
         fields.append(StructField("ndv", DoubleType(), False))
+    fields += [StructField(c, LongType(), False) for c in carried]
     if not keys:
         return df.groupBy(*keys).applyInPandas(fn, schema=StructType(fields))
 
@@ -988,22 +947,30 @@ def hll_rollup(
     # per-group call overhead dominates at high rollup-key cardinality.
     # Shares the carry skeleton with the register/companion merges (r4).
     def prepare(pdf):
-        return pdf[sketch_col].to_numpy()
+        rows = pdf[rows_col].to_numpy() if rows_col else None
+        return pdf[sketch_col].to_numpy(), rows
 
-    def fold(acc, blobs, start, end):
+    def fold(state, ctx, start, end):
+        blobs, rows = ctx
+        acc, n = state if state is not None else (None, 0)
         for i in range(start, end):
             s = HLL.from_bytes(bytes(blobs[i]))
             acc = s if acc is None else acc.union(s)
-        return acc
+        if rows is not None:
+            n += int(rows[start:end].sum())
+        return acc, n
 
-    def finish(key, acc):
+    def finish(key, state):
+        acc, n = state
         row = list(key) + [acc.to_bytes()]
         if estimate:
             row.append(acc.algorithm_cardinality())
+        if rows_col:
+            row.append(n)
         return tuple(row)
 
     return keyed_carry_stream(
-        df.select(*keys, sketch_col),
+        df.select(*keys, sketch_col, *carried),
         keys,
         StructType(fields),
         prepare=prepare,

@@ -40,32 +40,16 @@ def merge_sketch_tables(
     current: DataFrame | None, incoming: DataFrame, keys: Sequence[str]
 ) -> DataFrame:
     """Union-merge two sketch tables on ``keys`` (full outer; sketches
-    union where both sides have rows)."""
-    from ..spark.agg import eq_null_safe_cond, hll_rollup
-    from ..spark.blocks import checkpoint_rdd_id
+    union and ``rows_seen`` sums where both sides have rows). One keyed
+    fold does both, so the union is read once and nothing is pinned."""
+    from ..spark.agg import hll_rollup
 
     if current is None:
         return incoming
     both = current.select(*keys, "sketch", "rows_seen").unionByName(
         incoming.select(*keys, "sketch", "rows_seen")
-    ).localCheckpoint()
-    # the union feeds TWO aggregates (rollup + rows_seen sum); without
-    # the checkpoint the whole upstream subtree — batch partials AND the
-    # state parquet read — executed twice per merge (the same
-    # dual-consumer shape hll_sketch_explicit checkpoints for). The
-    # checkpoint's RDD id rides on the result as ``_retire_ckpt_id`` so
-    # the caller can release the blocks once the result is materialized
-    # (js_hll_spark.spark.blocks.unpersist_by_id — both in-repo callers
-    # do; a leaked id costs one bounded sketch-table copy).
-    merged = hll_rollup(both, keys, estimate=False)
-    rows = both.groupBy(*keys).agg(F.sum("rows_seen").alias("rows_seen"))
-    out = merged.join(rows, eq_null_safe_cond(merged, rows, keys)).select(
-        *[merged[k] for k in keys],
-        merged["sketch"],
-        rows["rows_seen"],
     )
-    out._retire_ckpt_id = checkpoint_rdd_id(both)
-    return out
+    return hll_rollup(both, keys, estimate=False, rows_col="rows_seen")
 
 
 def _resolve_snapshot(state_dir: str) -> str | None:
@@ -248,7 +232,7 @@ def streaming_ndv(
         merged = merge_sketch_tables(
             current, partials, ["window_start", *keys]
         )
-        retire = [getattr(merged, "_retire_ckpt_id", None)]
+        retire = []
         if retention is not None:
             # bound state by EVENT time: drop windows older than the
             # newest window seen minus the retention horizon (one

@@ -88,7 +88,7 @@ def test_sql_engine_partial_aggregates_before_shuffle(spark, events):
     )
     # two exchanges: (key, idx) for the register agg — fed by a PARTIAL
     # HashAggregate that collapses each partition to <= m rows per key —
-    # and (key) for the assembly step over <= m agg rows per key
+    # and (key) for the collect_list that packs each group into one row
     assert p.count("Exchange") == 2
     assert "partial_max" in p
     assert p.index("partial_max") > p.index("Exchange", p.index("Exchange") + 1)
@@ -172,17 +172,18 @@ def test_composed_dedup_single_raw_scan(spark):
 
 
 def test_sql_engine_keyed_assembly_is_batched(spark, events):
-    """The keyed sql-engine assembly must be the batched mapInPandas
-    shape (repartition + sort + MapInPandas), never per-group
-    FlatMapGroupsInPandas — per-group python calls are a scale
-    bottleneck at high key cardinality."""
+    """The keyed sql-engine assembly must hand Python one row per group:
+    Catalyst packs each group's registers with collect_list and one
+    MapInArrow kernel assembles them — no per-group
+    FlatMapGroupsInPandas call, and no sort for a stream carry."""
     p = plan(
         hll_sketch(events, "user_id", by=["event_type"], log2m=12, engine="sql")
     )
-    assert "MapInPandas" in p
+    assert "MapInArrow" in p
+    assert p.index("MapInArrow") < p.index("collect_list")  # over the agg
     assert "FlatMapGroupsInPandas" not in p
-    assert p.count("Exchange") == 2  # partial-agg shuffle + key repartition
-    assert "Sort" in p  # in-partition key contiguity for the stream carry
+    assert p.count("Exchange") == 2  # (key, idx) agg + (key) collect_list
+    assert "Sort" not in p
 
 
 def test_sketch_agg_keyed_merge_is_batched(spark, documents):

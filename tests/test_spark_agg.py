@@ -756,3 +756,109 @@ def test_default_cutoff_byte_threshold_alone_is_encoded():
     assert default_cutoff_byte(explicit_auto=True) & 63 == 63
     assert default_cutoff_byte(explicit_auto=False) & 63 == 0
     assert default_cutoff_byte() & 63 == 63
+
+
+def test_sql_engine_groups_match_catalyst(spark):
+    """The sql engine returns exactly Catalyst's groups. Keys that cross
+    into pandas used to merge or split groups silently: a nullable bigint
+    key became float64, so 2**53 and 2**53 + 1 formed one group of 120
+    instead of two of 50 and 70, and a NaN double key came back as a
+    second NULL-keyed row. Group set and NDVs must match
+    groupBy(k).agg(countDistinct)."""
+    big = 2**53
+    longs = (
+        [(big, f"a{i}") for i in range(50)]
+        + [(big + 1, f"b{i}") for i in range(70)]
+        + [(None, f"c{i}") for i in range(30)]
+    )
+    doubles = (
+        [(float("nan"), f"a{i}") for i in range(40)]
+        + [(None, f"b{i}") for i in range(25)]
+        + [(1.5, f"c{i}") for i in range(60)]
+    )
+
+    def norm(k):
+        return "NaN" if isinstance(k, float) and math.isnan(k) else k
+
+    for rows, ddl in ((longs, "k bigint, v string"), (doubles, "k double, v string")):
+        df = spark.createDataFrame(rows, ddl)
+        got = hll_sketch(df, "v", by=["k"], log2m=14, engine="sql").collect()
+        exact = {
+            norm(r["k"]): r["n"]
+            for r in df.groupBy("k").agg(F.countDistinct("v").alias("n")).collect()
+        }
+        assert sorted(map(repr, (norm(r["k"]) for r in got))) == sorted(
+            map(repr, exact)
+        ), ddl
+        for r in got:
+            n = exact[norm(r["k"])]
+            assert abs(r["ndv"] - n) <= max(1.0, 0.02 * n), (ddl, r["k"])
+
+
+def test_assemble_kernel_memory_is_bounded_per_group():
+    """The sql engine's assembly kernel holds O(m) memory per group:
+    4,096 groups at log2m=16 as one (groups x m) register matrix would
+    take 256 MB. The tracemalloc peak must stay under 32 MB, and every
+    output sketch must equal HLL.to_bytes of its group's registers."""
+    import tracemalloc
+
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql.types import (
+        BinaryType,
+        DoubleType,
+        LongType,
+        StructField,
+        StructType,
+    )
+
+    from js_hll_spark.config import HLLConfig
+    from js_hll_spark.core.hll import estimate_from_registers
+    from js_hll_spark.spark.agg import _assemble_kernel
+
+    config = HLLConfig(16, 5)
+    n_groups, per_group = 4096, 32
+    rng = np.random.default_rng(7)
+    idx = np.stack(
+        [rng.choice(config.m, per_group, replace=False) for _ in range(n_groups)]
+    ).astype(np.int64)
+    val = rng.integers(1, config.max_register_value + 1, idx.shape, dtype=np.int64)
+    offsets = pa.array(np.arange(n_groups + 1, dtype=np.int32) * per_group)
+    batch = pa.RecordBatch.from_arrays(
+        [
+            pa.array(np.arange(n_groups, dtype=np.int64)),
+            pa.ListArray.from_arrays(offsets, pa.array(((idx << 8) | val).ravel())),
+            pa.array(np.full(n_groups, 3, dtype=np.int64)),
+        ],
+        names=["k", "__regs", "rows_seen"],
+    )
+
+    schema = StructType(
+        [
+            StructField("k", LongType(), True),
+            StructField("sketch", BinaryType(), False),
+            StructField("ndv", DoubleType(), False),
+            StructField("rows_seen", LongType(), False),
+        ]
+    )
+    kernel = _assemble_kernel(["k"], config, schema, estimate=True, keep_sketch=True)
+
+    seen = 0
+    tracemalloc.start()
+    try:
+        for out in kernel(iter([batch])):
+            keys = out.column("k").to_numpy()
+            sketches = out.column("sketch").to_pylist()
+            ndvs = out.column("ndv").to_numpy()
+            assert out.column("rows_seen").to_pylist() == [3] * out.num_rows
+            for k, blob, ndv in zip(keys, sketches, ndvs):
+                ref = HLL(config, explicit_threshold=0, sparse_on=False)
+                ref._regs[idx[k]] = val[k]
+                assert blob == ref.to_bytes(), k
+                assert ndv == estimate_from_registers(ref._regs, config), k
+            seen += out.num_rows
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert seen == n_groups
+    assert peak < 32 << 20, f"assembly peak {peak / 2**20:.1f} MB"
