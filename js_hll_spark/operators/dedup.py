@@ -569,23 +569,29 @@ def ngram_jaccard(
         packed = lo is not None and lo >= 0 and hi < (1 << 31)
     if packed:
         n = F.size("ids")
+        low = F.lit((1 << 32) - 1)
+        # pack in long arithmetic: Java masks an int's shift count to
+        # 5 bits, so shiftleft(int, 32) would be a no-op
         pair_longs = F.flatten(
             F.transform(
                 "ids",
                 lambda x, i: F.transform(
                     F.slice("ids", i + F.lit(2), n - i - F.lit(1)),
-                    lambda y: F.shiftleft(x, 32).bitwiseOR(y),
+                    lambda y: F.shiftleft(x.cast("long"), 32).bitwiseOR(
+                        y.cast("long").bitwiseAND(low)
+                    ),
                 ),
             )
         )
+        id_type = grouped.schema["ids"].dataType.elementType
         inter = (
             grouped.filter(n >= 2)
             .select(F.explode(pair_longs).alias("pk"))
             .groupBy("pk")
             .agg(F.count(F.lit(1)).alias("n_inter"))
             .select(
-                F.shiftrightunsigned("pk", 32).alias("id_a"),
-                F.col("pk").bitwiseAND(F.lit((1 << 32) - 1)).alias("id_b"),
+                F.shiftrightunsigned("pk", 32).cast(id_type).alias("id_a"),
+                F.col("pk").bitwiseAND(low).cast(id_type).alias("id_b"),
                 "n_inter",
             )
         )

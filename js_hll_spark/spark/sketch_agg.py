@@ -8,6 +8,11 @@ Value transport:
 - hash-positional sketches (cms, bloom) consume ``F.xxhash64(col)``
   computed JVM-side; raw values never cross into Python
 - value sketches (kll, tdigest) consume the column cast to double
+
+``heavy_hitters`` does not go through the harness: Catalyst counts each
+(group, value) exactly, and two ``mapInArrow`` kernels build the
+count-min partials with exact-count candidates, then merge and score
+them, one row per group.
 """
 
 from __future__ import annotations
@@ -25,12 +30,14 @@ from pyspark.sql.types import (
 )
 
 from ..core.bloom import BloomFilter
-from ..core.cms import CountMinSketch
+from ..core.cms import CountMinSketch, km_positions
 from ..core.kll import KLLSketch
 from ..core.tdigest import TDigest
 from ..hashing import to_uint64
 
 _VAL = "__v"
+_CMS = "__cms"
+_CANDS = "__cands"
 
 # null-safe dict identity for groupby keys across Arrow batches — the
 # canonical normalizer lives beside the HLL engine's partial fns
@@ -370,6 +377,129 @@ class SpaceSavingCounter:
         return self.counts.nlargest(n)
 
 
+def _run_starts(cols: list, prev: list | None) -> np.ndarray:
+    """Row indexes of key-sorted Arrow columns where a run of equal keys
+    starts; ``prev`` is the previous batch's last row (None for the
+    first batch). NULL equals NULL and NaN equals NaN, as in Catalyst's
+    grouping."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if prev is not None:
+        cols = [pa.concat_arrays([p, c]) for p, c in zip(prev, cols)]
+    n = len(cols[0])
+    new = np.zeros(n, dtype=bool)
+    new[0] = prev is None
+    for c in cols:
+        a, b = c.slice(1), c.slice(0, n - 1)
+        ne = pc.not_equal(a, b)
+        if pa.types.is_floating(c.type):
+            ne = pc.and_(ne, pc.invert(pc.and_(pc.is_nan(a), pc.is_nan(b))))
+        ne = pc.if_else(pc.is_null(ne), pc.xor(pc.is_null(a), pc.is_null(b)), ne)
+        new[1:] |= ne.to_numpy(zero_copy_only=False)
+    return np.flatnonzero(new) - (prev is not None)
+
+
+def _hh_partial_kernel(keys: list[str], schema: StructType, *, depth: int, width: int, pool: int):
+    """mapInArrow kernel of heavy_hitters' first pass over one
+    partition's counted rows (keys..., __v, __n, __h), sorted by the
+    keys. Each run of equal keys emits one row with the group's
+    count-min partial and NULL value, and one row with a NULL sketch for
+    each of its top-``pool`` values by (count desc, value asc).
+
+    Memory is one CMS and ``pool`` candidate rows, whatever the number
+    of groups: a run stays open across batches, and output goes out in
+    chunks of about 4 MB of sketches."""
+    chunk = max(1, (4 << 20) // (8 * depth * width))
+    order = [("__n", "descending"), (_VAL, "ascending")]
+
+    def hh_partial(batches):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        sk = CountMinSketch(depth, width)
+        top = prev = None  # the open run's candidates; the last row's keys
+        out: list = []
+
+        def close_run() -> None:
+            v, h = top.column(_VAL), top.column("__h")
+            head = [top.column(kc).slice(0, 1) for kc in keys]
+            blob = [pa.array([sk.to_bytes()], pa.binary()), pa.nulls(1, v.type), pa.nulls(1, h.type)]
+            cands = [top.column(kc) for kc in keys] + [pa.nulls(len(v), pa.binary()), v, h]
+            out.extend(pa.table(c, names=schema.names) for c in (head + blob, cands))
+            sk.table.fill(0)
+            sk.total = 0
+
+        for batch in batches:
+            n = batch.num_rows
+            if n == 0:
+                continue
+            if keys:
+                kcols = [batch.column(kc) for kc in keys]
+                starts = _run_starts(kcols, prev)
+                prev = [c.slice(n - 1, 1) for c in kcols]
+            else:
+                starts = np.array([0] if top is None else [], dtype=np.int64)
+            opens_run = starts.size > 0 and starts[0] == 0
+            rows = pa.Table.from_batches([batch]).select(keys + [_VAL, "__h", "__n"])
+            hashes = to_uint64(batch.column("__h").to_numpy())
+            counts = batch.column("__n").to_numpy()
+            cuts = np.union1d(starts, [0, n])
+            for lo, hi in zip(cuts[:-1], cuts[1:]):
+                if top is not None and (lo > 0 or opens_run):
+                    close_run()
+                    top = None
+                    if len(out) >= 2 * chunk:
+                        yield from pa.concat_tables(out).combine_chunks().to_batches()
+                        out.clear()
+                sk.update_hashed(hashes[lo:hi], counts[lo:hi])
+                piece = rows.slice(lo, hi - lo)
+                top = piece if top is None else pa.concat_tables([top, piece])
+                if top.num_rows > pool:
+                    top = top.take(pc.select_k_unstable(top, pool, order))
+        if top is not None:
+            close_run()
+        if out:
+            yield from pa.concat_tables(out).combine_chunks().to_batches()
+
+    return hh_partial
+
+
+def _hh_score_kernel(keys: list[str], schema: StructType, *, depth: int, width: int):
+    """mapInArrow kernel of heavy_hitters' second pass: one row per group
+    (keys, list of count-min partials, list of candidate (value, hash)
+    structs) in; the partials summed into one reused table, and one
+    (keys..., value, est_count) row per candidate out. Key columns pass
+    through as Arrow arrays."""
+    rows = np.arange(depth)[:, None]
+
+    def hh_score(batches):
+        import pyarrow as pa
+
+        table = np.zeros((depth, width), dtype=np.int64)
+        for batch in batches:
+            sketches, cands = batch.column(_CMS), batch.column(_CANDS)
+            s_offs = sketches.offsets.to_numpy()
+            c_offs = cands.offsets.to_numpy()
+            base, end = c_offs[0], c_offs[-1]
+            values = cands.values.field(_VAL).slice(base, end - base)
+            hashes = to_uint64(cands.values.field("__h").to_numpy()[base:end])
+            est = np.empty(end - base, dtype=np.int64)
+            for i in range(batch.num_rows):
+                table.fill(0)
+                for j in range(s_offs[i], s_offs[i + 1]):
+                    # the CMS1 table after its 20-byte header (to_bytes)
+                    blob = sketches.values[j].as_buffer()
+                    table += np.frombuffer(blob, "<i8", offset=20).reshape(depth, width)
+                lo, hi = c_offs[i] - base, c_offs[i + 1] - base
+                est[lo:hi] = table[rows, km_positions(hashes[lo:hi], depth, width)].min(axis=0)
+            owner = pa.array(np.repeat(np.arange(batch.num_rows), np.diff(c_offs)))
+            cols = [batch.column(kc).take(owner) for kc in keys]
+            yield pa.RecordBatch.from_arrays(cols + [values, pa.array(est)], names=schema.names)
+
+    return hh_score
+
+
 def heavy_hitters(
     df: DataFrame,
     col: str,
@@ -379,203 +509,67 @@ def heavy_hitters(
     depth: int = 5,
     width: int = 8192,
     candidate_pool: int | None = None,
-    candidates: str = "partition",
 ) -> DataFrame:
-    """Approximate top-k frequent values — per ``by`` group when given: a
-    candidate set is scored against the group's count-min sketch; top-k
-    by estimated count. Returns (keys..., value, est_count).
+    """Approximate top-k frequent values, per ``by`` group when given:
+    (keys..., value, est_count), each group's k candidates with the
+    largest count-min estimates (ties by value).
 
-    Candidate generation (``candidates``):
-    - 'partition' (default, the sketch-driven scale path): each partition
-      nominates its local top values via a bounded space-saving counter
-      per group (mapInPandas). Only pool x partitions x groups candidate
-      strings ever shuffle; a true heavy hitter is by pigeonhole a local
-      heavy hitter in at least one partition, and the CMS (not the lossy
-      local counts) produces the reported estimates. Per-partition state
-      is bounded per GROUP — with very many groups per partition prefer
-      'jvm' (or pre-partition by the group keys).
-    - 'jvm': exact two-phase HashAggregate count + per-group window
-      top-pool. The map-side partial agg collapses per-partition
-      duplicates before the shuffle, but the shuffle still carries the
-      full distinct key space — this is the exact twin for oracles/tests,
-      not the 100 TB default.
+    One lazy pass serves keyed and unkeyed calls. Catalyst counts
+    ``groupBy(keys, value)``; its partial aggregate collapses duplicates
+    before the shuffle, so each (group, value) count is then exact and
+    sits in one partition. One Arrow map per partition (``hh_partial``)
+    builds each group's count-min partial from (xxhash64, count) and
+    keeps the group's top ``candidate_pool`` values by exact count, so
+    every value of a group's exact top ``candidate_pool`` is a
+    candidate. Keyed rows are sorted by the keys within each partition,
+    so the map holds one sketch at a time. ``groupBy(keys)`` gathers each
+    group's partials and candidates into one row, and a second Arrow map
+    (``hh_score``) merges the partials and estimates every candidate;
+    ``orderBy``/``limit`` or a per-group window keeps k.
 
-    The CMS remains the persistable, mergeable frequency artifact either
-    way; its one-sided error bounds the reported counts
-    (SURVEY.md §2.2 'frequency')."""
-    from pyspark.sql.types import StringType
-
-    keys = list(by)
-    src = df.select(
-        *keys, F.col(col).cast("string").alias(_VAL)
-    ).filter(F.col(_VAL).isNotNull())
-    # r7: the candidate pass and the CMS build are two full consumers of
-    # the (typically exploded-token) input chain — materialize it once
-    # so the second pass reads blocks instead of re-running
-    # scan -> tokenize -> explode (the value stream is a narrow single
-    # column, so the checkpoint is small relative to recomputing it)
-    src = src.localCheckpoint()
-    pool = candidate_pool or max(200, 10 * k)
-    if keys:
-        return _heavy_hitters_grouped(
-            src, keys, k=k, depth=depth, width=width, pool=pool,
-            candidates=candidates,
-        )
-
-    if candidates == "jvm":
-        cand = (
-            src.groupBy(_VAL)
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .orderBy(F.desc("__n"), F.asc(_VAL))
-            .limit(pool)
-            .select(F.col(_VAL).alias("value"))
-        )  # global path continues below
-    else:
-
-        def candidates_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            counter = SpaceSavingCounter(pool)
-            for pdf in batches:
-                counter.update(pdf[_VAL].value_counts())
-            top = counter.top(pool)
-            if top is not None:
-                yield pd.DataFrame({"value": top.index.astype(str)})
-
-        cand = src.mapInPandas(
-            candidates_fn, schema=StructType([StructField("value", StringType())])
-        ).distinct()
-
-    cms_df = sketch_agg(src, _VAL, kind="cms", params={"depth": depth, "width": width})
-    sketch_blob = cms_df.select("sketch")
-
-    # collapse candidates to ONE row before meeting the blob — the same
-    # blob-crosses-once shape as the grouped path; a per-candidate
-    # crossJoin would duplicate the (depth x width x 8)-byte blob onto
-    # every one of the ~pool candidate rows through the final shuffle.
-    # Candidate strings hash JVM-side so probe positions match the build.
-    cand_g = cand.withColumn("__h", F.xxhash64("value")).agg(
-        F.collect_list(F.struct("value", "__h")).alias("__cands")
-    )
-    joined = cand_g.crossJoin(sketch_blob)
-
-    def score_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = CountMinSketch.from_bytes(bytes(pdf["sketch"].iloc[0]))
-        cands = pdf["__cands"].iloc[0]
-        vals = [c["value"] for c in cands]
-        hs = to_uint64(np.array([c["__h"] for c in cands], dtype=np.int64))
-        est = sk.query_hashed(hs)
-        return pd.DataFrame({"value": vals, "est_count": est})
-
-    scored = joined.groupBy(F.lit(1).alias("__g")).applyInPandas(
-        score_fn,
-        schema=StructType(
-            [StructField("value", StringType()), StructField("est_count", LongType())]
-        ),
-    )
-    return scored.orderBy(F.desc("est_count"), F.asc("value")).limit(k)
-
-
-def _heavy_hitters_grouped(
-    src: DataFrame,
-    keys: list[str],
-    *,
-    k: int,
-    depth: int,
-    width: int,
-    pool: int,
-    candidates: str,
-) -> DataFrame:
-    """Per-group heavy hitters: one CMS per group (sketch_agg ``by``),
-    per-group candidate nomination, candidates join their group's sketch
-    on the keys (co-partitioned equi-join, no broadcast of all sketches),
-    and a per-group window top-k. src = (keys..., _VAL string)."""
+    Group keys stay Arrow columns, so NULL, NaN and int64 keys above
+    2**53 are exactly Catalyst's groups. The CMS's one-sided error
+    bounds the reported counts (SURVEY.md §2.2 'frequency')."""
     from pyspark.sql.types import StringType
     from pyspark.sql.window import Window
 
-    key_fields = [src.schema[kcol] for kcol in keys]
-    if candidates == "jvm":
-        w_pool = Window.partitionBy(*keys).orderBy(F.desc("__n"), F.asc(_VAL))
-        cand = (
-            src.groupBy(*keys, _VAL)
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .withColumn("__rn", F.row_number().over(w_pool))
-            .filter(F.col("__rn") <= pool)
-            .select(*keys, F.col(_VAL).alias("value"))
-        )
-    else:
-        cand_schema = StructType(
-            key_fields + [StructField("value", StringType())]
-        )
-
-        def candidates_fn(
-            batches: Iterator[pd.DataFrame],
-        ) -> Iterator[pd.DataFrame]:
-            counters: dict[tuple, SpaceSavingCounter] = {}
-            for pdf in batches:
-                for gkey, sub in pdf.groupby(keys, dropna=False, sort=False):
-                    gkey = _norm_key(gkey)
-                    c = counters.get(gkey)
-                    if c is None:
-                        c = counters[gkey] = SpaceSavingCounter(pool)
-                    c.update(sub[_VAL].value_counts())
-            rows = []
-            for gkey, c in counters.items():
-                top = c.top(pool)
-                if top is not None:
-                    rows.extend(tuple(gkey) + (str(v),) for v in top.index)
-            if rows:
-                yield pd.DataFrame(rows, columns=[*keys, "value"])
-
-        cand = src.mapInPandas(candidates_fn, schema=cand_schema).distinct()
-
-    cms_df = sketch_agg(
-        src, _VAL, keys, kind="cms", params={"depth": depth, "width": width}
+    keys = list(by)
+    counted = (
+        df.select(*keys, F.col(col).cast("string").alias(_VAL))
+        .filter(F.col(_VAL).isNotNull())
+        .groupBy(*keys, _VAL)
+        .agg(F.count(F.lit(1)).alias("__n"))
+        .withColumn("__h", F.xxhash64(_VAL))
     )
-    # one candidates-row per group joins one sketch-row per group, so
-    # each group's CMS blob crosses the shuffle ONCE (a per-candidate
-    # equi-join duplicated the ~blob x candidates payload); eqNullSafe
-    # keeps a null-keyed group, which a plain key join silently drops
-    cand_g = (
-        cand.withColumn("__h", F.xxhash64("value"))
-        .groupBy(*keys)
-        .agg(F.collect_list(F.struct("value", "__h")).alias("__cands"))
-    )
-    sk_sel = cms_df.select(*keys, "sketch")
-    cond = None
-    for kcol in keys:
-        c = cand_g[kcol].eqNullSafe(sk_sel[kcol])
-        cond = c if cond is None else cond & c
-    joined = cand_g.join(sk_sel, cond).select(
-        *[cand_g[kcol] for kcol in keys], "__cands", "sketch"
-    )
-    score_schema = StructType(
+    if keys:
+        counted = counted.sortWithinPartitions(*keys)
+    key_fields = [counted.schema[kc] for kc in keys]
+    partial_schema = StructType(
         key_fields
         + [
-            StructField("value", StringType()),
-            StructField("est_count", LongType()),
+            StructField(_CMS, BinaryType()),
+            StructField(_VAL, StringType()),
+            StructField("__h", LongType()),
         ]
     )
-
-    def score_stream(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for i in range(len(pdf)):
-                sk = CountMinSketch.from_bytes(bytes(pdf["sketch"].iloc[i]))
-                cands = pdf["__cands"].iloc[i]
-                vals = [c["value"] for c in cands]
-                hs = to_uint64(
-                    np.array([c["__h"] for c in cands], dtype=np.int64)
-                )
-                est = sk.query_hashed(hs)
-                out = {
-                    kcol: [pdf[kcol].iloc[i]] * len(vals) for kcol in keys
-                }
-                out["value"] = vals
-                out["est_count"] = est
-                yield pd.DataFrame(out)
-
-    scored = joined.mapInPandas(score_stream, schema=score_schema)
-    w = Window.partitionBy(*keys).orderBy(F.desc("est_count"), F.asc("value"))
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select(*keys, "value", "est_count")
+    partial = _hh_partial_kernel(
+        keys, partial_schema, depth=depth, width=width, pool=candidate_pool or max(200, 10 * k)
     )
+    cand = F.when(F.col(_VAL).isNotNull(), F.struct(_VAL, "__h"))
+    per_group = (
+        counted.mapInArrow(partial, schema=partial_schema)
+        .groupBy(*keys)
+        .agg(F.collect_list(_CMS).alias(_CMS), F.collect_list(cand).alias(_CANDS))
+    )
+    out_schema = StructType(
+        key_fields
+        + [StructField("value", StringType()), StructField("est_count", LongType())]
+    )
+    scored = per_group.mapInArrow(
+        _hh_score_kernel(keys, out_schema, depth=depth, width=width), schema=out_schema
+    )
+    if not keys:
+        return scored.orderBy(F.desc("est_count"), F.asc("value")).limit(k)
+    w = Window.partitionBy(*keys).orderBy(F.desc("est_count"), F.asc("value"))
+    ranked = scored.withColumn("__rn", F.row_number().over(w))
+    return ranked.filter(F.col("__rn") <= k).drop("__rn")

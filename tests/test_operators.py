@@ -322,6 +322,22 @@ def test_ngram_jaccard_exact_dups_score_one(spark, pages):
     assert scored.filter(F.col("jaccard") < 1.0).count() == 0
 
 
+def test_ngram_jaccard_int_ids_match_bigint(spark):
+    """The packed pair key is built in long arithmetic: with an int id
+    column, shiftleft(id, 32) is a no-op in Java, so two identical docs
+    with ids 3 and 5 used to return no pair. int and bigint ids must
+    give the same pairs, in the id column's own type."""
+    rows = [(3, "the quick brown fox jumps"), (5, "the quick brown fox jumps"),
+            (8, "an unrelated line of words")]
+    got = {}
+    for id_type in ("int", "bigint"):
+        df = spark.createDataFrame(rows, f"doc_id {id_type}, text string")
+        jac = dedup.ngram_jaccard(df, text_col="text", id_col="doc_id")
+        assert jac.schema["id_a"].dataType == df.schema["doc_id"].dataType
+        got[id_type] = sorted(tuple(r) for r in jac.collect())
+    assert got["int"] == got["bigint"] == [(3, 5, 1.0)]
+
+
 def test_ann_lsh_recall_vs_bruteforce(spark):
     emb = (
         spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
