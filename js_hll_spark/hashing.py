@@ -150,7 +150,8 @@ def _le64(bytes_mat: np.ndarray) -> np.ndarray:
 
 def murmur3_64_bytes(values, seed: int = DEFAULT_SEED) -> np.ndarray:
     """Vectorized murmur3 x64-128 lower-64 over VARIABLE-LENGTH byte
-    strings (list/Series of bytes or str) — bit-identical to the scalar
+    strings (list/Series of bytes or str, or an Arrow string/binary
+    array) — bit-identical to the scalar
     ``murmur3_64`` (asserted in tests). Rows are processed in lockstep
     over 16-byte blocks with per-row active masks; the gather is fancy
     indexing into one concatenated buffer, so the whole batch stays in
@@ -160,9 +161,15 @@ def murmur3_64_bytes(values, seed: int = DEFAULT_SEED) -> np.ndarray:
     try:
         import pyarrow as pa
 
-        arr = pa.array(values, type=pa.binary()) if (
-            len(values) and isinstance(values[0] if not hasattr(values, "iloc") else values.iloc[0], (bytes, bytearray))
-        ) else pa.array(values, type=pa.string())
+        if isinstance(values, pa.Array):
+            # an Arrow string/binary column is hashed in place
+            arr = values.cast(pa.binary())
+        elif len(values) and isinstance(
+            values[0] if not hasattr(values, "iloc") else values.iloc[0], (bytes, bytearray)
+        ):
+            arr = pa.array(values, type=pa.binary())
+        else:
+            arr = pa.array(values, type=pa.string())
         if arr.null_count:
             raise ValueError("murmur3_64_bytes: null values not supported")
         n = len(arr)

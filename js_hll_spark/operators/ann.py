@@ -32,10 +32,6 @@ def _dot(a, b):
     )
 
 
-def _norm(a):
-    return F.sqrt(_dot(a, a))
-
-
 def cosine(a, b):
     """Cosine similarity of two array columns — r7: a vectorized Arrow
     kernel replacing the Catalyst higher-order chain

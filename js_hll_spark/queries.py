@@ -1348,7 +1348,7 @@ GROUP BY lang
 def q_hll_ndv_murmur3_bound(spark, sf_dir):
     """The murmur3 (AK-convention) estimate family under the same
     driver-witnessed accuracy contract as q_hll_ndv_bound_check: the
-    python-engine murmur3 pipeline (worker-side vectorized hash —
+    murmur3 partial kernel (worker-side vectorized hash —
     byte-compatible with AK-ecosystem producers) estimates per-lang NDV
     at log2m=12, and the realized relative error against the DuckDB
     exact count must sit inside 3 x 1.04/sqrt(4096). Deterministic

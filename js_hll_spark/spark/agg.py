@@ -1,26 +1,28 @@
-"""Mergeable sketch aggregation over DataFrames — two engines with
-bit-identical sketches.
+"""Mergeable HLL aggregation over DataFrames — one dense register path.
 
 Why not a GROUPED_AGG pandas UDF straight on raw rows: that shuffles the
 *raw rows* to their groups — fatal at 10^12 rows (SURVEY.md §4.3-1).
-Both engines reduce each partition before the only raw-data shuffle, so
-a hot key ('en' at 60%) costs at most m register rows or one ~m-byte
-blob per partition, never its raw rows.
+Every dense sketch reduces each partition before the only raw-data
+shuffle, so a hot key ('en' at 60%) costs at most m register rows (or
+one packed register list) per partition, never its raw rows.
 
-**SQL engine** (``hll_sketch_sql``; default for xxhash64/raw hashes):
-Catalyst hashes, computes rho and aggregates
-``groupBy(keys, idx).agg(max(rho))`` in codegen, then packs each group
-into ONE row with ``collect_list((idx << 8) | val)``. A ``mapInArrow``
-kernel (``hll_assemble``) places the registers, encodes and estimates:
-one Python row per group, keys kept as Arrow columns.
+**Producers.** Each partition becomes at most one packed register list
+per key, ``(idx << 8) | val`` per nonzero register:
 
-**Python engine** (``mapInPandas`` harness; required for the AK murmur3
-hash): each partition reduces to one register file per key with numpy
-``np.maximum.at``; an optional tree level keyed by
-``(key, partition_id % fanin)`` bounds the final fan-in (lossless: the
-union is a commutative, associative, idempotent max — reference
-src/hll.js:345-346); the final merge max-reduces the blobs and runs the
-estimator once per group.
+- xxhash64 and ``raw`` hashes: Catalyst hashes, computes rho and
+  aggregates ``groupBy(keys, idx).agg(max(rho))`` in codegen;
+- the AK murmur3 hash: one ``mapInArrow`` kernel (``murmur3_partial``)
+  hashes each Arrow batch with the vectorized murmur3 and max-reduces it
+  into one register file per key.
+
+**Assembly.** ``groupBy(keys)`` gathers each group's registers into ONE
+row, and one ``mapInArrow`` kernel (``hll_assemble``) places them,
+encodes the sketch and estimates: one Python row per group, keys kept
+as Arrow columns. Union is a commutative, associative, idempotent max
+(reference src/hll.js:345-346), so duplicate partials merge losslessly.
+
+``engine='explicit'`` (:func:`hll_sketch_explicit`) is the exactness
+tier: true EXPLICIT-mode sketches merged by :func:`hll_rollup`.
 """
 
 from __future__ import annotations
@@ -29,8 +31,9 @@ from typing import Iterator, Sequence
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import (
+    ArrayType,
     BinaryType,
     DoubleType,
     LongType,
@@ -44,9 +47,13 @@ from ..hashing import murmur3_64_bytes, murmur3_64_uint64, to_uint64
 
 _HASH_COL = "__h64"
 _SKETCH_COL = "sketch"
-_PID_COL = "__pid"
 _ROWS_COL = "rows_seen"
 _PACKED_COL = "__regs"
+
+# Byte bound on one murmur3_partial task's register files (m bytes per
+# cached key). Past it the task emits its partials early; the groupBy in
+# front of hll_assemble merges the duplicates.
+_PARTIAL_CACHE_BYTES = 32 << 20
 
 
 def _null_safe_change_mask(kcols: list[pd.Series]) -> np.ndarray:
@@ -93,126 +100,15 @@ def norm_group_key(g) -> tuple:
     return tuple(None if pd.isna(v) else v for v in gk)
 
 
-def _hash_column(col: str, method: str):
-    if method == "xxhash64":
-        return F.xxhash64(F.col(col))
-    raise ValueError(f"unknown JVM hash method {method!r}")
-
-
-def _partial_schema(key_fields: list[StructField]) -> StructType:
-    return StructType(
-        key_fields
-        + [
-            StructField(_PID_COL, LongType(), False),
-            StructField(_SKETCH_COL, BinaryType(), False),
-            StructField(_ROWS_COL, LongType(), False),
-        ]
-    )
-
-
-def _make_partial_fn(
-    keys: Sequence[str],
-    config: HLLConfig,
-    hash_in_python: bool,
-    memory_budget_bytes: int = 256 << 20,
-):
-    """mapInPandas function: stream Arrow batches, keep one register file
-    per key for the whole partition, emit at iterator exhaustion.
-
-    Spill-aware: when the partial state (m bytes per live key) exceeds
-    ``memory_budget_bytes`` — possible with very high-cardinality group
-    keys — the accumulated partials are flushed as output rows and the
-    dict reset. Duplicated (partition, key) partial rows are harmless:
-    the merge stage max-reduces them (union monoid)."""
-
-    m = config.m
-    max_keys = max(1, memory_budget_bytes // m)
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-        regs: dict[tuple, np.ndarray] = {}
-        rows: dict[tuple, int] = {}
-
-        def flush() -> pd.DataFrame:
-            out = {}
-            for i, k in enumerate(keys):
-                out[k] = [gk[i] for gk in regs]
-            out[_PID_COL] = [pid] * len(regs)
-            out[_SKETCH_COL] = [r.tobytes() for r in regs.values()]
-            out[_ROWS_COL] = [rows[gk] for gk in regs]
-            regs.clear()
-            rows.clear()
-            return pd.DataFrame(out)
-
-        for pdf in batches:
-            if hash_in_python:
-                col = pdf[_HASH_COL]
-                if col.dtype == object or str(col.dtype).startswith("str"):
-                    h = murmur3_64_bytes(col)
-                else:
-                    h = murmur3_64_uint64(to_uint64(col.to_numpy()))
-            else:
-                h = to_uint64(pdf[_HASH_COL].to_numpy())
-            if not keys:
-                r = regs.get(())
-                if r is None:
-                    r = regs[()] = np.zeros(m, dtype=np.uint8)
-                    rows[()] = 0
-                update_registers(r, h, config)
-                rows[()] += len(pdf)
-                continue
-            groups = pdf.groupby(list(keys), sort=False, dropna=False).indices
-            for gkey, idx in groups.items():
-                gk = norm_group_key(gkey)
-                r = regs.get(gk)
-                if r is None:
-                    r = regs[gk] = np.zeros(m, dtype=np.uint8)
-                    rows[gk] = 0
-                update_registers(r, h[idx], config)
-                rows[gk] += len(idx)
-            if len(regs) > max_keys:
-                yield flush()
-        if regs:
-            yield flush()
-
-    return fn
-
-
-def _zero_partial_seed(spark, config: HLLConfig, schema: StructType) -> DataFrame:
-    """One zero-state partial row, built ON AN EXECUTOR via
-    spark.range(1) (Spark skips Python workers entirely for empty
-    relations, so a partial-fn-side fallback never runs; and a
-    driver-side literal would embed m bytes in the plan). Union it into
-    the global (no-keys) partials so an empty/all-null input still
-    yields one row with ndv 0 — countDistinct returns 0, not no rows."""
-    m = config.m
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for _ in batches:
-            pass
-        yield pd.DataFrame(
-            {
-                _PID_COL: [-1],
-                _SKETCH_COL: [np.zeros(m, dtype=np.uint8).tobytes()],
-                _ROWS_COL: [0],
-            }
-        )
-
-    return spark.range(1).mapInPandas(fn, schema=schema)
-
-
 def keyed_carry_stream(partials, group_cols, schema, *, prepare, fold, finish):
     """The sorted-stream-with-carry skeleton shared by the batched keyed
-    merges of serialized sketches: the python engine's register merge
-    and tree-fanin intermediate, the keyed :func:`hll_rollup` (which
+    merges of serialized sketches: the keyed :func:`hll_rollup` (which
     ``hll_sketch_explicit`` and ``merge_sketch_tables`` go through) and
     the companion-sketch merge in sketch_agg — ONE implementation of the
     subtle part: null-safe group boundaries, per-segment folding, the
     cross-Arrow-batch carry, the end-of-iterator flush. (The r3
     NaN!=NaN null-group-split bug lived exactly in this skeleton.) The
-    sql engine needs none of it: Catalyst forms its groups.
+    dense path needs none of it: Catalyst forms its groups.
 
     ``prepare(pdf) -> batch_ctx`` runs once per Arrow batch (vectorized
     extraction); ``fold(state_or_None, batch_ctx, start, end) -> state``
@@ -252,93 +148,6 @@ def keyed_carry_stream(partials, group_cols, schema, *, prepare, fold, finish):
     return sorted_partials.mapInPandas(stream, schema=schema)
 
 
-def _stream_keyed_merge(
-    partials: DataFrame,
-    group_cols: Sequence[str],
-    *,
-    n_emit: int,
-    schema: StructType,
-    config: HLLConfig,
-    pack: bool,
-    keep_sketch: bool,
-    estimate: bool,
-) -> DataFrame:
-    """Keyed register-blob merge as a batched stream — one python call
-    per Arrow batch instead of one applyInPandas call per group (r4;
-    measured 8.6x on the companion twin at 200k groups). Per-run
-    register maxima reduce VECTORIZED via np.maximum.reduceat over the
-    stacked blob matrix, so per-key python work is one tuple append.
-    ``n_emit`` keeps only the first n group columns in the output (the
-    tree-fanin intermediate groups on keys + partition salt but emits
-    keys only)."""
-
-    def prepare(pdf):
-        stacked = np.frombuffer(
-            b"".join(pdf[_SKETCH_COL].tolist()), dtype=np.uint8
-        ).reshape(len(pdf), config.m)
-        return stacked, pdf[_ROWS_COL].to_numpy()
-
-    def fold(state, ctx, start, end):
-        stacked, rseen = ctx
-        seg = np.maximum.reduce(stacked[start:end])
-        rows = int(rseen[start:end].sum())
-        if state is None:
-            return seg.copy(), rows
-        acc, rows_acc = state
-        np.maximum(acc, seg, out=acc)
-        return acc, rows_acc + rows
-
-    def finish(key, state):
-        acc, rows_acc = state
-        row = list(key[:n_emit])
-        if keep_sketch:
-            if pack:
-                s = HLL(config, explicit_threshold=0, sparse_on=False)
-                s._regs = acc
-                row.append(s.to_bytes())
-            else:
-                row.append(acc.tobytes())
-        if estimate:
-            row.append(estimate_from_registers(acc, config))
-        row.append(rows_acc)
-        return tuple(row)
-
-    return keyed_carry_stream(
-        partials, group_cols, schema, prepare=prepare, fold=fold, finish=finish
-    )
-
-
-def _make_merge_fn(
-    keys: Sequence[str],
-    config: HLLConfig,
-    *,
-    estimate: bool,
-    keep_sketch: bool,
-    pack: bool,
-):
-    """applyInPandas function: max-reduce raw register blobs per group."""
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        stacked = np.frombuffer(
-            b"".join(pdf[_SKETCH_COL].tolist()), dtype=np.uint8
-        ).reshape(len(pdf), config.m)
-        merged = np.maximum.reduce(stacked)
-        out = {k: [pdf[k].iloc[0]] for k in keys}
-        if keep_sketch:
-            if pack:
-                s = HLL(config, explicit_threshold=0, sparse_on=False)
-                s._regs = merged
-                out[_SKETCH_COL] = [s.to_bytes()]
-            else:
-                out[_SKETCH_COL] = [merged.tobytes()]
-        if estimate:
-            out["ndv"] = [estimate_from_registers(merged, config)]
-        out[_ROWS_COL] = [int(pdf[_ROWS_COL].sum())]
-        return pd.DataFrame(out)
-
-    return fn
-
-
 def _merge_schema(
     df: DataFrame,
     keys: Sequence[str],
@@ -363,52 +172,45 @@ def hll_sketch(
     log2m: int = 13,
     regwidth: int = 5,
     hash_method: str = "xxhash64",
-    tree_fanin: int | None = None,
     estimate: bool = True,
     keep_sketch: bool = True,
-    memory_budget_bytes: int = 256 << 20,
     engine: str = "auto",
     _count_rows: bool = True,
 ) -> DataFrame:
     """Sketch ``value_col`` per group. Returns one row per group with a
     spec-encoded ``sketch`` column, an ``ndv`` estimate and ``rows_seen``.
 
-    ``hash_method``: 'xxhash64' (JVM, default), 'murmur3' (AK
-    convention, numpy-vectorized in the worker; only valid for integral
-    value columns), or 'raw' — ``value_col`` already holds 64-bit hashed
-    values and is sketched as-is (the reference's addRaw contract,
-    src/hll.js:262-268, at DataFrame level; for interop with
+    ``hash_method``: 'xxhash64' (JVM, default), 'murmur3' (the AK
+    convention, vectorized in one Arrow map; integral, string or binary
+    value columns only), or 'raw' — ``value_col`` already holds 64-bit
+    hashed values and is sketched as-is (the reference's addRaw
+    contract, src/hll.js:262-268, at DataFrame level; for interop with
     AK-ecosystem producers that hash upstream).
 
-    ``engine``: 'sql' computes registers inside Catalyst (hll_sketch_sql
-    — fastest, default for xxhash64); 'python' uses the mapInPandas
-    partial harness (required for murmur3, supports tree_fanin and the
-    memory budget). Both build dense register files and produce
-    bit-identical sketches. 'explicit' builds TRUE explicit-mode
-    sketches (exact hash sets below the auto threshold — the exactness
-    tier, see hll_sketch_explicit). 'auto' picks by hash_method.
+    ``engine``: 'auto' and 'sql' build dense register files through the
+    one path of :func:`hll_sketch_sql` for every hash method. 'explicit'
+    builds TRUE explicit-mode sketches (exact hash sets below the auto
+    threshold — the exactness tier, see :func:`hll_sketch_explicit`).
+    Any other value raises ``ValueError``.
 
-    Group keys with ``engine='python'`` (and in :func:`hll_rollup`):
-    keys cross the Arrow boundary through pandas, where NaN and NULL
+    Group keys: the dense path keeps keys as Arrow columns and returns
+    exactly Catalyst's groups. ``engine='explicit'`` and
+    :func:`hll_rollup` move keys through pandas, where NaN and NULL
     conflate (a NaN-keyed group merges into the null group) and a
     nullable bigint key becomes float64 (keys above 2**53 can merge) —
-    cast such keys to string upstream. The sql engine keeps keys as
-    Arrow columns and returns exactly Catalyst's groups.
+    cast such keys to string upstream there.
 
-    High-cardinality group keys: both engines carry O(keys x m) state —
-    the sql engine in Catalyst's spill-capable HashAggregate, the python
-    engine in a byte-budgeted dict that flushes. Prefer a smaller log2m
-    when sketching per-key over millions of keys (the error bound is per
-    sketch, and tiny groups saturate far below m registers anyway).
+    Memory: per partition the dense path holds O(keys x m) register
+    state — in Catalyst's spill-capable HashAggregate, or for murmur3 in
+    a register-file cache that is emitted early past a fixed byte bound.
+    ``groupBy(keys)`` then gathers each group's registers into one row:
+    for xxhash64/raw at most m packed longs, for murmur3 up to
+    (map partitions holding the group) x m, e.g. 8 MB at 128 partitions
+    and log2m 13. Prefer a smaller log2m when sketching per key over
+    millions of keys (the error bound is per sketch, and tiny groups
+    saturate far below m registers anyway).
     """
-    config = HLLConfig(log2m, regwidth)
-    keys = list(by)
-
-    if engine == "auto":
-        engine = "sql" if hash_method in ("xxhash64", "raw") else "python"
     if engine == "explicit":
-        # true explicit-mode sets (the exactness tier) — see
-        # hll_sketch_explicit
         return hll_sketch_explicit(
             df,
             value_col,
@@ -419,136 +221,38 @@ def hll_sketch(
             estimate=estimate,
             keep_sketch=keep_sketch,
         )
-    if engine == "sql":
-        if hash_method == "raw":
-            # reference addRaw parity at DataFrame level: value_col
-            # already holds 64-bit hashes (e.g. from an AK-ecosystem
-            # producer); sketch them directly, no re-hash. Filter AFTER
-            # the cast: a non-castable value (string garbage) yields a
-            # NULL hash that would otherwise crash register assembly
-            # with an opaque numpy IndexError
-            return hll_sketch_sql(
-                df.select(
-                    *keys, F.col(value_col).cast("long").alias(value_col)
-                ).filter(F.col(value_col).isNotNull()),
-                value_col,
-                by,
-                log2m=log2m,
-                regwidth=regwidth,
-                estimate=estimate,
-                keep_sketch=keep_sketch,
-                _prehashed=True,
-                _count_rows=_count_rows,
-            )
-        if hash_method != "xxhash64":
-            raise ValueError("engine='sql' supports only xxhash64 or raw")
-        return hll_sketch_sql(
-            df,
-            value_col,
-            by,
-            log2m=log2m,
-            regwidth=regwidth,
-            estimate=estimate,
-            keep_sketch=keep_sketch,
-            _count_rows=_count_rows,
+    if engine not in ("auto", "sql"):
+        raise ValueError(
+            f"unknown engine {engine!r}: use 'auto', 'sql' or 'explicit'"
         )
-
-    # NULL values are excluded, matching countDistinct semantics (a NULL
-    # would otherwise hash to a constant and count as one spurious value)
-    df = df.filter(F.col(value_col).isNotNull())
-
-    hash_in_python = hash_method == "murmur3"
-    if hash_in_python:
-        # AK murmur3 convention, vectorized in the Python worker: integral
-        # columns hash as their 8-byte little-endian form; strings/binary
-        # hash as UTF-8 bytes (murmur3_64_bytes, pyarrow-backed). The raw
-        # column crosses the Arrow boundary — the price of hash
-        # compatibility with externally-built AK-ecosystem sketches.
-        dtype = dict(df.dtypes)[value_col]
-        col = F.col(value_col)
-        if dtype in ("tinyint", "smallint", "int", "bigint"):
-            col = col.cast("long")
-        elif dtype not in ("string", "binary"):
-            # the AK convention hashes 8-byte ints or UTF-8 bytes; a
-            # float/decimal column would silently truncate through the
-            # int64 conversion (1.1 and 1.9 hash identically) — fail
-            # fast instead of estimating a wrong NDV
-            raise ValueError(
-                f"hash_method='murmur3' supports integral/string/binary "
-                f"value columns, got {dtype} — cast explicitly first"
-            )
-        hashed = df.select(*keys, col.alias(_HASH_COL))
-    elif hash_method == "raw":
-        # filter after the cast: non-castable values yield NULL hashes
-        hashed = df.select(
-            *keys, F.col(value_col).cast("long").alias(_HASH_COL)
-        ).filter(F.col(_HASH_COL).isNotNull())
-    else:
-        hashed = df.select(*keys, _hash_column(value_col, hash_method).alias(_HASH_COL))
-
-    key_fields = [hashed.schema[k] for k in keys]
-    partials = hashed.mapInPandas(
-        _make_partial_fn(keys, config, hash_in_python, memory_budget_bytes),
-        schema=_partial_schema(key_fields),
+    return hll_sketch_sql(
+        df,
+        value_col,
+        by,
+        log2m=log2m,
+        regwidth=regwidth,
+        hash_method=hash_method,
+        estimate=estimate,
+        keep_sketch=keep_sketch,
+        _count_rows=_count_rows,
     )
-    if not keys:
-        partials = partials.unionByName(
-            _zero_partial_seed(df.sparkSession, config, _partial_schema([]))
-        )
 
-    if tree_fanin is None:
-        # one intermediate merge level bounds the final task's fan-in when
-        # the job has many input partitions (100 TB => ~10^5 partitions).
-        # The partial count equals hashed's partition count — NOT
-        # defaultParallelism (cores), which on a small cluster reading a
-        # many-split table would leave the guard off in exactly the case
-        # it exists for. The one-time plan analysis per sketch call is
-        # the price of getting the bound right; callers on a hot path
-        # can pass tree_fanin explicitly to skip it.
-        n_parts = hashed.rdd.getNumPartitions()
-        tree_fanin = 64 if n_parts > 256 else 0
 
-    if tree_fanin:
-        salted = partials.withColumn(
-            _PID_COL, F.pmod(F.col(_PID_COL), F.lit(tree_fanin))
-        )
-        inter_schema = StructType(
-            key_fields
-            + [
-                StructField(_SKETCH_COL, BinaryType(), False),
-                StructField(_ROWS_COL, LongType(), False),
-            ]
-        )
-        partials = _stream_keyed_merge(
-            salted,
-            keys + [_PID_COL],
-            n_emit=len(keys),
-            schema=inter_schema,
-            config=config,
-            pack=False,
-            keep_sketch=True,
-            estimate=False,
-        )
-
-    schema = _merge_schema(
-        hashed, keys, estimate=estimate, keep_sketch=keep_sketch
-    )
-    if keys:
-        return _stream_keyed_merge(
-            partials,
-            keys,
-            n_emit=len(keys),
-            schema=schema,
-            config=config,
-            pack=True,
-            keep_sketch=keep_sketch,
-            estimate=estimate,
-        )
-    merge_fn = _make_merge_fn(
-        keys, config, estimate=estimate, keep_sketch=keep_sketch, pack=True
-    )
-    return partials.groupBy(F.lit(1).alias("__g")).applyInPandas(
-        lambda pdf: merge_fn(pdf), schema=schema
+def _murmur3_value(df: DataFrame, value_col: str) -> Column:
+    """``value_col`` as the AK murmur3 convention hashes it: integral
+    columns as 8-byte little-endian longs, strings as UTF-8 bytes,
+    binary as is."""
+    dtype = dict(df.dtypes)[value_col]
+    if dtype in ("tinyint", "smallint", "int", "bigint"):
+        return F.col(value_col).cast("long")
+    if dtype in ("string", "binary"):
+        return F.col(value_col)
+    # a float/decimal column would silently truncate through the int64
+    # conversion (1.1 and 1.9 hash identically) — fail fast instead of
+    # estimating a wrong NDV
+    raise ValueError(
+        f"hash_method='murmur3' supports integral/string/binary "
+        f"value columns, got {dtype} — cast explicitly first"
     )
 
 
@@ -577,39 +281,24 @@ def hll_sketch_explicit(
     State per key is bounded by the explicit threshold (8 bytes x
     threshold before promotion); past the threshold the sketch promotes
     and estimates degrade gracefully to the dense tier's accuracy.
-    Unlike the python engine there is no memory-budget flush across
-    keys: with very high-cardinality ``by`` keys prefer the dense
-    engines (fixed bytes per key + spill-aware flushing) — the explicit
-    tier exists for exactness at modest key counts, not 100 TB group
-    fan-out."""
+    There is no memory-bounded flush across keys: with very
+    high-cardinality ``by`` keys prefer the dense path (fixed bytes per
+    key, spill-capable aggregation) — the explicit tier exists for
+    exactness at modest key counts, not 100 TB group fan-out."""
     config = HLLConfig(log2m, regwidth)
     keys = list(by)
     df = df.filter(F.col(value_col).isNotNull())
     if hash_method == "raw":
-        # filter after the cast: non-castable values yield NULL hashes
-        hashed = df.select(
-            *keys, F.col(value_col).cast("long").alias(_HASH_COL)
-        ).filter(F.col(_HASH_COL).isNotNull())
-        hash_in_python = False
+        h = F.col(value_col).cast("long")
     elif hash_method == "murmur3":
-        dtype = dict(df.dtypes)[value_col]
-        col = F.col(value_col)
-        if dtype in ("tinyint", "smallint", "int", "bigint"):
-            col = col.cast("long")
-        elif dtype not in ("string", "binary"):
-            # the AK convention hashes 8-byte ints or UTF-8 bytes; a
-            # float/decimal column would silently truncate through the
-            # int64 conversion (1.1 and 1.9 hash identically) — fail
-            # fast instead of estimating a wrong NDV
-            raise ValueError(
-                f"hash_method='murmur3' supports integral/string/binary "
-                f"value columns, got {dtype} — cast explicitly first"
-            )
-        hashed = df.select(*keys, col.alias(_HASH_COL))
-        hash_in_python = True
+        h = _murmur3_value(df, value_col)
+    elif hash_method == "xxhash64":
+        h = F.xxhash64(F.col(value_col))
     else:
-        hashed = df.select(*keys, _hash_column(value_col, hash_method).alias(_HASH_COL))
-        hash_in_python = False
+        raise ValueError(f"unknown hash_method {hash_method!r}")
+    # filter after the cast: non-castable raw values yield NULL hashes
+    hashed = df.select(*keys, h.alias(_HASH_COL)).filter(F.col(_HASH_COL).isNotNull())
+    hash_in_python = hash_method == "murmur3"
 
     key_fields = [hashed.schema[k] for k in keys]
     schema = StructType(
@@ -621,44 +310,39 @@ def hll_sketch_explicit(
     )
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        sk: dict[tuple, HLL] = {}
-        rows: dict[tuple, int] = {}
+        sk: dict[tuple, list] = {}  # key -> [HLL, rows]
         for pdf in batches:
-            if hash_in_python:
-                col = pdf[_HASH_COL]
-                if col.dtype == object or str(col.dtype).startswith("str"):
-                    h = murmur3_64_bytes(col)
-                else:
-                    h = murmur3_64_uint64(to_uint64(col.to_numpy()))
+            col = pdf[_HASH_COL]
+            if not hash_in_python:
+                h = to_uint64(col.to_numpy())
+            elif col.dtype == object or str(col.dtype).startswith("str"):
+                h = murmur3_64_bytes(col)
             else:
-                h = to_uint64(pdf[_HASH_COL].to_numpy())
-            if not keys:
-                s = sk.get(())
-                if s is None:
-                    s = sk[()] = HLL(config)
-                    rows[()] = 0
-                s.add_raw64(h)
-                rows[()] += len(pdf)
-                continue
-            groups = pdf.groupby(list(keys), sort=False, dropna=False).indices
+                h = murmur3_64_uint64(to_uint64(col.to_numpy()))
+            if keys:
+                groups = pdf.groupby(keys, sort=False, dropna=False).indices
+            else:
+                groups = {(): np.arange(len(h))}
             for gkey, idx in groups.items():
                 gk = norm_group_key(gkey)
-                s = sk.get(gk)
-                if s is None:
-                    s = sk[gk] = HLL(config)
-                    rows[gk] = 0
-                s.add_raw64(h[idx])
-                rows[gk] += len(idx)
+                ent = sk.get(gk)
+                if ent is None:
+                    ent = sk[gk] = [HLL(config), 0]
+                ent[0].add_raw64(h[idx])
+                ent[1] += len(idx)
         if sk:
             out = {k: [gk[i] for gk in sk] for i, k in enumerate(keys)}
-            out[_SKETCH_COL] = [s.to_bytes() for s in sk.values()]
-            out[_ROWS_COL] = [rows[gk] for gk in sk]
+            out[_SKETCH_COL] = [s.to_bytes() for s, _ in sk.values()]
+            out[_ROWS_COL] = [n for _, n in sk.values()]
             yield pd.DataFrame(out)
 
     partials = hashed.mapInPandas(fn, schema=schema)
     if not keys:
-        # empty-input seed (see _zero_partial_seed): one EMPTY spec
-        # sketch built on an executor; union identity for real inputs
+        # empty-input seed: one EMPTY spec sketch built on an executor
+        # (Spark runs no Python worker for an empty relation, and a
+        # driver-side literal would embed the sketch in the plan); the
+        # union identity for real inputs, so an empty input still
+        # yields one row with ndv 0
         def seed_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for _ in batches:
                 pass
@@ -675,12 +359,96 @@ def hll_sketch_explicit(
     return out
 
 
+def _murmur3_partial_kernel(keys, config, schema):
+    """mapInArrow kernel that produces hll_sketch_sql's packed registers
+    for ``hash_method='murmur3'``: (keys..., value) rows in, one
+    (keys..., ``__regs``, ``rows_seen``) row per key out when the
+    partition ends — the nonzero registers packed as ``(idx << 8) | val``,
+    the format hll_assemble reads.
+
+    Each Arrow batch is hashed with the vectorized AK murmur3, sorted by
+    the keys in Arrow and split into runs of equal keys (NULL equals
+    NULL, NaN equals NaN); each run max-reduces into its key's register
+    file. The dict of register files is only a cache keyed by the
+    Python key tuple: a key whose lookup misses (a NaN) adds another
+    entry and emits another partial row. Output keys are Arrow rows of
+    the input, never the dict key. Past ``_PARTIAL_CACHE_BYTES`` of
+    register files the kernel emits its rows early; output goes out in
+    chunks of about 4 MB of packed registers."""
+    from .sketch_agg import _run_starts
+
+    m = config.m
+    max_keys = max(1, _PARTIAL_CACHE_BYTES // m)
+    sort_keys = [(k, "ascending") for k in keys]
+
+    def murmur3_partial(batches):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        cache: dict[tuple, list] = {}  # key -> [registers, rows]
+        key_rows: list = []  # the cached keys' Arrow rows, in cache order
+
+        def flush():
+            if not cache:
+                return
+            ents = list(cache.values())
+            kt = pa.Table.from_batches(key_rows).combine_chunks() if keys else None
+            cache.clear()
+            key_rows.clear()
+            lo, parts, offs = 0, [], [0]
+            for i, (r, _) in enumerate(ents):
+                nz = np.flatnonzero(r)
+                parts.append((nz << 8) | r[nz])
+                offs.append(offs[-1] + nz.size)
+                if offs[-1] < (1 << 19) and i + 1 < len(ents):
+                    continue
+                packed = pa.ListArray.from_arrays(
+                    pa.array(offs, pa.int32()), pa.array(np.concatenate(parts))
+                )
+                rows = pa.array([n for _, n in ents[lo : i + 1]], pa.int64())
+                cols = [kt.column(k).chunk(0).slice(lo, i + 1 - lo) for k in keys]
+                yield pa.RecordBatch.from_arrays(
+                    cols + [packed, rows], names=schema.names
+                )
+                lo, parts, offs = i + 1, [], [0]
+
+        for batch in batches:
+            n = batch.num_rows
+            if n == 0:
+                continue
+            vals = batch.column(_HASH_COL)
+            if pa.types.is_integer(vals.type):
+                h = murmur3_64_uint64(to_uint64(vals.to_numpy()))
+            else:
+                h = murmur3_64_bytes(vals)
+            kb, starts = batch.select(keys), np.zeros(1, dtype=np.int64)
+            if keys:
+                order = pc.sort_indices(batch, sort_keys=sort_keys, null_placement="at_end")
+                kb, h = kb.take(order), h[order.to_numpy()]
+                starts = _run_starts(kb.columns, None)
+            for lo, hi in zip(starts, np.append(starts[1:], n)):
+                key = tuple(c[lo].as_py() for c in kb.columns)
+                ent = cache.get(key)
+                if ent is None:
+                    if len(cache) >= max_keys:
+                        yield from flush()
+                    ent = cache[key] = [np.zeros(m, dtype=np.uint8), 0]
+                    key_rows.append(kb.slice(lo, 1))
+                update_registers(ent[0], h[lo:hi], config)
+                ent[1] += hi - lo
+        yield from flush()
+
+    return murmur3_partial
+
+
 def _assemble_kernel(keys, config, schema, *, estimate, keep_sketch):
     """mapInArrow kernel for hll_sketch_sql: each input row is one group
     — its key columns, the ``__regs`` list of packed ``(idx << 8) | val``
-    registers and ``rows_seen`` — and becomes one output row. Key columns
-    pass through as Arrow arrays (never pandas, so NULL, NaN and int64
-    keys above 2**53 stay exactly the groups Catalyst formed).
+    registers and ``rows_seen`` — and becomes one output row. A register
+    index may repeat (murmur3 partials of several partitions); placement
+    keeps the max. Key columns pass through as Arrow arrays (never
+    pandas, so NULL, NaN and int64 keys above 2**53 stay exactly the
+    groups Catalyst formed).
 
     Memory is O(m) per group: one register file is reused for every
     group, and output goes out in chunks of about 4 MB of registers, so
@@ -706,8 +474,7 @@ def _assemble_kernel(keys, config, schema, *, estimate, keep_sketch):
                 for i in range(lo, lo + part.num_rows):
                     p = packed[offs[i] : offs[i + 1]]
                     regs.fill(0)
-                    # (key, idx) rows are unique after the register agg
-                    regs[p >> 8] = p & 0xFF
+                    np.maximum.at(regs, p >> 8, p & 0xFF)
                     if keep_sketch:
                         sketches.append(sk.to_bytes())
                     if estimate:
@@ -730,34 +497,38 @@ def hll_sketch_sql(
     *,
     log2m: int = 13,
     regwidth: int = 5,
+    hash_method: str = "xxhash64",
     estimate: bool = True,
     keep_sketch: bool = True,
-    _prehashed: bool = False,
     _count_rows: bool = True,
 ) -> DataFrame:
-    """All-JVM variant of hll_sketch: the register file is computed by
-    Catalyst itself as ``groupBy(keys, register_index).agg(max(rho))``
-    with rho = 1 + ctz(h >> log2m) expressed via ``bit_count`` — the
-    whole per-row path stays inside whole-stage codegen and the partial
-    HashAggregate collapses each partition to <= m rows per key before
-    the shuffle. A second aggregate packs each group's registers into
-    one list, so Python sees one row per group: one Arrow map
-    (``hll_assemble``) places the registers, encodes and estimates.
+    """The dense register path of :func:`hll_sketch`, for every hash
+    method. A producer reduces each partition to packed registers:
 
-    Trade-off vs the mapInPandas harness: no Arrow transfer of raw
-    hashes (wins when rows >> m x partitions), but the shuffles carry
-    up to m register rows per (key, partition) instead of one ~m-byte
-    blob. Results are bit-identical between the two paths (tested).
+    - xxhash64 and 'raw': Catalyst computes the register file itself as
+      ``groupBy(keys, register_index).agg(max(rho))`` with
+      rho = 1 + ctz(h >> log2m) expressed via ``bit_count`` — the whole
+      per-row path stays inside whole-stage codegen and the partial
+      HashAggregate collapses each partition to <= m rows per key
+      before the shuffle;
+    - murmur3: one Arrow map (``murmur3_partial``) hashes and reduces
+      each partition to one packed register list per key.
 
-    Keyed and unkeyed calls share the one path: the global
-    ``groupBy()`` returns exactly one row even on empty input (an empty
-    list, so ndv 0 — countDistinct semantics).
-
-    ``_prehashed``: ``value_col`` already holds the xxhash64 value (used
-    by hll_ndv_multi's one-scan long form; caller filtered nulls).
+    ``groupBy(keys)`` then packs each group's registers into one list,
+    so Python sees one row per group: one Arrow map (``hll_assemble``)
+    places the registers, encodes and estimates. Keyed and unkeyed calls
+    share the one path: the global ``groupBy()`` returns exactly one row
+    even on empty input (an empty list, so ndv 0 — countDistinct
+    semantics).
     """
     config = HLLConfig(log2m, regwidth)
     keys = list(by)
+    if hash_method == "murmur3":
+        value = _murmur3_value(df, value_col)
+    elif hash_method not in ("xxhash64", "raw"):
+        raise ValueError(
+            f"unknown hash_method {hash_method!r}: use 'xxhash64', 'murmur3' or 'raw'"
+        )
 
     # UNKEYED ONLY: the partial HashAggregate emits m rows per PARTITION
     # before the only data shuffle, so the map-task count is a direct
@@ -776,16 +547,50 @@ def hll_sketch_sql(
     # local[8] (time-clustered scan, ~80 splits/task) before this rule
     # was restricted to the unkeyed case. A no-op whenever the input
     # already arrives in <= cores partitions (every _t_auto/pristine
-    # source, any AQE-coalesced shuffle output).
+    # source, any AQE-coalesced shuffle output). The same holds for the
+    # murmur3 partials: one packed register list per partition.
     if not keys and not df.isStreaming:
         _cores = df.sparkSession.sparkContext.defaultParallelism
         if df.rdd.getNumPartitions() > _cores:
             df = df.coalesce(_cores)
 
-    if _prehashed:
+    schema = _merge_schema(df, keys, estimate=estimate, keep_sketch=keep_sketch)
+    kernel = _assemble_kernel(
+        keys, config, schema, estimate=estimate, keep_sketch=keep_sketch
+    )
+    # countDistinct semantics: NULL values are not counted
+    if hash_method == "murmur3":
+        src = df.filter(F.col(value_col).isNotNull()).select(
+            *keys, value.alias(_HASH_COL)
+        )
+        partial_schema = StructType(
+            [src.schema[k] for k in keys]
+            + [
+                StructField(_PACKED_COL, ArrayType(LongType(), False), False),
+                StructField(_ROWS_COL, LongType(), False),
+            ]
+        )
+        partials = src.mapInArrow(
+            _murmur3_partial_kernel(keys, config, partial_schema),
+            schema=partial_schema,
+        )
+        per_group = partials.groupBy(*keys).agg(
+            F.flatten(F.collect_list(_PACKED_COL)).alias(_PACKED_COL),
+            # a global aggregate over no rows sums to NULL
+            F.coalesce(F.sum(_ROWS_COL), F.lit(0).cast("long")).alias(_ROWS_COL),
+        )
+        return per_group.mapInArrow(kernel, schema=schema)
+
+    if hash_method == "raw":
+        # reference addRaw parity at DataFrame level: value_col already
+        # holds 64-bit hashes (e.g. from an AK-ecosystem producer);
+        # sketch them directly, no re-hash. Filter AFTER the cast: a
+        # non-castable value (string garbage) yields a NULL hash that
+        # would otherwise crash register assembly
+        df = df.select(*keys, F.col(value_col).cast("long").alias(value_col))
+        df = df.filter(F.col(value_col).isNotNull())
         h = F.col(value_col)
     else:
-        # countDistinct semantics
         df = df.filter(F.col(value_col).isNotNull())
         h = F.xxhash64(F.col(value_col))
     idx = h.bitwiseAND(F.lit(config.register_index_mask)).alias("__idx")
@@ -816,11 +621,6 @@ def hll_sketch_sql(
         .groupBy(*keys)
         .agg(packed.alias(_PACKED_COL), rows.alias(_ROWS_COL))
     )
-
-    schema = _merge_schema(df, keys, estimate=estimate, keep_sketch=keep_sketch)
-    kernel = _assemble_kernel(
-        keys, config, schema, estimate=estimate, keep_sketch=keep_sketch
-    )
     return per_group.mapInArrow(kernel, schema=schema)
 
 
@@ -832,7 +632,6 @@ def hll_ndv(
     log2m: int = 13,
     regwidth: int = 5,
     hash_method: str = "xxhash64",
-    tree_fanin: int | None = None,
     engine: str = "auto",
 ) -> DataFrame:
     """Approximate NDV(value_col) per group: (keys..., ndv double)."""
@@ -843,11 +642,10 @@ def hll_ndv(
         log2m=log2m,
         regwidth=regwidth,
         hash_method=hash_method,
-        tree_fanin=tree_fanin,
         estimate=True,
         keep_sketch=False,
         engine=engine,
-        # ndv drops rows_seen — skip its aggregation buffer (sql engine)
+        # ndv drops rows_seen — skip its aggregation buffer
         _count_rows=False,
     )
     return out.select(*by, "ndv")
@@ -895,9 +693,9 @@ def hll_ndv_multi(
         keys + ["__col"],
         log2m=log2m,
         regwidth=regwidth,
+        hash_method="raw",
         estimate=True,
         keep_sketch=False,
-        _prehashed=True,
     )
     return out.select(*keys, F.col("__col").alias("column"), "ndv")
 

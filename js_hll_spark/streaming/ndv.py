@@ -94,7 +94,7 @@ def streaming_ndv(
     documents the freshness bound). ``engine='explicit'`` builds TRUE
     EXPLICIT-mode sketches (exact hash sets until the explicit
     threshold), whose estimates are exact distinct counts — the oracle
-    tier; 'sql'/'python' build dense registers (the fixed-bytes scale
+    tier; 'auto'/'sql' build dense registers (the fixed-bytes scale
     tier). Read estimates any time with
     ``read_ndv_state(spark, state_dir)``.
 

@@ -23,14 +23,16 @@ def test_ndv_scan_prunes_columns(spark, lineitem, tmp_path):
     path = str(tmp_path / "li")
     lineitem.write.parquet(path)
     df = spark.read.parquet(path)
-    for engine in ("python", "sql"):
+    for method in ("xxhash64", "murmur3"):
         p = plan(
-            hll_sketch(df, "l_partkey", by=["l_returnflag"], log2m=12, engine=engine)
+            hll_sketch(
+                df, "l_partkey", by=["l_returnflag"], log2m=12, hash_method=method
+            )
         )
         # the scan must read only the two needed columns of the 11
-        assert "ReadSchema: struct<l_partkey:bigint,l_returnflag:string>" in p, engine
-        # the hash is computed JVM-side
-        assert "xxhash64" in p, engine
+        assert "ReadSchema: struct<l_partkey:bigint,l_returnflag:string>" in p, method
+        if method == "xxhash64":
+            assert "xxhash64" in p  # the hash is computed JVM-side
 
 
 def test_filter_pushdown_reaches_scan(spark, tmp_path):
@@ -63,20 +65,24 @@ def test_broadcast_join_is_broadcast(spark):
 
 
 def test_merge_shuffle_carries_sketches_not_rows(spark, events):
-    """python engine: the only Exchange shuffles partial sketches, never
-    raw rows — it sits between the partial MapInPandas (below) and the
-    batched merge MapInPandas (above; r4 replaced the per-group
-    applyInPandas merge), with the in-partition Sort for the stream's
-    group-boundary carry."""
+    """murmur3: the only Exchange shuffles packed register partials,
+    never raw rows — it sits between the murmur3_partial MapInArrow
+    (below) and the hll_assemble MapInArrow (above), with no pandas
+    harness and no Sort."""
     p = plan(
-        hll_sketch(events, "user_id", by=["event_type"], log2m=12, engine="python")
+        hll_sketch(
+            events, "user_id", by=["event_type"], log2m=12, hash_method="murmur3"
+        )
     )
     assert p.count("Exchange") == 1
-    assert p.count("MapInPandas") == 2
-    assert "FlatMapGroupsInPandas" not in p
-    # plans print top-down: merge MapInPandas, Sort, Exchange, partial
-    first_map = p.index("MapInPandas")
-    assert first_map < p.index("Exchange") < p.index("MapInPandas", first_map + 1)
+    assert p.count("MapInArrow") == 2
+    for node in ("MapInPandas", "FlatMapGroupsInPandas", "Sort"):
+        assert node not in p, node
+    # plans print top-down: hll_assemble, Exchange, murmur3_partial
+    first_map = p.index("MapInArrow")
+    assert first_map < p.index("Exchange") < p.index("MapInArrow", first_map + 1)
+    assert "hll_assemble" in p[:p.index("Exchange")]
+    assert "murmur3_partial" in p[p.index("Exchange"):]
 
 
 def test_sql_engine_partial_aggregates_before_shuffle(spark, events):

@@ -20,6 +20,53 @@ from js_hll_spark.spark.functions import (
 )
 
 BOUND = lambda log2m: 1.04 / math.sqrt(2 ** log2m)  # noqa: E731
+HASH_METHODS = ("xxhash64", "murmur3", "raw")
+
+
+def _hash_input(df, value_col, hash_method):
+    """(frame, column) to sketch with ``hash_method``: 'raw' sketches a
+    column of precomputed xxhash64 values (NULL where the value is)."""
+    if hash_method != "raw":
+        return df, value_col
+    h = F.when(F.col(value_col).isNotNull(), F.xxhash64(value_col))
+    return df.withColumn("__raw", h), "__raw"
+
+
+def _core_reference(df, value_col, keys=(), *, hash_method, log2m, regwidth=5):
+    """{key tuple: (sketch bytes, ndv, rows_seen)} built per group from
+    the collected rows by the core HLL, the golden-vector-pinned
+    reference. A global call has one group even on empty input."""
+    import numpy as np
+
+    from js_hll_spark import HLLConfig
+    from js_hll_spark.core.hll import estimate_from_registers
+    from js_hll_spark.hashing import murmur3_64_bytes, murmur3_64_uint64
+
+    keys = list(keys)
+    v = F.xxhash64(value_col) if hash_method == "xxhash64" else F.col(value_col)
+    groups = {} if keys else {(): []}
+    for r in df.filter(F.col(value_col).isNotNull()).select(*keys, v.alias("__v")).collect():
+        groups.setdefault(tuple(r[k] for k in keys), []).append(r["__v"])
+    config = HLLConfig(log2m, regwidth)
+    out = {}
+    for k, vals in groups.items():
+        if hash_method == "murmur3" and vals and not isinstance(vals[0], int):
+            h = murmur3_64_bytes(vals)
+        else:
+            h = np.array(vals, dtype=np.int64).view(np.uint64)
+            if hash_method == "murmur3":
+                h = murmur3_64_uint64(h)
+        s = HLL(config, explicit_threshold=0, sparse_on=False)
+        s.add_raw64(h)
+        out[k] = (s.to_bytes(), estimate_from_registers(s._regs, config), len(vals))
+    return out
+
+
+def _by_key(sketched, keys=()):
+    return {
+        tuple(r[k] for k in keys): (bytes(r["sketch"]), r["ndv"], r["rows_seen"])
+        for r in sketched.collect()
+    }
 
 
 def test_global_ndv_events(spark, events):
@@ -46,38 +93,28 @@ def test_grouped_ndv_matches_exact(spark, events):
 
 def test_partition_order_invariance_spark(spark, documents):
     """Bit-identical merged sketch regardless of partitioning (the
-    BASELINE merge clause, at the DataFrame level) — both engines."""
-    for engine in ("python", "sql"):
-        a = hll_sketch(documents, "text", log2m=11, engine=engine).first()["sketch"]
-        shuffled = documents.repartition(16, "doc_id")
-        b = hll_sketch(shuffled, "text", log2m=11, engine=engine).first()["sketch"]
-        assert bytes(a) == bytes(b), engine
+    BASELINE merge clause, at the DataFrame level), equal to the core
+    reference — every hash method."""
+    for method in HASH_METHODS:
+        df, col = _hash_input(documents, "text", method)
+        ref = _core_reference(df, col, hash_method=method, log2m=11)
+        a = _by_key(hll_sketch(df, col, log2m=11, hash_method=method))
+        shuffled = df.repartition(16, "doc_id")
+        b = _by_key(hll_sketch(shuffled, col, log2m=11, hash_method=method))
+        assert a == b == ref, method
 
 
 def test_engines_bit_identical(spark, events):
-    """The Catalyst-registers engine and the mapInPandas engine produce
-    byte-identical sketches, estimates and rows_seen."""
-    cols = ["event_type", "sketch", "ndv", "rows_seen"]
-    py = {
-        r["event_type"]: (bytes(r["sketch"]), r["ndv"], r["rows_seen"])
-        for r in hll_sketch(
-            events, "user_id", by=["event_type"], log2m=12, engine="python"
-        ).select(cols).collect()
-    }
-    sql = {
-        r["event_type"]: (bytes(r["sketch"]), r["ndv"], r["rows_seen"])
-        for r in hll_sketch(
-            events, "user_id", by=["event_type"], log2m=12, engine="sql"
-        ).select(cols).collect()
-    }
-    assert py == sql
-
-
-def test_tree_merge_equals_flat(spark, events):
-    flat = hll_sketch(events, "user_id", log2m=11, tree_fanin=0, engine="python").first()
-    tree = hll_sketch(events, "user_id", log2m=11, tree_fanin=3, engine="python").first()
-    assert bytes(flat["sketch"]) == bytes(tree["sketch"])
-    assert flat["ndv"] == tree["ndv"]
+    """Every hash method's dense sketches, estimates and rows_seen are
+    byte-identical to a per-group core HLL build."""
+    for method in HASH_METHODS:
+        df, col = _hash_input(events, "user_id", method)
+        got = _by_key(
+            hll_sketch(df, col, by=["event_type"], log2m=12, hash_method=method),
+            ["event_type"],
+        )
+        ref = _core_reference(df, col, ["event_type"], hash_method=method, log2m=12)
+        assert got == ref, method
 
 
 def test_rows_seen_accounting(spark, events):
@@ -147,43 +184,23 @@ def test_murmur3_hash_method(spark, events):
     assert abs(est - exact) / exact < 3 * BOUND(12)
 
 
-def test_memory_budget_flush_identical(spark, events):
-    """Forcing partial-state flushes (tiny memory budget -> many partial
-    rows per key) must produce bit-identical merged sketches."""
-    normal = {
-        r["event_type"]: bytes(r["sketch"])
-        for r in hll_sketch(events, "user_id", by=["event_type"], log2m=12).collect()
-    }
-    # budget of one register file -> flush after every batch
-    tiny = {
-        r["event_type"]: bytes(r["sketch"])
-        for r in hll_sketch(
-            events, "user_id", by=["event_type"], log2m=12,
-            memory_budget_bytes=1, engine="python",
-        ).collect()
-    }
-    assert normal == tiny
-
-
 def test_high_cardinality_group_keys(spark, events):
-    """Group by a ~unique key (user_id x event_type): partial state must
-    flush within budget and estimates stay exact-ish for tiny groups."""
-    out = hll_sketch(
-        events, "event_id", by=["user_id"], log2m=10,
-        memory_budget_bytes=64 << 10,  # ~64 keys of 1 KiB live at once
-        engine="python",
-    )
-    rows = out.collect()
-    import pyspark.sql.functions as F
+    """Group by a ~unique key (user_id): one row per key for every hash
+    method, and estimates stay exact-ish for tiny groups."""
     exact = {
         r["user_id"]: r["n"]
         for r in events.groupBy("user_id")
         .agg(F.countDistinct("event_id").alias("n"))
         .collect()
     }
-    assert len(rows) == len(exact)
-    for r in rows:
-        assert abs(r["ndv"] - exact[r["user_id"]]) / max(exact[r["user_id"]], 1) < 0.2
+    for method in ("xxhash64", "murmur3"):
+        rows = hll_sketch(
+            events, "event_id", by=["user_id"], log2m=10, hash_method=method
+        ).collect()
+        assert len(rows) == len(exact), method
+        for r in rows:
+            n = exact[r["user_id"]]
+            assert abs(r["ndv"] - n) / max(n, 1) < 0.2, method
 
 
 def test_extreme_skew_correct(spark):
@@ -221,9 +238,7 @@ def test_murmur3_string_column(spark, documents):
     from js_hll_spark import HLL, HLLConfig
     from js_hll_spark.hashing import murmur3_64_bytes
 
-    est_row = hll_sketch(
-        documents, "text", log2m=12, hash_method="murmur3", engine="python"
-    ).first()
+    est_row = hll_sketch(documents, "text", log2m=12, hash_method="murmur3").first()
     texts = [r["text"] for r in documents.select("text").collect()]
     local = HLL(HLLConfig(12, 5), explicit_threshold=0, sparse_on=False)
     local.add_raw64(murmur3_64_bytes(texts))
@@ -234,19 +249,21 @@ def test_murmur3_string_column(spark, documents):
 
 def test_large_precision_configs(spark, events):
     """log2m=20 (1M registers, the 'tens of billions NDV' shape) and
-    regwidth=8 run through the full Spark path on both engines with
-    bit-identical results and valid spec encoding."""
-    from js_hll_spark import HLL
-
-    for engine in ("sql", "python"):
-        row = hll_sketch(
-            events, "user_id", log2m=20, regwidth=8, engine=engine
-        ).first()
-        s = HLL.from_bytes(bytes(row["sketch"]))
+    regwidth=8 run through the full Spark path for every hash method,
+    equal to the core reference, with valid spec encoding."""
+    exact = events.select(F.countDistinct("user_id")).first()[0]
+    for method in HASH_METHODS:
+        df, col = _hash_input(events, "user_id", method)
+        got = _by_key(
+            hll_sketch(df, col, log2m=20, regwidth=8, hash_method=method)
+        )
+        ref = _core_reference(df, col, hash_method=method, log2m=20, regwidth=8)
+        assert got == ref, method
+        sketch, ndv, _ = got[()]
+        s = HLL.from_bytes(sketch)
         assert s.config.log2m == 20 and s.config.regwidth == 8
-        exact = events.select(F.countDistinct("user_id")).first()[0]
         # at n << m the estimator is in the linear-counting regime: tight
-        assert abs(row["ndv"] - exact) / exact < 0.01, engine
+        assert abs(ndv - exact) / exact < 0.01, method
 
 
 def test_sql_registered_functions(spark, documents):
@@ -279,35 +296,27 @@ def test_sql_registered_functions(spark, documents):
 
 
 def test_streaming_assembly_matches_pergroup_path(spark, events):
-    """The batched mapInPandas assembly must be byte-identical to a
-    per-group build, including keys that straddle Arrow batch boundaries
+    """The batched Arrow kernels must be byte-identical to a per-group
+    core build, including keys that straddle Arrow batch boundaries
     (forced with a tiny batch size) and high-cardinality keys."""
-    from js_hll_spark.spark.agg import hll_sketch
-
+    sample = events.limit(3000).cache()
     small = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
     try:
-        got = {
-            r["user_id"]: (bytes(r["sketch"]), r["ndv"], r["rows_seen"])
-            for r in hll_sketch(
-                events.limit(3000), "event_type", by=["user_id"], log2m=10,
-                engine="sql",
-            ).collect()
-        }
+        for method in HASH_METHODS:
+            df, col = _hash_input(sample, "event_type", method)
+            spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
+            got = _by_key(
+                hll_sketch(df, col, by=["user_id"], log2m=10, hash_method=method),
+                ["user_id"],
+            )
+            spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", small)
+            ref = _core_reference(df, col, ["user_id"], hash_method=method, log2m=10)
+            assert got.keys() == ref.keys() and len(got) > 50, method
+            for k in got:
+                assert got[k] == ref[k], (method, k)
     finally:
-        spark.conf.set(
-            "spark.sql.execution.arrow.maxRecordsPerBatch", small
-        )
-    ref = {
-        r["user_id"]: (bytes(r["sketch"]), r["ndv"], r["rows_seen"])
-        for r in hll_sketch(
-            events.limit(3000), "event_type", by=["user_id"], log2m=10,
-            engine="python",
-        ).collect()
-    }
-    assert got.keys() == ref.keys() and len(got) > 50
-    for k in got:
-        assert got[k] == ref[k], k
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", small)
+        sample.unpersist()
 
 
 def test_keyed_assembly_null_group_keys(spark):
@@ -336,7 +345,7 @@ def test_keyed_assembly_null_group_keys(spark):
             assert abs(r["ndv"] - exact[k]) / exact[k] < 0.2, k
         # rollup stream over a null-keyed sketch table: same contract
         fine = hll_sketch(
-            df, "val", by=["grp"], log2m=11, engine="python", estimate=False
+            df, "val", by=["grp"], log2m=11, estimate=False
         )
         rolled = {r["grp"]: r["ndv"] for r in hll_rollup(fine, ["grp"]).collect()}
         assert set(rolled) == set(exact)
@@ -477,26 +486,21 @@ def test_introspection_and_set_algebra_udfs(spark, events):
 def test_raw_hash_method_addraw_parity(spark, events):
     """hash_method='raw' is the reference addRaw contract at DataFrame
     level: a column of already-64-bit-hashed values sketches bit-identically
-    (both engines) to letting the library hash the originals, when the
-    raw column was produced by the same hash."""
+    to letting the library hash the originals, when the raw column was
+    produced by the same hash, and to the core reference."""
     pre = events.select(
         "event_type", F.xxhash64("user_id").alias("h")
     )
-    for engine in ("sql", "python"):
-        via_raw = {
-            r["event_type"]: (bytes(r["sketch"]), r["ndv"])
-            for r in hll_sketch(
-                pre, "h", by=["event_type"], log2m=12,
-                hash_method="raw", engine=engine,
-            ).collect()
-        }
-        direct = {
-            r["event_type"]: (bytes(r["sketch"]), r["ndv"])
-            for r in hll_sketch(
-                events, "user_id", by=["event_type"], log2m=12, engine="sql"
-            ).collect()
-        }
-        assert via_raw == direct, engine
+    via_raw = _by_key(
+        hll_sketch(pre, "h", by=["event_type"], log2m=12, hash_method="raw"),
+        ["event_type"],
+    )
+    direct = _by_key(
+        hll_sketch(events, "user_id", by=["event_type"], log2m=12),
+        ["event_type"],
+    )
+    ref = _core_reference(pre, "h", ["event_type"], hash_method="raw", log2m=12)
+    assert via_raw == direct == ref
 
 
 def test_hll_hash_sql_functions_ecosystem_parity(spark, events):
@@ -613,18 +617,26 @@ def test_scalar_udfs_null_blobs_return_null(spark):
 
 def test_global_ndv_empty_input_returns_zero_row(spark):
     """countDistinct semantics: an empty or all-NULL input yields ONE
-    global row with ndv 0 in every engine (it used to return zero
-    rows, silently vanishing from downstream crossJoins)."""
-    import pyspark.sql.functions as F
-
-    empty = spark.range(10).select(
-        F.lit(None).cast("long").alias("v")
+    global row with ndv 0 for every hash method and engine (it used to
+    return zero rows, silently vanishing from downstream crossJoins);
+    the dense row's sketch is the core reference's empty sketch, and a
+    keyed call returns no rows."""
+    all_null = spark.range(10).select(
+        F.lit(None).cast("long").alias("v"), F.lit("k").alias("k")
     )
-    none_at_all = spark.range(0).select(F.col("id").alias("v"))
-    for df in (empty, none_at_all):
-        for engine in ("sql", "python", "explicit"):
-            rows = hll_sketch(df, "v", log2m=10, engine=engine).collect()
-            assert len(rows) == 1, engine
+    none_at_all = spark.range(0).select(F.col("id").alias("v"), F.lit("k").alias("k"))
+    for df in (all_null, none_at_all):
+        for method in HASH_METHODS:
+            ref = _core_reference(df, "v", hash_method=method, log2m=10)
+            got = _by_key(hll_sketch(df, "v", log2m=10, hash_method=method))
+            assert got == ref, method
+            assert got[()][1:] == (0.0, 0), method
+            keyed = hll_sketch(df, "v", by=["k"], log2m=10, hash_method=method)
+            assert keyed.collect() == [], method
+            rows = hll_sketch(
+                df, "v", log2m=10, hash_method=method, engine="explicit"
+            ).collect()
+            assert len(rows) == 1, method
             assert rows[0]["ndv"] == 0.0 and rows[0]["rows_seen"] == 0
 
 
@@ -635,39 +647,18 @@ def test_murmur3_rejects_float_columns(spark):
     import pytest as _pytest
 
     df = spark.range(10).select((F.col("id") * 1.5).alias("v"))
-    for engine in ("python", "explicit"):
-        with _pytest.raises(ValueError, match="integral/string/binary"):
-            hll_sketch(df, "v", hash_method="murmur3", engine=engine)
-
-
-def test_keyed_tree_fanin_equals_flat(spark, events):
-    """The tree-fanin intermediate's KEYED path (group on keys + salt,
-    emit keys only) must be byte-identical to the flat keyed merge —
-    test_tree_merge_equals_flat covers only the global case."""
-    flat = {
-        r["event_type"]: (bytes(r["sketch"]), r["ndv"], r["rows_seen"])
-        for r in hll_sketch(
-            events, "user_id", by=["event_type"], log2m=11,
-            tree_fanin=0, engine="python",
-        ).collect()
-    }
-    tree = {
-        r["event_type"]: (bytes(r["sketch"]), r["ndv"], r["rows_seen"])
-        for r in hll_sketch(
-            events, "user_id", by=["event_type"], log2m=11,
-            tree_fanin=3, engine="python",
-        ).collect()
-    }
-    assert flat == tree
+    for engine in ("auto", "explicit"):
+        for by in ([], ["v"]):
+            with _pytest.raises(ValueError, match="integral/string/binary"):
+                hll_sketch(df, "v", by, hash_method="murmur3", engine=engine)
 
 
 def test_keyed_merge_carry_across_tiny_arrow_batches(spark, events):
-    """The batched keyed merges carry group state across Arrow batch
+    """The batched keyed kernels carry group state across Arrow batch
     boundaries: forcing 7-row batches must change nothing — for the HLL
-    python-engine merge (byte-identical sketches) AND the companion
-    keyed merge (identical quantiles/rows), including a null group key."""
-    import pyspark.sql.functions as F
-
+    kernels of every hash method (byte-identical to the core reference)
+    AND the companion keyed merge (identical quantiles/rows), including
+    a null group key."""
     from js_hll_spark.spark.sketch_agg import approx_quantiles
 
     ev = events.withColumn(
@@ -675,14 +666,17 @@ def test_keyed_merge_carry_across_tiny_arrow_batches(spark, events):
             F.col("user_id") % 13
         )
     )
+    inputs = [(m,) + _hash_input(ev, "event_id", m) for m in HASH_METHODS]
+    ref = [
+        _core_reference(df, col, ["g"], hash_method=m, log2m=10)
+        for m, df, col in inputs
+    ]
 
     def snapshot():
-        hll = {
-            r["g"]: (bytes(r["sketch"]), r["ndv"], r["rows_seen"])
-            for r in hll_sketch(
-                ev, "event_id", by=["g"], log2m=10, engine="python"
-            ).collect()
-        }
+        hll = [
+            _by_key(hll_sketch(df, col, by=["g"], log2m=10, hash_method=m), ["g"])
+            for m, df, col in inputs
+        ]
         q = {
             r["g"]: r["q50"]
             for r in approx_quantiles(
@@ -700,7 +694,8 @@ def test_keyed_merge_carry_across_tiny_arrow_batches(spark, events):
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", small)
     assert tiny == normal
-    assert None in normal[0]  # the null group survived
+    assert normal[0] == ref
+    assert (None,) in ref[0]  # the null group survived
 
 
 def test_hll_fold_null_target_yields_null(spark):
@@ -862,3 +857,114 @@ def test_assemble_kernel_memory_is_bounded_per_group():
         tracemalloc.stop()
     assert seen == n_groups
     assert peak < 32 << 20, f"assembly peak {peak / 2**20:.1f} MB"
+
+
+def test_murmur3_groups_match_catalyst(spark):
+    """murmur3 keeps group keys as Arrow columns: a nullable bigint key
+    holding 2**53 (50 rows), 2**53 + 1 (30 rows) and NULL is three
+    groups, not one 80-row group, and a NaN double key is its own group,
+    not part of the NULL group. The (key, rows_seen) set must equal
+    groupBy(k).count(), also with Arrow batches that split the runs."""
+    big = 2**53
+    longs = (
+        [(big, f"a{i}") for i in range(50)]
+        + [(big + 1, f"b{i}") for i in range(30)]
+        + [(None, f"c{i}") for i in range(20)]
+    )
+    doubles = (
+        [(float("nan"), f"a{i}") for i in range(40)]
+        + [(None, f"b{i}") for i in range(25)]
+        + [(1.5, f"c{i}") for i in range(60)]
+    )
+
+    def norm(k):
+        return "NaN" if isinstance(k, float) and math.isnan(k) else k
+
+    small = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    try:
+        for batch in (small, "7"):
+            spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", batch)
+            for rows, ddl in ((longs, "k bigint, v string"), (doubles, "k double, v string")):
+                df = spark.createDataFrame(rows, ddl).repartition(3)
+                got = hll_sketch(df, "v", by=["k"], log2m=12, hash_method="murmur3")
+                want = df.groupBy("k").count().collect()
+                assert sorted(repr((norm(r["k"]), r["rows_seen"])) for r in got.collect()) == sorted(
+                    repr((norm(r["k"]), r["count"])) for r in want
+                ), (ddl, batch)
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", small)
+
+
+def test_murmur3_keyed_build_runs_no_job(spark, events):
+    """Library calls only build plans: a keyed murmur3 hll_ndv over a
+    shuffled input runs no Spark job until the caller's action."""
+    shuffled = events.groupBy("event_type", "user_id").count()
+    sc = spark.sparkContext
+    sc.setJobGroup("murmur3-build", "plan construction")
+    try:
+        out = hll_ndv(shuffled, "user_id", by=["event_type"], hash_method="murmur3")
+    finally:
+        sc.setJobGroup(None, None)
+    assert sc.statusTracker().getJobIdsForGroup("murmur3-build") == []
+    assert out.count() == events.select("event_type").distinct().count()
+
+
+def test_murmur3_partial_kernel_flushes_within_bound():
+    """The murmur3 partial kernel's register-file cache is bounded: 1,500
+    keys at log2m=16 would hold 98 MB of register files, past the 32 MB
+    cache bound, so the kernel must emit partials early and keep the
+    tracemalloc peak under 48 MB. Its partials, max-merged per key as
+    hll_assemble does, must equal a per-key core HLL build, and
+    rows_seen must sum to each key's row count."""
+    import tracemalloc
+
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql.types import ArrayType, LongType, StructField, StructType
+
+    from js_hll_spark.config import HLLConfig
+    from js_hll_spark.hashing import murmur3_64_bytes
+    from js_hll_spark.spark.agg import _PARTIAL_CACHE_BYTES, _murmur3_partial_kernel
+
+    config = HLLConfig(16, 5)
+    n_keys, per_key = 1500, 20
+    assert n_keys * config.m > 2 * _PARTIAL_CACHE_BYTES
+    rng = np.random.default_rng(5)
+    keys = np.repeat(np.arange(n_keys), per_key)
+    vals = np.array([f"v{i}" for i in range(keys.size)], dtype=object)
+    order = rng.permutation(keys.size)  # every key recurs across batches
+    key_col = [None if k == 0 else int(k) for k in keys[order]]
+    table = pa.table({"k": pa.array(key_col, pa.int64()), "__h64": vals[order]})
+    schema = StructType(
+        [
+            StructField("k", LongType(), True),
+            StructField("__regs", ArrayType(LongType(), False), False),
+            StructField("rows_seen", LongType(), False),
+        ]
+    )
+    kernel = _murmur3_partial_kernel(["k"], config, schema)
+
+    partials: dict = {}  # key -> [(packed registers, rows_seen), ...]
+    tracemalloc.start()
+    try:
+        for out in kernel(iter(table.to_batches(max_chunksize=3000))):
+            lists = out.column("__regs")
+            offs, packed = lists.offsets.to_numpy(), lists.values.to_numpy()
+            rows = out.column("rows_seen").to_pylist()
+            for i, k in enumerate(out.column("k").to_pylist()):
+                partials.setdefault(k, []).append((packed[offs[i] : offs[i + 1]], rows[i]))
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 48 << 20, f"partial peak {peak / 2**20:.1f} MB"
+    assert len(partials) == n_keys
+    # the cache was flushed before the end: keys arrive in several partials
+    assert sum(map(len, partials.values())) > n_keys
+    for k in range(n_keys):
+        ref = HLL(config, explicit_threshold=0, sparse_on=False)
+        ref.add_raw64(murmur3_64_bytes(list(vals[keys == k])))
+        regs = np.zeros(config.m, np.uint8)
+        for p, _ in partials[None if k == 0 else k]:
+            np.maximum.at(regs, p >> 8, p & 0xFF)
+        assert sum(n for _, n in partials[None if k == 0 else k]) == per_key, k
+        assert np.array_equal(regs, ref._regs), k
