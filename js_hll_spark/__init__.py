@@ -6,8 +6,11 @@ count-min, KLL, t-digest and Bloom companions — all exposed as mergeable
 aggregations over pyspark.sql DataFrames using Arrow-vectorized UDFs.
 """
 
+from . import _worker
 from .config import HLLConfig, alpha_m_squared
 from .core.hll import HLL, intersection_cardinality
+
+_worker.skip_unchanged_zip_rereads()
 
 __all__ = ["HLL", "HLLConfig", "alpha_m_squared", "intersection_cardinality"]
 __version__ = "0.1.0"

@@ -36,7 +36,16 @@ def package_zip() -> str:
 
 def ship_package(spark: SparkSession) -> None:
     """Make js_hll_spark importable on executor Python workers (local-mode
-    workers do not inherit the driver's sys.path mutations)."""
+    workers do not inherit the driver's sys.path mutations).
+
+    The first import of the package in a worker wraps
+    ``zipimporter.invalidate_caches`` (``js_hll_spark._worker``): a zip
+    archive on the worker's path, this one and ``pyspark.zip`` included,
+    is re-read at a task's start only when its stat changed since its
+    last read, instead of once per importer on every task (CPython 3.11
+    and 3.12). Re-shipping a changed zip is still picked up by the next
+    task. The driver is never patched, nor is CPython >= 3.13, which
+    re-reads lazily."""
     spark.sparkContext.addPyFile(package_zip())
 
 
@@ -45,6 +54,10 @@ def get_spark(
     master: str | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
+    """A session with the library's settings, with the package shipped to
+    the workers (``ship_package``). Each Python worker pays its zip import
+    set-up on its first task only; later tasks skip re-reading unchanged
+    archives (see ``ship_package``)."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or int(cpus)
