@@ -1,4 +1,5 @@
-"""Mergeable HLL aggregation over DataFrames — one dense register path.
+"""Mergeable HLL aggregation over DataFrames — one dense register path
+and one group-key path.
 
 Why not a GROUPED_AGG pandas UDF straight on raw rows: that shuffles the
 *raw rows* to their groups — fatal at 10^12 rows (SURVEY.md §4.3-1).
@@ -23,14 +24,22 @@ as Arrow columns. Union is a commutative, associative, idempotent max
 
 ``engine='explicit'`` (:func:`hll_sketch_explicit`) is the exactness
 tier: true EXPLICIT-mode sketches merged by :func:`hll_rollup`.
+
+**Group keys.** Every Python kernel that groups by key keeps the keys as
+Arrow columns and splits key-sorted Arrow runs with :func:`_run_starts`
+(NULL equals NULL, NaN equals NaN, int64 stays exact), so each returns
+exactly Catalyst's groups. Partials that read unsorted rows
+(``murmur3_partial``, the explicit tier, sketch_agg's companion
+partials) share :func:`_keyed_partial_kernel`; merges of serialized
+sketches (:func:`hll_rollup`, sketch_agg's merge) share
+:func:`_sorted_merge`.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Sequence
+from typing import Sequence
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -50,102 +59,190 @@ _SKETCH_COL = "sketch"
 _ROWS_COL = "rows_seen"
 _PACKED_COL = "__regs"
 
-# Byte bound on one murmur3_partial task's register files (m bytes per
-# cached key). Past it the task emits its partials early; the groupBy in
-# front of hll_assemble merges the duplicates.
+# Byte bounds on one task's cache of per-key partial state in
+# _keyed_partial_kernel: HLL partials (murmur3 register files,
+# explicit-tier sketches), and sketch_agg's companion sketches. Past the
+# bound the task emits its partials early; the merge after the shuffle
+# folds the duplicate keys.
 _PARTIAL_CACHE_BYTES = 32 << 20
+_SKETCH_CACHE_BYTES = 256 << 20
 
 
-def _null_safe_change_mask(kcols: list[pd.Series]) -> np.ndarray:
-    """Row mask marking group boundaries in key-sorted batches, treating
-    null == null. Arrow->pandas surfaces nullable numeric/timestamp keys
-    as NaN/NaT, and NaN != NaN would otherwise split a null-keyed group
-    into one group per row."""
-    n = len(kcols[0])
-    change = np.zeros(n, dtype=bool)
-    change[0] = True
-    for kc in kcols:
-        na = kc.isna().to_numpy()
-        vals = kc.to_numpy()
-        with np.errstate(invalid="ignore"):
-            neq = vals[1:] != vals[:-1]
-        neq = np.asarray(neq, dtype=bool)
-        # a pair of nulls is never a boundary; a single null always is
-        # (covers float columns where NaN != NaN already reads True and
-        # object columns where None != None reads False)
-        both_na = na[1:] & na[:-1]
-        one_na = na[1:] ^ na[:-1]
-        change[1:] |= (neq & ~both_na) | one_na
-    return change
+def _run_starts(cols: list, prev: list | None) -> np.ndarray:
+    """Row indexes of key-sorted Arrow columns where a run of equal keys
+    starts; ``prev`` is the previous batch's last row (None for the
+    first batch). NULL equals NULL and NaN equals NaN, as in Catalyst's
+    grouping."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if prev is not None:
+        cols = [pa.concat_arrays([p, c]) for p, c in zip(prev, cols)]
+    n = len(cols[0])
+    new = np.zeros(n, dtype=bool)
+    new[0] = prev is None
+    for c in cols:
+        a, b = c.slice(1), c.slice(0, n - 1)
+        ne = pc.not_equal(a, b)
+        if pa.types.is_floating(c.type):
+            ne = pc.and_(ne, pc.invert(pc.and_(pc.is_nan(a), pc.is_nan(b))))
+        ne = pc.if_else(pc.is_null(ne), pc.xor(pc.is_null(a), pc.is_null(b)), ne)
+        new[1:] |= ne.to_numpy(zero_copy_only=False)
+    return np.flatnonzero(new) - (prev is not None)
 
 
-def _key_tuple(kcols: list[pd.Series], i: int) -> tuple:
-    """Group-key tuple at row ``i`` with NaN/NaT normalized to None so
-    tuple equality across Arrow batch boundaries is null-safe."""
-    vals = []
-    for kc in kcols:
-        v = kc.iloc[i]
-        vals.append(None if pd.isna(v) else v)
-    return tuple(vals)
+def _value_types(schema: StructType, keys: Sequence[str]) -> list:
+    """Arrow types of ``schema``'s columns after the keys."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return [f.type for f in to_arrow_schema(schema)][len(keys):]
 
 
-def norm_group_key(g) -> tuple:
-    """groupby().indices key as a NaN/NaT->None-normalized tuple.
-    pandas materializes a FRESH NaN object per Arrow batch, so
-    un-normalized dict lookups miss and a null-keyed group accretes one
-    accumulator per batch instead of one per partition (results stay
-    correct — the merge re-reduces — but state and shuffle inflate by
-    the batch count)."""
-    gk = g if isinstance(g, tuple) else (g,)
-    return tuple(None if pd.isna(v) else v for v in gk)
+def _group_batch(keys, outs: list, names: list, types: list):
+    """One output RecordBatch of finished groups: ``keys``, an Arrow
+    table of their key rows, then their ``emit`` tuples column by
+    column."""
+    import pyarrow as pa
+
+    cols = [c.combine_chunks() for c in keys.columns]
+    cols += [pa.array(list(v), t) for v, t in zip(zip(*outs), types)]
+    return pa.RecordBatch.from_arrays(cols, names=names)
 
 
-def keyed_carry_stream(partials, group_cols, schema, *, prepare, fold, finish):
-    """The sorted-stream-with-carry skeleton shared by the batched keyed
-    merges of serialized sketches: the keyed :func:`hll_rollup` (which
-    ``hll_sketch_explicit`` and ``merge_sketch_tables`` go through) and
-    the companion-sketch merge in sketch_agg — ONE implementation of the
-    subtle part: null-safe group boundaries, per-segment folding, the
-    cross-Arrow-batch carry, the end-of-iterator flush. (The r3
-    NaN!=NaN null-group-split bug lived exactly in this skeleton.) The
-    dense path needs none of it: Catalyst forms its groups.
+def _keyed_partial_kernel(
+    keys, schema, name, *, prepare, factory, update, emit, state_bytes, budget
+):
+    """mapInArrow kernel skeleton of every Python partial that groups
+    unsorted rows by key (``murmur3_partial``, the explicit tier,
+    sketch_agg's companion partials). Rows in: the keys and the columns
+    ``prepare(batch)`` turns into numpy arrays (hashes, values, counts);
+    rows out: each cached key's Arrow key row, then ``emit(state)``.
 
-    ``prepare(pdf) -> batch_ctx`` runs once per Arrow batch (vectorized
-    extraction); ``fold(state_or_None, batch_ctx, start, end) -> state``
-    folds one contiguous same-key run; ``finish(key_tuple, state) ->
-    row tuple`` emits a completed group. NaN/NaT keys surface as None
-    in the key tuple (null-group convention shared with hll_sketch)."""
-    out_cols = [f.name for f in schema.fields]
-    group_cols = list(group_cols)
-    sorted_partials = partials.repartition(*group_cols).sortWithinPartitions(
-        *group_cols
-    )
+    Each Arrow batch is sorted by the keys and split into runs of equal
+    keys; each run folds into its key's state as
+    ``update(state, *arrays[lo:hi])``, the state made by ``factory()``.
+    The dict of states is only a cache keyed by the Python key tuple: a
+    key whose lookup misses (a NaN) adds another entry and emits another
+    partial row, which the merge folds back. When a new key would take
+    the cache past ``budget`` bytes at ``state_bytes()`` per key, the
+    kernel emits its partials early; output goes out in chunks of about
+    4 MB of state."""
+    sort_keys = [(k, "ascending") for k in keys]
+    names, types = schema.names, _value_types(schema, keys)
 
-    def stream(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cur: tuple | None = None
-        state = None
-        for pdf in batches:
-            if not len(pdf):
+    def keyed_partial(batches):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        cache: dict[tuple, object] = {}
+        # the cached keys' Arrow rows in cache order, copied out of their
+        # batches so a cached key does not pin its whole batch
+        key_rows: list = []
+
+        def flush():
+            keys_t, states = pa.Table.from_batches(key_rows), list(cache.values())
+            cache.clear()
+            key_rows.clear()
+            step = max(1, (4 << 20) // state_bytes())
+            for lo in range(0, len(states), step):
+                outs = [emit(s) for s in states[lo : lo + step]]
+                yield _group_batch(keys_t.slice(lo, step), outs, names, types)
+
+        for batch in batches:
+            n = batch.num_rows
+            if n == 0:
                 continue
-            kcols = [pdf[k] for k in group_cols]
-            change = _null_safe_change_mask(kcols)
-            starts = np.flatnonzero(change)
-            ends = np.append(starts[1:], len(pdf))
-            ctx = prepare(pdf)
-            done = []
-            for j in range(len(starts)):
-                key = _key_tuple(kcols, int(starts[j]))
-                if cur is not None and key != cur:
-                    done.append(finish(cur, state))
-                    state = None
-                cur = key
-                state = fold(state, ctx, int(starts[j]), int(ends[j]))
-            if done:
-                yield pd.DataFrame(done, columns=out_cols)
-        if cur is not None:
-            yield pd.DataFrame([finish(cur, state)], columns=out_cols)
+            arrays = prepare(batch)
+            kb, starts = batch.select(keys), np.zeros(1, dtype=np.int64)
+            if keys:
+                order = pc.sort_indices(batch, sort_keys=sort_keys, null_placement="at_end")
+                kb, order = kb.take(order), order.to_numpy()
+                arrays = [a[order] for a in arrays]
+                starts = _run_starts(kb.columns, None)
+            fresh: list[int] = []  # this batch's rows of keys new to the cache
+            for lo, hi in zip(starts, np.append(starts[1:], n)):
+                key = tuple(c[lo].as_py() for c in kb.columns)
+                state = cache.get(key)
+                if state is None:
+                    if len(cache) >= max(1, budget // state_bytes()):
+                        key_rows.append(kb.take(np.array(fresh, dtype=np.int64)))
+                        fresh = []
+                        yield from flush()
+                    state = cache[key] = factory()
+                    fresh.append(lo)
+                update(state, *(a[lo:hi] for a in arrays))
+            key_rows.append(kb.take(np.array(fresh, dtype=np.int64)))
+        if cache:
+            yield from flush()
 
-    return sorted_partials.mapInPandas(stream, schema=schema)
+    keyed_partial.__name__ = name
+    return keyed_partial
+
+
+def _sorted_merge(df, keys, schema, name, *, decode, merge, emit, sketch_col, rows_col=None):
+    """Merge serialized sketches into one row per group — the fold shared
+    by :func:`hll_rollup` and sketch_agg. Rows are hash-partitioned and
+    sorted by the keys (an unkeyed merge runs on one partition), and one
+    mapInArrow kernel folds each run of equal keys, ``decode(blob)`` per
+    row and ``merge(acc, sketch)``, carrying the open run across Arrow
+    batches. Each group goes out as its key's Arrow row from the input,
+    then ``emit(acc, rows)`` with ``rows`` the sum of ``rows_col``. A
+    group's sketch is serialized when its run ends, so the kernel holds
+    one decoded sketch at a time."""
+    names, types = schema.names, _value_types(schema, keys)
+
+    def sorted_merge(batches):
+        import pyarrow as pa
+
+        acc = key = prev = None
+        rows, key_rows, outs = 0, [], []
+        for batch in batches:
+            n = batch.num_rows
+            if n == 0:
+                continue
+            kb = batch.select(keys)
+            if keys:
+                starts = _run_starts(kb.columns, prev)
+                prev = [c.slice(n - 1, 1) for c in kb.columns]
+            else:
+                starts = [0] if key is None else []
+            new = np.zeros(n, dtype=bool)
+            new[starts] = True
+            blobs = batch.column(sketch_col).to_pylist()
+            seen = batch.column(rows_col).fill_null(0).to_pylist() if rows_col else [0] * n
+            for i in range(n):
+                if new[i]:
+                    if key is not None:
+                        key_rows.append(key)
+                        outs.append(emit(acc, rows))
+                    acc, rows, key = None, 0, kb.slice(i, 1)
+                s = decode(blobs[i])
+                acc = s if acc is None else merge(acc, s)
+                rows += seen[i]
+            if outs:
+                yield _group_batch(pa.Table.from_batches(key_rows), outs, names, types)
+                key_rows, outs = [], []
+        if key is not None:
+            yield _group_batch(pa.Table.from_batches([key]), [emit(acc, rows)], names, types)
+
+    sorted_merge.__name__ = name
+    if keys:
+        df = df.repartition(*keys).sortWithinPartitions(*keys)
+    else:
+        df = df.repartition(1)
+    return df.mapInArrow(sorted_merge, schema=schema)
+
+
+def _hashes(values, murmur3: bool) -> np.ndarray:
+    """uint64 hashes of an Arrow column: the AK murmur3 of its values, or
+    its longs as they are (already hashed: xxhash64 or 'raw')."""
+    import pyarrow as pa
+
+    if not murmur3:
+        return to_uint64(values.to_numpy())
+    if pa.types.is_integer(values.type):
+        return murmur3_64_uint64(to_uint64(values.to_numpy()))
+    return murmur3_64_bytes(values)
 
 
 def _merge_schema(
@@ -193,12 +290,8 @@ def hll_sketch(
     threshold — the exactness tier, see :func:`hll_sketch_explicit`).
     Any other value raises ``ValueError``.
 
-    Group keys: the dense path keeps keys as Arrow columns and returns
-    exactly Catalyst's groups. ``engine='explicit'`` and
-    :func:`hll_rollup` move keys through pandas, where NaN and NULL
-    conflate (a NaN-keyed group merges into the null group) and a
-    nullable bigint key becomes float64 (keys above 2**53 can merge) —
-    cast such keys to string upstream there.
+    Group keys stay Arrow columns on every engine, so NULL, NaN and
+    int64 keys above 2**53 come back as exactly Catalyst's groups.
 
     Memory: per partition the dense path holds O(keys x m) register
     state — in Catalyst's spill-capable HashAggregate, or for murmur3 in
@@ -280,11 +373,9 @@ def hll_sketch_explicit(
 
     State per key is bounded by the explicit threshold (8 bytes x
     threshold before promotion); past the threshold the sketch promotes
-    and estimates degrade gracefully to the dense tier's accuracy.
-    There is no memory-bounded flush across keys: with very
-    high-cardinality ``by`` keys prefer the dense path (fixed bytes per
-    key, spill-capable aggregation) — the explicit tier exists for
-    exactness at modest key counts, not 100 TB group fan-out."""
+    and estimates degrade gracefully to the dense tier's accuracy. Each
+    task's partial sketches are emitted early past a fixed byte bound
+    (:func:`_keyed_partial_kernel`)."""
     config = HLLConfig(log2m, regwidth)
     keys = list(by)
     df = df.filter(F.col(value_col).isNotNull())
@@ -298,60 +389,39 @@ def hll_sketch_explicit(
         raise ValueError(f"unknown hash_method {hash_method!r}")
     # filter after the cast: non-castable raw values yield NULL hashes
     hashed = df.select(*keys, h.alias(_HASH_COL)).filter(F.col(_HASH_COL).isNotNull())
-    hash_in_python = hash_method == "murmur3"
+    murmur3 = hash_method == "murmur3"
 
-    key_fields = [hashed.schema[k] for k in keys]
     schema = StructType(
-        key_fields
+        [hashed.schema[k] for k in keys]
         + [
             StructField(_SKETCH_COL, BinaryType(), False),
             StructField(_ROWS_COL, LongType(), False),
         ]
     )
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        sk: dict[tuple, list] = {}  # key -> [HLL, rows]
-        for pdf in batches:
-            col = pdf[_HASH_COL]
-            if not hash_in_python:
-                h = to_uint64(col.to_numpy())
-            elif col.dtype == object or str(col.dtype).startswith("str"):
-                h = murmur3_64_bytes(col)
-            else:
-                h = murmur3_64_uint64(to_uint64(col.to_numpy()))
-            if keys:
-                groups = pdf.groupby(keys, sort=False, dropna=False).indices
-            else:
-                groups = {(): np.arange(len(h))}
-            for gkey, idx in groups.items():
-                gk = norm_group_key(gkey)
-                ent = sk.get(gk)
-                if ent is None:
-                    ent = sk[gk] = [HLL(config), 0]
-                ent[0].add_raw64(h[idx])
-                ent[1] += len(idx)
-        if sk:
-            out = {k: [gk[i] for gk in sk] for i, k in enumerate(keys)}
-            out[_SKETCH_COL] = [s.to_bytes() for s, _ in sk.values()]
-            out[_ROWS_COL] = [n for _, n in sk.values()]
-            yield pd.DataFrame(out)
+    def update(state, h):
+        state[0].add_raw64(h)
+        state[1] += h.size
 
-    partials = hashed.mapInPandas(fn, schema=schema)
+    partial = _keyed_partial_kernel(
+        keys,
+        schema,
+        "hll_explicit_partial",
+        prepare=lambda batch: [_hashes(batch.column(_HASH_COL), murmur3)],
+        factory=lambda: [HLL(config), 0],
+        update=update,
+        emit=lambda state: (state[0].to_bytes(), state[1]),
+        # an HLL object holds at most ~16 bytes per register: its sparse
+        # dict just below promotion
+        state_bytes=lambda: 16 * config.m,
+        budget=_PARTIAL_CACHE_BYTES,
+    )
+    partials = hashed.mapInArrow(partial, schema=schema)
     if not keys:
-        # empty-input seed: one EMPTY spec sketch built on an executor
-        # (Spark runs no Python worker for an empty relation, and a
-        # driver-side literal would embed the sketch in the plan); the
-        # union identity for real inputs, so an empty input still
+        # empty-input seed: the union identity, so an empty input still
         # yields one row with ndv 0
-        def seed_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for _ in batches:
-                pass
-            yield pd.DataFrame(
-                {_SKETCH_COL: [HLL(config).to_bytes()], _ROWS_COL: [0]}
-            )
-
         partials = partials.unionByName(
-            df.sparkSession.range(1).mapInPandas(seed_fn, schema=schema)
+            _identity_seed(df.sparkSession, schema, lambda: HLL(config).to_bytes())
         )
     out = hll_rollup(partials, keys, estimate=estimate, rows_col=_ROWS_COL)
     if not keep_sketch:
@@ -359,86 +429,56 @@ def hll_sketch_explicit(
     return out
 
 
+def _identity_seed(spark, schema: StructType, blob) -> DataFrame:
+    """One (sketch, rows_seen = 0) partial holding ``blob()``, a merge's
+    identity, built on an executor: Spark runs no Python worker for an
+    empty relation, and a driver-side literal would embed the sketch in
+    the plan."""
+
+    def identity_seed(batches):
+        import pyarrow as pa
+
+        for _ in batches:
+            pass
+        yield pa.RecordBatch.from_arrays(
+            [pa.array([blob()], pa.binary()), pa.array([0], pa.int64())],
+            names=schema.names,
+        )
+
+    return spark.range(1).mapInArrow(identity_seed, schema=schema)
+
+
 def _murmur3_partial_kernel(keys, config, schema):
     """mapInArrow kernel that produces hll_sketch_sql's packed registers
     for ``hash_method='murmur3'``: (keys..., value) rows in, one
-    (keys..., ``__regs``, ``rows_seen``) row per key out when the
-    partition ends — the nonzero registers packed as ``(idx << 8) | val``,
-    the format hll_assemble reads.
-
-    Each Arrow batch is hashed with the vectorized AK murmur3, sorted by
-    the keys in Arrow and split into runs of equal keys (NULL equals
-    NULL, NaN equals NaN); each run max-reduces into its key's register
-    file. The dict of register files is only a cache keyed by the
-    Python key tuple: a key whose lookup misses (a NaN) adds another
-    entry and emits another partial row. Output keys are Arrow rows of
-    the input, never the dict key. Past ``_PARTIAL_CACHE_BYTES`` of
-    register files the kernel emits its rows early; output goes out in
-    chunks of about 4 MB of packed registers."""
-    from .sketch_agg import _run_starts
-
+    (keys..., ``__regs``, ``rows_seen``) row per key out — the nonzero
+    registers packed as ``(idx << 8) | val``, the format hll_assemble
+    reads. Each run of equal keys is hashed with the vectorized AK
+    murmur3 and max-reduces into its key's register file, at most
+    ``_PARTIAL_CACHE_BYTES`` of them per task
+    (:func:`_keyed_partial_kernel`)."""
     m = config.m
-    max_keys = max(1, _PARTIAL_CACHE_BYTES // m)
-    sort_keys = [(k, "ascending") for k in keys]
 
-    def murmur3_partial(batches):
-        import pyarrow as pa
-        import pyarrow.compute as pc
+    def update(state, h):
+        update_registers(state[0], h, config)
+        state[1] += h.size
 
-        cache: dict[tuple, list] = {}  # key -> [registers, rows]
-        key_rows: list = []  # the cached keys' Arrow rows, in cache order
+    def emit(state):
+        regs, rows = state
+        nz = np.flatnonzero(regs)
+        return (nz << 8) | regs[nz], rows
 
-        def flush():
-            if not cache:
-                return
-            ents = list(cache.values())
-            kt = pa.Table.from_batches(key_rows).combine_chunks() if keys else None
-            cache.clear()
-            key_rows.clear()
-            lo, parts, offs = 0, [], [0]
-            for i, (r, _) in enumerate(ents):
-                nz = np.flatnonzero(r)
-                parts.append((nz << 8) | r[nz])
-                offs.append(offs[-1] + nz.size)
-                if offs[-1] < (1 << 19) and i + 1 < len(ents):
-                    continue
-                packed = pa.ListArray.from_arrays(
-                    pa.array(offs, pa.int32()), pa.array(np.concatenate(parts))
-                )
-                rows = pa.array([n for _, n in ents[lo : i + 1]], pa.int64())
-                cols = [kt.column(k).chunk(0).slice(lo, i + 1 - lo) for k in keys]
-                yield pa.RecordBatch.from_arrays(
-                    cols + [packed, rows], names=schema.names
-                )
-                lo, parts, offs = i + 1, [], [0]
-
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            vals = batch.column(_HASH_COL)
-            if pa.types.is_integer(vals.type):
-                h = murmur3_64_uint64(to_uint64(vals.to_numpy()))
-            else:
-                h = murmur3_64_bytes(vals)
-            kb, starts = batch.select(keys), np.zeros(1, dtype=np.int64)
-            if keys:
-                order = pc.sort_indices(batch, sort_keys=sort_keys, null_placement="at_end")
-                kb, h = kb.take(order), h[order.to_numpy()]
-                starts = _run_starts(kb.columns, None)
-            for lo, hi in zip(starts, np.append(starts[1:], n)):
-                key = tuple(c[lo].as_py() for c in kb.columns)
-                ent = cache.get(key)
-                if ent is None:
-                    if len(cache) >= max_keys:
-                        yield from flush()
-                    ent = cache[key] = [np.zeros(m, dtype=np.uint8), 0]
-                    key_rows.append(kb.slice(lo, 1))
-                update_registers(ent[0], h[lo:hi], config)
-                ent[1] += hi - lo
-        yield from flush()
-
-    return murmur3_partial
+    return _keyed_partial_kernel(
+        keys,
+        schema,
+        "murmur3_partial",
+        prepare=lambda batch: [_hashes(batch.column(_HASH_COL), True)],
+        factory=lambda: [np.zeros(m, dtype=np.uint8), 0],
+        update=update,
+        emit=emit,
+        state_bytes=lambda: m,
+        budget=_PARTIAL_CACHE_BYTES,
+    )
 
 
 def _assemble_kernel(keys, config, schema, *, estimate, keep_sketch):
@@ -713,65 +753,30 @@ def hll_rollup(
     (src/hll.js:328-349). Input sketches are spec-encoded bytes and may
     mix EXPLICIT/SPARSE/FULL and even shapes (auto-fold applies).
     ``rows_col`` (e.g. ``rows_seen``) is summed per group in the same
-    fold and emitted last."""
+    fold and emitted last. Group keys come back as Arrow rows of the
+    input, exactly Catalyst's groups (:func:`_sorted_merge`); an unkeyed
+    rollup of an empty table returns no rows."""
     keys = list(by)
-    carried = [rows_col] if rows_col else []  # selected and emitted
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        acc: HLL | None = None
-        for blob in pdf[sketch_col]:
-            s = HLL.from_bytes(bytes(blob))
-            acc = s if acc is None else acc.union(s)
-        out = {k: [pdf[k].iloc[0]] for k in keys}
-        out[_SKETCH_COL] = [acc.to_bytes()]
-        if estimate:
-            out["ndv"] = [acc.algorithm_cardinality()]
-        if rows_col:
-            out[rows_col] = [int(pdf[rows_col].sum())]
-        return pd.DataFrame(out)
-
-    fields = [df.schema[k] for k in keys] + [
-        StructField(_SKETCH_COL, BinaryType(), False)
-    ]
+    fields = [df.schema[k] for k in keys] + [StructField(_SKETCH_COL, BinaryType(), False)]
     if estimate:
         fields.append(StructField("ndv", DoubleType(), False))
-    fields += [StructField(c, LongType(), False) for c in carried]
-    if not keys:
-        return df.groupBy(*keys).applyInPandas(fn, schema=StructType(fields))
+    if rows_col:
+        fields.append(StructField(rows_col, LongType(), False))
 
-    # keyed rollup: stream whole Arrow batches through one python call
-    # (hash repartition + in-partition sort, union with carry across
-    # batch boundaries) instead of one applyInPandas call per group —
-    # per-group call overhead dominates at high rollup-key cardinality.
-    # Shares the carry skeleton with the register/companion merges (r4).
-    def prepare(pdf):
-        rows = pdf[rows_col].to_numpy() if rows_col else None
-        return pdf[sketch_col].to_numpy(), rows
-
-    def fold(state, ctx, start, end):
-        blobs, rows = ctx
-        acc, n = state if state is not None else (None, 0)
-        for i in range(start, end):
-            s = HLL.from_bytes(bytes(blobs[i]))
-            acc = s if acc is None else acc.union(s)
-        if rows is not None:
-            n += int(rows[start:end].sum())
-        return acc, n
-
-    def finish(key, state):
-        acc, n = state
-        row = list(key) + [acc.to_bytes()]
+    def emit(acc, rows):
+        out = (acc.to_bytes(),)
         if estimate:
-            row.append(acc.algorithm_cardinality())
-        if rows_col:
-            row.append(n)
-        return tuple(row)
+            out += (acc.algorithm_cardinality(),)
+        return out + (rows,) if rows_col else out
 
-    return keyed_carry_stream(
-        df.select(*keys, sketch_col, *carried),
+    return _sorted_merge(
+        df.select(*keys, sketch_col, *([rows_col] if rows_col else [])),
         keys,
         StructType(fields),
-        prepare=prepare,
-        fold=fold,
-        finish=finish,
+        "hll_rollup",
+        decode=HLL.from_bytes,
+        merge=lambda acc, s: acc.union(s),
+        emit=emit,
+        sketch_col=sketch_col,
+        rows_col=rows_col,
     )

@@ -9,6 +9,10 @@ Value transport:
   computed JVM-side; raw values never cross into Python
 - value sketches (kll, tdigest) consume the column cast to double
 
+Group keys take agg.py's one Arrow key path: the partials are
+``_keyed_partial_kernel`` and the merge is ``_sorted_merge``, so every
+kind returns exactly Catalyst's groups.
+
 ``heavy_hitters`` does not go through the harness: Catalyst counts each
 (group, value) exactly, and two ``mapInArrow`` kernels build the
 count-min partials with exact-count candidates, then merge and score
@@ -17,7 +21,7 @@ them, one row per group.
 
 from __future__ import annotations
 
-from typing import Callable, Iterator, Sequence
+from typing import Callable, Sequence
 
 import numpy as np
 import pandas as pd
@@ -34,37 +38,32 @@ from ..core.cms import CountMinSketch, km_positions
 from ..core.kll import KLLSketch
 from ..core.tdigest import TDigest
 from ..hashing import to_uint64
+from .agg import (
+    _SKETCH_CACHE_BYTES,
+    _identity_seed,
+    _keyed_partial_kernel,
+    _run_starts,
+    _sorted_merge,
+)
 
 _VAL = "__v"
 _CMS = "__cms"
 _CANDS = "__cands"
 
-# null-safe dict identity for groupby keys across Arrow batches — the
-# canonical normalizer lives beside the HLL engine's partial fns
-from .agg import norm_group_key as _norm_key  # noqa: E402
 
-def _cms_update(s: CountMinSketch, v: np.ndarray, counts: np.ndarray | None = None) -> None:
-    if counts is not None:
-        # pre-aggregated (value, count) pairs from the JVM HashAggregate
-        s.update_hashed(to_uint64(v), counts.astype(np.int64, copy=False))
-        return
-    # pre-aggregate the batch: real token streams repeat heavily, and one
-    # np.add.at per unique value beats 130M scattered adds by 10-50x
-    u, c = np.unique(to_uint64(v), return_counts=True)
-    s.update_hashed(u, c)
-
-
-def _bloom_update(s: BloomFilter, v: np.ndarray) -> None:
+def _bloom_update(s: BloomFilter, v: np.ndarray, n: np.ndarray) -> None:
     u = np.unique(to_uint64(v))
     s.add_hashed(u)
     # n_items tracks insertions for the FPR estimate; count duplicates too
     s.n_items += int(v.size - u.size)
 
 
+# ``update(sketch, values, counts)``: counts are the rows behind each
+# value — Catalyst's pre-aggregated counts for cms, ones otherwise
 _KINDS: dict[str, dict] = {
     "cms": {
         "factory": lambda p: CountMinSketch(p.get("depth", 5), p.get("width", 2048)),
-        "update": _cms_update,
+        "update": lambda s, v, n: s.update_hashed(to_uint64(v), n),
         "decode": CountMinSketch.from_bytes,
         "hashed": True,
     },
@@ -76,13 +75,13 @@ _KINDS: dict[str, dict] = {
     },
     "kll": {
         "factory": lambda p: KLLSketch(p.get("k", 200)),
-        "update": lambda s, v: s.update(v),
+        "update": lambda s, v, n: s.update(v),
         "decode": KLLSketch.from_bytes,
         "hashed": False,
     },
     "tdigest": {
         "factory": lambda p: TDigest(p.get("compression", 100.0)),
-        "update": lambda s, v: s.update(v),
+        "update": lambda s, v, n: s.update(v),
         "decode": TDigest.from_bytes,
         "hashed": False,
     },
@@ -98,15 +97,15 @@ def sketch_agg(
     params: dict | None = None,
     finalize: Callable[[object], dict] | None = None,
     finalize_schema: list[StructField] | None = None,
-    memory_budget_bytes: int = 256 << 20,
 ) -> DataFrame:
     """Aggregate ``value_col`` into one ``kind`` sketch per group.
 
     Returns (keys..., sketch binary, rows_seen long, *finalize columns).
-    ``finalize(sketch) -> {col: value}`` runs once per merged group.
+    ``finalize(sketch) -> {col: value}`` runs once per merged group. An
+    unkeyed call returns one row even on empty input.
 
-    Spill-aware: partial state flushes to output rows when it exceeds
-    ``memory_budget_bytes`` (the merge stage re-reduces duplicates).
+    Memory-bounded: a task's partial sketches are emitted early past
+    4,096 keys or a fixed byte budget (the merge re-reduces duplicates).
     """
     spec = _KINDS[kind]
     params = params or {}
@@ -122,8 +121,8 @@ def sketch_agg(
     # materialize as one phantom value (bloom: NULL probes report
     # member; cms: phantom heavy hitter with the null count)
     df = df.filter(F.col(value_col).isNotNull())
-    pre_counted = kind == "cms" and params.get("pre_aggregate", True)
-    if pre_counted:
+    counted = kind == "cms"
+    if counted:
         src = (
             df.select(*keys, F.xxhash64(F.col(value_col)).alias(_VAL))
             .groupBy(*keys, _VAL)
@@ -140,167 +139,79 @@ def sketch_agg(
             *keys, F.col(value_col).cast("double").alias(_VAL)
         ).filter(F.col(_VAL).isNotNull() & ~F.isnan(F.col(_VAL)))
 
-    key_fields = [src.schema[k] for k in keys]
     partial_schema = StructType(
-        key_fields
+        [src.schema[k] for k in keys]
         + [
             StructField("sketch", BinaryType(), False),
             StructField("rows_seen", LongType(), False),
         ]
     )
 
-    def partial_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc: dict[tuple, object] = {}
-        rows: dict[tuple, int] = {}
-        sketch_size: list[int] = []  # max serialized size observed so far
-        # Variable-size kinds (kll/tdigest) serialize tiny while empty
-        # (KLL 32 B empty vs ~2.5 KB populated), so a budget fed only by
-        # the at-creation sample under-counts state by 35-80x (ADVICE
-        # r3). The hard key cap therefore stays ACTIVE permanently, not
-        # just until the first flush: a flush taken while sketches are
-        # still small would otherwise re-arm the budget with a stale
-        # size and admit millions of keys that then grow under it. Each
-        # flush re-samples the max populated size, which only ever
-        # tightens the byte budget; the cap bounds what the budget
-        # cannot see. 4096 keys x the largest companion partial
-        # (~640 KB CMS) = 2.6 GB worst case, and the merge stage
-        # re-reduces duplicate key rows from extra flushes.
-        key_cap = 4096
+    def prepare(batch):
+        v = batch.column(_VAL).to_numpy()
+        n = batch.column("__cnt").to_numpy() if counted else np.ones(v.size, np.int64)
+        return [v, n]
 
-        def flush() -> pd.DataFrame:
-            out = {k: [gk[i] for gk in acc] for i, k in enumerate(keys)}
-            blobs = [s.to_bytes() for s in acc.values()]
-            if blobs:
-                sz = max(len(b) for b in blobs)
-                if not sketch_size:
-                    sketch_size.append(sz)
-                else:
-                    sketch_size[0] = max(sketch_size[0], sz)
-            out["sketch"] = blobs
-            out["rows_seen"] = [rows[gk] for gk in acc]
-            acc.clear()
-            rows.clear()
-            return pd.DataFrame(out)
+    def update(state, v, n):
+        spec["update"](state[0], v, n)
+        state[1] += int(n.sum())
 
-        for pdf in batches:
-            v = pdf[_VAL].to_numpy()
-            cnt = pdf["__cnt"].to_numpy() if pre_counted else None
-            if not keys:
-                groups = {(): np.arange(len(pdf))}
-            else:
-                # _norm_key: pandas materializes a FRESH NaN/NaT object per
-                # batch, so un-normalized dict lookups miss and a null-keyed
-                # group would accrete one partial per batch
-                groups = {
-                    _norm_key(g): idx
-                    for g, idx in pdf.groupby(
-                        list(keys), sort=False, dropna=False
-                    ).indices.items()
-                }
-            for gk, idx in groups.items():
-                s = acc.get(gk)
-                if s is None:
-                    s = acc[gk] = spec["factory"](params)
-                    rows[gk] = 0
-                    if not sketch_size:
-                        # sample NOW, not at first flush — an unsampled
-                        # budget lets 4096 full sketches accumulate
-                        # (640 KB CMS x 4096 = 2.6 GB) before any check
-                        sketch_size.append(len(s.to_bytes()))
-                if pre_counted:
-                    spec["update"](s, v[idx], cnt[idx])
-                    rows[gk] += int(cnt[idx].sum())
-                else:
-                    spec["update"](s, v[idx])
-                    rows[gk] += len(idx)
-            over_budget = (
-                sketch_size and len(acc) * sketch_size[0] > memory_budget_bytes
+    # Variable-size kinds (kll/tdigest) serialize tiny while empty (KLL
+    # 32 B empty vs ~2.5 KB populated), so a byte budget fed only by the
+    # at-creation sample under-counts state by 35-80x (ADVICE r3). The
+    # size is sampled when the first sketch is made and re-sampled as the
+    # largest serialized partial at every flush, which only tightens the
+    # budget; a cap of 4,096 keys bounds what the sample cannot see
+    # (4,096 x the largest partial, a ~640 KB CMS, is 2.6 GB worst case).
+    size = [0]
+
+    def factory():
+        s = spec["factory"](params)
+        size[0] = size[0] or len(s.to_bytes())
+        return [s, 0]
+
+    def emit(state):
+        blob = state[0].to_bytes()
+        size[0] = max(size[0], len(blob))
+        return blob, state[1]
+
+    partial = _keyed_partial_kernel(
+        keys,
+        partial_schema,
+        "sketch_partial",
+        prepare=prepare,
+        factory=factory,
+        update=update,
+        emit=emit,
+        state_bytes=lambda: max(size[0], _SKETCH_CACHE_BYTES // 4096),
+        budget=_SKETCH_CACHE_BYTES,
+    )
+    partials = src.mapInArrow(partial, schema=partial_schema)
+    if not keys:
+        # empty-input seed: the union identity, so an empty or all-null
+        # input still yields one empty-sketch row
+        partials = partials.unionByName(
+            _identity_seed(
+                df.sparkSession, partial_schema, lambda: spec["factory"](params).to_bytes()
             )
-            if over_budget or len(acc) >= key_cap:
-                yield flush()
-        if acc:
-            yield flush()
-
-    partials = src.mapInPandas(partial_fn, schema=partial_schema)
-
-    out_fields = list(key_fields) + [
-        StructField("sketch", BinaryType(), False),
-        StructField("rows_seen", LongType(), False),
-    ] + (finalize_schema or [])
-
-    def merge_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        merged = None
-        for blob in pdf["sketch"]:
-            s = spec["decode"](bytes(blob))
-            merged = s if merged is None else merged.merge(s)
-        out = {k: [pdf[k].iloc[0]] for k in keys}
-        out["sketch"] = [merged.to_bytes()]
-        out["rows_seen"] = [int(pdf["rows_seen"].sum())]
-        if finalize is not None:
-            for col, val in finalize(merged).items():
-                out[col] = [val]
-        return pd.DataFrame(out)
-
-    if keys:
-        # keyed merge: stream whole Arrow batches through one python
-        # call (hash repartition + in-partition sort, merge with carry
-        # across batch boundaries) instead of one applyInPandas call per
-        # group — per-group call overhead dominates at high key
-        # cardinality (the same fix the HLL engine's keyed assembly got
-        # in r2; the scan order is deterministic, which the old
-        # shuffle-arrival merge order was not). NaN/NaT group keys are
-        # emitted as NULL (the null-group convention shared with
-        # hll_sketch — they were already one group pandas-side).
-        from .agg import keyed_carry_stream
-
-        fin_cols = [f.name for f in (finalize_schema or [])]
-
-        def prepare(pdf):
-            return pdf["sketch"].to_numpy(), pdf["rows_seen"].to_numpy()
-
-        def fold(state, ctx, start, end):
-            blobs, rseen = ctx
-            acc, rows_acc = state if state is not None else (None, 0)
-            for i in range(start, end):
-                s = spec["decode"](bytes(blobs[i]))
-                acc = s if acc is None else acc.merge(s)
-            return acc, rows_acc + int(rseen[start:end].sum())
-
-        def finish(key, state):
-            acc, rows_acc = state
-            row = list(key) + [acc.to_bytes(), rows_acc]
-            if finalize is not None:
-                fin = finalize(acc)
-                row += [fin[c] for c in fin_cols]
-            return tuple(row)
-
-        return keyed_carry_stream(
-            partials,
-            keys,
-            StructType(out_fields),
-            prepare=prepare,
-            fold=fold,
-            finish=finish,
         )
 
-    # empty-input seed (same contract as agg.py's _zero_partial_seed):
-    # Spark never invokes Python workers on empty relations, so without
-    # this an empty/all-null input returns zero rows instead of one
-    # empty-sketch row
-    def seed_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for _ in batches:
-            pass
-        yield pd.DataFrame(
-            {
-                "sketch": [spec["factory"](params).to_bytes()],
-                "rows_seen": [0],
-            }
-        )
+    fin_cols = [f.name for f in finalize_schema or []]
 
-    seed = df.sparkSession.range(1).mapInPandas(seed_fn, schema=partial_schema)
-    partials = partials.unionByName(seed)
-    return partials.groupBy(F.lit(1).alias("__g")).applyInPandas(
-        lambda pdf: merge_fn(pdf), schema=StructType(out_fields)
+    def emit_group(acc, rows):
+        fin = finalize(acc) if finalize is not None else {}
+        return (acc.to_bytes(), rows, *(fin[c] for c in fin_cols))
+
+    return _sorted_merge(
+        partials,
+        keys,
+        StructType(list(partial_schema.fields) + (finalize_schema or [])),
+        "sketch_merge",
+        decode=spec["decode"],
+        merge=lambda acc, s: acc.merge(s),
+        emit=emit_group,
+        sketch_col="sketch",
+        rows_col="rows_seen",
     )
 
 
@@ -375,29 +286,6 @@ class SpaceSavingCounter:
         if self.counts is None:
             return None
         return self.counts.nlargest(n)
-
-
-def _run_starts(cols: list, prev: list | None) -> np.ndarray:
-    """Row indexes of key-sorted Arrow columns where a run of equal keys
-    starts; ``prev`` is the previous batch's last row (None for the
-    first batch). NULL equals NULL and NaN equals NaN, as in Catalyst's
-    grouping."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    if prev is not None:
-        cols = [pa.concat_arrays([p, c]) for p, c in zip(prev, cols)]
-    n = len(cols[0])
-    new = np.zeros(n, dtype=bool)
-    new[0] = prev is None
-    for c in cols:
-        a, b = c.slice(1), c.slice(0, n - 1)
-        ne = pc.not_equal(a, b)
-        if pa.types.is_floating(c.type):
-            ne = pc.and_(ne, pc.invert(pc.and_(pc.is_nan(a), pc.is_nan(b))))
-        ne = pc.if_else(pc.is_null(ne), pc.xor(pc.is_null(a), pc.is_null(b)), ne)
-        new[1:] |= ne.to_numpy(zero_copy_only=False)
-    return np.flatnonzero(new) - (prev is not None)
 
 
 def _hh_partial_kernel(keys: list[str], schema: StructType, *, depth: int, width: int, pool: int):

@@ -194,14 +194,36 @@ def test_sql_engine_keyed_assembly_is_batched(spark, events):
 
 def test_sketch_agg_keyed_merge_is_batched(spark, documents):
     """The companion-sketch keyed merge must stream whole Arrow batches
-    (repartition + sort + MapInPandas with cross-batch carry), never one
-    applyInPandas python call per group — per-group call overhead is the
-    scale bottleneck at high key cardinality (same shape the HLL keyed
-    assembly was moved to in r2)."""
+    (repartition + sort + one MapInArrow with cross-batch carry), never
+    one applyInPandas python call per group — per-group call overhead is
+    the scale bottleneck at high key cardinality (same shape the HLL
+    keyed assembly was moved to in r2)."""
     from js_hll_spark.spark.sketch_agg import approx_quantiles
 
     p = plan(
         approx_quantiles(documents, "n_chars", by=["lang"], qs=(0.5,))
     )
     assert "FlatMapGroupsInPandas" not in p
-    assert "MapInPandas" in p and "Sort" in p
+    assert "sketch_merge" in p and "Sort" in p
+
+
+def test_sketch_merges_have_no_pandas_stage(spark, events):
+    """Group keys never pass through pandas: the explicit tier, rollups,
+    sketch-table merges and every companion sketch_agg, keyed and
+    unkeyed, plan only Arrow maps."""
+    from js_hll_spark.spark.agg import hll_rollup
+    from js_hll_spark.spark.sketch_agg import sketch_agg
+    from js_hll_spark.streaming.ndv import merge_sketch_tables
+
+    sketches = hll_sketch(events, "user_id", by=["event_type"], log2m=10)
+    built = {"merge_sketch_tables": merge_sketch_tables(sketches, sketches, ["event_type"])}
+    for by in ([], ["event_type"]):
+        built[f"hll_rollup{by}"] = hll_rollup(sketches, by)
+        built[f"explicit{by}"] = hll_sketch(events, "user_id", by, engine="explicit")
+        for kind in ("cms", "bloom", "kll", "tdigest"):
+            built[f"{kind}{by}"] = sketch_agg(events, "value", by, kind=kind)
+    for name, df in built.items():
+        p = plan(df)
+        assert "MapInArrow" in p, name
+        for node in ("MapInPandas", "FlatMapGroupsInPandas"):
+            assert node not in p, (name, node)

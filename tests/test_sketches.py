@@ -530,27 +530,6 @@ def test_sketch_agg_key_cap_flush_kll(spark):
         assert q == float(i % 97), (g, q)
 
 
-def test_norm_key_null_safe_across_fresh_nan_objects():
-    """pandas materializes a FRESH NaN/NaT object per Arrow batch; the
-    partial accumulator's dict key must normalize them to None or a
-    null-keyed group accretes one partial (and one SpaceSavingCounter)
-    per batch instead of one per partition."""
-    import numpy as np
-    import pandas as pd
-
-    from js_hll_spark.spark.sketch_agg import _norm_key
-
-    a, b = float("nan"), np.float64("nan")
-    assert a is not b and a != b  # fresh objects, the failure precondition
-    assert _norm_key(a) == _norm_key(b) == (None,)
-    assert _norm_key((np.float64("nan"), "en")) == (None, "en")
-    assert _norm_key((pd.NaT, 3)) == (None, 3)
-    assert _norm_key(("x", 1)) == ("x", 1)
-    # normalized keys are interchangeable dict keys across batches
-    acc = {_norm_key(a): "s"}
-    assert acc.get(_norm_key(b)) == "s"
-
-
 def test_sketch_agg_null_group_exact_at_tiny_arrow_batches(spark):
     """Null-keyed groups spanning many Arrow batches must still merge to
     one exact result (cross-batch dict identity for the NaN key)."""

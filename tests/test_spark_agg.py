@@ -754,28 +754,37 @@ def test_default_cutoff_byte_threshold_alone_is_encoded():
 
 
 def test_sql_engine_groups_match_catalyst(spark):
-    """The sql engine returns exactly Catalyst's groups. Keys that cross
-    into pandas used to merge or split groups silently: a nullable bigint
-    key became float64, so 2**53 and 2**53 + 1 formed one group of 120
-    instead of two of 50 and 70, and a NaN double key came back as a
-    second NULL-keyed row. Group set and NDVs must match
-    groupBy(k).agg(countDistinct)."""
+    """Every HLL engine, hll_rollup and the companion merge return
+    exactly Catalyst's groups. Keys that cross into pandas used to merge
+    or split groups silently: a nullable bigint key became float64, so
+    2**53 and 2**53 + 1 formed one group of 120 instead of two of 50 and
+    70, and a NaN double key merged into the NULL group or came back as
+    a second NULL-keyed row. The sql engine's group set and NDVs must
+    match groupBy(k).agg(countDistinct); the explicit tier's and a
+    rollup's (key, rows_seen) must equal groupBy(k).count(); and
+    approx_quantiles must return one row per group with the group's
+    exact q50 (KLL holds these few items uncompacted)."""
+    from js_hll_spark.spark.sketch_agg import approx_quantiles
+
     big = 2**53
     longs = (
-        [(big, f"a{i}") for i in range(50)]
-        + [(big + 1, f"b{i}") for i in range(70)]
-        + [(None, f"c{i}") for i in range(30)]
+        [(big, f"a{i}", float(i)) for i in range(50)]
+        + [(big + 1, f"b{i}", 100.0 + i) for i in range(70)]
+        + [(None, f"c{i}", 1000.0 + i) for i in range(30)]
     )
     doubles = (
-        [(float("nan"), f"a{i}") for i in range(40)]
-        + [(None, f"b{i}") for i in range(25)]
-        + [(1.5, f"c{i}") for i in range(60)]
+        [(float("nan"), f"a{i}", float(i)) for i in range(40)]
+        + [(None, f"b{i}", 100.0 + i) for i in range(25)]
+        + [(1.5, f"c{i}", 1000.0 + i) for i in range(60)]
     )
 
     def norm(k):
         return "NaN" if isinstance(k, float) and math.isnan(k) else k
 
-    for rows, ddl in ((longs, "k bigint, v string"), (doubles, "k double, v string")):
+    for rows, ddl in (
+        (longs, "k bigint, v string, x double"),
+        (doubles, "k double, v string, x double"),
+    ):
         df = spark.createDataFrame(rows, ddl)
         got = hll_sketch(df, "v", by=["k"], log2m=14, engine="sql").collect()
         exact = {
@@ -788,6 +797,25 @@ def test_sql_engine_groups_match_catalyst(spark):
         for r in got:
             n = exact[norm(r["k"])]
             assert abs(r["ndv"] - n) <= max(1.0, 0.02 * n), (ddl, r["k"])
+
+        counts = sorted(
+            repr((norm(r["k"]), r["count"])) for r in df.groupBy("k").count().collect()
+        )
+        dense = hll_sketch(df, "v", by=["k"], log2m=14, engine="sql")
+        for name, out in (
+            ("explicit", hll_sketch(df, "v", by=["k"], log2m=14, engine="explicit")),
+            ("rollup", hll_rollup(dense, ["k"], rows_col="rows_seen")),
+        ):
+            assert sorted(
+                repr((norm(r["k"]), r["rows_seen"])) for r in out.collect()
+            ) == counts, (ddl, name)
+
+        medians = sorted(
+            (repr(norm(r["k"])), sorted(r["xs"])[math.ceil(len(r["xs"]) / 2) - 1])
+            for r in df.groupBy("k").agg(F.collect_list("x").alias("xs")).collect()
+        )
+        quantiles = approx_quantiles(df, "x", by=["k"], qs=(0.5,)).collect()
+        assert sorted((repr(norm(r["k"])), r["q50"]) for r in quantiles) == medians, ddl
 
 
 def test_assemble_kernel_memory_is_bounded_per_group():
