@@ -178,10 +178,12 @@ def murmur3_64_bytes(values, seed: int = DEFAULT_SEED) -> np.ndarray:
         voffset = arr.offset
         raw_offsets = np.frombuffer(arr.buffers()[1], dtype=np.int32)
         offsets = raw_offsets[voffset : voffset + n + 1].astype(np.int64)
-        data = np.frombuffer(arr.buffers()[2], dtype=np.uint8)
+        # a sliced array shares its parent's data buffer: copy only the
+        # slice's bytes into the zero-padded buffer
+        data = np.frombuffer(arr.buffers()[2], dtype=np.uint8)[offsets[0] : offsets[-1]]
         lengths = np.diff(offsets)
         buf = np.concatenate([data, np.zeros(16, dtype=np.uint8)])
-        offsets = offsets[:-1]
+        offsets = offsets[:-1] - offsets[0]
     except ImportError:  # pragma: no cover - pyarrow is a hard dep of pyspark
         encoded = [
             v.encode("utf-8") if isinstance(v, str) else bytes(v) for v in values

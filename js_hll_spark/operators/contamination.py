@@ -32,9 +32,11 @@ frac)``:
   decontamination); at the pytest sizing no false positive fires and
   the tier equals the exact one row-for-row.
 
-Shingle universe: distinct word n-gram shingles per doc via
-``dedup.shingle_postings`` — the same tokenizer/shingler the dedup
-family and its DuckDB oracle mirrors already pin, so ``frac`` is a
+Shingle universe: distinct word n-gram shingles per doc. The training
+postings (``dedup.shingle_postings``) and the eval shingles
+(``eval_shingles``) come from the same Catalyst ``tokens()`` and the
+same Arrow window kernel, so an eval doc copied verbatim into training
+reports ``frac`` 1.0 whatever its characters, and ``frac`` is a
 fraction of the SAME distinct-shingle sets ``ngram_jaccard`` scores.
 Docs with NULL text produce no shingles and are never reported
 (consistent with count-distinct semantics: nothing to leak).
@@ -50,7 +52,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .dedup import shingle_postings, shingles
+from .dedup import _shingle_rows, shingle_postings
 
 
 def _train_postings(
@@ -82,16 +84,13 @@ def eval_shingles(
     shingle_n: int = 3,
 ) -> DataFrame:
     """The eval corpus' shingle stream (column ``sh``, per-doc
-    distinct). Deliberately NOT globally distinct: the exact tier
-    dedups on 8-byte hashes (a string-keyed distinct would shuffle the
-    shingle text itself) and the Bloom build is idempotent per value
-    (duplicate updates OR the same bits), so neither consumer needs —
-    or should pay for — a string shuffle here."""
-    return eval_df.select(
-        F.explode(
-            F.array_distinct(shingles(F.col(text_col), shingle_n))
-        ).alias("sh")
-    )
+    distinct), from the same tokenizer and Arrow kernel as the training
+    postings (``dedup._shingle_rows``). Deliberately NOT globally
+    distinct: the exact tier dedups on 8-byte hashes (a string-keyed
+    distinct would shuffle the shingle text itself) and the Bloom build
+    is idempotent per value (duplicate updates OR the same bits), so
+    neither consumer needs — or should pay for — a string shuffle here."""
+    return _shingle_rows(eval_df, text_col, None, shingle_n)
 
 
 def contamination_exact(

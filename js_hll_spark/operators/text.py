@@ -28,7 +28,11 @@ LANG_MARKERS = {
 
 def tokens(col: str | Column = "text") -> Column:
     """Whitespace tokenization with normalization: lowercase, collapse
-    whitespace, strip. Stays in codegen. NOTE: empty/whitespace-only
+    whitespace, strip. Stays in codegen. The library's one tokenizer:
+    fingerprints, lang-id, quality, the dedup shingle and SimHash kernels
+    and the contamination tiers all read it. Java semantics: ``\\s`` is
+    ``[ \\t\\n\\x0B\\f\\r]`` (not NBSP, U+2003 or ``\\x1c``-``\\x1f``) and
+    ``trim`` strips spaces only. NOTE: empty/whitespace-only
     text yields [''] (split-of-empty semantics, identical in DuckDB's
     string_split — every oracle mirrors it), so token_count reports 1
     for an empty document; filter empty docs upstream when that
@@ -88,32 +92,6 @@ def fingerprint(col: str | Column = "text") -> Column:
     detection and an oracle-able key."""
     c = F.col(col) if isinstance(col, str) else col
     return F.md5(F.array_join(tokens(c), " "))
-
-
-def simhash64(col: str | Column = "text") -> Column:
-    """64-bit SimHash over whitespace tokens, entirely in Catalyst
-    expressions: per-token xxhash64 -> per-bit +/-1 votes -> sign.
-
-    aggregate over 64 bits using bitwise ops on the token-hash array.
-    """
-    toks = tokens(col)
-    hashes = F.transform(toks, lambda t: F.xxhash64(t))
-    # bit i of the simhash = 1 iff sum over tokens of sign(bit i) > 0
-    def bit_vote(i: int) -> Column:
-        votes = F.aggregate(
-            hashes,
-            F.lit(0),
-            lambda acc, h: acc
-            + F.when(F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1),
-        )
-        # 1 << 63 overflows LongType; bit 63 is the sign bit
-        bit = (1 << i) if i < 63 else -(1 << 63)
-        return F.when(votes > 0, F.lit(bit).cast("long")).otherwise(F.lit(0))
-
-    out = F.lit(0).cast("long")
-    for i in range(64):
-        out = out.bitwiseOR(bit_vote(i))
-    return out
 
 
 def lang_id(col: str | Column = "text") -> Column:

@@ -295,9 +295,9 @@ def test_simhash_verify_exact_dups_at_zero(spark, pages):
 
 
 def test_simhash_fast_null_text_yields_null_signature(spark):
-    """A NULL text row must not kill the task (the pandas flatten would
-    iterate a None token list); both variants emit a NULL signature for
-    it and real signatures for the other rows."""
+    """A NULL text row (a NULL token list) must not kill the task; both
+    variants emit a NULL signature for it and real signatures for the
+    other rows."""
     df = spark.createDataFrame(
         [(1, "alpha beta gamma"), (2, None), (3, "alpha beta gamma")],
         "row_id long, text string",
@@ -486,16 +486,32 @@ def test_ngram_jaccard_verify_survives_unbroadcastable_candidates(spark, pages):
 
 
 def test_text_simhash64_matches_dedup_signatures(spark, pages):
-    """text.simhash64 (per-bit Catalyst votes) is bit-identical to
-    dedup.simhash_signatures (array-vote variant) — same tokens, same
-    xxhash64, same sign rule, incl. the LongType sign bit 63."""
+    """A per-bit Catalyst SimHash (64 separate vote aggregates over the
+    token xxhash64s) is bit-identical to dedup.simhash_signatures
+    (array-vote variant) — same tokens, same xxhash64, same sign rule,
+    incl. the LongType sign bit 63."""
+    hashes = F.transform(text.tokens("text"), lambda t: F.xxhash64(t))
+
+    def bit_vote(i: int):
+        votes = F.aggregate(
+            hashes,
+            F.lit(0),
+            lambda acc, h: acc
+            + F.when(F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1),
+        )
+        # 1 << 63 overflows LongType; bit 63 is the sign bit
+        bit = (1 << i) if i < 63 else -(1 << 63)
+        return F.when(votes > 0, F.lit(bit).cast("long")).otherwise(F.lit(0))
+
+    simhash64 = F.lit(0).cast("long")
+    for i in range(64):
+        simhash64 = simhash64.bitwiseOR(bit_vote(i))
     sub = pages.limit(50)
     a = sorted(
         map(
             tuple,
             sub.select(
-                F.col("row_id").alias("doc_id"),
-                text.simhash64("text").alias("simhash"),
+                F.col("row_id").alias("doc_id"), simhash64.alias("simhash")
             ).collect(),
         )
     )
@@ -828,6 +844,16 @@ def test_contamination_tiers_agree_and_bloom_is_one_sided(spark, pages):
     assert all(
         tiny[rid] >= exact[rid]["n_contaminated"] for rid in exact
     )  # one-sided even fully saturated: never under-counts
+
+    # an eval doc copied verbatim into training is a full leak in both
+    # tiers, whatever its characters: the train postings and the eval
+    # shingles share one tokenizer (trim keeps the \x01 and \x1f)
+    copied = "\x01the eval question verbatim\x1f"
+    tr2 = spark.createDataFrame([(1, copied), (2, "unrelated text")], "row_id long, text string")
+    ev2 = spark.createDataFrame([(9, copied)], "row_id long, text string")
+    for tier in (contamination.contamination_exact, contamination.contamination_bloom):
+        fracs = {r["row_id"]: r["frac"] for r in tier(tr2, ev2, "text", "row_id").collect()}
+        assert fracs == {1: 1.0, 2: 0.0}, tier.__name__
 
 
 def test_contamination_requires_inputs(spark, pages):

@@ -227,3 +227,22 @@ def test_sketch_merges_have_no_pandas_stage(spark, events):
         assert "MapInArrow" in p, name
         for node in ("MapInPandas", "FlatMapGroupsInPandas"):
             assert node not in p, (name, node)
+
+
+def test_text_kernels_are_one_arrow_map_over_catalyst_tokens(spark, documents):
+    """Every shingle and SimHash path tokenizes with Catalyst's
+    ``tokens()`` and windows or votes in one Arrow map: no pandas
+    harness, and no interpreted higher-order lambda per shingle."""
+    from js_hll_spark.operators import contamination, dedup
+
+    built = {
+        "shingle_postings": dedup.shingle_postings(documents, materialize=False),
+        "eval_shingles": contamination.eval_shingles(documents),
+        "simhash_signatures_fast": dedup.simhash_signatures_fast(documents),
+    }
+    for name, df in built.items():
+        p = plan(df)
+        assert p.count("MapInArrow") == 1, name
+        assert "MapInPandas" not in p, name
+        assert "lambdafunction" not in p, name
+        assert "split(trim(regexp_replace(lower(text" in p, name

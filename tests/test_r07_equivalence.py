@@ -3,8 +3,10 @@ optimized operator must produce byte-identical results to the formulation
 it replaced — on adversarial inputs, not just the fixture corpus.
 
 Covers:
-- the python shingle-posting kernel vs the Catalyst explode twin
-  (whitespace classes, control chars, empties, NULLs, short docs);
+- the Arrow shingle kernel vs the Catalyst shingles twin, its parity
+  oracle (whitespace classes, control chars, non-ASCII spaces and case,
+  empties, NULLs, short docs), and the SimHash kernel vs a numpy
+  reference over the same ``tokens()`` arrays;
 - groupBy-collect + codegen pair combinations vs the old self-equi-join
   pair multiset (LSH band join and exact-Jaccard all-pairs tier);
 - the packed-long pair aggregation vs the struct-keyed fallback;
@@ -15,16 +17,32 @@ Covers:
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import functions as F
+
+from js_hll_spark.operators.text import tokens
 
 
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-# texts chosen to stress the normalization contract: Java-\s-only
-# whitespace collapse (vertical tab \x0b IS Java \s; \x1c-\x1f are NOT),
-# trim of chars <= U+0020, split-of-empty keeping [''], sub-n-token docs
+def shingles(col, n: int = 3):
+    """Word n-gram shingles of the normalized token stream, as a
+    Catalyst higher-order expression: the parity oracle of the Arrow
+    shingle kernel."""
+    toks = tokens(col)
+    return F.transform(
+        F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0))),
+        lambda i: F.array_join(F.slice(toks, i + 1, n), " "),
+    )
+
+
+# texts chosen to stress the normalization contract of text.tokens:
+# Java-\s-only whitespace collapse (vertical tab \x0b IS Java \s;
+# \x1c-\x1f, NBSP and U+2003 are NOT), Spark's trim of spaces only (not
+# of every char <= U+0020), split-of-empty keeping [''], sub-n-token docs,
+# and Java's lowercasing of non-ASCII letters
 _TRICKY = [
     (0, "plain three word shingles here"),
     (1, "  leading   and\t\ttrailing  \n"),
@@ -37,36 +55,95 @@ _TRICKY = [
     (8, None),
     (9, "dup dup dup dup dup"),
     (10, "Mixed CASE Tokens mixed case tokens"),
+    (11, "\x01lead ctrl x y\x1f"),  # trim keeps \x01 and \x1f
+    (12, "a\u00a0b c d"),            # NBSP
+    (13, "a\x1cb c d"),
+    (14, "\u2003em space x y"),      # em space
+    (15, "ΟΔΟΣ ΑΒ ΓΔ"),
+    (16, "İstanbul x y"),
 ]
 
 
 def _catalyst_postings(spark, df, n=3):
-    from js_hll_spark.operators import dedup
-
     return df.select(
         F.col("doc_id").alias("__id"),
-        F.explode(
-            F.array_distinct(dedup.shingles(F.col("text"), n))
-        ).alias("sh"),
+        F.explode(F.array_distinct(shingles(F.col("text"), n))).alias("sh"),
     )
 
 
 def test_posting_kernel_matches_catalyst_twin_on_tricky_text(spark):
-    from js_hll_spark.operators.dedup import _shingle_rows_fast
+    from js_hll_spark.operators.dedup import shingle_postings
 
     df = spark.createDataFrame(_TRICKY, "doc_id long, text string")
-    for n in (2, 3):
-        fast = _rows(_shingle_rows_fast(df, "text", "doc_id", n))
+    for n in (1, 2, 3):
+        fast = _rows(shingle_postings(df, "text", "doc_id", shingle_n=n, materialize=False))
         ref = _rows(_catalyst_postings(spark, df, n))
-        # deliberate divergence (latent-bug fix, see the kernel's
-        # docstring): the old Catalyst chain emitted one (id, NULL)
-        # posting row for NULL text — a phantom shingle that hashed to
-        # the xxhash64 seed, contradicting both the documented contract
-        # and the DuckDB oracles (unnest of NULL = no rows). The kernel
-        # emits nothing for NULL text; everything else is byte-equal.
+        # deliberate divergence (latent-bug fix): the Catalyst chain
+        # emits one (id, NULL) posting row for NULL text — a phantom
+        # shingle that hashed to the xxhash64 seed, contradicting both the
+        # documented contract and the DuckDB oracles (unnest of NULL = no
+        # rows). The kernel emits nothing for NULL text; everything else
+        # is byte-equal.
         ref = [r for r in ref if r[1] is not None]
         assert (8, None) not in fast
         assert fast == ref, f"shingle_n={n}"
+
+
+def test_simhash_kernel_matches_numpy_reference_on_tricky_text(spark):
+    """simhash_signatures_fast votes over exactly Catalyst's tokens():
+    bit i is set iff more of the doc's murmur3 token hashes have bit i
+    set than clear; NULL text gives a NULL signature."""
+    from js_hll_spark.hashing import murmur3_64_bytes
+    from js_hll_spark.operators.dedup import simhash_signatures_fast
+
+    df = spark.createDataFrame(_TRICKY, "doc_id long, text string")
+    want = {}
+    for doc_id, toks in df.select("doc_id", tokens("text")).collect():
+        if toks is None:
+            want[doc_id] = None
+            continue
+        h = murmur3_64_bytes(toks)
+        ones = [int(((h >> np.uint64(i)) & np.uint64(1)).sum()) for i in range(64)]
+        sig = sum(1 << i for i in range(64) if 2 * ones[i] > len(toks))
+        want[doc_id] = sig - (1 << 64) if sig >> 63 else sig  # as a signed long
+    got = dict(map(tuple, simhash_signatures_fast(df).collect()))
+    assert got == want
+
+
+def test_shingle_kernels_slice_batches_without_changing_rows(monkeypatch):
+    """Both token kernels window a batch in row slices of about
+    ``_SLICE_BYTES`` of text, which bounds their memory whatever the
+    batch size; a slice budget smaller than any doc gives the same rows
+    as one slice per batch."""
+    import pyarrow as pa
+
+    from js_hll_spark.hashing import murmur3_64_bytes
+    from js_hll_spark.operators import dedup
+
+    toks = [["a", "b", "c", "d"], None, ["x"], ["a", "b", "a", "b", "a"], [""], ["q", "r"]]
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array(range(len(toks)), pa.int64()), pa.array(toks, pa.list_(pa.string()))],
+        names=["__id", "__toks"],
+    )
+    # a slice hashes its own bytes, not its parent buffer's
+    flat = batch.column("__toks").flatten()
+    assert (murmur3_64_bytes(flat.slice(2, 5)) == murmur3_64_bytes(flat.to_pylist()[2:7])).all()
+
+    def run(kernel):
+        return sorted(r for b in kernel(iter([batch])) for r in zip(*b.to_pydict().values()))
+
+    def kernels():
+        return dedup._shingle_kernel(3, True), dedup._simhash_kernel
+
+    whole = [run(k) for k in kernels()]
+    monkeypatch.setattr(dedup, "_SLICE_BYTES", 3)
+    # every doc outweighs the budget; the NULL row weighs nothing and
+    # shares the next row's slice
+    assert len(list(dedup._token_slices(batch))) == 5
+    assert [run(k) for k in kernels()] == whole
+    assert whole[0] == [
+        (0, "a b c"), (0, "b c d"), (2, "x"), (3, "a b a"), (3, "b a b"), (4, ""), (5, "q r")
+    ]
 
 
 def test_pair_structs_equal_selfjoin_multiset(spark):
