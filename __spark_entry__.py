@@ -21,7 +21,7 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship: approximate NDV(text) per lang on sf0.001 documents,
     joined against the exact count with the realized relative error —
     one pass through hash -> partial -> shuffle -> merge -> estimate."""
-    from js_hll_spark.queries import _ship
+    from oracle.queries import _ship
     from js_hll_spark.spark.agg import hll_ndv
 
     _ship(spark)
@@ -45,12 +45,12 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    from js_hll_spark.queries import QUERIES
+    from oracle.queries import QUERIES
 
     return dict(QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:
-    from js_hll_spark.queries import ORACLES
+    from oracle.queries import ORACLES
 
     return dict(ORACLES)

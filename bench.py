@@ -22,7 +22,7 @@ CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
 def main() -> None:
-    from js_hll_spark.queries import QUERIES
+    from oracle.queries import QUERIES
     from js_hll_spark.spark.agg import hll_ndv, hll_sketch
     from js_hll_spark.spark.blocks import persistent_rdd_ids, unpersist_blocks
     from js_hll_spark.spark.session import get_spark

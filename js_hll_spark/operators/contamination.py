@@ -22,15 +22,19 @@ frac)``:
   driver np.unique-merges them (8 B per distinct eval shingle of driver
   memory — the small-eval-side assumption the operator rests on),
   auto-sizes the filter from the exact count, and builds the Bloom blob
-  locally. The blob broadcasts once and training postings probe it in a
-  vectorized numpy pass per Arrow batch with partition-local partial
-  aggregation: one partial row per (doc, Arrow batch) shuffles, the
-  eval shingles themselves NEVER shuffle. (With an explicit ``n_bits``
-  the driver-merge build still collects the distinct hash set — pick
-  the exact tier instead if eval-side driver memory is the constraint.) Bloom's one-sided error means ``n_contaminated`` can only
-  over-count (never a missed leak — the safe direction for
-  decontamination); at the pytest sizing no false positive fires and
-  the tier equals the exact one row-for-row.
+  locally. The blob broadcasts once and one scalar Arrow UDF probes it,
+  setting a hit flag per training posting in a vectorized numpy pass;
+  the ids never leave the JVM, and Catalyst's partial aggregate
+  collapses the flags per doc before the shuffle, so the eval shingles
+  themselves NEVER shuffle. (With an explicit ``n_bits`` the
+  driver-merge build still collects the distinct hash set — pick the
+  exact tier instead if eval-side driver memory is the constraint.)
+  Both tiers share one aggregate tail (``_per_doc``): count and hit sum
+  per ``__id`` -> ``frac`` -> ``min_frac``, so a NULL or 2^53-scale id
+  groups the same way in both. Bloom's one-sided error means
+  ``n_contaminated`` can only over-count (never a missed leak — the
+  safe direction for decontamination); at the pytest sizing no false
+  positive fires and the tier equals the exact one row-for-row.
 
 Shingle universe: distinct word n-gram shingles per doc. The training
 postings (``dedup.shingle_postings``) and the eval shingles
@@ -41,15 +45,18 @@ fraction of the SAME distinct-shingle sets ``ngram_jaccard`` scores.
 Docs with NULL text produce no shingles and are never reported
 (consistent with count-distinct semantics: nothing to leak).
 
-Hash convention: the Bloom blob is built by ``sketch_agg`` over the raw
-shingle STRINGS (JVM-side ``xxhash64``), and probes carry the same
-``xxhash64(sh)`` through ``contains_hashed`` — identical to the oracled
-``bloom_membership`` pipeline, so build and probe conventions match by
-construction.
+Hash convention: the eval side's JVM ``xxhash64(sh)`` values are
+collected and the Bloom blob is built from them by
+``BloomFilter.add_hashed``; probes carry the same ``xxhash64(sh)`` of
+each training posting through ``contains_hashed``, so build and probe
+conventions match by construction.
 """
 
 from __future__ import annotations
 
+from typing import Iterator
+
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from .dedup import _shingle_rows, shingle_postings
@@ -75,6 +82,29 @@ def _train_postings(
             train, text_col, id_col, shingle_n=shingle_n, materialize=False
         )
     return postings
+
+
+def _per_doc(tagged: DataFrame, id_col: str, min_frac: float) -> DataFrame:
+    """The one aggregate tail of both tiers: ``(__id, __hit)`` posting
+    rows (``__hit`` 1 for an eval shingle, 0 or NULL otherwise) ->
+    ``(id_col, n_shingles, n_contaminated, frac)`` per doc, filtered on
+    the rounded ``frac``."""
+    out = (
+        tagged.groupBy("__id")
+        .agg(
+            F.count(F.lit(1)).alias("n_shingles"),
+            F.sum(F.coalesce("__hit", F.lit(0))).alias("n_contaminated"),
+        )
+        .select(
+            F.col("__id").alias(id_col),
+            "n_shingles",
+            "n_contaminated",
+            F.round(
+                F.col("n_contaminated") / F.col("n_shingles"), 6
+            ).alias("frac"),
+        )
+    )
+    return out.filter(F.col("frac") >= min_frac)
 
 
 def eval_shingles(
@@ -136,22 +166,7 @@ def contamination_exact(
     tagged = tr.join(
         ev.withColumn("__hit", F.lit(1)), "__h", "left"
     )  # no broadcast hint: AQE decides (module doc)
-    out = (
-        tagged.groupBy("__id")
-        .agg(
-            F.count(F.lit(1)).alias("n_shingles"),
-            F.sum(F.coalesce("__hit", F.lit(0))).alias("n_contaminated"),
-        )
-        .select(
-            F.col("__id").alias(id_col),
-            "n_shingles",
-            "n_contaminated",
-            F.round(
-                F.col("n_contaminated") / F.col("n_shingles"), 6
-            ).alias("frac"),
-        )
-    )
-    return out.filter(F.col("frac") >= min_frac)
+    return _per_doc(tagged, id_col, min_frac)
 
 
 def contamination_bloom(
@@ -201,13 +216,7 @@ def contamination_bloom(
     import math
 
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import (
-        BinaryType,
-        LongType,
-        StructField,
-        StructType,
-    )
+    from pyspark.sql.types import BinaryType, StructField, StructType
 
     from ..core.bloom import BloomFilter
     from ..hashing import to_uint64
@@ -223,13 +232,13 @@ def contamination_bloom(
 
     def distinct_partial(batches):
         parts = [
-            to_uint64(pdf["__h"].to_numpy()) for pdf in batches if len(pdf)
+            to_uint64(b.column(0).to_numpy()) for b in batches if b.num_rows
         ]
         if parts:
             arr = np.unique(np.concatenate(parts))
-            yield pd.DataFrame({"__hs": [arr.tobytes()]})
+            yield pa.record_batch([pa.array([arr.tobytes()], pa.binary())], ["__hs"])
 
-    hash_rows = ev.mapInPandas(
+    hash_rows = ev.mapInArrow(
         distinct_partial, schema=StructType([StructField("__hs", BinaryType())])
     ).collect()
     hashes = np.unique(
@@ -256,52 +265,16 @@ def contamination_bloom(
     # postings x 128 KiB.
     bc = tr.sparkSession.sparkContext.broadcast(bf.to_bytes())
 
-    id_dt = tr.schema["__id"].dataType
-    part_schema = StructType(
-        [
-            StructField("__id", id_dt, False),
-            StructField("__n", LongType(), False),
-            StructField("__hit", LongType(), False),
-        ]
-    )
-
-    def probe_fn(batches):
+    def bloom_hit(hs: Iterator[pa.Array]) -> Iterator[pa.Array]:
         bf = BloomFilter.from_bytes(bc.value)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            member = bf.contains_hashed(
-                to_uint64(pdf["__h"].to_numpy())
-            ).astype(np.int64)
-            g = pd.DataFrame({"__id": pdf["__id"], "__m": member}).groupby(
-                "__id", sort=False, dropna=False
-            )
-            agg = g["__m"].agg(["count", "sum"]).reset_index()
-            yield pd.DataFrame(
-                {
-                    "__id": agg["__id"],
-                    "__n": agg["count"].astype(np.int64),
-                    "__hit": agg["sum"].astype(np.int64),
-                }
-            )
+        for h in hs:
+            hit = bf.contains_hashed(to_uint64(h.to_numpy()))
+            yield pa.array(hit.astype(np.int32))
 
-    partials = tr.mapInPandas(probe_fn, schema=part_schema)
-    result = (
-        partials.groupBy("__id")
-        .agg(
-            F.sum("__n").alias("n_shingles"),
-            F.sum("__hit").alias("n_contaminated"),
-        )
-        .select(
-            F.col("__id").alias(id_col),
-            "n_shingles",
-            "n_contaminated",
-            F.round(
-                F.col("n_contaminated") / F.col("n_shingles"), 6
-            ).alias("frac"),
-        )
+    tagged = tr.select(
+        "__id", F.arrow_udf(bloom_hit, "int")(F.col("__h")).alias("__hit")
     )
-    result = result.filter(F.col("frac") >= min_frac)
+    result = _per_doc(tagged, id_col, min_frac)
     # sizing introspection (advisory attributes on the result): what
     # the auto-sizer actually built
     result._bloom_n_bits = n_bits

@@ -29,7 +29,7 @@ exactly the nondeterminism this module exists to rule out.
 
 Registry surface (round 5): sample_bernoulli / sample_stratified /
 sample_fixed / sample_split are ORACLED queries() entries in
-js_hll_spark/queries.py (rotating driver window); the full property
+oracle/queries.py (rotating driver window); the full property
 suite — nestedness, join-consistency, split disjointness, weighted
 Efraimidis–Spirakis mirror, null-key safety — stays in
 tests/test_sampling.py.
@@ -78,7 +78,7 @@ def _key_u01(key_col: str, seed: str) -> Column:
       samples (NULL < f is NULL = false) and from BOTH halves of a
       split — the repo's recurring null-group bug class. The 'v|'
       prefix is part of the hash-input contract: every external mirror
-      (DuckDB oracles in queries.py, tests/test_sampling.py) must
+      (DuckDB oracles in oracle/queries.py, tests/test_sampling.py) must
       reproduce it."""
     prefix = f"{len(seed)}|{seed}|"
     key = F.when(F.col(key_col).isNull(), F.lit("n")).otherwise(

@@ -6,6 +6,12 @@ ANSI-SQL DuckDB oracle producing identical column names and values
 Sketch-estimate queries have no oracle (approximate by design); their
 accuracy is asserted in pytest against exact ground truth within the
 published 1.04/sqrt(2^log2m) bound.
+
+This is harness code beside the library, imported on the driver only:
+executors receive ``js_hll_spark/`` alone (``session.package_zip``), so
+a function a query ships to them (a ``mapInPandas`` closure) may use
+library names and its own closure, never a module-level name of this
+file.
 """
 
 from __future__ import annotations
@@ -15,8 +21,8 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
-from .operators import ann, dedup, text
-from .spark.agg import hll_ndv, hll_rollup, hll_sketch
+from js_hll_spark.operators import ann, dedup, text
+from js_hll_spark.spark.agg import hll_ndv, hll_rollup, hll_sketch
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
@@ -181,7 +187,7 @@ def _ship(spark: SparkSession) -> None:
     """Idempotently make the package importable on executors (the driver
     may have created the session without our factory)."""
     if not getattr(spark, "_js_hll_shipped", False):
-        from .spark.session import ship_package
+        from js_hll_spark.spark.session import ship_package
 
         try:
             ship_package(spark)
@@ -867,7 +873,7 @@ def q_hll_intersection_explicit(spark, sf_dir):
         log2m=16,
         engine="explicit",
     ).select(F.col("sketch").alias("b"), F.col("ndv").alias("ndv_b"))
-    from .spark.functions import hll_cardinality_udf, hll_union_pair_udf
+    from js_hll_spark.spark.functions import hll_cardinality_udf, hll_union_pair_udf
 
     return a.crossJoin(b).select(
         (
@@ -891,7 +897,7 @@ def q_hll_intersection(spark, sf_dir):
     b = hll_sketch(
         events.filter(F.col("event_type") == "purchase"), "user_id", log2m=13
     ).select(F.col("sketch").alias("b"), F.col("ndv").alias("ndv_b"))
-    from .spark.functions import hll_cardinality_udf, hll_union_pair_udf
+    from js_hll_spark.spark.functions import hll_cardinality_udf, hll_union_pair_udf
 
     return a.crossJoin(b).select(
         F.round(
@@ -907,7 +913,7 @@ def q_hll_interop_hex(spark, sf_dir):
     """Round-trip sketches through postgresql-hll hex strings — the
     interop surface (rows-only; byte fidelity asserted in pytest)."""
     _ship(spark)
-    from .spark.functions import (
+    from js_hll_spark.spark.functions import (
         hll_cardinality_udf,
         hll_from_hex_udf,
         hll_to_hex_udf,
@@ -1217,7 +1223,7 @@ def q_hll_ndv_multi(spark, sf_dir):
     estimates); bit-identity with per-column hll_ndv and the single
     FileScan plan are pinned in pytest."""
     _ship(spark)
-    from .spark.agg import hll_ndv_multi
+    from js_hll_spark.spark.agg import hll_ndv_multi
 
     return hll_ndv_multi(
         _t(spark, sf_dir, "documents"), ["text", "lang", "source"], log2m=13
@@ -1315,7 +1321,7 @@ def q_hll_ndv_bound_check(spark, sf_dir):
     CORRECTLY, not merely that it runs. Exactness of ndv_exact also
     rides the same hash."""
     _ship(spark)
-    from .config import HLLConfig
+    from js_hll_spark.config import HLLConfig
 
     # pristine scan (r7 measured: fan-out regressed 0.58 -> 1.74 s,
     # see q_hll_ndv_by_lang — same shape on both join branches)
@@ -1356,7 +1362,7 @@ def q_hll_ndv_murmur3_bound(spark, sf_dir):
     >= 2.5x at every gate SF. Both estimate engines the library ships
     now leave a per-round accuracy record in CORRECTNESS."""
     _ship(spark)
-    from .config import HLLConfig
+    from js_hll_spark.config import HLLConfig
 
     docs = _t(spark, sf_dir, "documents")
     approx = hll_ndv(
@@ -1388,7 +1394,7 @@ def q_image_decode_sums(spark, sf_dir):
     import pandas as pd
     from pyspark.sql.types import LongType, StructField, StructType
 
-    from .operators.multimodal import decode_image, encode_bmp
+    from js_hll_spark.operators.multimodal import decode_image, encode_bmp
 
     _ship(spark)
     docs = _t_wide(spark, sf_dir, "documents").select("doc_id")
@@ -1447,7 +1453,7 @@ def q_audio_decode_sums(spark, sf_dir):
     import pandas as pd
     from pyspark.sql.types import LongType, StructField, StructType
 
-    from .operators.multimodal import decode_wav, encode_wav
+    from js_hll_spark.operators.multimodal import decode_wav, encode_wav
 
     _ship(spark)
     docs = _t_wide(spark, sf_dir, "documents").select("doc_id")
@@ -1498,7 +1504,7 @@ def q_video_frame_sums(spark, sf_dir):
     import pandas as pd
     from pyspark.sql.types import BinaryType, LongType, StructField, StructType
 
-    from .operators.multimodal import encode_y4m, video_frame_features
+    from js_hll_spark.operators.multimodal import encode_y4m, video_frame_features
 
     _ship(spark)
     docs = _t_wide(spark, sf_dir, "documents").select("doc_id")
@@ -1623,7 +1629,7 @@ def q_streaming_ndv_hourly(spark, sf_dir):
     micro-batch is just another sketch union (reference semantics:
     union is the only merge op, src/hll.js:345-346)."""
 
-    from .streaming.ndv import read_ndv_state, streaming_ndv
+    from js_hll_spark.streaming.ndv import read_ndv_state, streaming_ndv
 
     base = _scratch("stream_ndv")
     events = _t(spark, sf_dir, "events").select("ts", "user_id", "event_type")
@@ -1680,7 +1686,7 @@ def q_streaming_ndv_stateful(spark, sf_dir):
     register state variant (the fixed-bytes-per-key scale path) is
     accuracy/late-data gated in test_streaming."""
 
-    from .streaming.stateful import stateful_streaming_ndv
+    from js_hll_spark.streaming.stateful import stateful_streaming_ndv
 
     # the NTZ->TIMESTAMP->NTZ round trip below is wall-clock-preserving
     # only under a fixed-offset zone; pin UTC against driver-owned
@@ -1763,7 +1769,7 @@ def q_streaming_heavy_hitters(spark, sf_dir):
     SQL's windowed rank with the same (count desc, token asc)
     tie-break."""
 
-    from .streaming.stateful import stateful_streaming_heavy_hitters
+    from js_hll_spark.streaming.stateful import stateful_streaming_heavy_hitters
 
     _ship(spark)
     base = _scratch("stream_hh")
@@ -1907,7 +1913,7 @@ def q_hll_union_agg_sql(spark, sf_dir):
     rolled up to lang entirely inside spark.sql via the registered
     GROUPED_AGG pandas UDAF — exact while explicit (same argument as
     q_hll_sketch_rollup), so it hash-matches count(DISTINCT text)."""
-    from .spark.functions import register_sql_functions
+    from js_hll_spark.spark.functions import register_sql_functions
 
     _ship(spark)
     register_sql_functions(spark)
@@ -1996,7 +2002,7 @@ def q_sketch_table_query(spark, sf_dir):
     q_hll_sketch_rollup), so the answer hash-matches count(DISTINCT
     text) under the same filter."""
 
-    from .pipelines import sketch_table
+    from js_hll_spark.pipelines import sketch_table
 
     _ship(spark)
     docs = _t(spark, sf_dir, "documents")
@@ -2044,7 +2050,7 @@ def q_checkpoint_pipeline(spark, sf_dir):
     manifests without rebuilding (asserted), and the final aggregate is
     exact, so the resumed pipeline oracles against plain SQL."""
 
-    from .plans.checkpoint import StageRunner
+    from js_hll_spark.plans.checkpoint import StageRunner
 
     base = _scratch("ckpt_pipe")
     builds = {"tokens": 0, "by_lang": 0}
@@ -2139,7 +2145,7 @@ def q_heavy_hitters_cms(spark, sf_dir):
     gated in pytest, while the driver gate pins this pipeline's
     end-to-end plumbing exactly."""
     _ship(spark)
-    from .spark.sketch_agg import heavy_hitters
+    from js_hll_spark.spark.sketch_agg import heavy_hitters
 
     docs = _t_wide(spark, sf_dir, "documents")
     toks = docs.select(F.explode(text.tokens("text")).alias("tok"))
@@ -2163,7 +2169,7 @@ def q_heavy_hitters_by_lang(spark, sf_dir):
     tokens per language / per domain' query of a training-data
     pipeline."""
     _ship(spark)
-    from .spark.sketch_agg import heavy_hitters
+    from js_hll_spark.spark.sketch_agg import heavy_hitters
 
     docs = _t_wide(spark, sf_dir, "documents")
     toks = docs.select("lang", F.explode(text.tokens("text")).alias("tok"))
@@ -2194,7 +2200,7 @@ def q_quantiles_kll(spark, sf_dir):
     pytest; the gate pins the distributed sketch-build/merge/query
     plumbing end to end."""
     _ship(spark)
-    from .spark.sketch_agg import approx_quantiles
+    from js_hll_spark.spark.sketch_agg import approx_quantiles
 
     docs = _t(spark, sf_dir, "documents")
     # exactness precondition (same class as _guard_explicit_window, but
@@ -2260,7 +2266,7 @@ def q_quantiles_tdigest(spark, sf_dir):
     ~20x headroom; beyond it, drop the ORACLES entry rather than
     raise the cap (an uncompacted digest is O(n) state)."""
     _ship(spark)
-    from .spark.sketch_agg import approx_quantiles
+    from js_hll_spark.spark.sketch_agg import approx_quantiles
 
     li = _t(spark, sf_dir, "lineitem")
     n = li.count()
@@ -2343,9 +2349,9 @@ def q_bloom_membership(spark, sf_dir):
     _ship(spark)
     import numpy as np
 
-    from .core.bloom import BloomFilter
-    from .hashing import to_uint64
-    from .spark.sketch_agg import sketch_agg
+    from js_hll_spark.core.bloom import BloomFilter
+    from js_hll_spark.hashing import to_uint64
+    from js_hll_spark.spark.sketch_agg import sketch_agg
 
     customer = _t(spark, sf_dir, "customer").filter(F.col("c_acctbal") > 5000)
     blob = sketch_agg(
@@ -2408,7 +2414,7 @@ def q_sample_bernoulli(spark, sf_dir):
     a 100 TB training-corpus subsample needs: nested across fractions,
     join-consistent across tables; those properties are pinned in
     tests/test_sampling.py, the exact row set is oracled here)."""
-    from .operators import sample
+    from js_hll_spark.operators import sample
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
     return sample.sample_bernoulli(docs, 0.3, "doc_id", seed="s1")
@@ -2423,7 +2429,7 @@ WHERE {_sql_u01('s1')} < 0.3
 def q_sample_stratified(spark, sf_dir):
     """Exactly 7 docs per language by hash rank — per-stratum quotas
     with one hash-partitioned window shuffle, no global sort."""
-    from .operators import sample
+    from js_hll_spark.operators import sample
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang")
     return sample.sample_stratified(docs, ["lang"], 7, "doc_id")
@@ -2445,7 +2451,7 @@ def q_sample_fixed(spark, sf_dir):
     'reservoir'. Plan shape is TakeOrderedAndProject (per-partition
     local top-n + one n-row merge, never a full sort shuffle — pinned in
     tests/test_sampling.py)."""
-    from .operators import sample
+    from js_hll_spark.operators import sample
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang")
     return sample.sample_fixed(docs, 37, "doc_id")
@@ -2463,7 +2469,7 @@ def q_sample_split(spark, sf_dir):
     never drift between splits across reruns, shards, or table versions
     (disjointness/exhaustiveness pinned in pytest; the exact holdout
     row set oracled here)."""
-    from .operators import sample
+    from js_hll_spark.operators import sample
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang")
     _train, holdout = sample.split_train_holdout(docs, 0.25, "doc_id")
@@ -2482,7 +2488,7 @@ def q_sample_weighted(spark, sf_dir):
     crosses libm implementations whose last-ulp differences could flip
     an order tie at some scale — the exact DuckDB row-set mirror is
     pinned at gate SF in tests/test_sampling.py instead."""
-    from .operators import sample
+    from js_hll_spark.operators import sample
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
     return sample.sample_weighted(docs, 50, "doc_id", "n_chars")
@@ -2499,7 +2505,7 @@ def q_contamination_check(spark, sf_dir):
     split). The broadcast-Bloom scale tier is contamination_bloom
     below (rows-only; row-for-row equality with this tier at the gate
     sizing is pinned in pytest)."""
-    from .operators import contamination
+    from js_hll_spark.operators import contamination
 
     docs = _t_wide(spark, sf_dir, "documents")
     return contamination.contamination_exact(
@@ -2543,7 +2549,7 @@ def q_contamination_bloom(spark, sf_dir):
     Rows-only here (Bloom FPs are sizing-dependent); equality with the
     exact tier at this sizing — and the one-sided no-missed-leak
     contract — are pinned in pytest."""
-    from .operators import contamination
+    from js_hll_spark.operators import contamination
 
     docs = _t_wide(spark, sf_dir, "documents")
     return contamination.contamination_bloom(
@@ -2562,7 +2568,7 @@ def q_dedup_pipeline_durable(spark, sf_dir):
     pinned by tests/test_operators.py::test_durable_posting_stage, and
     the localCheckpoint twin dedup_pipeline is fully ORACLED."""
 
-    from .plans.checkpoint import StageRunner
+    from js_hll_spark.plans.checkpoint import StageRunner
 
     runner = StageRunner(
         spark, _scratch("dedup_durable_stages")
@@ -2581,7 +2587,7 @@ def q_simhash_pipeline_durable(spark, sf_dir):
     DuckDB-reproducible); identity with the localCheckpoint composition
     and the resume contract are pinned by
     tests/test_operators.py::test_durable_simhash_stage."""
-    from .plans.checkpoint import StageRunner
+    from js_hll_spark.plans.checkpoint import StageRunner
 
     runner = StageRunner(spark, _scratch("simhash_durable_stages"))
     docs = _t_wide(spark, sf_dir, "documents")

@@ -62,7 +62,7 @@ def test_bound_check_query_margin(spark):
     from pyspark.sql import functions as F
 
     from js_hll_spark.config import HLLConfig
-    from js_hll_spark.queries import QUERIES, _t
+    from oracle.queries import QUERIES, _t
     from js_hll_spark.spark.agg import hll_ndv
 
     for sf in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
@@ -95,7 +95,7 @@ def test_murmur3_bound_check_query_margin(spark):
     from pyspark.sql import functions as F
 
     from js_hll_spark.config import HLLConfig
-    from js_hll_spark.queries import QUERIES, _t
+    from oracle.queries import QUERIES, _t
     from js_hll_spark.spark.agg import hll_ndv
 
     for sf in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):

@@ -551,7 +551,7 @@ def test_ann_registry_outputs_carry_recall(spark):
     brute-force twin as a column (VERDICT r2 #8: at 100x scale the
     recall/nprobe trade is the number an operator actually watches, so
     it belongs in the gate artifact, not only in pytest)."""
-    from js_hll_spark.queries import QUERIES
+    from oracle.queries import QUERIES
 
     for name, floor in (("ann_lsh", 0.15), ("ann_ivf", 0.3)):
         df = QUERIES[name](spark, "/root/testdata/sf0.01")
@@ -675,7 +675,7 @@ def test_coverage_md_counts_match_registry():
     import os
     import re
 
-    from js_hll_spark.queries import ORACLES, QUERIES
+    from oracle.queries import ORACLES, QUERIES
 
     path = os.path.join(os.path.dirname(os.path.dirname(__file__)), "COVERAGE.md")
     text = open(path).read()
@@ -693,7 +693,7 @@ def test_registry_oracled_queries_fill_and_rotate_driver_window():
     oracled query, the set pushed out must be exactly the excess, and
     the rotation must advance with the driver round so each oracled
     entry is witnessed in all but ~excess/step of rounds."""
-    from js_hll_spark.queries import (
+    from oracle.queries import (
         DRIVER_WINDOW,
         ORACLES,
         QUERIES,
@@ -748,7 +748,7 @@ def test_scratch_dir_wipes_at_start_and_guard_raises(spark):
 
     import pytest
 
-    from js_hll_spark.queries import _guard_explicit_window, _scratch
+    from oracle.queries import _guard_explicit_window, _scratch
 
     d1 = _scratch("pytest_scratch_probe")
     with open(os.path.join(d1, "leftover.txt"), "w") as f:
@@ -854,6 +854,30 @@ def test_contamination_tiers_agree_and_bloom_is_one_sided(spark, pages):
     for tier in (contamination.contamination_exact, contamination.contamination_bloom):
         fracs = {r["row_id"]: r["frac"] for r in tier(tr2, ev2, "text", "row_id").collect()}
         assert fracs == {1: 1.0, 2: 0.0}, tier.__name__
+
+    # ids past float64's exact range and a NULL id group exactly in both
+    # tiers: 2^53 and 2^53+1 stay apart, the NULL id is one row
+    tr3 = spark.createDataFrame(
+        [(2**53, copied), (2**53 + 1, "unrelated text"), (None, "more unrelated text")],
+        "row_id long, text string",
+    )
+    rows = {
+        tier.__name__: sorted(
+            tier(tr3, ev2, "text", "row_id").collect(),
+            key=lambda r: (r["row_id"] is not None, r["row_id"] or 0),
+        )
+        for tier in (contamination.contamination_exact, contamination.contamination_bloom)
+    }
+    assert rows["contamination_exact"] == rows["contamination_bloom"]
+    assert [(r["row_id"], r["frac"]) for r in rows["contamination_exact"]] == [
+        (None, 0.0),
+        (2**53, 1.0),
+        (2**53 + 1, 0.0),
+    ]
+    # the probe is one Arrow UDF over the hash: no pandas step on the path
+    bloom = contamination.contamination_bloom(tr3, ev2, "text", "row_id")
+    plan = bloom._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" in plan and "MapInPandas" not in plan
 
 
 def test_contamination_requires_inputs(spark, pages):

@@ -144,7 +144,7 @@ def test_ngram_jaccard_df_cap_is_antijoin_not_window(spark):
     and the registered query engages the cap so the gate never runs an
     uncapped all-pairs join over hot keys."""
     from js_hll_spark.operators import dedup
-    from js_hll_spark.queries import QUERIES
+    from oracle.queries import QUERIES
 
     docs = spark.createDataFrame(
         [(i, f"alpha beta gamma delta epsilon doc {i}") for i in range(20)],
@@ -168,7 +168,7 @@ def test_composed_dedup_single_raw_scan(spark):
     documents in ngram_jaccard / dedup_pipeline_fast — 6-8x the scan
     bandwidth at 100 TB). After the fix the candidate, df-cap, and
     verify stages all read checkpointed blocks."""
-    from js_hll_spark.queries import QUERIES
+    from oracle.queries import QUERIES
 
     for name in ("ngram_jaccard", "dedup_pipeline", "dedup_pipeline_fast"):
         p = plan(QUERIES[name](spark, "/root/testdata/sf0.001"))

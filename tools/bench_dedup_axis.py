@@ -112,7 +112,7 @@ def dedup_corpus(spark, n_rows: int, partitions: int):
 def main() -> None:
     from js_hll_spark.operators import dedup
     from js_hll_spark.spark.blocks import persistent_rdd_ids, unpersist_blocks
-    from js_hll_spark.queries import _ship
+    from oracle.queries import _ship
     from js_hll_spark.spark.session import get_spark
 
     spark = get_spark(

@@ -1,7 +1,8 @@
 // Single-node throughput of the UNMODIFIED reference (Apache-2.0,
 // /root/reference/src) on this box: addRaw inserts/sec and union/sec,
 // measured in the same process model the reference ships (one scalar JS
-// thread). Compare with tools/bench_core.py (our numpy core) and
+// thread). Compare with perfbench's traced core.hll.update_ns_per_hash
+// (our numpy core: python3 perfbench/run.py --trace 1) and
 // BENCH/BASELINE.md (the distributed engines).
 //
 // usage: node tools/bench_reference.js [n_inserts]

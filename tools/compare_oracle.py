@@ -17,10 +17,10 @@ import duckdb  # noqa: E402
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 # The driver's CORRECTNESS artifact covers exactly the first 50 registry
 # entries (hard budget, rounds 2-4). The size lives in
-# js_hll_spark.queries.DRIVER_WINDOW (which also drives the rotation),
+# oracle.queries.DRIVER_WINDOW (which also drives the rotation),
 # so the gate and the registry can never disagree; both honor
 # SPARK_GRAFT_GATE_WINDOW for local experiments.
-from js_hll_spark.queries import DRIVER_WINDOW  # noqa: E402
+from oracle.queries import DRIVER_WINDOW  # noqa: E402
 TABLES = (
     "region nation customer supplier part orders lineitem events "
     "documents embeddings"
@@ -67,7 +67,7 @@ def value_hash(cols, rows):
 
 
 def main(only=None, json_out=None):
-    from js_hll_spark.queries import ORACLES, QUERIES
+    from oracle.queries import ORACLES, QUERIES
     from js_hll_spark.spark.session import get_spark
 
     if only:

@@ -2,6 +2,10 @@
 queries, with the properties each plan must exhibit called out. The
 same properties are asserted programmatically in
 tests/test_plan_quality.py; this artifact makes them reviewable.
+Besides the registry queries it dumps the sketch-table pruned read and
+bench.py's two inline flagship queries (``hll_ndv`` over the cached
+webtext table, CPUS x 4 partitions — the plan does not depend on the
+row count, so a small table stands in for bench.py's 24M rows).
 
 usage: python tools/dump_plans.py   (writes PLANS.md at the repo root)
 """
@@ -30,7 +34,9 @@ SHOWCASE = [
         "rho via bit_count) sits inside WholeStageCodegen; the partial "
         "HashAggregate collapses each partition to <= m rows per key "
         "BEFORE the exchange, so the shuffle carries register rows, "
-        "never data rows; assembly is one batched mapInPandas.",
+        "never data rows; collect_list packs each group's registers "
+        "into one row and one hll_assemble MapInArrow places them — no "
+        "pandas step.",
     ),
     (
         "join_broadcast_agg",
@@ -58,9 +64,10 @@ SHOWCASE = [
     ),
     (
         "hll_ndv_global",
-        "Flagship shape (the bench's webtext_ndv_url runs the same "
-        "plan): scan -> codegen hash/rho -> partial agg -> one exchange "
-        "of <= m small rows -> single-group assembly.",
+        "Flagship shape (the bench's webtext_ndv_url, below, adds only "
+        "its cached scan and a Coalesce): scan -> codegen hash/rho -> "
+        "partial agg -> exchanges of register rows only (<= m per "
+        "partition) -> single-group assembly.",
     ),
     (
         "sample_fixed",
@@ -75,15 +82,18 @@ SHOWCASE = [
         "a single count/sum aggregate — no second scan for sizes); the "
         "eval side is broadcast by AQE when it fits, with no pinned "
         "hint. The Bloom tier replaces the join entirely with a KB "
-        "broadcast VARIABLE probed in mapInPandas (a crossJoin against "
-        "a blob row would stamp the binary onto every posting row).",
+        "broadcast VARIABLE probed by one scalar Arrow UDF over the "
+        "posting hash (a crossJoin against a blob row would stamp the "
+        "binary onto every posting row).",
     ),
 ]
 
 
 def main() -> None:
-    from js_hll_spark.queries import QUERIES
+    from js_hll_spark.sources.webtext import webtext_table
+    from js_hll_spark.spark.agg import hll_ndv
     from js_hll_spark.spark.session import get_spark
+    from oracle.queries import QUERIES
 
     spark = get_spark("plans", master="local[4]", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
@@ -120,6 +130,31 @@ def main() -> None:
             pruned,
         )
     ]
+    # bench.py's flagship shape: hll_ndv over the cached webtext table
+    pages = webtext_table(
+        spark, 100_000, partitions=spark.sparkContext.defaultParallelism * 4,
+        columns=("url", "lang"),
+    ).cache()
+    extra += [
+        (
+            "webtext_ndv_url (bench flagship)",
+            "The bench headline, unkeyed: the codegen hash/rho path runs "
+            "over the InMemoryTableScan of the cached pages, coalesced to "
+            "the core count (Coalesce) before the partial aggregate; only "
+            "register rows (<= m per partition) cross the exchanges, and "
+            "one hll_assemble MapInArrow builds the single group's sketch.",
+            hll_ndv(pages, "url", log2m=13),
+        ),
+        (
+            "webtext_ndv_by_lang (bench flagship)",
+            "The keyed flagship: the same codegen path over the cached "
+            "pages with no Coalesce (the keyed variant of that rule was "
+            "reverted), a (lang, register) partial aggregate before the "
+            "exchange, and one hll_assemble MapInArrow over one packed "
+            "register row per lang.",
+            hll_ndv(pages, "url", by=["lang"], log2m=13),
+        ),
+    ]
 
     sections = [
         (name, why, QUERIES[name](spark, SF_DIR)) for name, why in SHOWCASE
@@ -140,6 +175,7 @@ def main() -> None:
         out.append(plan.rstrip())
         out.append("```")
         out.append("")
+    pages.unpersist()
     with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"wrote PLANS.md ({len(sections)} plans)")
