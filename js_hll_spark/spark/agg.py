@@ -298,10 +298,11 @@ def hll_sketch(
     a register-file cache that is emitted early past a fixed byte bound.
     ``groupBy(keys)`` then gathers each group's registers into one row:
     for xxhash64/raw at most m packed longs, for murmur3 up to
-    (map partitions holding the group) x m, e.g. 8 MB at 128 partitions
-    and log2m 13. Prefer a smaller log2m when sketching per key over
-    millions of keys (the error bound is per sketch, and tiny groups
-    saturate far below m registers anyway).
+    (map partitions holding the group) x m keyed, e.g. 8 MB at 128
+    partitions and log2m 13, and at most cores x m unkeyed. Prefer a
+    smaller log2m when sketching per key over millions of keys (the
+    error bound is per sketch, and tiny groups saturate far below m
+    registers anyway).
     """
     if engine == "explicit":
         return hll_sketch_explicit(
@@ -570,36 +571,19 @@ def hll_sketch_sql(
             f"unknown hash_method {hash_method!r}: use 'xxhash64', 'murmur3' or 'raw'"
         )
 
-    # UNKEYED ONLY: the partial HashAggregate emits m rows per PARTITION
-    # before the only data shuffle, so the map-task count is a direct
-    # multiplier on shuffle volume while per-task partial state is
-    # EXACTLY m registers (~8 KB) no matter how many splits a task
-    # absorbs — coalescing a batch input that arrives in more partitions
-    # than cores down to defaultParallelism is therefore a pure win
-    # (narrow, no shuffle; merge-order independence keeps the sketch
-    # bit-identical). Measured: 24M-row webtext cache, 128 -> 32 tasks,
-    # 1.63 -> 0.81 s; spark-submit scan at 16 MB splits, ndv leg flat at
-    # local[8] (6.28 vs 6.31 s) and 4.97 -> 3.05 s at local[32], ndv
-    # double bit-identical in every run. The KEYED path deliberately
-    # keeps the input partitioning: per-task partial state there is
-    # (keys-in-task x m), and merging key-clustered splits multiplies it
-    # — measured 15.8 -> 26.0 s on the (lang, day) grouped leg at
-    # local[8] (time-clustered scan, ~80 splits/task) before this rule
-    # was restricted to the unkeyed case. A no-op whenever the input
-    # already arrives in <= cores partitions (every _t_auto/pristine
-    # source, any AQE-coalesced shuffle output). The same holds for the
-    # murmur3 partials: one packed register list per partition.
-    if not keys and not df.isStreaming:
-        _cores = df.sparkSession.sparkContext.defaultParallelism
-        if df.rdd.getNumPartitions() > _cores:
-            df = df.coalesce(_cores)
-
     schema = _merge_schema(df, keys, estimate=estimate, keep_sketch=keep_sketch)
     kernel = _assemble_kernel(
         keys, config, schema, estimate=estimate, keep_sketch=keep_sketch
     )
     # countDistinct semantics: NULL values are not counted
     if hash_method == "murmur3":
+        # The Catalyst producers below take the input as it is: a
+        # Coalesce blocks RemoveRedundantAggregates (which drops a
+        # caller's groupBy under the register max), and a partition
+        # probe runs a job at build. The murmur3 map pays ~50 ms per
+        # Python task, so the unkeyed one runs on at most one per core.
+        if not keys and not df.isStreaming:
+            df = df.coalesce(df.sparkSession.sparkContext.defaultParallelism)
         src = df.filter(F.col(value_col).isNotNull()).select(
             *keys, value.alias(_HASH_COL)
         )

@@ -267,16 +267,14 @@ def test_connected_components_edge_restricted_loop_matches_semantics(spark):
 
 
 def test_sql_engine_coalesces_wide_unkeyed_inputs_bit_identically(spark):
-    """The sql engine coalesces batch inputs arriving in more partitions
-    than cores before the UNKEYED partial aggregate (map tasks multiply
-    the partial shuffle's m-row-per-partition volume; per-task state is
-    exactly m registers, so merging splits is bounded). The KEYED path
-    must keep the input partitioning: per-task state there is
-    keys-in-task x m, and merging key-clustered splits multiplies it
-    (measured 15.8 -> 26.0 s on a (lang, day) leg at local[8]). Guard
-    all three: the Coalesce node appears exactly when partitions >
-    defaultParallelism AND the agg is unkeyed, and results stay
-    bit-identical across partition counts (merge-order independence)."""
+    """Only the unkeyed murmur3 Arrow map coalesces its input (to
+    defaultParallelism, with no partition probe): a Python task costs
+    ~50 ms, and its one gathered row holds at most cores x m packed
+    longs. The Catalyst producers (xxhash64 and raw, keyed or not) keep
+    the input partitioning, because a Coalesce would stop Catalyst from
+    dropping a caller's redundant aggregate under the register max.
+    Results stay bit-identical across partition counts for every hash
+    method (merge-order independence)."""
     from js_hll_spark.spark.agg import hll_sketch
 
     cores = spark.sparkContext.defaultParallelism
@@ -289,20 +287,27 @@ def test_sql_engine_coalesces_wide_unkeyed_inputs_bit_identically(spark):
     def qe(df):
         return df._jdf.queryExecution().toString()
 
-    # unkeyed (the flagship shape): Coalesce iff wide; results identical
-    assert "Coalesce" in qe(hll_sketch(wide, "v", log2m=11))
-    assert "Coalesce" not in qe(hll_sketch(narrow, "v", log2m=11))
-    g_wide = hll_sketch(wide, "v", log2m=11).collect()
-    g_narrow = hll_sketch(narrow, "v", log2m=11).collect()
-    assert [tuple(r) for r in g_wide] == [tuple(r) for r in g_narrow]
+    for method in ("xxhash64", "raw"):
+        for df in (wide, narrow):
+            for by in ([], ["k"]):
+                plan = qe(hll_sketch(df, "v", by=by, log2m=11, hash_method=method))
+                assert "Coalesce" not in plan, (method, by)
 
-    # keyed: NEVER coalesced, results identical across partition counts
-    assert "Coalesce" not in qe(hll_sketch(wide, "v", by=["k"], log2m=11))
+    # unkeyed murmur3: a Coalesce between the input and murmur3_partial
+    m3 = hll_sketch(wide, "v", log2m=11, hash_method="murmur3")
+    physical = m3._jdf.queryExecution().executedPlan().toString()
+    assert "Coalesce" in physical
+    assert physical.index("murmur3_partial") < physical.index("Coalesce")
+    assert "Coalesce" not in qe(
+        hll_sketch(wide, "v", by=["k"], log2m=11, hash_method="murmur3")
+    )
 
-    def rows(df):
+    def rows(df, by, method):
         return sorted(
-            (r["k"], bytes(r["sketch"]), r["ndv"], r["rows_seen"])
-            for r in hll_sketch(df, "v", by=["k"], log2m=11).collect()
+            (tuple(r[k] for k in by), bytes(r["sketch"]), r["ndv"], r["rows_seen"])
+            for r in hll_sketch(df, "v", by=by, log2m=11, hash_method=method).collect()
         )
 
-    assert rows(wide) == rows(narrow)
+    for method in ("xxhash64", "raw", "murmur3"):
+        for by in ([], ["k"]):
+            assert rows(wide, by, method) == rows(narrow, by, method), (method, by)

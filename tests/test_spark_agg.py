@@ -937,6 +937,58 @@ def test_murmur3_keyed_build_runs_no_job(spark, events):
     assert out.count() == events.select("event_type").distinct().count()
 
 
+def test_hll_build_runs_no_job_and_drops_callers_aggregate(spark, monkeypatch):
+    """Building an HLL plan over an aggregated input runs no Spark job
+    (no partition probe: DataFrame.rdd raises here), and Catalyst drops
+    the caller's groupBy(v, k) under the duplicate-insensitive register
+    max, so the estimate equals the one over the raw rows bit for bit."""
+    base = spark.range(0, 20_000).select(
+        (F.col("id") % 7).alias("k"), (F.col("id") % 3_000).alias("v")
+    )
+    df = base.repartition(16)
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+
+    def no_rdd(self):
+        raise AssertionError("an HLL build must not touch DataFrame.rdd")
+
+    sc = spark.sparkContext
+    try:
+        agg = df.groupBy("v", "k").count()
+        with monkeypatch.context() as mp:
+            # the session's concrete class (classic or Connect) defines rdd
+            mp.setattr(type(df), "rdd", property(no_rdd))
+            builds = {}
+            for name, build in (
+                ("ndv", lambda: hll_ndv(agg, "v")),
+                ("sketch", lambda: hll_sketch(agg, "v")),
+                ("raw", lambda: hll_ndv(df, "v", hash_method="raw")),
+                ("murmur3", lambda: hll_ndv(df, "v", hash_method="murmur3")),
+            ):
+                sc.setJobGroup(f"hll-build-{name}", "plan construction")
+                try:
+                    builds[name] = build()
+                finally:
+                    sc.setJobGroup(None, None)
+                assert sc.statusTracker().getJobIdsForGroup(f"hll-build-{name}") == [], name
+
+        def grouped_by_k(plan):
+            def items(seq):
+                return [seq.apply(i) for i in range(seq.size())]
+
+            here = plan.nodeName() == "Aggregate" and any(
+                e.toString().startswith("k#") for e in items(plan.groupingExpressions())
+            )
+            return here or any(grouped_by_k(c) for c in items(plan.children()))
+
+        optimized = builds["ndv"]._jdf.queryExecution().optimizedPlan()
+        assert not grouped_by_k(optimized), optimized.toString()
+        assert grouped_by_k(agg._jdf.queryExecution().optimizedPlan())
+        assert builds["ndv"].collect() == hll_ndv(df, "v").collect()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+
+
 def test_murmur3_partial_kernel_flushes_within_bound():
     """The murmur3 partial kernel's register-file cache is bounded: 1,500
     keys at log2m=16 would hold 98 MB of register files, past the 32 MB

@@ -65,7 +65,7 @@ SHOWCASE = [
     (
         "hll_ndv_global",
         "Flagship shape (the bench's webtext_ndv_url, below, adds only "
-        "its cached scan and a Coalesce): scan -> codegen hash/rho -> "
+        "its cached scan): scan -> codegen hash/rho -> "
         "partial agg -> exchanges of register rows only (<= m per "
         "partition) -> single-group assembly.",
     ),
@@ -139,17 +139,16 @@ def main() -> None:
         (
             "webtext_ndv_url (bench flagship)",
             "The bench headline, unkeyed: the codegen hash/rho path runs "
-            "over the InMemoryTableScan of the cached pages, coalesced to "
-            "the core count (Coalesce) before the partial aggregate; only "
-            "register rows (<= m per partition) cross the exchanges, and "
+            "over the InMemoryTableScan of the cached pages with no "
+            "Coalesce (one would block Catalyst's RemoveRedundantAggregates); "
+            "only register rows (<= m per partition) cross the exchanges, and "
             "one hll_assemble MapInArrow builds the single group's sketch.",
             hll_ndv(pages, "url", log2m=13),
         ),
         (
             "webtext_ndv_by_lang (bench flagship)",
             "The keyed flagship: the same codegen path over the cached "
-            "pages with no Coalesce (the keyed variant of that rule was "
-            "reverted), a (lang, register) partial aggregate before the "
+            "pages, a (lang, register) partial aggregate before the "
             "exchange, and one hll_assemble MapInArrow over one packed "
             "register row per lang.",
             hll_ndv(pages, "url", by=["lang"], log2m=13),
