@@ -298,11 +298,10 @@ def hll_sketch(
     a register-file cache that is emitted early past a fixed byte bound.
     ``groupBy(keys)`` then gathers each group's registers into one row:
     for xxhash64/raw at most m packed longs, for murmur3 up to
-    (map partitions holding the group) x m keyed, e.g. 8 MB at 128
-    partitions and log2m 13, and at most cores x m unkeyed. Prefer a
-    smaller log2m when sketching per key over millions of keys (the
-    error bound is per sketch, and tiny groups saturate far below m
-    registers anyway).
+    (map partitions holding the group) x m keyed (8 MB at 128 partitions
+    and log2m 13) and at most cores x m unkeyed. Prefer a smaller log2m
+    per key over millions of keys (the error bound is per sketch, and
+    tiny groups saturate far below m registers anyway).
     """
     if engine == "explicit":
         return hll_sketch_explicit(
@@ -531,6 +530,23 @@ def _assemble_kernel(keys, config, schema, *, estimate, keep_sketch):
     return hll_assemble
 
 
+def _groups_by(df: DataFrame, value_col: str) -> bool:
+    """Whether ``df`` ends, past projections and filters, in an Aggregate
+    grouped by ``value_col``, read off the plan without running a job."""
+    try:
+        plan = df._jdf.queryExecution().withCachedData()
+        out = [plan.output().apply(i) for i in range(plan.output().size())]
+        value = next(a for a in out if a.name().lower() == value_col.lower())
+        while plan.nodeName() in ("Project", "Filter", "SubqueryAlias", "View"):
+            plan = plan.child()
+        if plan.nodeName() != "Aggregate":
+            return False
+        groups = plan.groupingExpressions()
+        return any(groups.apply(i).semanticEquals(value) for i in range(groups.size()))
+    except Exception:
+        return False
+
+
 def hll_sketch_sql(
     df: DataFrame,
     value_col: str,
@@ -575,15 +591,14 @@ def hll_sketch_sql(
     kernel = _assemble_kernel(
         keys, config, schema, estimate=estimate, keep_sketch=keep_sketch
     )
+    # Unkeyed: one producer task per core at most, no partition probe (a
+    # job). Not over a groupBy(value), which Catalyst drops under the
+    # register max (RemoveRedundantAggregates) unless a Coalesce is between.
+    if not keys and not df.isStreaming:
+        if hash_method == "murmur3" or not _groups_by(df, value_col):
+            df = df.coalesce(df.sparkSession.sparkContext.defaultParallelism)
     # countDistinct semantics: NULL values are not counted
     if hash_method == "murmur3":
-        # The Catalyst producers below take the input as it is: a
-        # Coalesce blocks RemoveRedundantAggregates (which drops a
-        # caller's groupBy under the register max), and a partition
-        # probe runs a job at build. The murmur3 map pays ~50 ms per
-        # Python task, so the unkeyed one runs on at most one per core.
-        if not keys and not df.isStreaming:
-            df = df.coalesce(df.sparkSession.sparkContext.defaultParallelism)
         src = df.filter(F.col(value_col).isNotNull()).select(
             *keys, value.alias(_HASH_COL)
         )

@@ -267,14 +267,14 @@ def test_connected_components_edge_restricted_loop_matches_semantics(spark):
 
 
 def test_sql_engine_coalesces_wide_unkeyed_inputs_bit_identically(spark):
-    """Only the unkeyed murmur3 Arrow map coalesces its input (to
-    defaultParallelism, with no partition probe): a Python task costs
-    ~50 ms, and its one gathered row holds at most cores x m packed
-    longs. The Catalyst producers (xxhash64 and raw, keyed or not) keep
-    the input partitioning, because a Coalesce would stop Catalyst from
-    dropping a caller's redundant aggregate under the register max.
-    Results stay bit-identical across partition counts for every hash
-    method (merge-order independence)."""
+    """Unkeyed builds coalesce their input to defaultParallelism before
+    the producer, with no partition probe: per-task state is m
+    registers, and a murmur3 Python task costs ~50 ms. Two exceptions
+    keep the input partitioning: keyed builds (per-task state is
+    keys-in-task x m), and xxhash64/raw over a caller's groupBy(value),
+    which Catalyst drops under the register max only with no Coalesce
+    between. Results stay bit-identical across partition counts for
+    every hash method (merge-order independence)."""
     from js_hll_spark.spark.agg import hll_sketch
 
     cores = spark.sparkContext.defaultParallelism
@@ -283,24 +283,24 @@ def test_sql_engine_coalesces_wide_unkeyed_inputs_bit_identically(spark):
     )
     wide = base.repartition(cores * 4)
     narrow = base.repartition(max(1, cores // 2))
+    grouped = wide.groupBy("v", "k").count()
 
-    def qe(df):
-        return df._jdf.queryExecution().toString()
+    def physical(df, by, method):
+        q = hll_sketch(df, "v", by=by, log2m=11, hash_method=method)
+        return q._jdf.queryExecution().executedPlan().toString()
 
-    for method in ("xxhash64", "raw"):
+    partial = {"xxhash64": "partial_max", "raw": "partial_max", "murmur3": "murmur3_partial"}
+    for method, producer in partial.items():
+        # unkeyed and wide: a Coalesce to the core count below the producer
+        plan = physical(wide, [], method)
+        assert f"Coalesce {cores}" in plan, method
+        assert plan.index(producer) < plan.index("Coalesce"), method
+        # narrow: Catalyst drops the no-op Coalesce; keyed: none at all
+        assert "Coalesce" not in physical(narrow, [], method), method
         for df in (wide, narrow):
-            for by in ([], ["k"]):
-                plan = qe(hll_sketch(df, "v", by=by, log2m=11, hash_method=method))
-                assert "Coalesce" not in plan, (method, by)
-
-    # unkeyed murmur3: a Coalesce between the input and murmur3_partial
-    m3 = hll_sketch(wide, "v", log2m=11, hash_method="murmur3")
-    physical = m3._jdf.queryExecution().executedPlan().toString()
-    assert "Coalesce" in physical
-    assert physical.index("murmur3_partial") < physical.index("Coalesce")
-    assert "Coalesce" not in qe(
-        hll_sketch(wide, "v", by=["k"], log2m=11, hash_method="murmur3")
-    )
+            assert "Coalesce" not in physical(df, ["k"], method), method
+        # over a groupBy(v): only the murmur3 map (no Catalyst max) coalesces
+        assert ("Coalesce" in physical(grouped, [], method)) == (method == "murmur3")
 
     def rows(df, by, method):
         return sorted(

@@ -963,6 +963,7 @@ def test_hll_build_runs_no_job_and_drops_callers_aggregate(spark, monkeypatch):
                 ("ndv", lambda: hll_ndv(agg, "v")),
                 ("sketch", lambda: hll_sketch(agg, "v")),
                 ("raw", lambda: hll_ndv(df, "v", hash_method="raw")),
+                ("xxhash64", lambda: hll_ndv(df, "v")),
                 ("murmur3", lambda: hll_ndv(df, "v", hash_method="murmur3")),
             ):
                 sc.setJobGroup(f"hll-build-{name}", "plan construction")
