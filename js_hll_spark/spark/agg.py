@@ -534,7 +534,8 @@ def _groups_by(df: DataFrame, value_col: str) -> bool:
     """Whether ``df`` ends, past projections and filters, in an Aggregate
     grouped by ``value_col``, read off the plan without running a job."""
     try:
-        plan = df._jdf.queryExecution().withCachedData()
+        # a fresh plan: a DataFrame computes its withCachedData only once
+        plan = df.select("*")._jdf.queryExecution().withCachedData()
         out = [plan.output().apply(i) for i in range(plan.output().size())]
         value = next(a for a in out if a.name().lower() == value_col.lower())
         while plan.nodeName() in ("Project", "Filter", "SubqueryAlias", "View"):
@@ -591,9 +592,8 @@ def hll_sketch_sql(
     kernel = _assemble_kernel(
         keys, config, schema, estimate=estimate, keep_sketch=keep_sketch
     )
-    # Unkeyed: one producer task per core at most, no partition probe (a
-    # job). Not over a groupBy(value), which Catalyst drops under the
-    # register max (RemoveRedundantAggregates) unless a Coalesce is between.
+    # Unkeyed: one task per core at most, no partition probe (a job). Not
+    # over a groupBy(value), which RemoveRedundantAggregates then drops.
     if not keys and not df.isStreaming:
         if hash_method == "murmur3" or not _groups_by(df, value_col):
             df = df.coalesce(df.sparkSession.sparkContext.defaultParallelism)
