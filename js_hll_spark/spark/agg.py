@@ -592,10 +592,10 @@ def hll_sketch_sql(
     kernel = _assemble_kernel(
         keys, config, schema, estimate=estimate, keep_sketch=keep_sketch
     )
-    # Unkeyed: one task per core at most, no partition probe (a job). Not
-    # over a groupBy(value), which RemoveRedundantAggregates then drops.
+    # Unkeyed: one task per core at most, no partition probe (a job). None
+    # over a groupBy(value) RemoveRedundantAggregates can drop (no rows_seen).
     if not keys and not df.isStreaming:
-        if hash_method == "murmur3" or not _groups_by(df, value_col):
+        if hash_method == "murmur3" or _count_rows or not _groups_by(df, value_col):
             df = df.coalesce(df.sparkSession.sparkContext.defaultParallelism)
     # countDistinct semantics: NULL values are not counted
     if hash_method == "murmur3":

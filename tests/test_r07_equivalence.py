@@ -271,11 +271,11 @@ def test_sql_engine_coalesces_wide_unkeyed_inputs_bit_identically(spark):
     the producer, with no partition probe: per-task state is m
     registers, and a murmur3 Python task costs ~50 ms. Two exceptions
     keep the input partitioning: keyed builds (per-task state is
-    keys-in-task x m), and xxhash64/raw over a caller's groupBy(value),
-    which Catalyst drops under the register max only with no Coalesce
-    between. Results stay bit-identical across partition counts for
+    keys-in-task x m), and an xxhash64/raw hll_ndv over a caller's
+    groupBy(value), which Catalyst drops under the register max only
+    with no Coalesce between. Results stay bit-identical across partition counts for
     every hash method (merge-order independence)."""
-    from js_hll_spark.spark.agg import hll_sketch
+    from js_hll_spark.spark.agg import hll_ndv, hll_sketch
 
     cores = spark.sparkContext.defaultParallelism
     base = spark.range(0, 20_000).select(
@@ -285,8 +285,8 @@ def test_sql_engine_coalesces_wide_unkeyed_inputs_bit_identically(spark):
     narrow = base.repartition(max(1, cores // 2))
     grouped = wide.groupBy("v", "k").count()
 
-    def physical(df, by, method):
-        q = hll_sketch(df, "v", by=by, log2m=11, hash_method=method)
+    def physical(df, by, method, build=hll_sketch):
+        q = build(df, "v", by=by, log2m=11, hash_method=method)
         return q._jdf.queryExecution().executedPlan().toString()
 
     partial = {"xxhash64": "partial_max", "raw": "partial_max", "murmur3": "murmur3_partial"}
@@ -299,8 +299,12 @@ def test_sql_engine_coalesces_wide_unkeyed_inputs_bit_identically(spark):
         assert "Coalesce" not in physical(narrow, [], method), method
         for df in (wide, narrow):
             assert "Coalesce" not in physical(df, ["k"], method), method
-        # over a groupBy(v): only the murmur3 map (no Catalyst max) coalesces
-        assert ("Coalesce" in physical(grouped, [], method)) == (method == "murmur3")
+        # over a groupBy(v), hll_ndv coalesces only the murmur3 map (no
+        # Catalyst max); hll_sketch's rows_seen count keeps the caller's
+        # aggregate, so it coalesces on every path
+        ndv_plan = physical(grouped, [], method, build=hll_ndv)
+        assert ("Coalesce" in ndv_plan) == (method == "murmur3"), method
+        assert "Coalesce" in physical(grouped, [], method), method
 
     def rows(df, by, method):
         return sorted(

@@ -65,9 +65,10 @@ SHOWCASE = [
     (
         "hll_ndv_global",
         "Flagship shape (the bench's webtext_ndv_url, below, adds only "
-        "its cached scan): scan -> codegen hash/rho -> "
-        "partial agg -> exchanges of register rows only (<= m per "
-        "partition) -> single-group assembly.",
+        "its cached scan): scan -> Coalesce to the core count (no "
+        "partition probe; it keeps fewer partitions as they are) -> "
+        "codegen hash/rho -> partial agg -> exchanges of register rows "
+        "only (<= m per partition) -> single-group assembly.",
     ),
     (
         "sample_fixed",
@@ -139,16 +140,26 @@ def main() -> None:
         (
             "webtext_ndv_url (bench flagship)",
             "The bench headline, unkeyed: the codegen hash/rho path runs "
-            "over the InMemoryTableScan of the cached pages with no "
-            "Coalesce (one would block Catalyst's RemoveRedundantAggregates); "
-            "only register rows (<= m per partition) cross the exchanges, and "
-            "one hll_assemble MapInArrow builds the single group's sketch.",
+            "over the InMemoryTableScan of the cached pages, coalesced to "
+            "the core count (Coalesce, no partition probe) before the "
+            "partial aggregate; only register rows (<= m per partition) "
+            "cross the exchanges, and one hll_assemble MapInArrow builds "
+            "the single group's sketch.",
             hll_ndv(pages, "url", log2m=13),
+        ),
+        (
+            "webtext_ndv_url over a caller's groupBy(url, lang)",
+            "The same build over an aggregated input: no Coalesce, so "
+            "Catalyst's RemoveRedundantAggregates drops the caller's "
+            "groupBy under the register max, and the partial aggregate "
+            "reads the cached pages directly.",
+            hll_ndv(pages.groupBy("url", "lang").count(), "url", log2m=13),
         ),
         (
             "webtext_ndv_by_lang (bench flagship)",
             "The keyed flagship: the same codegen path over the cached "
-            "pages, a (lang, register) partial aggregate before the "
+            "pages with no Coalesce (keyed builds keep the input "
+            "partitioning), a (lang, register) partial aggregate before the "
             "exchange, and one hll_assemble MapInArrow over one packed "
             "register row per lang.",
             hll_ndv(pages, "url", by=["lang"], log2m=13),
