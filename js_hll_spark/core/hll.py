@@ -95,31 +95,6 @@ def estimate_from_registers(regs: np.ndarray, config: HLLConfig) -> float:
     return -config.two_to_l * math.log(x)
 
 
-def estimate_many(regs: np.ndarray, config: HLLConfig) -> np.ndarray:
-    """Batched :func:`estimate_from_registers` over a (n, m) register
-    matrix — bit-identical per row (same bincount+dot arithmetic and the
-    same scalar correction branches).
-
-    Batching note (VERDICT r3 #6, measured on this box): the kernel IS
-    the histogram — np.bincount over one 8192-register file costs
-    ~12.4 us (~1.5 ns/register, a generic C counting pass), and every
-    "more vectorized" formulation loses: a single offset-bincount over
-    the raveled matrix pays an n*m int64 materialization (21k est/s),
-    np.add.at scatter is ~9k/s, and a LUT-gather row-sum writes n*m
-    float64 (29k/s) — all slower than per-row bincount (~70k/s). So the
-    batch API's win is limited to shaving the per-call object/dispatch
-    overhead; the residual gap to a JIT-fused scalar loop (the
-    reference's ~92.7k/s single-call leg) is structural to numpy. See
-    BENCH/BASELINE.md for the A/B table.
-
-    Delegates to :func:`estimate_from_registers` per row — ONE estimator
-    body to maintain, and the bit-identical contract holds by
-    construction rather than by keeping two copies in sync."""
-    return np.array(
-        [estimate_from_registers(r, config) for r in regs], dtype=np.float64
-    )
-
-
 def fold_registers(
     regs: np.ndarray,
     config: HLLConfig,

@@ -5,9 +5,9 @@ north rule adds):
 
 - exact: hash-groupBy on a normalized fingerprint (md5) — one shuffle of
   (hash, id) pairs only.
-- minhash_lsh: shingle -> K minhashes -> B bands -> bucket join. Band
-  buckets are the join key, so candidate generation is an equi-join that
-  AQE can handle; no O(n^2) anywhere.
+- minhash_lsh: shingle -> K minhashes -> B bands -> bucket grouping. One
+  groupBy on (band_idx, band_hash) collects each bucket's members and a
+  codegen Generate emits its pairs; no join and no O(n^2) anywhere.
 - simhash: 64-bit near-dup signature, Hamming-banded.
 - ngram_jaccard: exact Jaccard on word shingles for candidate pairs
   (verification tier after LSH).
@@ -21,7 +21,8 @@ are semi-joins on doc_id; nothing collects to the driver.
 One tokenizer: every tier normalizes and splits text with Catalyst's
 ``text.tokens`` (the expression the DuckDB oracles mirror). Word
 shingles and SimHash votes are one Arrow map each over those tokens
-(``_shingle_kernel``, ``_simhash_kernel``).
+(``_shingle_kernel``, ``_simhash_kernel``); both SimHash tiers share the
+vote kernel and differ only in the token hash.
 
 MinHash here uses md5-derived permutations so the DuckDB oracle can
 reproduce signatures bit-for-bit (md5 exists on both engines); the
@@ -110,26 +111,31 @@ def shingle_postings(
     return _mat(ex) if materialize else ex
 
 
-# Normalized text (token bytes plus one separator each) a kernel windows
-# at once: bounds a task's index and vote arrays, and keeps n joined
-# copies far below Arrow's 2 GB string-offset limit, whatever the doc size.
+# Normalized text (token bytes plus one separator each), or 8-byte token
+# hashes, a kernel windows at once: bounds a task's index and vote
+# arrays, and keeps n joined copies far below Arrow's 2 GB string-offset
+# limit, whatever the doc size.
 _SLICE_BYTES = 1 << 20
 
 
 def _token_slices(batch):
-    """Row slices of an Arrow batch with a ``__toks`` (``tokens()``)
-    column, each about ``_SLICE_BYTES`` of text (a larger row is a slice
-    of its own), as (slice, tokens per row, the slice's flat tokens). A
-    NULL list has 0 tokens; ``tokens()`` never yields an empty one (empty
-    text is ``['']``)."""
+    """Row slices of an Arrow batch with a ``__toks`` column (``tokens()``
+    strings, or their 64-bit hashes), each about ``_SLICE_BYTES`` of text
+    or hashes (a larger row is a slice of its own), as (slice, tokens per
+    row, the slice's flat tokens). A NULL list has 0 tokens; ``tokens()``
+    never yields an empty one (empty text is ``['']``)."""
+    import pyarrow as pa
     import pyarrow.compute as pc
 
     toks = batch.column("__toks")
     lens = pc.list_value_length(toks).fill_null(0).to_numpy()
     flat = toks.flatten()
     ends = np.cumsum(lens)
-    offs = np.frombuffer(flat.buffers()[1], dtype=np.int32)[flat.offset :]
-    cum = offs[ends] - offs[0] + ends
+    if pa.types.is_string(flat.type):
+        offs = np.frombuffer(flat.buffers()[1], dtype=np.int32)[flat.offset :]
+        cum = offs[ends] - offs[0] + ends
+    else:
+        cum = 8 * ends
     cuts = np.searchsorted(cum, np.arange(_SLICE_BYTES, cum[-1], _SLICE_BYTES)) + 1
     bounds = np.unique(np.concatenate(([0], cuts, [len(lens)])))
     for lo, hi in zip(bounds[:-1], bounds[1:]):
@@ -185,6 +191,26 @@ def _shingle_rows(df: DataFrame, text_col: str, id_col: str | None, n: int) -> D
     return src.mapInArrow(_shingle_kernel(n, bool(ids)), schema=schema)
 
 
+def _postings(
+    df: DataFrame | None,
+    postings: DataFrame | None,
+    text_col: str,
+    id_col: str,
+    shingle_n: int,
+) -> DataFrame:
+    """The caller's ``postings`` (a :func:`shingle_postings` table), or
+    else the lazy posting chain of the raw documents ``df``: every
+    shingle-based tier takes either one."""
+    if postings is not None:
+        return postings
+    if df is None:
+        raise ValueError(
+            "pass raw documents (df/train) or postings (a "
+            "shingle_postings table) — with neither there is nothing to shingle"
+        )
+    return shingle_postings(df, text_col, id_col, shingle_n=shingle_n, materialize=False)
+
+
 def _mat(df: DataFrame) -> DataFrame:
     """Materialize a shared dedup stage (lineage-truncating checkpoint,
     memory+disk with eviction). Eager: each call runs Spark work while
@@ -214,24 +240,11 @@ def _mat(df: DataFrame) -> DataFrame:
     return df.localCheckpoint()
 
 
-def dedup_keep_rows(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    *,
-    compute_df: DataFrame | None = None,
-) -> DataFrame:
+def dedup_keep_rows(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """The deduplicated table itself: keep the smallest-id row per
     normalized-text fingerprint (left-semi join back against the winner
-    set — only (fp, keep_id) pairs shuffle, never full rows).
-
-    ``compute_df`` optionally supplies a re-partitioned twin of ``df``
-    for the fingerprint pass (single-split fixture correction) while the
-    probe side keeps its pristine scan — fanning out BOTH sides doubles
-    the repartition for no benefit (r2 bench regression)."""
-    winners = dedup_exact(
-        df if compute_df is None else compute_df, text_col, id_col
-    ).select(F.col("keep_id").alias(id_col))
+    set — only (fp, keep_id) pairs shuffle, never full rows)."""
+    winners = dedup_exact(df, text_col, id_col).select(F.col("keep_id").alias(id_col))
     return df.join(winners, id_col, "left_semi")
 
 
@@ -276,6 +289,29 @@ def _lsh_band_join(sig: DataFrame, band_cols: list) -> DataFrame:
     )
 
 
+def _minhash_lsh(
+    df, text_col, id_col, k, bands, shingle_n, postings, perm_min, band_of
+) -> DataFrame:
+    """The one MinHash LSH builder: ``perm_min(j)`` is permutation j's
+    per-shingle value (min-aggregated per doc) and ``band_of(*cols)``
+    combines a band's k/bands minhash columns into its bucket key.
+    Shingles explode once, then k map-side min-aggregations — the hash
+    is computed once per (shingle, permutation) inside codegen, and the
+    partial HashAggregate collapses each partition to one row per doc
+    before the shuffle (vs. recomputing the shingle array k times in a
+    nested transform, which is ~10x slower)."""
+    postings = _postings(df, postings, text_col, id_col, shingle_n)
+    rows_per_band = k // bands
+    sig = postings.groupBy("__id").agg(
+        *[F.min(perm_min(j)).alias(f"__mh{j}") for j in range(k)]
+    )
+    band_cols = [
+        band_of(*[F.col(f"__mh{b * rows_per_band + r}") for r in range(rows_per_band)])
+        for b in range(bands)
+    ]
+    return _lsh_band_join(sig, band_cols)
+
+
 def minhash_lsh_candidates_fast(
     df: DataFrame | None = None,
     text_col: str = "text",
@@ -287,32 +323,13 @@ def minhash_lsh_candidates_fast(
     postings: DataFrame | None = None,
 ) -> DataFrame:
     """minhash_lsh_candidates with the xxhash64 signature — the 100 TB
-    path. Same plan shape: explode shingles -> k map-side min-aggs ->
-    band equi-join. Pass ``postings`` (from ``shingle_postings``) to
-    reuse a materialized posting table across composed tiers."""
-    if df is None and postings is None:
-        raise ValueError(
-            "pass df (raw documents) or postings (a shingle_postings "
-            "table) — with neither there is nothing to shingle"
-        )
-    rows_per_band = k // bands
-    if postings is None:
-        postings = shingle_postings(
-            df, text_col, id_col, shingle_n=shingle_n, materialize=False
-        )
-    sig = postings.groupBy("__id").agg(
-        *[
-            F.min(F.xxhash64(F.lit(j), F.col("sh"))).alias(f"__mh{j}")
-            for j in range(k)
-        ]
+    path. Same plan shape and arguments; the permutations and band keys
+    are codegen xxhash64 instead of md5 strings."""
+    return _minhash_lsh(
+        df, text_col, id_col, k, bands, shingle_n, postings,
+        lambda j: F.xxhash64(F.lit(j), F.col("sh")),
+        F.xxhash64,
     )
-    band_cols = [
-        F.xxhash64(
-            *[F.col(f"__mh{b * rows_per_band + r}") for r in range(rows_per_band)]
-        )
-        for b in range(bands)
-    ]
-    return _lsh_band_join(sig, band_cols)
 
 
 def minhash_lsh_candidates(
@@ -328,46 +345,19 @@ def minhash_lsh_candidates(
     """Candidate near-duplicate pairs: docs sharing at least one LSH band
     (rows of k/bands minhashes). Returns (id_a, id_b) with id_a < id_b.
 
-    Plan shape: one projection (signatures, codegen) -> explode bands ->
-    self-equi-join on (band_idx, band_hash) -> distinct pairs. The join key
-    is a hash, so it is skew-free; candidates are orders of magnitude fewer
-    than n^2. Pass ``postings`` (from ``shingle_postings``) to reuse a
-    materialized posting table across composed tiers."""
-    if df is None and postings is None:
-        raise ValueError(
-            "pass df (raw documents) or postings (a shingle_postings "
-            "table) — with neither there is nothing to shingle"
-        )
-    rows_per_band = k // bands
-    # explode shingles once, then k map-side min-aggregations — md5 is
-    # computed once per (shingle, permutation) inside codegen, and the
-    # partial HashAggregate collapses each partition to one row per doc
-    # before the shuffle (vs. recomputing the shingle array k times in a
-    # nested transform, which is ~10x slower)
-    if postings is None:
-        postings = shingle_postings(
-            df, text_col, id_col, shingle_n=shingle_n, materialize=False
-        )
-    sig = postings.groupBy("__id").agg(
-        *[
-            F.min(
-                F.substring(
-                    F.md5(F.concat(F.lit(str(j)), F.lit("|"), F.col("sh"))),
-                    1,
-                    16,
-                )
-            ).alias(f"__mh{j}")
-            for j in range(k)
-        ]
+    Plan shape: explode shingles -> k min-aggregations (signatures,
+    codegen) -> one groupBy on (band_idx, band_hash) whose bucket member
+    lists explode into distinct pairs (:func:`_lsh_band_join`). The
+    bucket key is a hash, so it is skew-free; candidates are orders of
+    magnitude fewer than n^2. Permutations are md5 strings so the DuckDB
+    oracle reproduces them bit for bit. Pass ``postings`` (from
+    ``shingle_postings``) to reuse a materialized posting table across
+    composed tiers."""
+    return _minhash_lsh(
+        df, text_col, id_col, k, bands, shingle_n, postings,
+        lambda j: F.substring(F.md5(F.concat(F.lit(str(j)), F.lit("|"), F.col("sh"))), 1, 16),
+        lambda *band: F.concat_ws(",", *band),
     )
-    band_cols = [
-        F.concat_ws(
-            ",",
-            *[F.col(f"__mh{b * rows_per_band + r}") for r in range(rows_per_band)],
-        )
-        for b in range(bands)
-    ]
-    return _lsh_band_join(sig, band_cols)
 
 
 def ngram_jaccard(
@@ -400,47 +390,42 @@ def ngram_jaccard(
     — and, with a cap, df-capped — posting table once so the sizes and
     both intersection sides read materialized blocks instead of each
     re-running the scan -> explode -> hash chain (VERDICT r3 #2)."""
-    if df is None and postings is None:
-        raise ValueError(
-            "pass df (raw documents) or postings (a shingle_postings "
-            "table) — with neither there is nothing to shingle"
-        )
+    # a lazy posting chain is consumed once below (the hashed projection
+    # is what gets materialized when sharing is needed), so the
+    # string-shingle table itself never checkpoints — r7: the old
+    # string-posting checkpoint wrote ~3x the bytes of the hashed one
+    # for the same sharing
     postings_was_lazy = postings is None
-    if postings is None:
-        # the posting chain is consumed once below (the hashed projection
-        # is what gets materialized when sharing is needed), so the
-        # string-shingle table itself never checkpoints — r7: the old
-        # string-posting checkpoint wrote ~3x the bytes of the hashed one
-        # for the same sharing
-        postings = shingle_postings(
-            df, text_col, id_col, shingle_n=shingle_n, materialize=False
-        )
+    postings = _postings(df, postings, text_col, id_col, shingle_n)
     # join/aggregate on the 8-byte shingle hash, not the string: same
     # counts (a 64-bit collision would need two distinct shingles of the
     # same doc pair to collide — ~1e-10 at corpus scale; the DuckDB
     # oracle gate verifies equality empirically), ~17% faster end to end
     ex = postings.select("__id", F.xxhash64("sh").alias("sh"))
+    if max_shingle_df is not None:
+        if materialize and postings_was_lazy:
+            # the hot aggregate and the anti-join probe both consume the
+            # posting chain; share one hashed copy when the caller did
+            # not pass an already-materialized table
+            ex = _mat(ex)
+        # hot-shingle set via map-side-combined count + anti-join: a
+        # Window.partitionBy(sh) count shuffles AND sorts every posting
+        # partition; the aggregate shuffles the same keys without the
+        # sort, and the hot set (df > cap) is typically tiny, so AQE
+        # turns the anti-join into a broadcast at runtime — without
+        # pinning a hint that would OOM if a pathological corpus made
+        # the hot set large. Capping before any list is collected also
+        # never materializes a hot shingle's full posting list in one
+        # aggregation buffer, so the cap is scale-safe when a stopword
+        # shingle covers most of the corpus.
+        hot = (
+            ex.groupBy("sh")
+            .agg(F.count(F.lit(1)).alias("__df"))
+            .filter(F.col("__df") > max_shingle_df)
+            .select("sh")
+        )
+        ex = ex.join(hot, "sh", "left_anti")
     if pairs is not None:
-        if max_shingle_df is not None:
-            if materialize and postings_was_lazy:
-                # the hot aggregate and the anti-join probe both consume
-                # the posting chain; share one hashed copy when the
-                # caller did not pass an already-materialized table
-                ex = _mat(ex)
-            # hot-shingle set via map-side-combined count + anti-join: a
-            # Window.partitionBy(sh) count shuffles AND sorts every
-            # posting partition; the aggregate shuffles the same keys
-            # without the sort, and the hot set (df > cap) is typically
-            # tiny, so AQE turns the anti-join into a broadcast at
-            # runtime — without pinning a hint that would OOM if a
-            # pathological corpus made the hot set large.
-            hot = (
-                ex.groupBy("sh")
-                .agg(F.count(F.lit(1)).alias("__df"))
-                .filter(F.col("__df") > max_shingle_df)
-                .select("sh")
-            )
-            ex = ex.join(hot, "sh", "left_anti")
         # verification tier (r7 rewrite, guide §2.3/§2.4): collapse each
         # doc's (kept) hashed shingle set into ONE array row via a
         # single groupBy — the same shuffle the old per-doc sizes
@@ -494,24 +479,6 @@ def ngram_jaccard(
     # the same pair multiset the a.sh==b.sh AND a.id<b.id join produced,
     # with the self-join's second shuffle and broadcast build gone.
     # Measured at sf1.0 (2.6M postings): 15.9 s -> ~6 s end to end.
-    if max_shingle_df is not None:
-        # hot cap first, as a count aggregate + anti-join (NOT by
-        # filtering the collected lists): counting is map-side combined
-        # and never materializes a hot shingle's full posting list in
-        # one aggregation buffer — the property that keeps the cap
-        # scale-safe when a stopword shingle covers most of the corpus.
-        if materialize and postings_was_lazy:
-            # two consumers of the posting chain (hot agg + anti probe);
-            # an already-materialized passed-in posting table needs no
-            # second copy — both consumers re-hash from its blocks
-            ex = _mat(ex)
-        hot = (
-            ex.groupBy("sh")
-            .agg(F.count(F.lit(1)).alias("__df"))
-            .filter(F.col("__df") > max_shingle_df)
-            .select("sh")
-        )
-        ex = ex.join(hot, "sh", "left_anti")
     grouped = ex.groupBy("sh").agg(
         F.sort_array(F.collect_list("__id")).alias("ids")
     )
@@ -757,89 +724,75 @@ def connected_components(
     )
 
 
+def _simhash_kernel(hash_tokens):
+    """mapInArrow kernel of the SimHash vote: (``__id``, ``__toks``) rows
+    in, (``doc_id``, ``simhash``) out, where ``hash_tokens`` maps a
+    slice's flat ``__toks`` to one 64-bit hash per token. Each token's 64
+    hash bits vote +1/-1; bit i of the signature is set iff its votes sum
+    above 0 (bit 63 is the sign bit of the long). NULL text gets a NULL
+    signature."""
+
+    def simhash_kernel(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            for part, lens, flat in _token_slices(batch):
+                has = lens > 0
+                sig = np.zeros(len(lens), dtype=np.int64)
+                if has.any():
+                    h = hash_tokens(flat)
+                    bits = np.unpackbits(h.view(np.uint8).reshape(-1, 8), axis=1, bitorder="little")
+                    # a doc's tokens are contiguous in `flat`: one reduceat
+                    # over the docs' first tokens counts each bit's 1-votes
+                    starts = (np.cumsum(lens) - lens)[has]
+                    ones = np.add.reduceat(bits, starts, axis=0, dtype=np.int64)
+                    sig[has] = np.packbits(2 * ones > lens[has, None], axis=1, bitorder="little").view("<i8")[:, 0]
+                yield pa.RecordBatch.from_arrays(
+                    [part.column("__id"), pa.array(sig, mask=~has)], names=["doc_id", "simhash"]
+                )
+
+    return simhash_kernel
+
+
+def _long_values(flat):
+    """The token hashes Catalyst computed (``list<long>`` values)."""
+    return flat.to_numpy(zero_copy_only=False)
+
+
+def _simhash(df: DataFrame, id_col: str, toks, hash_tokens) -> DataFrame:
+    """The one SimHash builder: ``toks`` is each doc's token list (strings,
+    or hashes Catalyst computed), ``hash_tokens`` turns a slice of its
+    values into 64-bit hashes, and one Arrow map
+    (:func:`_simhash_kernel`) votes — no shuffle, no per-row Python."""
+    src = df.select(F.col(id_col).alias("__id"), toks.alias("__toks"))
+    ids = src.schema["__id"]
+    schema = StructType(
+        [StructField("doc_id", ids.dataType, ids.nullable), StructField("simhash", LongType(), True)]
+    )
+    return src.mapInArrow(_simhash_kernel(hash_tokens), schema=schema)
+
+
 def simhash_signatures(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    """64-bit SimHash per doc, fully JVM-side: token xxhash64 -> per-bit
-    vote counts (single aggregate over a 64-wide int array) -> sign bits."""
-    toks = tokens(F.col(text_col))
-    hashes = F.transform(toks, lambda t: F.xxhash64(t))
-    # F.shiftright/shiftleft take a Python-int bit count, so the 64 bit
-    # positions are unrolled driver-side into literal arrays.
-    votes = F.aggregate(
-        hashes,
-        F.array_repeat(F.lit(0), 64),
-        lambda acc, h: F.zip_with(
-            acc,
-            F.array(
-                *[
-                    F.when(
-                        F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1, 1
-                    ).otherwise(-1)
-                    for i in range(64)
-                ]
-            ),
-            lambda a, v: a + v,
-        ),
-    )
-    bit_values = [1 << i for i in range(63)] + [-(1 << 63)]  # bit 63 = sign
-    sim = F.aggregate(
-        F.zip_with(
-            votes,
-            F.array(*[F.lit(v).cast("long") for v in bit_values]),
-            lambda v, b: F.when(v > 0, b).otherwise(F.lit(0).cast("long")),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc.bitwiseOR(x),
-    )
-    return df.select(F.col(id_col).alias("doc_id"), sim.alias("simhash"))
-
-
-def _simhash_kernel(batches):
-    """mapInArrow kernel of the murmur3 SimHash: (``__id``, ``__toks``)
-    rows in, (``doc_id``, ``simhash``) out. Each token's 64 hash bits
-    vote +1/-1; bit i of the signature is set iff its votes sum above 0.
-    NULL text gets a NULL signature."""
-    import pyarrow as pa
-
-    for batch in batches:
-        if batch.num_rows == 0:
-            continue
-        for part, lens, flat in _token_slices(batch):
-            has = lens > 0
-            sig = np.zeros(len(lens), dtype=np.int64)
-            if has.any():
-                h = murmur3_64_bytes(flat)
-                bits = np.unpackbits(h.view(np.uint8).reshape(-1, 8), axis=1, bitorder="little")
-                # a doc's tokens are contiguous in `flat`: one reduceat
-                # over the docs' first tokens counts each bit's 1-votes
-                starts = (np.cumsum(lens) - lens)[has]
-                ones = np.add.reduceat(bits, starts, axis=0, dtype=np.int64)
-                sig[has] = np.packbits(2 * ones > lens[has, None], axis=1, bitorder="little").view("<i8")[:, 0]
-            yield pa.RecordBatch.from_arrays(
-                [part.column("__id"), pa.array(sig, mask=~has)], names=["doc_id", "simhash"]
-            )
+    """64-bit SimHash per doc over token xxhash64s: Catalyst hashes every
+    token in codegen (``transform(tokens, xxhash64)``) and the vote
+    kernel shared with :func:`simhash_signatures_fast` turns each doc's
+    hashes into its signature."""
+    toks = F.transform(tokens(text_col), lambda t: F.xxhash64(t))
+    return _simhash(df, id_col, toks, _long_values)
 
 
 def simhash_signatures_fast(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    """Vectorized SimHash: Catalyst's ``tokens()`` in, one Arrow map
-    (:func:`_simhash_kernel`) hashes every token with the AK murmur3 and
-    counts each doc's bit votes with one reduceat — no shuffle, no per-row
-    Python, ~50x the 64-lane Catalyst expression in simhash_signatures.
-    Signatures differ from the xxhash64-based variant (different token
-    hash family); near-dup properties are identical."""
-    src = df.select(F.col(id_col).alias("__id"), tokens(text_col).alias("__toks"))
-    schema = StructType(
-        [
-            StructField("doc_id", src.schema["__id"].dataType, False),
-            # NULL text -> NULL signature, matching the Catalyst twin
-            # (simhash_signatures propagates NULL through the expression)
-            StructField("simhash", LongType(), True),
-        ]
-    )
-    return src.mapInArrow(_simhash_kernel, schema=schema)
+    """Vectorized SimHash over the AK murmur3: the vote kernel hashes
+    Catalyst's ``tokens()`` in numpy (:func:`murmur3_64_bytes`).
+    Signatures differ from the xxhash64-based :func:`simhash_signatures`
+    (different token hash family); near-dup properties are identical."""
+    return _simhash(df, id_col, tokens(text_col), murmur3_64_bytes)
 
 
 def simhash_candidates(

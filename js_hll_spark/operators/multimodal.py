@@ -10,10 +10,9 @@ Decode support without external libraries (pure numpy):
   header tag parse, FRAME markers, planar C444 and C420 (chroma
   upsampled) — completing the modality set: every kind has at least one
   REAL decoder with an oracled end-to-end query.
-Compressed formats (PNG/JPEG/H.264) need codec libraries not present in
-this container: the decoders raise NotImplementedError for those magics
-unless ``fake=True`` substitutes the deterministic stand-in, keeping the
-downstream feature pipeline exercisable for any input.
+Compressed formats (PNG/JPEG/H.264) need codec libraries the package
+does not depend on: the decoders raise NotImplementedError for those
+magics.
 """
 
 from __future__ import annotations
@@ -43,14 +42,6 @@ MEDIA_SCHEMA = StructType(
         StructField("duration_ms", IntegerType(), True),
     ]
 )
-
-
-def _fake_decode(blob: bytes, out_hw: tuple[int, int]) -> np.ndarray:
-    """Deterministic stand-in decoder: a pseudo-image seeded by the blob's
-    first 8 bytes. Replaces PIL/cv2 in this container."""
-    seed = struct.unpack_from("<Q", blob.ljust(8, b"\0"), 0)[0] & 0x7FFFFFFF
-    rng = np.random.default_rng(seed)
-    return rng.random((out_hw[0], out_hw[1], 3), dtype=np.float32)
 
 
 def encode_bmp(img: np.ndarray) -> bytes:
@@ -122,19 +113,16 @@ def _resize_nearest(img: np.ndarray, out_hw: tuple[int, int]) -> np.ndarray:
     return img[ri][:, ci]
 
 
-def decode_image(blob: bytes, out_hw: tuple[int, int] = (32, 32), *, fake: bool = False):
+def decode_image(blob: bytes, out_hw: tuple[int, int] = (32, 32)):
     """Decode a BMP/PPM blob to float32 out_hw[0] x out_hw[1] x 3 RGB in
-    [0, 1] (nearest-neighbor resize). ``fake=True`` substitutes the
-    deterministic stand-in for unsupported/compressed formats."""
+    [0, 1] (nearest-neighbor resize)."""
     if blob[:2] == b"BM":
         return _resize_nearest(_decode_bmp(blob), out_hw)
     if blob[:2] == b"P6":
         return _resize_nearest(_decode_ppm(blob), out_hw)
-    if fake:
-        return _fake_decode(blob, out_hw)
     raise NotImplementedError(
-        "compressed image formats (PNG/JPEG/...) need codec libraries not"
-        " present in this container; supply BMP/P6-PPM or pass fake=True"
+        "compressed image formats (PNG/JPEG/...) need codec libraries this"
+        " package does not depend on; supply 24-bit BMP or P6 PPM"
     )
 
 
@@ -144,7 +132,6 @@ def image_features(
     blob_col: str = "media",
     id_col: str = "media_id",
     out_hw: tuple[int, int] = (32, 32),
-    fake: bool = False,
 ) -> DataFrame:
     """Decode + resize + mean-pool features per image via mapInPandas —
     Arrow-batched, one numpy decode per row, no driver involvement. At
@@ -156,7 +143,7 @@ def image_features(
         for pdf in batches:
             feats = []
             for blob in pdf[blob_col]:
-                img = decode_image(bytes(blob), out_hw, fake=fake)
+                img = decode_image(bytes(blob), out_hw)
                 feats.append(img.mean(axis=(0, 1)).astype(np.float32).tolist())
             yield pd.DataFrame(
                 {id_col: pdf[id_col], "features": feats}
@@ -315,9 +302,8 @@ def frame_sample_plan(
     duration_col: str = "duration_ms",
 ) -> DataFrame:
     """Expand each video row into (media_id, frame_ts_ms) sample points —
-    pure JVM-side sequence/explode; the frame *decode* is the stubbed
-    step, the distribution plan (explode -> repartition -> decode UDF)
-    is the real scale path."""
+    pure JVM-side sequence/explode: the distribution plan (explode ->
+    repartition -> decode UDF) a per-frame decode runs over at scale."""
     return df.select(
         "media_id",
         F.explode(

@@ -8,7 +8,7 @@ registered in __spark_entry__ (SURVEY.md §2.2).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, functions as F
 
 # A small deterministic stopword list shared by quality scoring and lang-id.
 STOPWORDS = [
@@ -143,13 +143,3 @@ def redact_pii(col: str | Column = "text") -> Column:
     for pat, repl in PII_PATTERNS:
         c = F.regexp_replace(c, pat, repl)
     return c
-
-
-def text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Convenience: append token_count / quality / fingerprint / lang."""
-    return (
-        df.withColumn("n_tokens", token_count(text_col))
-        .withColumn("quality", quality_score(text_col))
-        .withColumn("fingerprint", fingerprint(text_col))
-        .withColumn("lang_pred", lang_id(text_col))
-    )

@@ -24,7 +24,6 @@ from __future__ import annotations
 from typing import Callable, Sequence
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
     BinaryType,
@@ -247,45 +246,6 @@ def approx_quantiles(
         finalize_schema=[StructField(c, DoubleType(), True) for c in cols],
     )
     return out.select(*by, *cols)
-
-
-class SpaceSavingCounter:
-    """Bounded top-frequency counter with the space-saving overestimate
-    invariant: memory is independent of key cardinality, and truncation
-    never zeroes a value — everything evicted had count <= ``floor``, so
-    a reappearing value resumes from that floor. tracked >= true count
-    for every tracked value, which means a true heavy hitter cannot be
-    displaced by a count restart (the flaw of plain periodic nlargest
-    truncation, VERDICT r2 advice)."""
-
-    def __init__(self, pool: int, *, slack: int = 8) -> None:
-        self.pool = pool
-        self.cap = slack * pool
-        self.keep = max(2 * pool, self.cap // 2)
-        self.counts: pd.Series | None = None
-        self.floor = 0.0
-
-    def update(self, batch_counts: pd.Series) -> None:
-        c = batch_counts.astype("float64")
-        if self.counts is None:
-            self.counts = c
-        else:
-            if self.floor:
-                # only values NOT currently tracked get the floor credit
-                new = ~c.index.isin(self.counts.index)
-                if new.any():
-                    c = c.copy()
-                    c[new] += self.floor
-            self.counts = self.counts.add(c, fill_value=0)
-        if len(self.counts) > self.cap:
-            self.counts = self.counts.nlargest(self.keep)
-            # every dropped count was <= the smallest kept one
-            self.floor = max(self.floor, float(self.counts.iloc[-1]))
-
-    def top(self, n: int) -> pd.Series | None:
-        if self.counts is None:
-            return None
-        return self.counts.nlargest(n)
 
 
 def _hh_partial_kernel(keys: list[str], schema: StructType, *, depth: int, width: int, pool: int):

@@ -787,18 +787,13 @@ WHERE round(n_inter / (sa.n_sh + sb.n_sh - n_inter), 6) >= 0.2
 
 
 def q_dedup_keep_rows(spark, sf_dir):
-    """Pristine scan on BOTH sides (r2 bench regression root-caused: the
-    blanket _t_wide fan-out repartitioned the table twice — once per join
-    side — to parallelize ONE md5 per row, which a single core does at
-    ~100 MB/s anyway; fingerprinting is not compute-heavy the way k x
-    shingle minhashing is). Callers with genuinely heavy normalization
-    can pass compute_df to fan out only the winner pass."""
-    # r7: probe side stays pristine; the fingerprint pass fans out
-    # scale-adaptively (see q_token_count)
-    return dedup.dedup_keep_rows(
-        _t(spark, sf_dir, "documents"),
-        compute_df=_t_auto(spark, sf_dir, "documents"),
-    ).select("doc_id", "lang", "n_chars")
+    """Pristine scan on BOTH sides: a fan-out repartitions the table to
+    parallelize ONE md5 per row, which a single core does at ~100 MB/s
+    anyway; fingerprinting is not compute-heavy the way k x shingle
+    minhashing is."""
+    return dedup.dedup_keep_rows(_t(spark, sf_dir, "documents")).select(
+        "doc_id", "lang", "n_chars"
+    )
 
 
 SQL_DEDUP_KEEP_ROWS = f"""
@@ -1057,7 +1052,9 @@ SELECT id AS doc_id, min(lbl) AS cluster_id FROM reach GROUP BY id
 
 
 def q_simhash_signatures(spark, sf_dir):
-    # rows-only: xxhash64 does not exist in DuckDB
+    # rows-only: xxhash64 does not exist in DuckDB; the vote is an Arrow
+    # kernel over Catalyst's token hashes
+    _ship(spark)
     return dedup.simhash_signatures(_t_wide(spark, sf_dir, "documents"))
 
 

@@ -499,38 +499,3 @@ def test_union_with_empty_is_identity_in_every_mode():
         assert a._explicit is not None and a.cardinality() == 100
         assert bytes(a.to_bytes()) == before
 
-
-def test_estimate_many_bit_identical():
-    """The batched estimator must be bit-identical to the scalar path in
-    every correction branch (same bincount+dot arithmetic): normal range,
-    small-range (zero registers present), and a saturated register file
-    (large-range / NaN/inf propagation)."""
-    import numpy as np
-
-    from js_hll_spark.config import HLLConfig
-    from js_hll_spark.core.hll import (
-        HLL,
-        estimate_from_registers,
-        estimate_many,
-    )
-
-    cfg = HLLConfig(8, 5)
-    rng = np.random.default_rng(7)
-    rows = []
-    s = HLL(cfg, explicit_threshold=0, sparse_on=False)
-    s.add_raw64(rng.integers(0, 2**64, 100_000, dtype=np.uint64))
-    rows.append(s.registers())                       # normal range
-    t = HLL(cfg, explicit_threshold=0, sparse_on=False)
-    t.add_raw64(rng.integers(0, 2**64, 10, dtype=np.uint64))
-    rows.append(t.registers())                       # small range
-    rows.append(np.zeros(cfg.m, dtype=np.uint8))     # all-zero
-    rows.append(np.full(cfg.m, cfg.max_register_value, dtype=np.uint8))  # saturated
-    regs = np.stack(rows)
-    batch = estimate_many(regs, cfg)
-    for i in range(len(rows)):
-        want = estimate_from_registers(regs[i], cfg)
-        got = float(batch[i])
-        if want != want:  # NaN
-            assert got != got
-        else:
-            assert got == want, (i, got, want)

@@ -1,6 +1,6 @@
 """Multimodal tests: real pure-numpy BMP/PPM decode (round-trip exact),
 nearest-neighbor resize, and the Spark-side schema/batching/distribution.
-Compressed formats (PNG/JPEG) remain gated behind fake=True."""
+Compressed formats (PNG/JPEG) raise NotImplementedError."""
 
 from __future__ import annotations
 
@@ -20,17 +20,25 @@ def test_decode_stub_raises_without_fake():
 
 
 def test_image_features_batch_shape(spark):
-    media = spark.range(50).select(
-        F.col("id").cast("string").alias("media_id"),
-        F.encode(F.col("id").cast("string"), "utf-8").alias("media"),
+    import numpy as np
+    import pandas as pd
+
+    from js_hll_spark.operators.multimodal import encode_bmp
+
+    rng = np.random.default_rng(11)
+    media = spark.createDataFrame(
+        pd.DataFrame(
+            [(str(i), encode_bmp(rng.integers(0, 256, (4, 6, 3), dtype=np.uint8))) for i in range(50)],
+            columns=["media_id", "media"],
+        )
     )
-    out = image_features(media, fake=True)
+    out = image_features(media)
     rows = out.collect()
     assert len(rows) == 50
     assert all(len(r["features"]) == 3 for r in rows)
     # deterministic: same blob -> same features at different parallelism
     again = {r["media_id"]: r["features"] for r in
-             image_features(media.repartition(7), fake=True).collect()}
+             image_features(media.repartition(7)).collect()}
     assert all(again[r["media_id"]] == r["features"] for r in rows)
 
 

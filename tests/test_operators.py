@@ -297,9 +297,10 @@ def test_simhash_verify_exact_dups_at_zero(spark, pages):
 def test_simhash_fast_null_text_yields_null_signature(spark):
     """A NULL text row (a NULL token list) must not kill the task; both
     variants emit a NULL signature for it and real signatures for the
-    other rows."""
+    other rows. A NULL id stays a NULL id (a non-null output schema
+    failed the task with "Value at index is null")."""
     df = spark.createDataFrame(
-        [(1, "alpha beta gamma"), (2, None), (3, "alpha beta gamma")],
+        [(1, "alpha beta gamma"), (2, None), (3, "alpha beta gamma"), (None, "alpha beta gamma")],
         "row_id long, text string",
     )
     for variant in (dedup.simhash_signatures_fast, dedup.simhash_signatures):
@@ -308,7 +309,7 @@ def test_simhash_fast_null_text_yields_null_signature(spark):
             for r in variant(df, "text", "row_id").collect()
         }
         assert rows[2] is None
-        assert rows[1] is not None and rows[1] == rows[3]
+        assert rows[1] is not None and rows[1] == rows[3] == rows[None]
 
 
 def test_ngram_jaccard_exact_dups_score_one(spark, pages):
@@ -396,11 +397,6 @@ def test_simhash_fast_properties(spark, pages):
     truth = true_dup_pairs(pages)
     assert truth.join(cand, ["id_a", "id_b"], "left_semi").count() == truth.count()
 
-    # no timing assertion: host throughput swings 2-3x between minutes,
-    # which made fast-vs-expression comparisons flake at this 4000-row
-    # fixture scale. The 50x speed gap is measured where it is signal —
-    # bench.py's simhash_fast vs simhash_signatures rows at sf0.1.
-
 
 def test_ngram_jaccard_pairs_mode_matches_allpairs(spark, pages):
     """The candidates-first verification tier must score exactly what
@@ -487,9 +483,9 @@ def test_ngram_jaccard_verify_survives_unbroadcastable_candidates(spark, pages):
 
 def test_text_simhash64_matches_dedup_signatures(spark, pages):
     """A per-bit Catalyst SimHash (64 separate vote aggregates over the
-    token xxhash64s) is bit-identical to dedup.simhash_signatures
-    (array-vote variant) — same tokens, same xxhash64, same sign rule,
-    incl. the LongType sign bit 63."""
+    token xxhash64s) is bit-identical to dedup.simhash_signatures (the
+    Arrow vote kernel over Catalyst's token xxhash64s) — same tokens,
+    same xxhash64, same sign rule, incl. the LongType sign bit 63."""
     hashes = F.transform(text.tokens("text"), lambda t: F.xxhash64(t))
 
     def bit_vote(i: int):
@@ -909,6 +905,20 @@ def test_contamination_bloom_single_eval_job(spark, pages):
     assert len(jobs) == 1, jobs
     assert out.count() > 0  # the probe plan still executes lazily after
 
+
+
+def test_contamination_bloom_honours_n_hashes_under_auto_sizing(spark, pages):
+    """An explicit ``n_hashes`` is used as given when ``n_bits`` is
+    auto-sized; only ``n_hashes=None`` derives the count."""
+    from js_hll_spark.operators import contamination
+
+    train = pages.filter(F.col("row_id") % 10 != 0)
+    ev = pages.filter(F.col("row_id") % 10 == 0)
+    given = contamination.contamination_bloom(train, ev, "text", "row_id", n_hashes=3)
+    assert given._bloom_n_hashes == 3
+    derived = contamination.contamination_bloom(train, ev, "text", "row_id")
+    assert derived._bloom_n_bits == given._bloom_n_bits
+    assert derived._bloom_n_hashes != 3
 
 def test_durable_simhash_stage(spark, pages, tmp_path):
     """VERDICT r5 #5: the composed SimHash tier accepts a DURABLE

@@ -90,24 +90,32 @@ def test_posting_kernel_matches_catalyst_twin_on_tricky_text(spark):
 
 
 def test_simhash_kernel_matches_numpy_reference_on_tricky_text(spark):
-    """simhash_signatures_fast votes over exactly Catalyst's tokens():
-    bit i is set iff more of the doc's murmur3 token hashes have bit i
-    set than clear; NULL text gives a NULL signature."""
-    from js_hll_spark.hashing import murmur3_64_bytes
-    from js_hll_spark.operators.dedup import simhash_signatures_fast
+    """Both SimHash tiers vote over exactly Catalyst's tokens(): bit i is
+    set iff more of the doc's token hashes (murmur3 for
+    simhash_signatures_fast, Catalyst's xxhash64 for simhash_signatures)
+    have bit i set than clear; NULL text gives a NULL signature."""
+    from js_hll_spark.hashing import murmur3_64_bytes, to_uint64
+    from js_hll_spark.operators.dedup import simhash_signatures, simhash_signatures_fast
 
     df = spark.createDataFrame(_TRICKY, "doc_id long, text string")
-    want = {}
-    for doc_id, toks in df.select("doc_id", tokens("text")).collect():
-        if toks is None:
-            want[doc_id] = None
-            continue
-        h = murmur3_64_bytes(toks)
-        ones = [int(((h >> np.uint64(i)) & np.uint64(1)).sum()) for i in range(64)]
-        sig = sum(1 << i for i in range(64) if 2 * ones[i] > len(toks))
-        want[doc_id] = sig - (1 << 64) if sig >> 63 else sig  # as a signed long
-    got = dict(map(tuple, simhash_signatures_fast(df).collect()))
-    assert got == want
+    toks = tokens("text")
+    xx = F.transform(toks, lambda t: F.xxhash64(t))
+    tiers = [
+        (simhash_signatures_fast, toks, murmur3_64_bytes),
+        (simhash_signatures, xx, lambda hs: to_uint64(np.array(hs, dtype=np.int64))),
+    ]
+    for tier, col, hash_tokens in tiers:
+        want = {}
+        for doc_id, vals in df.select("doc_id", col).collect():
+            if vals is None:
+                want[doc_id] = None
+                continue
+            h = hash_tokens(vals)
+            ones = [int(((h >> np.uint64(i)) & np.uint64(1)).sum()) for i in range(64)]
+            sig = sum(1 << i for i in range(64) if 2 * ones[i] > len(vals))
+            want[doc_id] = sig - (1 << 64) if sig >> 63 else sig  # as a signed long
+        got = dict(map(tuple, tier(df).collect()))
+        assert got == want, tier.__name__
 
 
 def test_shingle_kernels_slice_batches_without_changing_rows(monkeypatch):
@@ -121,29 +129,41 @@ def test_shingle_kernels_slice_batches_without_changing_rows(monkeypatch):
     from js_hll_spark.operators import dedup
 
     toks = [["a", "b", "c", "d"], None, ["x"], ["a", "b", "a", "b", "a"], [""], ["q", "r"]]
+    ids = pa.array(range(len(toks)), pa.int64())
     batch = pa.RecordBatch.from_arrays(
-        [pa.array(range(len(toks)), pa.int64()), pa.array(toks, pa.list_(pa.string()))],
-        names=["__id", "__toks"],
+        [ids, pa.array(toks, pa.list_(pa.string()))], names=["__id", "__toks"]
+    )
+    # the xxhash64 tier's input: each token's 64-bit hash as a long
+    # (murmur3 here, so both tiers must vote to the same signatures)
+    hashes = [None if t is None else murmur3_64_bytes(t).view(np.int64).tolist() for t in toks]
+    hashed = pa.RecordBatch.from_arrays(
+        [ids, pa.array(hashes, pa.list_(pa.int64()))], names=["__id", "__toks"]
     )
     # a slice hashes its own bytes, not its parent buffer's
     flat = batch.column("__toks").flatten()
     assert (murmur3_64_bytes(flat.slice(2, 5)) == murmur3_64_bytes(flat.to_pylist()[2:7])).all()
 
-    def run(kernel):
-        return sorted(r for b in kernel(iter([batch])) for r in zip(*b.to_pydict().values()))
+    def run(kernel, b):
+        return sorted(r for out in kernel(iter([b])) for r in zip(*out.to_pydict().values()))
 
-    def kernels():
-        return dedup._shingle_kernel(3, True), dedup._simhash_kernel
+    def runs():
+        return [
+            run(dedup._shingle_kernel(3, True), batch),
+            run(dedup._simhash_kernel(murmur3_64_bytes), batch),
+            run(dedup._simhash_kernel(dedup._long_values), hashed),
+        ]
 
-    whole = [run(k) for k in kernels()]
+    whole = runs()
     monkeypatch.setattr(dedup, "_SLICE_BYTES", 3)
     # every doc outweighs the budget; the NULL row weighs nothing and
     # shares the next row's slice
     assert len(list(dedup._token_slices(batch))) == 5
-    assert [run(k) for k in kernels()] == whole
+    assert len(list(dedup._token_slices(hashed))) == 5
+    assert runs() == whole
     assert whole[0] == [
         (0, "a b c"), (0, "b c d"), (2, "x"), (3, "a b a"), (3, "b a b"), (4, ""), (5, "q r")
     ]
+    assert whole[2] == whole[1]
 
 
 def test_pair_structs_equal_selfjoin_multiset(spark):

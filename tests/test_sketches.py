@@ -265,7 +265,7 @@ class TestSpaceSavingCounter:
         nlargest truncation broke the pigeonhole recall argument)."""
         import pandas as pd
 
-        from js_hll_spark.spark.sketch_agg import SpaceSavingCounter
+        from js_hll_spark.streaming.stateful import SpaceSavingCounter
 
         counter = SpaceSavingCounter(pool=10)
         true: dict[str, int] = {}
@@ -287,7 +287,7 @@ class TestSpaceSavingCounter:
     def test_exact_when_under_capacity(self):
         import pandas as pd
 
-        from js_hll_spark.spark.sketch_agg import SpaceSavingCounter
+        from js_hll_spark.streaming.stateful import SpaceSavingCounter
 
         counter = SpaceSavingCounter(pool=100)
         counter.update(pd.Series({"a": 5, "b": 2}))

@@ -46,21 +46,24 @@ SHOWCASE = [
     (
         "minhash_lsh",
         "Shingles explode ONCE, k min-aggregations partially aggregate "
-        "map-side, and candidates come from an equi-join on "
-        "(band_idx, band_hash) — hash keys, skew-free; no cartesian "
-        "product anywhere.",
+        "map-side, and candidates come from ONE groupBy on "
+        "(band_idx, band_hash) whose sorted member lists a codegen "
+        "Generate explodes into pairs — hash keys, skew-free; no join "
+        "and no cartesian product anywhere.",
     ),
     (
         "ngram_jaccard",
         "The registered tier carries the hot-shingle df cap as an "
         "aggregate + left-anti join (no window sort), and intersections "
-        "join on the 8-byte xxhash64 of the shingle, not the string.",
+        "are counted from per-shingle id lists grouped on the 8-byte "
+        "xxhash64 of the shingle, not the string.",
     ),
     (
         "dedup_pipeline_fast",
         "The 100 TB path end to end: pure-codegen xxhash64 signatures, "
-        "band-bucket equi-join candidates, candidates-first verification "
-        "(intersection cost proportional to the candidate set).",
+        "band-bucket groupBy + pair Generate candidates, candidates-first "
+        "verification (intersection cost proportional to the candidate "
+        "set).",
     ),
     (
         "hll_ndv_global",
