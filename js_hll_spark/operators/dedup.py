@@ -15,8 +15,12 @@ north rule adds):
   ann.py).
 
 Scale notes: every operator keys its shuffle on a hash (uniform by
-construction — no skew); joins of candidate pairs against the docs table
-are semi-joins on doc_id; nothing collects to the driver.
+construction — no skew), and nothing collects to the driver. A composed
+near-dup pipeline (``shingle_postings`` -> LSH candidates -> Jaccard
+verify) shuffles the posting table once, by doc id: the signature and
+verify-list aggregates both group on ``__id`` and read that one
+exchange, so the scan, ``tokens()`` and the shingle kernel run once per
+action, and building the plan runs no Spark job.
 
 One tokenizer: every tier normalizes and splits text with Catalyst's
 ``text.tokens`` (the expression the DuckDB oracles mirror). Word
@@ -60,26 +64,24 @@ def shingle_postings(
     id_col: str = "doc_id",
     *,
     shingle_n: int = 3,
-    materialize: bool = True,
     stage_runner=None,
     stage_name: str = "shingle_postings",
     stage_inputs: Sequence[str] = (),
 ) -> DataFrame:
     """The shared first stage of every shingle-based dedup tier: the
-    exploded DISTINCT ``(__id, sh)`` posting table, materialized ONCE.
-    Catalyst's ``tokens()`` normalizes and splits; one Arrow map
-    (:func:`_shingle_kernel`) windows the tokens into ``shingle_n``-grams.
-    Docs with NULL text produce no rows.
+    DISTINCT-per-doc ``(__id, sh)`` posting table, hash-partitioned by
+    ``__id``. Catalyst's ``tokens()`` normalizes and splits; one Arrow
+    map (:func:`_shingle_kernel`) windows the tokens into
+    ``shingle_n``-grams. Docs with NULL text produce no rows. Building
+    it runs no Spark job.
 
-    Why this exists (VERDICT r3 "What's wrong" #1): composed plans that
-    reference the shingle chain from several stages — the hot-shingle
-    df cap, LSH candidate generation, and Jaccard verification — each
-    re-run scan -> tokenize -> explode from the raw table, which showed
-    up as 6-8 ``Scan parquet`` nodes of ``documents`` in PLANS.md. At
-    100 TB the raw scan is the dominant cost, so the composed tiers now
-    build this table once (``localCheckpoint`` truncates lineage and
-    pins the blocks executor-side, spilling to disk past memory) and
-    every consumer reads the materialized blocks.
+    Why the ``repartition("__id")``: composed plans read the posting
+    table from several stages (LSH signatures, the Jaccard verify
+    lists). Both group by ``__id``, so the repartition is the only
+    exchange either needs, and Spark's exchange reuse runs the scan,
+    ``tokens()`` and the kernel once per action for every consumer
+    (one raw scan, one ``shingle_kernel``, a ``ReusedExchange`` for the
+    rest), without an eager checkpoint at build time.
 
     Distinct-per-doc shingles are the common denominator: Jaccard is
     defined over the distinct-shingle sets, and a min-aggregate MinHash
@@ -88,13 +90,11 @@ def shingle_postings(
     ``list_min`` over the full shingle list, agree for the same reason).
 
     ``stage_runner`` (a :class:`js_hll_spark.plans.checkpoint.StageRunner`)
-    swaps the executor-pinned ``localCheckpoint`` for a DURABLE parquet
-    stage named ``stage_name`` with a lineage manifest: fault-tolerant
-    (an executor loss re-reads the files instead of killing the query —
-    localCheckpoint blocks have no lineage to recompute from) and
-    resumable across driver restarts — the materialization story a real
-    1000-executor run needs. Results are identical either way (pinned by
-    ``tests/test_operators.py::test_durable_posting_stage``).
+    instead writes the table as a DURABLE parquet stage named
+    ``stage_name`` with a lineage manifest: the composed tiers then read
+    the files, so a rerun after a driver restart resumes from the stage
+    instead of re-shingling the corpus. Results are identical either way
+    (pinned by ``tests/test_operators.py::test_durable_posting_stage``).
 
     INVALIDATION CONTRACT: StageRunner fingerprint-chains between NAMED
     stages only — a completed stage with no ``stage_inputs`` is served
@@ -108,7 +108,7 @@ def shingle_postings(
     ex = _shingle_rows(df, text_col, id_col, shingle_n)
     if stage_runner is not None:
         return stage_runner.run(stage_name, lambda: ex, inputs=stage_inputs)
-    return _mat(ex) if materialize else ex
+    return ex.repartition("__id")
 
 
 # Normalized text (token bytes plus one separator each), or 8-byte token
@@ -208,35 +208,32 @@ def _postings(
             "pass raw documents (df/train) or postings (a "
             "shingle_postings table) — with neither there is nothing to shingle"
         )
-    return shingle_postings(df, text_col, id_col, shingle_n=shingle_n, materialize=False)
+    return _shingle_rows(df, text_col, id_col, shingle_n)
 
 
 def _mat(df: DataFrame) -> DataFrame:
     """Materialize a shared dedup stage (lineage-truncating checkpoint,
     memory+disk with eviction). Eager: each call runs Spark work while
-    the plan is built, not when the caller's action runs — the near-dup
-    pipeline's jobs at build are these checkpoints.
+    the plan is built, not when the caller's action runs. Left only
+    where exchange reuse cannot share a subtree: the ``max_shingle_df``
+    cap over raw documents, the all-pairs tier's grouped lists and
+    ``simhash_pipeline``'s signatures; the near-dup composition shares
+    the posting table's one exchange instead (:func:`shingle_postings`).
 
     Storage-level note (measured, 400k-doc pipeline, warm JVM,
     median-of-3): deserialized blocks ~9.7 s vs serialized ~11.7 s —
     every consumer pays a decode pass under the serialized level, so
-    Spark's deserialized default wins ~17%. An earlier 1.6M-doc axis
-    run that killed an 8 GB driver under this level was root-caused to
-    checkpoint blocks ACCUMULATING across benchmark repetitions (no
-    unpersist between reps), not to the block format — callers that
-    loop dedup jobs in one long-lived session must sweep retired
-    checkpoints between iterations:
+    Spark's deserialized default wins ~17%. Callers that loop these
+    tiers in one long-lived session must sweep retired checkpoints
+    between iterations (blocks accumulate otherwise; a 1.6M-doc axis
+    run killed an 8 GB driver that way):
 
         from js_hll_spark.spark.blocks import persistent_rdd_ids, unpersist_blocks
         keep = persistent_rdd_ids(spark)   # after warming input caches
         ...run composed pipeline, materialize results...
         unpersist_blocks(spark, keep)      # releases retired stage blocks
 
-    (bench.py and tools/bench_dedup_axis.py both do exactly this.) For
-    cluster runs that need fault-tolerant, resumable materialization
-    instead of executor-pinned blocks, pass ``stage_runner=`` to
-    :func:`shingle_postings` — the posting table then lands as a
-    parquet stage with a lineage manifest (plans/checkpoint.py)."""
+    (bench.py and tools/bench_dedup_axis.py both do exactly this.)"""
     return df.localCheckpoint()
 
 
@@ -252,20 +249,17 @@ def _pair_structs(ids_col: str = "ids"):
     """Codegen i<j pair combinations of a SORTED id array: the same pair
     multiset a self-equi-join with an ``a.id < b.id`` condition produces
     for one join-key group, generated directly from the group's member
-    list — no second shuffle, no hash-relation build (r7, guide §2.3/2.4)."""
-    n = F.size(ids_col)
-    return F.flatten(
-        F.transform(
-            ids_col,
-            lambda x, i: F.transform(
-                F.slice(ids_col, i + F.lit(2), n - i - F.lit(1)),
-                lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-            ),
-        )
+    list — no second shuffle, no hash-relation build (r7, guide §2.3/2.4).
+    Written as SQL text, like the other expressions a near-dup build
+    makes per call: the parser builds each in one py4j call, where the
+    Column API pays one per node."""
+    return F.expr(
+        f"flatten(transform({ids_col}, (x, i) -> transform(slice({ids_col}, i + 2, "
+        f"size({ids_col}) - i - 1), y -> struct(x AS id_a, y AS id_b))))"
     )
 
 
-def _lsh_band_join(sig: DataFrame, band_cols: list) -> DataFrame:
+def _lsh_band_join(sig: DataFrame, band_keys: list) -> DataFrame:
     """Band-bucket candidate pairs shared by both MinHash tiers — r7
     rewrite: ONE groupBy over (band_idx, band_hash) collects each
     bucket's sorted member list and codegen explodes the i<j pairs,
@@ -275,41 +269,41 @@ def _lsh_band_join(sig: DataFrame, band_cols: list) -> DataFrame:
     is consumed exactly once now; bucket membership lists are bounded by
     the dup cluster size per band — the same candidate volume the join
     carried."""
-    banded = sig.select(
-        "__id", F.posexplode(F.array(*band_cols)).alias("band_idx", "band_hash")
+    banded = sig.selectExpr(
+        "__id", f"posexplode(array({', '.join(band_keys)})) AS (band_idx, band_hash)"
     )
     grouped = banded.groupBy("band_idx", "band_hash").agg(
-        F.sort_array(F.collect_list("__id")).alias("ids")
+        F.expr("sort_array(collect_list(__id)) AS ids")
     )
-    return (
-        grouped.filter(F.size("ids") >= 2)
-        .select(F.explode(_pair_structs("ids")).alias("p"))
-        .select(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
-        .distinct()
-    )
+    return grouped.filter("size(ids) >= 2").select(F.inline(_pair_structs())).distinct()
 
 
 def _minhash_lsh(
     df, text_col, id_col, k, bands, shingle_n, postings, perm_min, band_of
 ) -> DataFrame:
-    """The one MinHash LSH builder: ``perm_min(j)`` is permutation j's
-    per-shingle value (min-aggregated per doc) and ``band_of(*cols)``
-    combines a band's k/bands minhash columns into its bucket key.
-    Shingles explode once, then k map-side min-aggregations — the hash
-    is computed once per (shingle, permutation) inside codegen, and the
-    partial HashAggregate collapses each partition to one row per doc
-    before the shuffle (vs. recomputing the shingle array k times in a
-    nested transform, which is ~10x slower)."""
+    """The one MinHash LSH builder: ``perm_min(j)`` is the SQL text of
+    permutation j's per-shingle value (min-aggregated per doc) and
+    ``band_of(cols)`` that of a band's bucket key over its k/bands
+    comma-joined minhash columns. Shingles explode once, then k map-side
+    min-aggregations — the hash is computed once per (shingle,
+    permutation) inside codegen, and the partial HashAggregate collapses
+    each partition to one row per doc before the shuffle (vs.
+    recomputing the shingle array k times in a nested transform, which
+    is ~10x slower)."""
     postings = _postings(df, postings, text_col, id_col, shingle_n)
     rows_per_band = k // bands
-    sig = postings.groupBy("__id").agg(
-        *[F.min(perm_min(j)).alias(f"__mh{j}") for j in range(k)]
+    # collect_list drops NULL ids from every bucket anyway; filtering them
+    # here gives the signature branch the isnotnull(__id) that Catalyst
+    # infers for the verify joins, so both read one posting exchange
+    # (shingle_postings keeps NULL ids: contamination reports that doc)
+    sig = postings.filter("__id IS NOT NULL").groupBy("__id").agg(
+        *[F.expr(f"min({perm_min(j)}) AS __mh{j}") for j in range(k)]
     )
-    band_cols = [
-        band_of(*[F.col(f"__mh{b * rows_per_band + r}") for r in range(rows_per_band)])
+    band_keys = [
+        band_of(", ".join(f"__mh{b * rows_per_band + r}" for r in range(rows_per_band)))
         for b in range(bands)
     ]
-    return _lsh_band_join(sig, band_cols)
+    return _lsh_band_join(sig, band_keys)
 
 
 def minhash_lsh_candidates_fast(
@@ -327,8 +321,8 @@ def minhash_lsh_candidates_fast(
     are codegen xxhash64 instead of md5 strings."""
     return _minhash_lsh(
         df, text_col, id_col, k, bands, shingle_n, postings,
-        lambda j: F.xxhash64(F.lit(j), F.col("sh")),
-        F.xxhash64,
+        lambda j: f"xxhash64({j}, sh)",
+        lambda cols: f"xxhash64({cols})",
     )
 
 
@@ -351,12 +345,12 @@ def minhash_lsh_candidates(
     bucket key is a hash, so it is skew-free; candidates are orders of
     magnitude fewer than n^2. Permutations are md5 strings so the DuckDB
     oracle reproduces them bit for bit. Pass ``postings`` (from
-    ``shingle_postings``) to reuse a materialized posting table across
-    composed tiers."""
+    ``shingle_postings``) to share one posting table across composed
+    tiers."""
     return _minhash_lsh(
         df, text_col, id_col, k, bands, shingle_n, postings,
-        lambda j: F.substring(F.md5(F.concat(F.lit(str(j)), F.lit("|"), F.col("sh"))), 1, 16),
-        lambda *band: F.concat_ws(",", *band),
+        lambda j: f"substring(md5(concat('{j}', '|', sh)), 1, 16)",
+        lambda cols: f"concat_ws(',', {cols})",
     )
 
 
@@ -373,11 +367,12 @@ def ngram_jaccard(
     materialize: bool = True,
 ) -> DataFrame:
     """Exact word-shingle Jaccard. If ``pairs`` (id_a, id_b) is given, only
-    those candidates are intersected (the LSH → verify pipeline): pairs is
-    broadcast onto a's shingles, then an equi-join on (id_b, sh) keeps the
-    shared ones — intersection cost is proportional to the candidate set,
-    never all co-shingled pairs. Without ``pairs``, scores all pairs
-    sharing ≥1 shingle (exact mode for small/oracled inputs).
+    those candidates are intersected (the LSH → verify pipeline): each
+    pair gets both docs' shingle-hash arrays and codegen
+    ``array_intersect`` counts the shared ones — intersection cost is
+    proportional to the candidate set, never all co-shingled pairs.
+    Without ``pairs``, scores all pairs sharing ≥1 shingle (exact mode
+    for small/oracled inputs).
 
     ``max_shingle_df`` drops shingles appearing in more than that many
     docs BEFORE sizes/intersections (a stopword shingle is a hot join key
@@ -385,11 +380,13 @@ def ngram_jaccard(
     consistently, so jaccard stays a true Jaccard over the kept shingles.
     Returns (id_a, id_b, jaccard).
 
-    ``postings`` reuses a materialized ``shingle_postings`` table (the
-    composed-pipeline path). ``materialize`` (default on) pins the hashed
-    — and, with a cap, df-capped — posting table once so the sizes and
-    both intersection sides read materialized blocks instead of each
-    re-running the scan -> explode -> hash chain (VERDICT r3 #2)."""
+    ``postings`` reuses a ``shingle_postings`` table (the composed-pipeline
+    path: the verify lists read its exchange). ``materialize`` (default
+    on) checkpoints the two stages exchange reuse cannot share: the
+    hashed posting table under a cap when ``df`` is raw documents (the
+    cap's aggregate and anti-join both read it), and the all-pairs
+    tier's grouped lists. It no longer acts on the pairs path otherwise:
+    without a cap, or with ``postings``, pairs-mode plans are lazy."""
     # a lazy posting chain is consumed once below (the hashed projection
     # is what gets materialized when sharing is needed), so the
     # string-shingle table itself never checkpoints — r7: the old
@@ -401,12 +398,12 @@ def ngram_jaccard(
     # counts (a 64-bit collision would need two distinct shingles of the
     # same doc pair to collide — ~1e-10 at corpus scale; the DuckDB
     # oracle gate verifies equality empirically), ~17% faster end to end
-    ex = postings.select("__id", F.xxhash64("sh").alias("sh"))
+    ex = postings.selectExpr("__id", "xxhash64(sh) AS sh")
     if max_shingle_df is not None:
         if materialize and postings_was_lazy:
             # the hot aggregate and the anti-join probe both consume the
             # posting chain; share one hashed copy when the caller did
-            # not pass an already-materialized table
+            # not pass a posting table
             ex = _mat(ex)
         # hot-shingle set via map-side-combined count + anti-join: a
         # Window.partitionBy(sh) count shuffles AND sorts every posting
@@ -437,12 +434,12 @@ def ngram_jaccard(
         # checkpoint of the hashed postings plus two sizes joins.
         # Per-doc arrays are bounded by shingles-per-doc, so the shape
         # holds at any corpus size (lists and pairs co-shuffle by id).
-        lists = ex.groupBy("__id").agg(F.collect_list("sh").alias("__shs"))
-        if materialize:
-            # two consumers (the id_a and id_b attach legs)
-            lists = _mat(lists)
-        a = lists.select(F.col("__id").alias("id_a"), F.col("__shs").alias("__sa"))
-        b = lists.select(F.col("__id").alias("id_b"), F.col("__shs").alias("__sb"))
+        # the id_a and id_b legs share one plan (AQE reuses it), and a
+        # shingle_postings table is already partitioned by __id, so the
+        # lists read the same exchange as the LSH signatures
+        lists = ex.groupBy("__id").agg(F.expr("collect_list(sh) AS __shs"))
+        a = lists.selectExpr("__id AS id_a", "__shs AS __sa")
+        b = lists.selectExpr("__id AS id_b", "__shs AS __sb")
         # no broadcast hint on pairs: candidate sets are usually tiny
         # and AQE broadcasts them at runtime, but a forced hint would
         # OOM when an LSH parameter choice yields a candidate set past
@@ -450,20 +447,14 @@ def ngram_jaccard(
         out = (
             pairs.join(a, "id_a")
             .join(b, "id_b")
-            .select(
+            .selectExpr(
                 "id_a",
                 "id_b",
-                F.size(F.array_intersect("__sa", "__sb")).alias("n_inter"),
-                F.size("__sa").alias("n_a"),
-                F.size("__sb").alias("n_b"),
+                "size(array_intersect(__sa, __sb)) AS n_inter",
+                "size(__sa) AS n_a",
+                "size(__sb) AS n_b",
             )
-            .select(
-                "id_a",
-                "id_b",
-                F.round(
-                    F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")), 6
-                ).alias("jaccard"),
-            )
+            .selectExpr("id_a", "id_b", "round(n_inter / (n_a + n_b - n_inter), 6) AS jaccard")
         )
         if threshold > 0:
             out = out.filter(F.col("jaccard") >= threshold)
@@ -842,9 +833,9 @@ def simhash_pipeline(
     exact Hamming verify, with the signature table materialized ONCE —
     the banded self-join plus the two-sided verify join otherwise give
     the composed plan FOUR consumers of the signature subtree, each
-    re-running the vectorized kernel over the raw corpus (the same
-    dual-consumer shape shingle_postings materializes for the MinHash
-    tiers).
+    re-running the vectorized kernel over the raw corpus (they need
+    different partitionings, so one shared exchange cannot serve them as
+    it does the MinHash tiers' posting table).
 
     ``stage_runner`` (VERDICT r5 #5) swaps the executor-pinned
     ``localCheckpoint`` for a DURABLE StageRunner parquet stage named

@@ -944,7 +944,7 @@ def q_dedup_pipeline_fast(spark, sf_dir):
     """The 100 TB near-dup pipeline end to end: xxhash64 MinHash-LSH
     candidates (pure codegen, no md5) -> candidates-first exact Jaccard
     verify with the hot-shingle df cap -> pairs >= 0.5. The shingle
-    posting table is materialized ONCE and shared by the candidate,
+    posting table is shuffled ONCE by doc id and shared by the candidate,
     df-cap, and verify stages (one raw-table scan total — the composed
     plan used to re-scan documents ~8x, VERDICT r3 #2). Rows-only
     (xxhash64 signatures are not DuckDB-reproducible); the md5 twin

@@ -110,14 +110,12 @@ def test_durable_posting_stage(spark, pages, tmp_path):
     assert "Parquet" in plan
     files = durable.inputFiles()
     assert files and all("stage=shingle_postings" in f for f in files)
-    # ... and an un-re-checkpointed composition sources every tier from
-    # that stage (the default composition additionally pins the hashed
-    # postings via localCheckpoint, which is orthogonal to durability)
+    # ... and the composition sources every tier from that stage (it
+    # adds no checkpoint of its own: every tier reads the posting table)
     lazy = dedup.ngram_jaccard(
         pairs=dedup.minhash_lsh_candidates(postings=durable, k=8, bands=4),
         postings=durable,
         threshold=0.5,
-        materialize=False,
     )
     lazy_files = lazy.inputFiles()
     assert lazy_files and all(
@@ -131,6 +129,60 @@ def test_durable_posting_stage(spark, pages, tmp_path):
     )  # a rebuilt stage would see 0 docs; the skip must serve the original
     got2 = {tuple(r) for r in compose(durable2).collect()}
     assert got2 == want
+
+
+def _near_dup(postings):
+    cand = dedup.minhash_lsh_candidates_fast(postings=postings, k=16, bands=4)
+    return dedup.ngram_jaccard(pairs=cand, postings=postings, threshold=0.5)
+
+
+def test_near_dup_composition_builds_lazily_over_one_kernel(spark, documents):
+    """shingle_postings -> LSH candidates -> Jaccard verify builds with no
+    Spark job, and its action shuffles the posting table once: the final
+    plan scans the documents once and runs one shingle kernel, every
+    other consumer reading the same exchange. Rows equal the composition
+    over a checkpointed posting table."""
+    sc = spark.sparkContext
+    sc.setJobGroup("near-dup-build", "near-dup plan construction")
+    try:
+        out = _near_dup(dedup.shingle_postings(documents))
+    finally:
+        sc.setJobGroup(None, None)
+    assert sc.statusTracker().getJobIdsForGroup("near-dup-build") == []
+    got = sorted(tuple(r) for r in out.collect())
+    final = out._jdf.queryExecution().executedPlan().executedPlan().toString()
+    assert final.count("MapInArrow shingle_kernel") == 1, final
+    assert final.count("FileScan") == 1, final
+    pinned = dedup.shingle_postings(documents).localCheckpoint()
+    assert got == sorted(tuple(r) for r in _near_dup(pinned).collect())
+    assert got
+
+
+def test_null_and_wide_ids_through_shared_postings(spark):
+    """A NULL id and ids past float64's exact range (2^53, 2^53+1): a
+    contamination tier given shingle_postings reports the same rows as
+    over raw documents (the NULL-id doc included), and the near-dup
+    composition pairs only the two non-NULL copies."""
+    from js_hll_spark.operators import contamination
+
+    text = "the same five words here"
+    train = spark.createDataFrame(
+        [(None, text), (2**53, text), (2**53 + 1, text), (7, "other words in a row")],
+        "doc_id long, text string",
+    )
+    ev = spark.createDataFrame([(1, text)], "doc_id long, text string")
+
+    def rows(df):
+        return sorted(df.collect(), key=lambda r: (r[0] is not None, r[0] or 0))
+
+    raw = rows(contamination.contamination_exact(train, ev))
+    shared = rows(contamination.contamination_exact(None, ev, postings=dedup.shingle_postings(train)))
+    assert shared == raw
+    assert [(r["doc_id"], r["frac"]) for r in raw] == [
+        (None, 1.0), (7, 0.0), (2**53, 1.0), (2**53 + 1, 1.0)
+    ]
+    pairs = sorted(tuple(r) for r in _near_dup(dedup.shingle_postings(train)).collect())
+    assert pairs == [(2**53, 2**53 + 1, 1.0)]
 
 
 def test_connected_components_chain_and_singleton(spark):

@@ -119,11 +119,10 @@ def test_ngram_jaccard_pairs_mode_has_no_allpairs_selfjoin(spark):
     )
     pairs = spark.createDataFrame([(1, 2), (3, 4)], "id_a long, id_b long")
     # materialize=False: shape checks need the full lazy composition
-    # (the default checkpoints the posting table, truncating the plan)
+    # (the all-pairs default checkpoints the grouped lists, truncating
+    # the plan); the pairs path builds lazily either way
     allpairs_plan = optimized(dedup.ngram_jaccard(docs, materialize=False))
-    pairs_plan = optimized(
-        dedup.ngram_jaccard(docs, pairs=pairs, materialize=False)
-    )
+    pairs_plan = optimized(dedup.ngram_jaccard(docs, pairs=pairs))
     selfjoin = re.compile(r"__id#\d+L? < __id#\d+L?")
     # r7: the exact tier generates pair combinations from the grouped
     # posting lists (collect_list + explode), with no self-join anywhere
@@ -162,19 +161,24 @@ def test_ngram_jaccard_df_cap_is_antijoin_not_window(spark):
 
 
 def test_composed_dedup_single_raw_scan(spark):
-    """The composed dedup tiers materialize the shingle posting table
-    once: the returned plan must NOT re-derive shingles from the raw
-    documents table (PLANS.md r3 showed 6-8 `Scan parquet` nodes of
-    documents in ngram_jaccard / dedup_pipeline_fast — 6-8x the scan
-    bandwidth at 100 TB). After the fix the candidate, df-cap, and
-    verify stages all read checkpointed blocks."""
+    """The composed dedup tiers read the raw documents once (PLANS.md r3
+    showed 6-8 `Scan parquet` nodes of documents in ngram_jaccard /
+    dedup_pipeline_fast — 6-8x the scan bandwidth at 100 TB). The
+    registered ngram_jaccard checkpoints its capped posting table, so
+    its returned plan reads blocks only; the LSH -> verify pipelines
+    share the posting table's one exchange, so their final executed
+    plan scans documents once and runs one shingle kernel."""
     from oracle.queries import QUERIES
 
-    for name in ("ngram_jaccard", "dedup_pipeline", "dedup_pipeline_fast"):
-        p = plan(QUERIES[name](spark, "/root/testdata/sf0.001"))
-        n_raw = p.count("Scan parquet")
-        assert n_raw == 0, f"{name}: {n_raw} raw parquet scans in final plan"
-        assert "Scan ExistingRDD" in p, f"{name}: no materialized stage"
+    p = plan(QUERIES["ngram_jaccard"](spark, "/root/testdata/sf0.001"))
+    assert p.count("Scan parquet") == 0, p
+    assert "Scan ExistingRDD" in p, "ngram_jaccard: no materialized stage"
+    for name in ("dedup_pipeline", "dedup_pipeline_fast"):
+        df = QUERIES[name](spark, "/root/testdata/sf0.001")
+        df.collect()
+        p = df._jdf.queryExecution().executedPlan().executedPlan().toString()
+        assert p.count("FileScan parquet") == 1, f"{name}: {p}"
+        assert p.count("MapInArrow shingle_kernel") == 1, f"{name}: {p}"
 
 
 def test_sql_engine_keyed_assembly_is_batched(spark, events):
@@ -236,7 +240,7 @@ def test_text_kernels_are_one_arrow_map_over_catalyst_tokens(spark, documents):
     from js_hll_spark.operators import contamination, dedup
 
     built = {
-        "shingle_postings": dedup.shingle_postings(documents, materialize=False),
+        "shingle_postings": dedup.shingle_postings(documents),
         "eval_shingles": contamination.eval_shingles(documents),
         "simhash_signatures_fast": dedup.simhash_signatures_fast(documents),
     }

@@ -76,7 +76,7 @@ def test_posting_kernel_matches_catalyst_twin_on_tricky_text(spark):
 
     df = spark.createDataFrame(_TRICKY, "doc_id long, text string")
     for n in (1, 2, 3):
-        fast = _rows(shingle_postings(df, "text", "doc_id", shingle_n=n, materialize=False))
+        fast = _rows(shingle_postings(df, "text", "doc_id", shingle_n=n))
         ref = _rows(_catalyst_postings(spark, df, n))
         # deliberate divergence (latent-bug fix): the Catalyst chain
         # emits one (id, NULL) posting row for NULL text — a phantom
