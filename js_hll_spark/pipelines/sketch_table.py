@@ -195,15 +195,24 @@ def merge_into_sketch_table(
     """Merge-on-write incremental load for batches that carry PARTIAL
     partitions (e.g. late-arriving events for an already-loaded day):
     sketch the batch, union it with the stored sketches of only the
-    affected partitions (left-semi on the partition key — untouched
-    partitions are never read), and dynamically overwrite those
-    partitions. The read-modify-write moves KB-sized sketch rows, never
-    raw data. Unions are idempotent on registers, so re-merging the same
-    batch leaves every NDV unchanged (only ``rows_seen`` inflates — it
-    counts rows offered, not distinct)."""
-    from pyspark.errors import AnalysisException
+    partitions it touches, and dynamically overwrite those partitions.
+    The read-modify-write moves KB-sized sketch rows, never raw data.
+    Unions are idempotent on registers, so re-merging the same batch
+    leaves every NDV unchanged (only ``rows_seen`` inflates — it counts
+    rows offered, not distinct).
 
-    from ..spark.blocks import checkpoint_rdd_id, unpersist_by_id
+    One small collect finds the batch's partition values; the stored
+    table is read through a static filter on them, so its scan prunes to
+    those directories. The rest is one lazy query. The batch is thus
+    evaluated twice: a row whose partition is outside the collected set
+    fails the write, so a non-deterministic batch can never overwrite a
+    partition whose stored sketches were not read. Reading the table
+    being overwritten is safe: dynamic partition overwrite writes into a
+    staging directory and swaps partition directories only at job
+    commit, after every read task has finished."""
+    from pyspark.errors import AnalysisException
+    from pyspark.sql import functions as F
+
     from ..streaming.ndv import merge_sketch_tables
 
     _check_and_write_meta(
@@ -212,15 +221,21 @@ def merge_into_sketch_table(
             sketch_kw, value_col=value_col, partition_col=partition_col, by=by
         ),
     )
-    spark = df.sparkSession
-    # checkpoint the batch aggregation ONCE: the merge plan references
-    # it from three places (the affected-partition distinct, the
-    # semi-join probe, and merge_sketch_tables' union), and an
-    # unmaterialized subtree would re-run the full batch aggregation
-    # for each — KB-sized sketch rows, so the pin is bounded
+    values = [r[0] for r in df.select(partition_col).distinct().collect()]
+    key = F.col(partition_col)
+    # isin never matches NULL: without isNull the overwrite would
+    # replace the stored NULL partition's sketches unread
+    touched = key.isin([v for v in values if v is not None])
+    if None in values:
+        touched = touched | key.isNull()
+    moved = F.raise_error(F.lit(f"batch {partition_col} changed during the merge"))
     new = hll_sketch(
-        df, value_col, by=[partition_col, *by], estimate=False, **sketch_kw
-    ).localCheckpoint()
+        df.withColumn(partition_col, F.when(touched, key).otherwise(moved)),
+        value_col,
+        by=[partition_col, *by],
+        estimate=False,
+        **sketch_kw,
+    )
     try:
         # the try guards ONLY the read (path may not exist yet); the
         # column selection must fail LOUDLY outside it — swallowing an
@@ -229,40 +244,18 @@ def merge_into_sketch_table(
         # sketches with batch-only rows (the meta grain check above
         # catches declared mismatches; this is defense in depth for
         # tables with pre-grain manifests)
-        existing = read_sketch_table(spark, path)
+        existing = read_sketch_table(df.sparkSession, path)
     except AnalysisException:
         existing = None
-    merged = new
     if existing is not None:
-        existing = existing.select(*new.columns)
-        affected = new.select(partition_col).distinct()
-        # eqNullSafe semi-join: a plain key join would fail to read the
-        # stored null partition's sketch (NULL = NULL is not true), and
-        # the dynamic overwrite would then destroy its accumulated state
-        old = existing.join(
-            affected,
-            existing[partition_col].eqNullSafe(affected[partition_col]),
-            "left_semi",
-        )
-        # materialize before the overwrite: merged reads lazily from the
-        # very partitions the writer replaces; localCheckpoint forces the
-        # read to finish first (bounded — sketch rows are KB-sized)
-        merged = merge_sketch_tables(
-            old, new, [partition_col, *by]
-        ).localCheckpoint()
-    try:
-        (
-            merged.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(partition_col)
-            .parquet(path)
-        )
-    finally:
-        # the write is the checkpoints' last reader — free them so a
-        # long-lived caller (stream_into_sketch_table runs this every
-        # micro-batch) does not pin one table copy per batch forever
-        unpersist_by_id(spark, checkpoint_rdd_id(merged))
-        unpersist_by_id(spark, checkpoint_rdd_id(new))
+        existing = existing.filter(touched).select(*new.columns)
+    (
+        merge_sketch_tables(existing, new, [partition_col, *by])
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partition_col)
+        .parquet(path)
+    )
 
 
 def stream_into_sketch_table(
@@ -277,11 +270,13 @@ def stream_into_sketch_table(
 ):
     """Maintain a sketch table from a Structured Streaming source: each
     micro-batch merges into the stored table via
-    :func:`merge_into_sketch_table` (partition-scoped read-modify-write
-    of KB-sized sketch rows). Unions are idempotent on registers, so a
-    replayed batch after checkpoint recovery cannot inflate any NDV —
-    exactly-once estimates from an at-least-once sink. Returns the
-    started StreamingQuery (caller awaits/stops)."""
+    :func:`merge_into_sketch_table` (one lazy read-modify-write of the
+    KB-sized sketch rows of only the partitions the batch touches; it
+    pins nothing, so a long-running stream holds no blocks per batch).
+    Unions are idempotent on registers, so a replayed batch after
+    checkpoint recovery cannot inflate any NDV — exactly-once estimates
+    from an at-least-once sink. Returns the started StreamingQuery
+    (caller awaits/stops)."""
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():

@@ -1,10 +1,11 @@
 """Lifecycle helpers for persistent block cleanup in long-lived sessions.
 
 ``localCheckpoint`` (behind ``operators/dedup.py::_mat``, which pins the
-df-capped and all-pairs Jaccard stages and SimHash signatures, and the
-per-round label tables in ``connected_components``; the near-dup
-composition shares one exchange and pins nothing) pins RDD blocks
-executor-side with NO
+df-capped and all-pairs Jaccard stages and SimHash signatures, the
+per-round label tables in ``connected_components``, ``streaming_ndv``'s
+retained state and ``ann_ivfpq``'s query side; the near-dup composition
+and the sketch-table merge are lazy plans and pin nothing) pins RDD
+blocks executor-side with NO
 automatic release: Python may hold the wrapper objects arbitrarily long,
 so in any process that loops dedup/ANN pipelines — a benchmark harness, a
 notebook, the correctness gate — retired checkpoint blocks accumulate

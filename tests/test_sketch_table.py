@@ -9,6 +9,8 @@ partition-scoped, and a partition predicate prunes the scan.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from js_hll_spark.pipelines import sketch_table
@@ -211,23 +213,159 @@ def test_grain_mismatch_refused(spark, documents, tmp_path):
 
 
 def test_merge_into_releases_checkpoints(spark, documents, tmp_path):
-    """merge_into_sketch_table localCheckpoints the batch aggregation
-    and the merged table; both must be released after the write —
-    stream_into_sketch_table runs this per micro-batch, and one pinned
-    table copy per batch is the unbounded-block leak class."""
+    """merge_into_sketch_table is one lazy read-merge-write: it pins no
+    block, so stream_into_sketch_table, which runs it per micro-batch,
+    cannot leak one table copy per batch (the unbounded-block leak
+    class). It also runs fewer Spark jobs per merge than the 8 of the
+    two-checkpoint merge it replaced."""
     from js_hll_spark.spark.blocks import persistent_rdd_ids, unpersist_blocks
 
     path = str(tmp_path / "leak_sk")
     _build(documents, path)
     before = persistent_rdd_ids(spark)
-    for _ in range(2):
-        sketch_table.merge_into_sketch_table(
-            documents.limit(100), "text", path,
-            partition_col="source", by=["lang"], log2m=13,
-        )
+    sc = spark.sparkContext
+    for i in range(2):
+        sc.setJobGroup(f"merge-{i}", "merge_into_sketch_table")
+        try:
+            sketch_table.merge_into_sketch_table(
+                documents.limit(100), "text", path,
+                partition_col="source", by=["lang"], log2m=13,
+            )
+        finally:
+            sc.setJobGroup(None, None)
+        jobs = sc.statusTracker().getJobIdsForGroup(f"merge-{i}")
+        assert len(jobs) < 8, f"merge ran {len(jobs)} jobs"
     leaked = persistent_rdd_ids(spark) - before
     assert not leaked, f"merge_into leaked {len(leaked)} persistent RDDs"
     unpersist_blocks(spark, before)
+
+
+def _stored(spark, path, keys):
+    """Every stored sketch of the table at ``path``, by its keys."""
+    return {
+        tuple(r[k] for k in keys): bytes(r["sketch"])
+        for r in spark.read.parquet(path).collect()
+    }
+
+
+def _file_bytes(path):
+    """Contents of every data file of the table at ``path``, by path."""
+    import glob
+    from pathlib import Path
+
+    return {
+        f: Path(f).read_bytes() for f in glob.glob(os.path.join(path, "*", "*.parquet"))
+    }
+
+
+def test_merge_reads_only_the_batchs_partitions(spark, documents, tmp_path):
+    """The stored table is read through a static filter on the batch's
+    partition values, so the scan prunes to those directories: a merge
+    succeeds although an untouched partition holds an unreadable file,
+    and leaves every untouched file byte-identical. (Schema inference
+    reads the footer of the first data file in path order, so the
+    corrupted file is the last one and the batch merges into the
+    first one's partition.)"""
+    path = str(tmp_path / "prune_sk")
+    _build(documents, path)
+    files = sorted(_file_bytes(path))
+    assert os.path.dirname(files[0]) != os.path.dirname(files[-1])
+    first = os.path.basename(os.path.dirname(files[0])).split("=", 1)[1]
+    with open(files[-1], "wb") as f:
+        f.write(b"not a parquet file")
+    untouched = {
+        f: b for f, b in _file_bytes(path).items() if f"source={first}/" not in f
+    }
+    sketch_table.merge_into_sketch_table(
+        documents.filter(F.col("source") == first), "text", path,
+        partition_col="source", by=["lang"], log2m=13,
+    )
+    after = _file_bytes(path)
+    assert {f: after.get(f) for f in untouched} == untouched
+    got = sketch_table.query_sketch_table(
+        spark, path, [], where=F.col("source") == first
+    ).collect()[0]["ndv"]
+    want = hll_ndv(
+        documents.filter(F.col("source") == first), "text", log2m=13
+    ).collect()[0]["ndv"]
+    assert got == want  # the idempotent re-merge kept the stored union
+
+
+def test_merge_never_loses_sketches_of_a_changing_batch(spark, tmp_path):
+    """The batch is evaluated more than once (its partition values are
+    collected before the merge reads it). A batch whose partition column
+    changes between evaluations must either merge exactly the union or
+    raise; no stored partition may lose a sketch it held. Here the batch
+    row lands in 'a' on its first evaluation and in 'b' on every later
+    one."""
+    from js_hll_spark import codec
+
+    path = str(tmp_path / "guard_sk")
+    stored = spark.createDataFrame(
+        [(p, f"v{i}") for p in "ab" for i in range(20)], "p string, v string"
+    )
+    sketch_table.build_sketch_table(stored, "v", path, partition_col="p", log2m=13)
+    before = _stored(spark, path, ["p"])
+    marker = str(tmp_path / "evaluated")
+
+    def flip():
+        try:
+            os.close(os.open(marker, os.O_CREAT | os.O_EXCL))
+            return "a"
+        except FileExistsError:
+            return "b"
+
+    part = F.udf(flip, "string").asNondeterministic()
+    batch = spark.createDataFrame([("new",)], "v string").withColumn("p", part())
+    try:
+        sketch_table.merge_into_sketch_table(
+            batch, "v", path, partition_col="p", log2m=13
+        )
+    except Exception as e:  # noqa: BLE001 -- the guard fails the write job
+        assert "changed during the merge" in str(e)
+        assert _stored(spark, path, ["p"]) == before
+    after = _stored(spark, path, ["p"])
+    assert set(after) == set(before)
+    for k, blob in before.items():
+        held = codec.decode(blob).registers()
+        assert (codec.decode(after[k]).registers() >= held).all(), k
+
+
+def test_merge_unions_into_the_null_partition(spark, tmp_path):
+    """A stored NULL partition receives the union when a batch carries
+    NULL-partition rows, not a replacement by the batch's sketch; a
+    batch without NULL rows leaves it untouched."""
+    path = str(tmp_path / "null_sk")
+    schema = "p string, v string"
+
+    def rows(p, lo, hi):
+        return spark.createDataFrame([(p, f"v{i}") for i in range(lo, hi)], schema)
+
+    def merge(batch):
+        sketch_table.merge_into_sketch_table(
+            batch, "v", path, partition_col="p", log2m=13
+        )
+
+    def null_ndv():
+        return sketch_table.query_sketch_table(
+            spark, path, [], where=F.col("p").isNull()
+        ).collect()[0]["ndv"]
+
+    sketch_table.build_sketch_table(
+        rows("a", 0, 30).union(rows(None, 0, 30)), "v", path,
+        partition_col="p", log2m=13,
+    )
+    null_files = {
+        f: b for f, b in _file_bytes(path).items() if "__HIVE_DEFAULT_PARTITION__" in f
+    }
+    assert null_files
+    merge(rows("a", 30, 40))
+    after = _file_bytes(path)
+    assert {f: after.get(f) for f in null_files} == null_files
+    merge(rows(None, 20, 50))
+    want = hll_ndv(rows(None, 0, 50), "v", log2m=13).collect()[0]["ndv"]
+    assert null_ndv() == want
+    assert round(want) == 50
 
 
 def test_stage_runner_uri_root(spark, documents, tmp_path):
