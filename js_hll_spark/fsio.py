@@ -1,16 +1,17 @@
 """Filesystem-agnostic small-file IO for manifests and table metadata.
 
-StageRunner manifests (plans/checkpoint.py) and sketch-table convention
-manifests (pipelines/sketch_table.py) used plain ``os``/``open`` calls,
-which silently break the durability contract the moment the table root
-is an object-store URI: Spark writes the parquet to s3://..., while the
-manifest lands on the DRIVER's local disk under a literal ``s3:/...``
-directory — resume from another host finds no manifest and rebuilds
-everything, and a locally-present manifest can mark stages complete
-whose remote data is gone. All manifest IO now routes through
-``pyarrow.fs`` (baked into this environment, and the standard way to
-speak local/S3/GCS/HDFS uniformly), so the manifest always lives beside
-the data it describes.
+StageRunner manifests (plans/checkpoint.py), sketch-table convention
+manifests (pipelines/sketch_table.py) and the streaming NDV state store
+(streaming/ndv.py: snapshot pointer, replay marker, snapshot expiry)
+used plain ``os``/``open`` calls, which silently break the durability
+contract the moment the table root is an object-store URI: Spark writes
+the parquet to s3://..., while the manifest lands on the DRIVER's local
+disk under a literal ``s3:/...`` directory — resume from another host
+finds no manifest and rebuilds everything, and a locally-present
+manifest can mark stages complete whose remote data is gone. All
+manifest IO now routes through ``pyarrow.fs`` (baked into this
+environment, and the standard way to speak local/S3/GCS/HDFS
+uniformly), so the manifest always lives beside the data it describes.
 
 Atomicity note: the tmp-write + move publish pattern is atomic on the
 local filesystem (rename) and best-effort on object stores (copy +
@@ -93,6 +94,27 @@ def delete(path: str) -> None:
     f, p = _resolve(path)
     if f.get_file_info(p).type != pafs.FileType.NotFound:
         f.delete_file(p)
+
+
+def delete_dir(path: str) -> None:
+    """Recursively delete a directory if present (no error when missing)."""
+    from pyarrow import fs as pafs
+
+    f, p = _resolve(path)
+    if f.get_file_info(p).type != pafs.FileType.NotFound:
+        f.delete_dir(p)
+
+
+def list_dir(path: str) -> list[str]:
+    """Names of the direct children of ``path``; empty when the
+    directory is missing."""
+    from pyarrow import fs as pafs
+
+    f, p = _resolve(path)
+    infos = f.get_file_info(
+        pafs.FileSelector(p, recursive=False, allow_not_found=True)
+    )
+    return [posixpath.basename(info.path) for info in infos]
 
 
 def list_files(path: str) -> list[tuple[str, int]]:

@@ -2,13 +2,13 @@
 
 ``localCheckpoint`` (behind ``operators/dedup.py::_mat``, which pins the
 df-capped and all-pairs Jaccard stages and SimHash signatures, the
-per-round label tables in ``connected_components``, ``streaming_ndv``'s
-retained state and ``ann_ivfpq``'s query side; the near-dup composition
-and the sketch-table merge are lazy plans and pin nothing) pins RDD
-blocks executor-side with NO
-automatic release: Python may hold the wrapper objects arbitrarily long,
-so in any process that loops dedup/ANN pipelines — a benchmark harness, a
-notebook, the correctness gate — retired checkpoint blocks accumulate
+per-round label tables in ``connected_components`` and ``ann_ivfpq``'s
+query side; the near-dup composition, the sketch-table merge and the
+streaming NDV merge are lazy plans and pin nothing) pins RDD blocks
+executor-side with NO automatic release: Python may hold the wrapper
+objects arbitrarily long, so in any process that loops dedup/ANN
+pipelines — a benchmark harness, a notebook, the correctness gate —
+retired checkpoint blocks accumulate
 until memory pressure degrades every later query (measured 2-4x on this
 box; an 8 GB driver OOM in the dedup axis harness was root-caused to
 exactly this).

@@ -70,14 +70,7 @@ def test_incremental_update_equals_full_rebuild(spark, documents, tmp_path):
 def test_update_touches_only_its_partitions(spark, documents, tmp_path):
     path = str(tmp_path / "sk")
     _build(documents, path)
-    before = {
-        r["source"]: r["mtime"]
-        for r in spark.read.parquet(path)
-        .select("source", F.input_file_name().alias("f"))
-        .distinct()
-        .withColumn("mtime", F.lit(None))
-        .collect()
-    }
+    before = _file_bytes(path)
     # overwrite one partition with a modified batch: only src0 changes
     sketch_table.update_sketch_table(
         documents.filter(F.col("source") == "src0").limit(5),
@@ -88,12 +81,19 @@ def test_update_touches_only_its_partitions(spark, documents, tmp_path):
         log2m=13,
     )
     after = spark.read.parquet(path)
-    assert after.select("source").distinct().count() == len(before)
+    parts = {os.path.dirname(f) for f in before}
+    assert after.select("source").distinct().count() == len(parts)
     # src0 now reflects the 5-row batch (fewer distinct texts than before)
     src0 = sketch_table.query_sketch_table(
         spark, path, [], where=F.col("source") == "src0"
     ).collect()[0]["ndv"]
     assert round(src0) <= 5
+    # every other partition keeps exactly its files, byte for byte
+    def untouched(files):
+        return {f: b for f, b in files.items() if "/source=src0/" not in f}
+
+    assert untouched(before)
+    assert untouched(_file_bytes(path)) == untouched(before)
 
 
 def test_merge_on_write_partial_batches(spark, documents, tmp_path):

@@ -8,7 +8,6 @@ from __future__ import annotations
 
 import math
 import os
-import shutil
 import time
 
 import pytest
@@ -212,13 +211,10 @@ def test_stateful_ndv_event_time_expiry(spark, events, tmp_path):
 
 
 def test_state_swap_crash_recovery(spark, events, tmp_path):
-    """Crash consistency of the versioned-snapshot commit (r6 layout),
-    plus lossless upgrade from the legacy rename-swap layout:
-    (1) a crash that leaves an unpointed partial snapshot, a stale
-    pointer tmp, and a dangling pointer target must not reset NDV state
-    — the next commit republishes and expires the orphans;
-    (2) a legacy mid-swap crash (state/ moved to .old, stale .tmp left)
-    is repaired and the state migrated to the versioned layout."""
+    """Crash consistency of the versioned-snapshot commit: a crash that
+    leaves an unpointed partial snapshot and a stale pointer tmp must
+    not reset NDV state — the next commit republishes the pointer
+    (overwriting the tmp) and expires the orphan."""
     src_dir = str(tmp_path / "crash_src")
     state_dir = str(tmp_path / "crash_state")
     ev = events.limit(2000)
@@ -260,10 +256,9 @@ def test_state_swap_crash_recovery(spark, events, tmp_path):
     )
     before = ndv_state()
 
-    # --- scenario 1: versioned-layout crash debris ---
     # unpointed partial snapshot from an aborted write (high version —
-    # expiry must key on pointer lineage, not version order), a stale
-    # pointer tmp, and a pointer whose target vanished
+    # expiry must key on pointer lineage, not version order) and a stale
+    # pointer tmp
     os.makedirs(os.path.join(state_dir, "state.v99"))
     with open(pointer + ".tmp", "w") as f:
         f.write("state.v99")
@@ -272,24 +267,6 @@ def test_state_swap_crash_recovery(spark, events, tmp_path):
     assert ndv_state() == before
     assert not os.path.isdir(os.path.join(state_dir, "state.v99"))
     assert not os.path.exists(pointer + ".tmp")
-
-    # --- scenario 2: legacy rename-swap crash, then upgrade ---
-    # reconstruct the legacy layout from the current snapshot, then
-    # simulate the legacy mid-swap crash
-    state_path = os.path.join(state_dir, "state")
-    cur = os.path.join(state_dir, open(pointer).read().strip())
-    shutil.copytree(cur, state_path + ".old")
-    os.makedirs(state_path + ".tmp99")
-    os.remove(pointer)
-    for e in os.listdir(state_dir):
-        if e.startswith("state.v"):
-            shutil.rmtree(os.path.join(state_dir, e))
-    run_once("ckpt3")
-    assert ndv_state() == before
-    assert not os.path.exists(state_path + ".tmp99")
-    assert not os.path.exists(state_path + ".old")
-    assert not os.path.isdir(state_path)  # migrated to versioned layout
-    assert os.path.exists(pointer)
 
 
 def test_streaming_dedup_within_watermark(spark, tmp_path):
@@ -495,6 +472,108 @@ def test_state_retention_bounds_windows(spark, events, tmp_path):
     assert set(capped) == kept
     for w in capped:
         assert capped[w] == full[w]  # retained windows merge identically
+
+
+def test_state_retention_keeps_null_window(spark, events, tmp_path):
+    """retention over a stream with NULL-ts events: their NULL-window
+    row survives every commit, and every retained window equals the run
+    without retention. A NULL-value event in a newer window is not
+    sketched, so it must not move the horizon."""
+    import datetime
+
+    src_dir = str(tmp_path / "retn_src")
+    ev = events.limit(4000)
+    ts_type = ev.schema["ts"].dataType
+    for i in range(2):
+        part = ev.filter(F.pmod(F.col("event_id"), F.lit(2)) == i)
+        extra = part.limit(40).withColumn("ts", F.lit(None).cast(ts_type))
+        if i == 1:
+            extra = extra.unionByName(
+                part.limit(1)
+                .withColumn("ts", F.lit("2024-03-01").cast(ts_type))
+                .withColumn("user_id", F.lit(None).cast("bigint"))
+            )
+        part.unionByName(extra).coalesce(1).write.mode("append").parquet(
+            src_dir
+        )
+
+    def run(name, retention):
+        state_dir = str(tmp_path / name)
+        stream = (
+            spark.readStream.schema(ev.schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(src_dir)
+        )
+        q = streaming_ndv(
+            stream,
+            "user_id",
+            ts_col="ts",
+            window="1 hour",
+            state_dir=state_dir,
+            watermark=None,
+            log2m=12,
+            retention=retention,
+        )
+        q.processAllAvailable()
+        q.stop()
+        return {
+            r["window_start"]: (r["ndv"], r["rows_seen"])
+            for r in read_ndv_state(spark, state_dir).collect()
+        }
+
+    full = run("retn_full", None)
+    capped = run("retn_capped", "6 hours")
+    assert full[None][1] == 80  # the 40 NULL-ts events of each batch
+    dated = [w for w in full if w is not None]
+    horizon = max(dated) - datetime.timedelta(hours=6)
+    assert set(capped) == {w for w in dated if w >= horizon} | {None}
+    for w in capped:
+        assert capped[w] == full[w]
+
+
+def test_file_uri_state_dir_matches_plain_path(spark, events, tmp_path):
+    """The state store speaks filesystem URIs: the same stream over a
+    ``file://`` state_dir (pointer, replay marker, expiry and the
+    checkpoint's query id all resolved through the URI) commits the
+    same (window_start, ndv, rows_seen) rows as over a plain path."""
+    src_dir = str(tmp_path / "uri_src")
+    ev = events.limit(3000).withColumn(
+        "__b", F.pmod(F.col("event_id"), F.lit(3))
+    )
+    for i in range(3):
+        ev.filter(F.col("__b") == i).drop("__b").coalesce(1).write.mode(
+            "append"
+        ).parquet(src_dir)
+
+    def run(state_dir):
+        stream = (
+            spark.readStream.schema(events.schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(src_dir)
+        )
+        q = streaming_ndv(
+            stream,
+            "user_id",
+            ts_col="ts",
+            window="6 hours",
+            state_dir=state_dir,
+            watermark=None,
+            log2m=12,
+        )
+        q.processAllAvailable()
+        q.stop()
+        return sorted(
+            (r["window_start"], r["ndv"], r["rows_seen"])
+            for r in read_ndv_state(spark, state_dir).collect()
+        )
+
+    plain = run(str(tmp_path / "plain_state"))
+    uri_dir = tmp_path / "uri_state"
+    assert run(uri_dir.as_uri()) == plain and plain
+    # the state sits in the local directory the URI names, and expiry
+    # kept the last two of the three commits' snapshots
+    snaps = sorted(e for e in os.listdir(uri_dir) if e.startswith("state."))
+    assert snaps == ["state.v1", "state.v2"]
 
 
 def test_snapshot_reader_survives_one_commit(spark, events, tmp_path):
