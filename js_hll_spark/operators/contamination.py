@@ -188,8 +188,7 @@ def contamination_bloom(
     collect). Probe-side convention is unchanged: the blob's positions
     are derived from the same JVM ``xxhash64(sh)`` the probe carries.
     Construction stays EAGER (the one job fires now): the blob must
-    exist before the probe plan can close over its broadcast — a
-    serving-API trade, same as ann_ivfpq's query-side materialization.
+    exist before the probe plan can close over its broadcast.
     """
     import math
 

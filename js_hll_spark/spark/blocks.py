@@ -1,10 +1,10 @@
 """Lifecycle helpers for persistent block cleanup in long-lived sessions.
 
 ``localCheckpoint`` (behind ``operators/dedup.py::_mat``, which pins the
-df-capped and all-pairs Jaccard stages and SimHash signatures, the
-per-round label tables in ``connected_components`` and ``ann_ivfpq``'s
-query side; the near-dup composition, the sketch-table merge and the
-streaming NDV merge are lazy plans and pin nothing) pins RDD blocks
+df-capped and all-pairs Jaccard stages and SimHash signatures, and the
+per-round label tables in ``connected_components``; the near-dup
+composition, the ANN tiers, the sketch-table merge and the streaming NDV
+merge are lazy plans and pin nothing) pins RDD blocks
 executor-side with NO automatic release: Python may hold the wrapper
 objects arbitrarily long, so in any process that loops dedup/ANN
 pipelines — a benchmark harness, a notebook, the correctness gate —

@@ -28,8 +28,6 @@ ALLOWED = Counter({
     ("operators/dedup.py", "_mat", "localCheckpoint"): 1,
     # iterative label propagation: each round's edges and labels
     ("operators/dedup.py", "connected_components", "localCheckpoint"): 5,
-    # the query side's lists and LUTs, read by every probe
-    ("operators/ann.py", "ann_ivfpq", "localCheckpoint"): 1,
     # the Bloom filter blob the probe closes over
     ("operators/contamination.py", "contamination_bloom", "sparkContext"): 1,
     # the unkeyed coalesce target

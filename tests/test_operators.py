@@ -717,6 +717,85 @@ def test_ann_lut_chunking_bit_identical(spark):
         assert got == want, fn.__name__
 
 
+def _emb_double(spark):
+    return spark.read.parquet(
+        "/root/testdata/sf0.01/embeddings.parquet"
+    ).select(
+        "vec_id",
+        F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
+    )
+
+
+def test_ann_index_tiers_skip_null_and_wrong_length_vectors(spark):
+    """A NULL or wrong-length embedding, as a vector or as a query, is
+    skipped by every index tier and by its training sample: each tier
+    returns over the dirty tables exactly what it returns over the clean
+    ones. Index training used to fail on them (ValueError from the
+    ragged sample), and LSH returned NULL-cosine neighbours for a NULL
+    query."""
+    emb = _emb_double(spark).cache()
+    bad = spark.createDataFrame([(-2, None), (-1, [1.0, 2.0, 3.0])], emb.schema)
+    queries = emb.filter(F.col("vec_id") < 5)
+    tiers = {
+        "ivf": lambda v, q: ann.ann_ivf(v, q, k=5, nlist=8, nprobe=3, dim=64),
+        "pq": lambda v, q: ann.ann_pq(v, q, k=5, dim=64, m_sub=16, ksub=256),
+        "ivfpq": lambda v, q: ann.ann_ivfpq(
+            v, q, k=5, dim=64, nlist=8, nprobe=4, m_sub=16, ksub=256
+        ),
+        "lsh": lambda v, q: ann.ann_lsh(v, q, k=5, bits=4, dim=64),
+        "near_dups": lambda v, q: ann.embedding_near_dups(
+            v, threshold=0.3, bits=4, dim=64
+        ),
+    }
+    for name, fn in tiers.items():
+        clean = sorted(map(tuple, fn(emb, queries).collect()))
+        dirty = sorted(
+            map(tuple, fn(bad.unionByName(emb), bad.unionByName(queries)).collect())
+        )
+        assert clean, name
+        assert dirty == clean, name
+    emb.unpersist()
+
+
+def test_ann_ivfpq_build_runs_only_the_training_collect(spark):
+    """Building ann_ivfpq runs no more Spark jobs than building ann_pq,
+    whose one job is the training sample's collect: the query side is
+    read by one lazy plan, not pinned by an eager checkpoint."""
+    emb = _emb_double(spark)
+    queries = emb.filter(F.col("vec_id") < 5)
+    sc = spark.sparkContext
+    jobs = {}
+    for name, fn, kw in (
+        ("pq", ann.ann_pq, {}),
+        ("ivfpq", ann.ann_ivfpq, dict(nlist=8, nprobe=4)),
+    ):
+        sc.setJobGroup(f"ann-build-{name}", name)
+        try:
+            fn(emb, queries, k=5, dim=64, m_sub=16, ksub=256, **kw)
+        finally:
+            sc.setJobGroup(None, None)
+        jobs[name] = len(sc.statusTracker().getJobIdsForGroup(f"ann-build-{name}"))
+    assert 1 <= jobs["ivfpq"] <= jobs["pq"], jobs
+
+
+def test_ann_ivf_plan_reads_queries_once(spark, tmp_path):
+    """ann_ivf's query side is one map over the queries that carries the
+    vector to scoring: the executed plan scans the query table once, and
+    it has no aggregate (each (query, vector) pair meets through one
+    list, so nothing needs a distinct). The query table is the only
+    parquet of double vectors, which tells its scans apart."""
+    qpath = str(tmp_path / "ivf_queries")
+    _emb_double(spark).filter(F.col("vec_id") < 5).write.parquet(qpath)
+    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
+    out = ann.ann_ivf(
+        emb, spark.read.parquet(qpath), k=5, nlist=8, nprobe=3, dim=64
+    )
+    assert len(out.collect()) == 25
+    final = out._jdf.queryExecution().executedPlan().executedPlan().toString()
+    assert final.count("ReadSchema: struct<vec_id:bigint,embedding:array<double>>") == 1, final
+    assert "HashAggregate" not in final, final
+
+
 def test_coverage_md_counts_match_registry():
     """COVERAGE.md's stated registry/oracle counts must track the code
     (VERDICT r4 #6 — the r3 doc drifted from the dict)."""

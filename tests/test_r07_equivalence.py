@@ -10,8 +10,9 @@ Covers:
 - groupBy-collect + codegen pair combinations vs the old self-equi-join
   pair multiset (LSH band join and exact-Jaccard all-pairs tier);
 - the packed-long pair aggregation vs the struct-keyed fallback;
-- the vectorized order-preserving cosine kernel vs the higher-order
-  aggregate chain, in both float32 and double forms;
+- the vectorized order-preserving cosine kernel and the numpy LSH
+  signatures vs the higher-order aggregate chain, in both float32 and
+  double forms;
 - edge-restricted connected components vs an all-nodes reference.
 """
 
@@ -25,6 +26,17 @@ from js_hll_spark.operators.text import tokens
 
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
+
+
+def _dot(a, b):
+    """Dot product of two array columns as the Catalyst higher-order
+    chain, accumulated left to right from 0.0: the parity oracle of the
+    cosine kernel and of the LSH signatures."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x * y),
+        F.lit(0.0).cast("double"),
+        lambda acc, v: acc + v,
+    )
 
 
 def shingles(col, n: int = 3):
@@ -224,9 +236,9 @@ def test_cosine_kernel_bit_identical_to_hof(spark):
             F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
         )
         pairs = e.crossJoin(F.broadcast(q))
-        hof = ann._dot(F.col("qv"), F.col("embedding")) / (
-            F.sqrt(ann._dot(F.col("qv"), F.col("qv")))
-            * F.sqrt(ann._dot(F.col("embedding"), F.col("embedding")))
+        hof = _dot(F.col("qv"), F.col("embedding")) / (
+            F.sqrt(_dot(F.col("qv"), F.col("qv")))
+            * F.sqrt(_dot(F.col("embedding"), F.col("embedding")))
         )
         mism = (
             pairs.select(
@@ -237,6 +249,34 @@ def test_cosine_kernel_bit_identical_to_hof(spark):
             .count()
         )
         assert mism == 0, f"cast={cast}"
+
+
+def test_lsh_signatures_bit_identical_to_hyperplane_expression(spark):
+    """The numpy LSH signatures equal the Catalyst hyperplane expression
+    they replaced (bit i = sign of the ``_dot`` with plane i, OR-ed
+    into a long), on float and double embeddings."""
+    from js_hll_spark.operators import ann
+
+    bits = 16
+    planes = ann.hyperplanes(64, bits, seed=42)
+    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
+    for cast in (False, True):
+        e = emb
+        if cast:
+            e = e.withColumn(
+                "embedding", F.transform("embedding", lambda x: x.cast("double"))
+            )
+        sig = F.lit(0).cast("long")
+        for i, row in enumerate(planes):
+            plane = F.array(*[F.lit(float(x)) for x in row])
+            bit = F.when(_dot(F.col("embedding"), plane) > 0, 1).otherwise(0)
+            sig = sig.bitwiseOR(F.shiftleft(bit.cast("long"), i))
+        rows = e.select("embedding", sig.alias("sig")).orderBy("vec_id").collect()
+        x = np.array([r["embedding"] for r in rows], dtype=np.float64)
+        want = np.array([r["sig"] for r in rows], dtype=np.int64)
+        got = ann._signatures(x, planes)
+        assert len(set(want.tolist())) > 100, f"cast={cast}"
+        assert np.array_equal(got, want), f"cast={cast}"
 
 
 def test_cosine_kernel_null_and_mismatch_semantics(spark):
