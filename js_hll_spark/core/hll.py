@@ -75,14 +75,19 @@ def estimate_from_registers(regs: np.ndarray, config: HLLConfig) -> float:
     negative (JS Math.log semantics; the reference test maps this case to
     NaN, test/hll-test.js:458-480) and +inf when it is exactly zero.
     """
-    m = config.m
     counts = np.bincount(regs, minlength=config.max_register_value + 1)
     zeroes = int(counts[0])
     # sum(2**-M[j]) grouped by register value: each term count*2**-r is an
     # exact float64 product, so this matches index-order summation to <1ulp.
     indicator = float(np.dot(counts, _NEG_POW2[: len(counts)]))
 
-    estimator = config.alpha_m_squared / indicator
+    return _range_corrected(config.alpha_m_squared / indicator, zeroes, config)
+
+
+def _range_corrected(estimator: float, zeroes: int, config: HLLConfig) -> float:
+    """AK small-range (linear counting) and large-range corrections of
+    the raw estimator, given the count of zero registers."""
+    m = config.m
     if zeroes != 0 and estimator < config.small_estimator_cutoff:
         return m * math.log(m / zeroes)
     if estimator <= config.large_estimator_cutoff:
@@ -288,13 +293,8 @@ class HLL:
             self._regs = registers_from_hashes(values, self.config)
 
     def _promote_sparse(self) -> None:
-        regs = np.zeros(self.config.m, dtype=np.uint8)
-        if self._sparse:
-            idx = np.fromiter(self._sparse.keys(), dtype=np.int64)
-            val = np.fromiter(self._sparse.values(), dtype=np.uint8)
-            regs[idx] = val
+        self._regs = self.registers()
         self._sparse = None
-        self._regs = regs
 
     def clear(self) -> "HLL":
         """Reset to empty (src/hll.js:420-426)."""
@@ -451,9 +451,8 @@ class HLL:
             return float(len(self._explicit))
         if self._sparse is not None:
             cfg = self.config
-            m = cfg.m
             occupied = len(self._sparse)
-            zeroes = m - occupied
+            zeroes = cfg.m - occupied
             indicator = float(zeroes) + float(
                 np.exp2(
                     -np.fromiter(self._sparse.values(), dtype=np.float64)
@@ -461,17 +460,7 @@ class HLL:
                 if occupied
                 else 0.0
             )
-            estimator = cfg.alpha_m_squared / indicator
-            if zeroes != 0 and estimator < cfg.small_estimator_cutoff:
-                return m * math.log(m / zeroes)
-            if estimator <= cfg.large_estimator_cutoff:
-                return estimator
-            x = 1.0 - estimator / cfg.two_to_l
-            if x < 0.0:
-                return float("nan")
-            if x == 0.0:
-                return float("inf")
-            return -cfg.two_to_l * math.log(x)
+            return _range_corrected(cfg.alpha_m_squared / indicator, zeroes, cfg)
         return estimate_from_registers(self._regs, self.config)
 
     def cardinality(self) -> int | float:

@@ -7,8 +7,10 @@ JVM-side (see agg.py).
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
-from pyspark.sql.functions import pandas_udf
+import pyarrow as pa
+from pyspark.sql.functions import arrow_udf, pandas_udf
 from pyspark.sql.types import (
     BinaryType,
     DoubleType,
@@ -224,58 +226,52 @@ def hll_ndv_agg_udf(sketches: pd.Series) -> float:
     return acc.algorithm_cardinality() if acc is not None else None
 
 
-@pandas_udf(LongType())
-def hll_hash_bigint_udf(v: pd.Series) -> pd.Series:
+def _hash_non_null(v: pa.Array, fill, hash_fn) -> pa.Array:
+    """``hash_fn`` (Arrow array -> uint64 ndarray) over the non-null
+    values of ``v``, NULL for NULL (postgresql-hll semantics). NULLs are
+    filled before hashing and masked after, so no value leaves Arrow's
+    exact integer or byte layout."""
+    if v.null_count == len(v):
+        return pa.nulls(len(v), pa.int64())
+    hashed = hash_fn(v.fill_null(fill)).view(np.int64)
+    nulls = v.is_null().to_numpy(zero_copy_only=False) if v.null_count else None
+    return pa.array(hashed, mask=nulls)
+
+
+@arrow_udf(LongType())
+def hll_hash_bigint_udf(v: pa.Array) -> pa.Array:
     """postgresql-hll's hll_hash_bigint: murmur3 x64-128 lower 64 of the
     value's 8 little-endian bytes (seed 0, the postgresql-hll default) —
     feed the result to hash_method='raw' sketches for
-    ecosystem-identical registers.
-
-    Rejects batches containing NULL: Arrow delivers int64-with-nulls as
-    float64, which silently corrupts |v| > 2^53 BEFORE this function
-    sees the data — filter or COALESCE upstream (postgresql-hll returns
-    NULL for NULL; express that as CASE WHEN x IS NULL THEN NULL ELSE
-    hll_hash_bigint(x) END over a non-null branch)."""
-    import numpy as np
-
+    ecosystem-identical registers. NULL hashes to NULL."""
     from ..hashing import murmur3_64_uint64, to_uint64
 
-    if v.dtype.kind == "f":
-        raise ValueError(
-            "hll_hash_bigint: NULL in input batch (or a float column) — "
-            "int64-with-nulls arrives as float64 and loses precision past "
-            "2^53; filter nulls upstream"
-        )
-    out = murmur3_64_uint64(to_uint64(v.to_numpy()))
-    return pd.Series(out.view(np.int64))
+    return _hash_non_null(
+        v, 0, lambda a: murmur3_64_uint64(to_uint64(a.to_numpy()))
+    )
 
 
-@pandas_udf(LongType())
-def hll_hash_text_udf(v: pd.Series) -> pd.Series:
+_TEXT_TYPES = (
+    pa.null(), pa.string(), pa.large_string(), pa.binary(), pa.large_binary()
+)
+
+
+@arrow_udf(LongType())
+def hll_hash_text_udf(v: pa.Array) -> pa.Array:
     """postgresql-hll's hll_hash_text: murmur3 x64-128 lower 64 of the
     UTF-8 bytes (seed 0, the postgresql-hll default). NULL hashes to
     NULL, matching postgresql-hll."""
-    import numpy as np
-
     from ..hashing import murmur3_64_bytes
 
-    mask = v.isna().to_numpy()
-    out = pd.array([None] * len(v), dtype="Int64")
-    if (~mask).any():
-        vals = v[~mask]
-        first = vals.iloc[0]
-        if not isinstance(first, (str, bytes, bytearray)):
-            # str(b'foo') would silently hash the Python repr "b'foo'" —
-            # refuse non-text input instead of producing unportable values
-            raise TypeError(
-                "hll_hash_text: expected a string (or utf-8 bytes) column, "
-                f"got {type(first).__name__}; cast upstream"
-            )
-        # pass the Series through: murmur3_64_bytes consumes str/bytes
-        # batches via pyarrow with zero per-row Python
-        hashed = murmur3_64_bytes(vals).view(np.int64)
-        out[~mask] = hashed
-    return pd.Series(out)
+    if v.type not in _TEXT_TYPES:
+        # hashing another type's text rendering would silently produce
+        # values no other postgresql-hll client computes
+        raise TypeError(
+            "hll_hash_text: expected a string (or utf-8 bytes) column, "
+            f"got {v.type}; cast upstream"
+        )
+    # murmur3_64_bytes hashes an Arrow string/binary array in place
+    return _hash_non_null(v, "", murmur3_64_bytes)
 
 
 def register_sql_functions(spark) -> None:

@@ -30,7 +30,7 @@ import json
 import posixpath
 from typing import Sequence
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from .. import fsio
 from ..spark.agg import hll_sketch
@@ -74,6 +74,18 @@ def _resolve_snapshot(state_dir: str) -> str | None:
     target = (pointer or "").strip()
     snap = posixpath.join(state_dir, target)
     return snap if target and fsio.exists(snap) else None
+
+
+def _event_window(df: DataFrame, ts_col: str, window: str) -> Column:
+    """The tumbling ``window`` struct (start, end) of each row's
+    ``ts_col``, NULL for a NULL time. ``F.window`` alone drops rows whose
+    time is NULL (Spark's analyzer adds the filter), so the window runs
+    over a stand-in time and NULL-time events keep one NULL-window group
+    per key instead of vanishing. Both streaming NDV operators window
+    through here."""
+    ts = F.col(ts_col)
+    stand_in = F.lit("1970-01-01").cast(df.select(ts).schema[0].dataType)
+    return F.when(ts.isNotNull(), F.window(F.coalesce(ts, stand_in), window))
 
 
 def streaming_ndv(
@@ -172,17 +184,8 @@ def streaming_ndv(
             # matched neither branch, silently disabling the guard for
             # exactly the replays it exists to stop)
             return
-        # F.window drops rows whose time column is NULL (Spark's
-        # analyzer adds the filter), so NULL-ts events are windowed
-        # through a stand-in time and given a NULL window_start: they
-        # keep one NULL-window row instead of vanishing from the state
-        ts = F.col(ts_col)
-        stand_in = F.lit("1970-01-01").cast(
-            batch_df.select(ts).schema[0].dataType
-        )
-        start = F.window(F.coalesce(ts, stand_in), window).start
         with_window = batch_df.withColumn(
-            "window_start", F.when(ts.isNotNull(), start)
+            "window_start", _event_window(batch_df, ts_col, window).start
         )
         partials = hll_sketch(
             with_window,

@@ -1,14 +1,11 @@
-"""Custom stateful streaming NDV via ``applyInPandasWithState`` — the
-Structured Streaming state-store API variant of streaming/ndv.py (the
-instructions' 'custom stateful operators' path).
+"""State-store streaming operators via ``applyInPandasWithState``: the
+Structured Streaming state API variant of streaming/ndv.py.
 
-Each (window_start, *keys) group keeps its serialized register file in
-the state store; every micro-batch max-merges new hashes into it and
-emits the refreshed estimate. Watermark expiry (opt-in ``expire=True``)
-bounds the state: when the event-time watermark passes a window's end +
-allowed lateness, the group times out and its state is freed (the last
-update already emitted the final row — the timeout callback emits
-nothing).
+Each (window_start, *keys) NDV group keeps its sketch in the state
+store; every micro-batch folds its hashes in and emits the refreshed
+estimate. Opt-in expiry (``expire=True``) frees a group's state once the
+event-time watermark passes its window end + allowed lateness (the last
+update already emitted the final row; the timeout emits nothing).
 """
 
 from __future__ import annotations
@@ -30,27 +27,9 @@ from pyspark.sql.types import (
 )
 
 from ..config import HLLConfig
-from ..core.hll import HLL, estimate_from_registers, update_registers
+from ..core.hll import HLL
 from ..hashing import to_uint64
-
-
-def _interval_ms(interval: str) -> int:
-    """Milliseconds of a simple Spark interval string ('90 seconds',
-    '30 minutes', '1 hour', '2 days')."""
-    parts = interval.strip().split()
-    if len(parts) != 2:
-        raise ValueError(f"unsupported interval: {interval!r}")
-    n, unit = float(parts[0]), parts[1].lower().rstrip("s")
-    scale = {
-        "millisecond": 1,
-        "second": 1000,
-        "minute": 60_000,
-        "hour": 3_600_000,
-        "day": 86_400_000,
-    }.get(unit)
-    if scale is None:
-        raise ValueError(f"unsupported interval unit: {interval!r}")
-    return int(n * scale)
+from .ndv import _event_window
 
 
 def stateful_streaming_ndv(
@@ -68,7 +47,8 @@ def stateful_streaming_ndv(
 ):
     """Transform a streaming DataFrame into per-(window, keys) NDV rows
     maintained in the state store. Returns the transformed streaming
-    DataFrame (caller attaches the sink).
+    DataFrame (caller attaches the sink). Events with a NULL ``ts_col``
+    form one NULL-window group per key, as in ``streaming_ndv``.
 
     ``explicit=True`` keeps spec-encoded EXPLICIT-mode sketches in the
     state store instead of raw register files: while the per-key NDV
@@ -85,7 +65,10 @@ def stateful_streaming_ndv(
     once the watermark passes that point no further row can reach the
     group, so the timed-out callback frees the state WITHOUT emitting —
     the final value already went downstream with the last update, and a
-    duplicate final row would corrupt last-update-wins consumers.
+    duplicate final row would corrupt last-update-wins consumers. The
+    NULL-window group has no window end and is never expired.
+    ``lateness`` follows Spark's interval grammar, like ``window`` and
+    ``watermark`` (``'90 seconds'``, ``'1 hour 30 minutes'``).
 
     Expiry is OPT-IN because event-time timeout also engages Spark's
     watermark late-data filtering: rows older than the watermark are
@@ -95,29 +78,18 @@ def stateful_streaming_ndv(
     semantics, under which arbitrarily out-of-order replays (the
     oracle/backfill harnesses feeding unordered files) lose nothing."""
     config = HLLConfig(log2m, 5)
-    m = config.m
     keys = list(keys)
-    if expire:
-        # only the expiry path needs to parse the interval itself —
-        # the default path hands the string straight to F.window, whose
-        # CalendarInterval parser accepts compound forms ('1 hour
-        # 30 minutes') that _interval_ms does not
-        expire_ms = _interval_ms(window) + _interval_ms(lateness)
-        # Spark renders the tz-naive group key in the SESSION time zone,
-        # while getCurrentWatermarkMs/setTimeoutTimestamp speak true
-        # epoch ms — capture the session tz now so update_fn can
-        # localize correctly (treating the naive key as UTC would skew
-        # every timeout by the session's UTC offset)
-        session_tz = stream.sparkSession.conf.get("spark.sql.session.timeZone")
-    else:
-        expire_ms, session_tz = 0, "UTC"
 
-    # the watermarked timestamp column must SURVIVE the projection when
-    # event-time timeout is on: the watermark rides as metadata on that
-    # attribute, and projecting it away makes the analyzer reject the
-    # stateful op with "Event-time timeout not supported without
-    # watermark" (F.window(ts).start does not inherit the metadata)
-    carry_ts = [F.col(ts_col).alias("__ts")] if expire else []
+    # with expiry on, the projection carries each window's timeout
+    # (window end + lateness in epoch ms, computed in Catalyst; NULL for
+    # the NULL window) and the watermarked ts itself: the watermark rides
+    # as metadata on that attribute, and without it the analyzer rejects
+    # the stateful op ("Event-time timeout not supported without
+    # watermark")
+    expiry = []
+    if expire:
+        end = F.col("__w.end") + F.expr(f"INTERVAL {lateness}")
+        expiry = [F.col(ts_col).alias("__ts"), F.unix_millis(end).alias("__exp")]
     hashed = (
         stream.withWatermark(ts_col, watermark)
         # count(DISTINCT) semantics: NULL is not a value. xxhash64(NULL)
@@ -126,12 +98,12 @@ def stateful_streaming_ndv(
         # parity (the same filter every batch sketch path applies —
         # spark/agg.py, spark/sketch_agg.py)
         .filter(F.col(value_col).isNotNull())
-        .withColumn("window_start", F.window(ts_col, window).start)
+        .withColumn("__w", _event_window(stream, ts_col, window))
         .select(
-            "window_start",
+            F.col("__w.start").alias("window_start"),
             *keys,
             F.xxhash64(F.col(value_col)).alias("__h"),
-            *carry_ts,
+            *expiry,
         )
     )
 
@@ -160,63 +132,35 @@ def stateful_streaming_ndv(
             # last real update — free the state, emit nothing
             state.remove()
             return
+        # state blobs: spec bytes (explicit) or a dense sketch's raw
+        # m-byte register file, which its registers() exposes in place
+        blob, rows_seen = state.get if state.exists else (None, 0)
         if explicit:
-            if state.exists:
-                blob, rows_seen = state.get
-                sketch = HLL.from_bytes(bytes(blob))
-            else:
-                sketch = HLL(config)
-                rows_seen = 0
-            for pdf in pdfs:
-                sketch.add_raw64(to_uint64(pdf["__h"].to_numpy()))
-                rows_seen += len(pdf)
-            state.update((sketch.to_bytes(), rows_seen))
-            ndv = sketch.algorithm_cardinality()
+            sketch = HLL(config) if blob is None else HLL.from_bytes(bytes(blob))
         else:
-            if state.exists:
-                blob, rows_seen = state.get
-                regs = np.frombuffer(blob, dtype=np.uint8).copy()
-            else:
-                regs = np.zeros(m, dtype=np.uint8)
-                rows_seen = 0
-            for pdf in pdfs:
-                h = to_uint64(pdf["__h"].to_numpy())
-                update_registers(regs, h, config)
-                rows_seen += len(pdf)
-            state.update((regs.tobytes(), rows_seen))
-            ndv = estimate_from_registers(regs, config)
-        if expire:
+            sketch = HLL(config, explicit_threshold=0, sparse_on=False)
+            if blob is not None:
+                sketch.registers()[:] = np.frombuffer(blob, dtype=np.uint8)
+        exp_ms = None
+        for pdf in pdfs:
+            sketch.add_raw64(to_uint64(pdf["__h"].to_numpy()))
+            rows_seen += len(pdf)
+            if expire:
+                exp_ms = pdf["__exp"].iloc[0]
+        blob = sketch.to_bytes() if explicit else sketch.registers().tobytes()
+        state.update((blob, rows_seen))
+        if not pd.isna(exp_ms):
             # arm (re-arm on every update — the timestamp is absolute)
-            # the event-time timeout at window end + lateness; clamp one
-            # tick past the current watermark, which Spark requires the
-            # timeout to exceed (a window already behind the watermark
-            # expires at the next trigger). The naive key localizes in
-            # the captured SESSION tz (ambiguous DST fall-back hours
-            # resolve to the DST side — at worst a 1 h skew twice a
-            # year on non-UTC sessions, vs a constant utc-offset skew
-            # if the key were read as UTC).
-            start = pd.Timestamp(key[0]) if key[0] is not None else pd.NaT
-            if start is not pd.NaT and start.tzinfo is None:
-                start = start.tz_localize(
-                    session_tz, ambiguous=True, nonexistent="shift_forward"
-                )
-            if start is pd.NaT:
-                # a NULL event time yields a NULL window key; it has no
-                # window end to expire at, and NaT.timestamp() raises —
-                # leave the (single) null-window group unarmed rather
-                # than crash-loop the query or churn its state every
-                # trigger (same keep-the-null-window convention as the
-                # foreachBatch retention path)
-                pass
-            else:
-                end_ms = int(start.timestamp() * 1000) + expire_ms
-                state.setTimeoutTimestamp(
-                    max(end_ms, state.getCurrentWatermarkMs() + 1)
-                )
+            # one tick past the current watermark at the earliest, which
+            # Spark requires (a window already behind the watermark
+            # expires at the next trigger); the NULL window stays unarmed
+            state.setTimeoutTimestamp(
+                max(int(exp_ms), state.getCurrentWatermarkMs() + 1)
+            )
         out = {"window_start": [key[0]]}
         for i, k in enumerate(keys):
             out[k] = [key[i + 1]]
-        out["ndv"] = [ndv]
+        out["ndv"] = [sketch.algorithm_cardinality()]
         out["rows_seen"] = [rows_seen]
         yield pd.DataFrame(out)
 

@@ -571,9 +571,11 @@ def test_explicit_engine_null_group_keys(spark):
 
 
 def test_hll_hash_text_null_maps_to_null(spark):
-    """postgresql-hll semantics: hll_hash_text(NULL) IS NULL; a null in
-    a bigint batch raises loudly instead of silently hashing garbage
-    (Arrow float64 coercion corrupts |v| > 2^53 upstream of the UDF)."""
+    """postgresql-hll semantics: hll_hash_text(NULL) and
+    hll_hash_bigint(NULL) are NULL, and a bigint batch holding a NULL
+    still hashes every value exactly (2^53 + 1 is not representable in
+    the float64 a pandas batch would carry it as)."""
+    from js_hll_spark.hashing import murmur3_64
     from js_hll_spark.spark.functions import register_sql_functions
 
     register_sql_functions(spark)
@@ -582,12 +584,13 @@ def test_hll_hash_text_null_maps_to_null(spark):
     ).collect()
     assert rows[1]["h"] is None
     assert rows[0]["h"] is not None and rows[2]["h"] is not None
-    import pytest as _pytest
-
-    with _pytest.raises(Exception, match="NULL in input batch|float"):
-        spark.sql(
-            "SELECT hll_hash_bigint(x) AS h FROM VALUES (1L), (CAST(NULL AS LONG)) t(x)"
-        ).collect()
+    rows = spark.sql(
+        "SELECT hll_hash_bigint(x) AS h FROM VALUES "
+        "(9007199254740993L), (CAST(NULL AS LONG)) t(x)"
+    ).collect()
+    assert rows[1]["h"] is None
+    want = murmur3_64((2**53 + 1).to_bytes(8, "little"))
+    assert rows[0]["h"] == want - 2**64 == -4213922593123932684
 
 
 def test_scalar_udfs_null_blobs_return_null(spark):
