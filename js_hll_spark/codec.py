@@ -92,10 +92,9 @@ def encode(sketch: HLL) -> bytes:
         vals.sort()
         return header + vals.astype(">i8").tobytes()
     if alg == ALG_SPARSE:
-        idx = np.fromiter(sketch._sparse.keys(), dtype=np.uint64)
-        val = np.fromiter(sketch._sparse.values(), dtype=np.uint64)
-        order = np.argsort(idx)
-        words = (idx[order] << np.uint64(cfg.regwidth)) | val[order]
+        regs = sketch.registers()
+        idx = np.flatnonzero(regs).astype(np.uint64)
+        words = (idx << np.uint64(cfg.regwidth)) | regs[idx]
         return header + _pack_words(words, cfg.log2m + cfg.regwidth)
     # FULL
     return header + _pack_words(
@@ -127,42 +126,30 @@ def decode(data: bytes) -> HLL:
     if alg == ALG_EMPTY:
         return out
     if alg == ALG_EXPLICIT:
-        vals = np.frombuffer(body, dtype=">i8").astype(np.int64)
-        uvals = vals.astype(np.uint64)
-        # keep the exact set even if the stored count exceeds the declared
-        # threshold (decode must be able to represent what was written).
-        # Clear the mode containers __init__ allocated per the cutoff
-        # byte: a cutoff that disables explicit (js-hll always writes
-        # 0x00) made __init__ allocate _sparse/_regs, and leaving them
-        # set creates a dual-mode object whose storage_algorithm says
-        # SPARSE/FULL-of-zeros — silent data loss on re-encode or union
-        out._sparse = None
-        out._regs = None
-        out._explicit = set(int(v) for v in uvals)
-        out.explicit_threshold = max(out.explicit_threshold, len(out._explicit))
+        vals = np.frombuffer(body, dtype=">i8").astype(np.uint64)
+        out._set_explicit(set(vals.tolist()))
         return out
     if alg == ALG_SPARSE:
         bits_per_word = cfg.log2m + cfg.regwidth
         n_words = (len(body) * 8) // bits_per_word
         words = _unpack_words(body, bits_per_word, n_words)
-        idx = (words >> np.uint64(cfg.regwidth)).astype(np.int64)
         val = (words & np.uint64(cfg.max_register_value)).astype(np.uint8)
         # drop zero-valued words: a real encoder never writes them, and
         # when bits_per_word does not divide the padded body the trailing
         # zero padding would otherwise decode as a phantom (0, 0) word
         keep = val != 0
-        idx, val = idx[keep], val[keep]
-        out._explicit = None
-        out._regs = None  # see EXPLICIT branch: clear __init__'s container
-        # last-write-wins on duplicate indexes (src/hll.js:693-696)
-        out._sparse = dict(zip(idx.tolist(), val.tolist()))
-        if len(out._sparse) > cfg.sparse_threshold:
-            out._promote_sparse()
+        idx = (words[keep] >> np.uint64(cfg.regwidth)).astype(np.int64)[::-1]
+        val = val[keep][::-1]
+        # last write wins on duplicate indexes (src/hll.js:693-696): numpy
+        # leaves the winner of a duplicate fancy assignment undefined, so
+        # take each index's first word of the reversed list
+        idx, last = np.unique(idx, return_index=True)
+        regs = np.zeros(cfg.m, dtype=np.uint8)
+        regs[idx] = val[last]
+        out._set_registers(regs, full=False)
         return out
     if alg == ALG_FULL:
         regs = _unpack_words(body, cfg.regwidth, cfg.m).astype(np.uint8)
-        out._explicit = None
-        out._sparse = None
-        out._regs = regs
+        out._set_registers(regs, full=True)
         return out
     raise ValueError(f"unsupported algorithm code {alg}")

@@ -6,8 +6,9 @@ upgrades documented in SURVEY.md §1.2/§1.3:
 
 - rho examines the full 64-bit substream (js-hll only looks at the lower
   32 bits, src/hll.js:249-253 — a JS artifact, not the spec);
-- native EXPLICIT and SPARSE in-RAM modes with promotion (js-hll promotes
-  everything to FULL on decode, README.markdown:6).
+- an EXPLICIT set in RAM; SPARSE/FULL are encodings of one register
+  file, promoted as in postgresql-hll (js-hll promotes everything to FULL
+  on decode, README.markdown:6).
 
 All hot paths are numpy-vectorized over ``uint64`` arrays — this module is
 what runs inside Arrow-batched pandas UDFs on executors.
@@ -70,23 +71,19 @@ _NEG_POW2 = np.exp2(-np.arange(256, dtype=np.float64))
 
 
 def estimate_from_registers(regs: np.ndarray, config: HLLConfig) -> float:
-    """Flajolet estimator with small/large-range corrections
-    (src/hll.js:276-299). Returns NaN when the large-range log argument is
-    negative (JS Math.log semantics; the reference test maps this case to
-    NaN, test/hll-test.js:458-480) and +inf when it is exactly zero.
+    """Flajolet estimator with AK small-range (linear counting) and
+    large-range corrections (src/hll.js:276-299). Returns NaN when the
+    large-range log argument is negative (JS Math.log semantics; the
+    reference test maps this case to NaN, test/hll-test.js:458-480) and
+    +inf when it is exactly zero.
     """
     counts = np.bincount(regs, minlength=config.max_register_value + 1)
     zeroes = int(counts[0])
     # sum(2**-M[j]) grouped by register value: each term count*2**-r is an
     # exact float64 product, so this matches index-order summation to <1ulp.
     indicator = float(np.dot(counts, _NEG_POW2[: len(counts)]))
+    estimator = config.alpha_m_squared / indicator
 
-    return _range_corrected(config.alpha_m_squared / indicator, zeroes, config)
-
-
-def _range_corrected(estimator: float, zeroes: int, config: HLLConfig) -> float:
-    """AK small-range (linear counting) and large-range corrections of
-    the raw estimator, given the count of zero registers."""
     m = config.m
     if zeroes != 0 and estimator < config.small_estimator_cutoff:
         return m * math.log(m / zeroes)
@@ -137,15 +134,16 @@ def fold_registers(
 
 
 class HLL:
-    """A mergeable HLL sketch with native EXPLICIT/SPARSE/FULL modes.
+    """A mergeable HLL sketch: an exact EXPLICIT set, promoted to one
+    register file that stores as SPARSE until it is dense, then FULL.
 
     ``explicit_threshold``: max exact values kept before promoting to
-    SPARSE (or FULL if sparse is disabled); 0 disables EXPLICIT entirely.
-    ``sparse_on``: whether the SPARSE tier is used.
+    the register file; 0 disables EXPLICIT entirely.
+    ``sparse_on``: whether a new register file stores as SPARSE.
     """
 
     __slots__ = ("config", "explicit_threshold", "sparse_on", "cutoff_byte",
-                 "_explicit", "_sparse", "_regs")
+                 "_explicit", "_regs", "_full")
 
     def __init__(
         self,
@@ -176,28 +174,12 @@ class HLL:
                 explicit_threshold=self.explicit_threshold,
             )
         )
-        self._explicit: set[int] | None = (
-            set() if self.explicit_threshold > 0 else None
-        )
-        self._sparse: dict[int, int] | None = None
-        self._regs: np.ndarray | None = None
-        if self._explicit is None:
-            if self.sparse_on:
-                self._sparse = {}
-            else:
-                self._regs = np.zeros(config.m, dtype=np.uint8)
+        self.clear()
 
     # ------------------------------------------------------------- mode --
-
-    @property
-    def algorithm(self) -> int:
-        if self._regs is not None:
-            return ALG_FULL
-        if self._sparse is not None:
-            return ALG_SPARSE if self._sparse else (
-                ALG_EMPTY if self._explicit is None else ALG_SPARSE
-            )
-        return ALG_EXPLICIT if self._explicit else ALG_EMPTY
+    # Exactly one of ``_explicit`` (a set of hashes) and ``_regs`` (m
+    # bytes) is set. ``_full`` says whether the register file stores as
+    # FULL; once True it stays True (postgresql-hll's promotion rule).
 
     @property
     def storage_algorithm(self) -> int:
@@ -205,41 +187,53 @@ class HLL:
         with no content write the 3-byte EMPTY form; a full-mode register
         file serializes as FULL even when all zero — js-hll parity (its
         encoder writes schema-1 FULL unconditionally, src/hll.js:436)."""
-        if self._regs is not None:
+        if self._explicit is not None:
+            return ALG_EXPLICIT if self._explicit else ALG_EMPTY
+        if self._full:
             return ALG_FULL
-        if self._sparse:
-            return ALG_SPARSE
-        if self._explicit:
-            return ALG_EXPLICIT
-        return ALG_EMPTY
+        return ALG_SPARSE if self._regs.any() else ALG_EMPTY
 
     def is_empty(self) -> bool:
         """True when no value has been added (content-free in ANY mode,
         including an all-zero full-mode register file)."""
-        if self._explicit:
-            return False
-        if self._sparse:
-            return False
-        if self._regs is not None:
-            return not self._regs.any()
-        return True
+        if self._explicit is not None:
+            return not self._explicit
+        return not self._regs.any()
 
     def registers(self) -> np.ndarray:
-        """Materialize a FULL register view without changing the mode."""
+        """The live register file of a probabilistic sketch; for an
+        EXPLICIT sketch, a new file built from its hashes."""
         if self._regs is not None:
             return self._regs
-        regs = np.zeros(self.config.m, dtype=np.uint8)
-        if self._sparse:
-            idx = np.fromiter(self._sparse.keys(), dtype=np.int64)
-            val = np.fromiter(self._sparse.values(), dtype=np.uint8)
-            regs[idx] = val
-        elif self._explicit:
-            update_registers(
-                regs,
-                np.fromiter(self._explicit, dtype=np.uint64),
-                self.config,
-            )
-        return regs
+        return registers_from_hashes(
+            np.fromiter(self._explicit, dtype=np.uint64), self.config
+        )
+
+    def _set_registers(self, regs: np.ndarray, *, full: bool) -> None:
+        self._explicit, self._regs, self._full = None, regs, full
+        self._promote()
+
+    def _set_explicit(self, values: set[int]) -> None:
+        # keeps the exact set even past the declared threshold: decode
+        # must be able to represent what was written
+        self._explicit, self._regs = values, None
+        self.explicit_threshold = max(self.explicit_threshold, len(values))
+
+    def _promote(self) -> None:
+        """postgresql-hll's promotion rule: an EXPLICIT set past its
+        threshold becomes a register file, and a register file with more
+        than ``sparse_threshold`` registers set stores as FULL from then
+        on."""
+        if self._explicit is not None:
+            if len(self._explicit) <= self.explicit_threshold:
+                return
+            self._regs = self.registers()
+            self._explicit = None
+        if (
+            not self._full
+            and np.count_nonzero(self._regs) > self.config.sparse_threshold
+        ):
+            self._full = True
 
     # ---------------------------------------------------------- updates --
 
@@ -259,54 +253,19 @@ class HLL:
             # oracled intersection query lives at log2m=16 / threshold
             # 4096 and never promotes)
             self._explicit.update(np.unique(h).tolist())
-            if len(self._explicit) > self.explicit_threshold:
-                self._promote_explicit()
-            return self
-        if self._sparse is not None:
-            self._sparse_update(h)
-            return self
-        update_registers(self._regs, h, self.config)
-        return self
-
-    def _sparse_update(self, h: np.ndarray) -> None:
-        cfg = self.config
-        idx = (h & np.uint64(cfg.register_index_mask)).astype(np.int64)
-        val = rho64(h >> np.uint64(cfg.log2m), cfg.max_register_value)
-        order = np.argsort(idx, kind="stable")
-        idx, val = idx[order], val[order]
-        uidx, starts = np.unique(idx, return_index=True)
-        umax = np.maximum.reduceat(val, starts)
-        sp = self._sparse
-        for i, v in zip(uidx.tolist(), umax.tolist()):
-            if v and v > sp.get(i, 0):
-                sp[i] = v
-        if len(sp) > cfg.sparse_threshold:
-            self._promote_sparse()
-
-    def _promote_explicit(self) -> None:
-        values = np.fromiter(self._explicit, dtype=np.uint64)
-        self._explicit = None
-        if self.sparse_on:
-            self._sparse = {}
-            self._sparse_update(values)
         else:
-            self._regs = registers_from_hashes(values, self.config)
-
-    def _promote_sparse(self) -> None:
-        self._regs = self.registers()
-        self._sparse = None
+            update_registers(self._regs, h, self.config)
+        self._promote()
+        return self
 
     def clear(self) -> "HLL":
         """Reset to empty (src/hll.js:420-426)."""
-        self._regs = None
-        self._sparse = None
-        self._explicit = None
-        if self.explicit_threshold > 0:
-            self._explicit = set()
-        elif self.sparse_on:
-            self._sparse = {}
-        else:
-            self._regs = np.zeros(self.config.m, dtype=np.uint8)
+        self._explicit = set() if self.explicit_threshold > 0 else None
+        self._regs = (
+            None if self._explicit is not None
+            else np.zeros(self.config.m, dtype=np.uint8)
+        )
+        self._full = not self.sparse_on
         return self
 
     def clone(self) -> "HLL":
@@ -317,8 +276,8 @@ class HLL:
             cutoff_byte=self.cutoff_byte,
         )
         out._explicit = set(self._explicit) if self._explicit is not None else None
-        out._sparse = dict(self._sparse) if self._sparse is not None else None
         out._regs = self._regs.copy() if self._regs is not None else None
+        out._full = self._full
         return out
 
     # ------------------------------------------------------------ merge --
@@ -352,44 +311,20 @@ class HLL:
         # EXPLICIT x EXPLICIT stays exact (postgresql-hll semantics).
         if self._explicit is not None and other._explicit is not None:
             self._explicit |= other._explicit
-            if len(self._explicit) > self.explicit_threshold:
-                self._promote_explicit()
+            self._promote()
             return self
         # One side explicit: replay its values into the probabilistic side.
         if other._explicit is not None:
-            if other._explicit:
-                values = np.fromiter(other._explicit, dtype=np.uint64)
-                self.add_raw64(values)
-            return self
+            return self.add_raw64(np.fromiter(other._explicit, dtype=np.uint64))
         if self._explicit is not None:
-            values = (
-                np.fromiter(self._explicit, dtype=np.uint64)
-                if self._explicit
-                else None
-            )
-            self._explicit = None
-            if other._sparse is not None:
-                self._sparse = dict(other._sparse)
-                self._regs = None
-            else:
-                self._regs = other._regs.copy()
-                self._sparse = None
-            if values is not None:
-                self.add_raw64(values)
-            return self
-        # SPARSE x SPARSE
-        if self._sparse is not None and other._sparse is not None:
-            sp = self._sparse
-            for i, v in other._sparse.items():
-                if v > sp.get(i, 0):
-                    sp[i] = v
-            if len(sp) > self.config.sparse_threshold:
-                self._promote_sparse()
-            return self
-        # At least one FULL -> element-wise max (src/hll.js:345-346).
-        if self._regs is None:
-            self._promote_sparse()
-        np.maximum(self._regs, other.registers(), out=self._regs)
+            values = np.fromiter(self._explicit, dtype=np.uint64)
+            self._set_registers(other._regs.copy(), full=other._full)
+            return self.add_raw64(values)
+        # Both register files -> element-wise max (src/hll.js:345-346);
+        # FULL on either side stays FULL.
+        np.maximum(self._regs, other._regs, out=self._regs)
+        self._full |= other._full
+        self._promote()
         return self
 
     def _union_mismatched(self, other: "HLL") -> "HLL":
@@ -397,13 +332,11 @@ class HLL:
             min(self.config.log2m, other.config.log2m),
             min(self.config.regwidth, other.config.regwidth),
         )
-        folded_self = self.fold_to(target)
-        folded_other = other.fold_to(target)
-        folded_self.union(folded_other)
+        folded = self.fold_to(target).union(other.fold_to(target))
         self.config = target  # type: ignore[misc]
-        self._explicit = folded_self._explicit
-        self._sparse = folded_self._sparse
-        self._regs = folded_self._regs
+        self._explicit, self._regs, self._full = (
+            folded._explicit, folded._regs, folded._full
+        )
         return self
 
     # ------------------------------------------------------------- fold --
@@ -428,9 +361,7 @@ class HLL:
                 explicit_threshold=self.explicit_threshold,
                 sparse_on=self.sparse_on,
             )
-            out._explicit = set(self._explicit)
-            if len(out._explicit) > out.explicit_threshold:
-                out._promote_explicit()
+            out._set_explicit(set(self._explicit))
             return out
         regs = self.registers()
         if target.log2m < self.config.log2m:
@@ -441,7 +372,7 @@ class HLL:
             regs = regs.copy()
         np.minimum(regs, target.max_register_value, out=regs)
         out = HLL(target, explicit_threshold=0, sparse_on=False)
-        out._regs = regs
+        out._set_registers(regs, full=True)
         return out
 
     # --------------------------------------------------------- estimate --
@@ -449,18 +380,6 @@ class HLL:
     def algorithm_cardinality(self) -> float:
         if self._explicit is not None:
             return float(len(self._explicit))
-        if self._sparse is not None:
-            cfg = self.config
-            occupied = len(self._sparse)
-            zeroes = cfg.m - occupied
-            indicator = float(zeroes) + float(
-                np.exp2(
-                    -np.fromiter(self._sparse.values(), dtype=np.float64)
-                ).sum()
-                if occupied
-                else 0.0
-            )
-            return _range_corrected(cfg.alpha_m_squared / indicator, zeroes, cfg)
         return estimate_from_registers(self._regs, self.config)
 
     def cardinality(self) -> int | float:

@@ -157,44 +157,32 @@ def murmur3_64_bytes(values, seed: int = DEFAULT_SEED) -> np.ndarray:
     indexing into one concatenated buffer, so the whole batch stays in
     numpy (no per-row Python in the loop body)."""
     # pyarrow does the UTF-8 encode + offset layout in C (zero per-row
-    # Python); plain lists of bytes fall back to a join
-    try:
-        import pyarrow as pa
+    # Python)
+    import pyarrow as pa
 
-        if isinstance(values, pa.Array):
-            # an Arrow string/binary column is hashed in place
-            arr = values.cast(pa.binary())
-        elif len(values) and isinstance(
-            values[0] if not hasattr(values, "iloc") else values.iloc[0], (bytes, bytearray)
-        ):
-            arr = pa.array(values, type=pa.binary())
-        else:
-            arr = pa.array(values, type=pa.string())
-        if arr.null_count:
-            raise ValueError("murmur3_64_bytes: null values not supported")
-        n = len(arr)
-        if n == 0:
-            return np.zeros(0, dtype=_U)
-        voffset = arr.offset
-        raw_offsets = np.frombuffer(arr.buffers()[1], dtype=np.int32)
-        offsets = raw_offsets[voffset : voffset + n + 1].astype(np.int64)
-        # a sliced array shares its parent's data buffer: copy only the
-        # slice's bytes into the zero-padded buffer
-        data = np.frombuffer(arr.buffers()[2], dtype=np.uint8)[offsets[0] : offsets[-1]]
-        lengths = np.diff(offsets)
-        buf = np.concatenate([data, np.zeros(16, dtype=np.uint8)])
-        offsets = offsets[:-1] - offsets[0]
-    except ImportError:  # pragma: no cover - pyarrow is a hard dep of pyspark
-        encoded = [
-            v.encode("utf-8") if isinstance(v, str) else bytes(v) for v in values
-        ]
-        n = len(encoded)
-        if n == 0:
-            return np.zeros(0, dtype=_U)
-        lengths = np.fromiter((len(b) for b in encoded), dtype=np.int64, count=n)
-        offsets = np.zeros(n, dtype=np.int64)
-        np.cumsum(lengths[:-1], out=offsets[1:])
-        buf = np.frombuffer(b"".join(encoded) + b"\0" * 16, dtype=np.uint8)
+    if isinstance(values, pa.Array):
+        # an Arrow string/binary column is hashed in place
+        arr = values.cast(pa.binary())
+    elif len(values) and isinstance(
+        values[0] if not hasattr(values, "iloc") else values.iloc[0], (bytes, bytearray)
+    ):
+        arr = pa.array(values, type=pa.binary())
+    else:
+        arr = pa.array(values, type=pa.string())
+    if arr.null_count:
+        raise ValueError("murmur3_64_bytes: null values not supported")
+    n = len(arr)
+    if n == 0:
+        return np.zeros(0, dtype=_U)
+    voffset = arr.offset
+    raw_offsets = np.frombuffer(arr.buffers()[1], dtype=np.int32)
+    offsets = raw_offsets[voffset : voffset + n + 1].astype(np.int64)
+    # a sliced array shares its parent's data buffer: copy only the
+    # slice's bytes into the zero-padded buffer
+    data = np.frombuffer(arr.buffers()[2], dtype=np.uint8)[offsets[0] : offsets[-1]]
+    lengths = np.diff(offsets)
+    buf = np.concatenate([data, np.zeros(16, dtype=np.uint8)])
+    offsets = offsets[:-1] - offsets[0]
 
     from numpy.lib.stride_tricks import sliding_window_view
 

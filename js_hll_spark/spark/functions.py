@@ -19,6 +19,8 @@ from pyspark.sql.types import (
     StringType,
 )
 
+from .. import codec
+from ..config import ALG_EMPTY, ALG_EXPLICIT, ALG_FULL, ALG_SPARSE, HLLConfig
 from ..core.hll import HLL
 
 
@@ -35,14 +37,14 @@ def hll_cardinality_udf(sketches: pd.Series) -> pd.Series:
 def hll_to_hex_udf(sketches: pd.Series) -> pd.Series:
     """Spec bytes -> '/x…' hex string (postgresql-hll interop,
     src/util.js:167-174)."""
-    return sketches.map(lambda b: None if b is None else "/x" + bytes(b).hex())
+    return sketches.map(lambda b: None if b is None else codec.to_hex(bytes(b)))
 
 
 @pandas_udf(BinaryType())
 def hll_from_hex_udf(hexes: pd.Series) -> pd.Series:
     """'/x…' (any 2-char prefix) hex string -> spec bytes
     (src/util.js:145-147)."""
-    return hexes.map(lambda s: None if s is None else bytes.fromhex(s[2:]))
+    return hexes.map(lambda s: None if s is None else codec.from_hex(s))
 
 
 @pandas_udf(BinaryType())
@@ -74,7 +76,9 @@ def hll_fold_udf(sketches: pd.Series, log2m: pd.Series) -> pd.Series:
     )
 
 
-_ALG_NAMES = {1: "EMPTY", 2: "EXPLICIT", 3: "SPARSE", 4: "FULL"}
+_ALG_NAMES = {
+    ALG_EMPTY: "EMPTY", ALG_EXPLICIT: "EXPLICIT", ALG_SPARSE: "SPARSE", ALG_FULL: "FULL"
+}
 
 
 @pandas_udf(IntegerType())
@@ -117,8 +121,6 @@ def hll_type_udf(sketches: pd.Series) -> pd.Series:
 def hll_error_bound_udf(sketches: pd.Series) -> pd.Series:
     """Relative error bound 1.04/sqrt(2^log2m) of each sketch
     (src/hll.js cardinality_error; header-only)."""
-    from ..config import HLLConfig
-
     return sketches.map(
         lambda b: None
         if b is None

@@ -55,7 +55,7 @@ class TestDataV1:
         hexs, payload_json, card = row
         sketch = HLL.from_hex(hexs)
         payload = json.loads(payload_json)
-        if sketch.algorithm == ALG_EXPLICIT:
+        if sketch.storage_algorithm == ALG_EXPLICIT:
             # for EXPLICIT rows the second column is the raw signed-64
             # value list, and our native explicit mode keeps exact counts
             expected = {int(v) & 0xFFFFFFFFFFFFFFFF for v in payload}

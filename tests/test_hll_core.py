@@ -439,7 +439,7 @@ def test_decode_cutoff_disabled_explicit_roundtrip():
     blob[2] = 0x00  # the reference's constant cutoff byte
     back = HLL.from_bytes(bytes(blob))
     assert back.storage_algorithm == ALG_EXPLICIT
-    assert back._regs is None and back._sparse is None
+    assert back._regs is None
     again = HLL.from_bytes(back.to_bytes())
     assert again.cardinality() == 2
 
@@ -499,3 +499,87 @@ def test_union_with_empty_is_identity_in_every_mode():
         assert a._explicit is not None and a.cardinality() == 100
         assert bytes(a.to_bytes()) == before
 
+
+
+# ---------------------------------------------------- union mode lattice --
+
+# format code and sha256[:16] of a.clone().union(b).to_bytes() at log2m 11,
+# rw 5, for every ordered pair of the five states below
+_LATTICE = {
+    ("EMPTY", "EMPTY"): (1, "60de1d9177d1a705"),
+    ("EMPTY", "EXPLICIT"): (2, "2bbf7e602b9e093f"),
+    ("EMPTY", "SPARSE"): (3, "6d3f925e907c68e8"),
+    ("EMPTY", "FULL_FEW"): (4, "1338e24c81fc7918"),
+    ("EMPTY", "FULL"): (4, "47ef0ef40a86d080"),
+    ("EXPLICIT", "EMPTY"): (2, "2bbf7e602b9e093f"),
+    ("EXPLICIT", "EXPLICIT"): (2, "2bbf7e602b9e093f"),
+    ("EXPLICIT", "SPARSE"): (3, "5e7dbc854644dfc0"),
+    ("EXPLICIT", "FULL_FEW"): (4, "82bd3eb6b8ea3f25"),
+    ("EXPLICIT", "FULL"): (4, "e9a4ac033c7f993c"),
+    ("SPARSE", "EMPTY"): (3, "b52973b8d3221c95"),
+    ("SPARSE", "EXPLICIT"): (3, "a6200131d77b3f2d"),
+    ("SPARSE", "SPARSE"): (3, "b52973b8d3221c95"),
+    ("SPARSE", "FULL_FEW"): (4, "658abcbb998dd95c"),
+    ("SPARSE", "FULL"): (4, "e14b233624292cb5"),
+    ("FULL_FEW", "EMPTY"): (4, "e884814d50b7ac5e"),
+    ("FULL_FEW", "EXPLICIT"): (4, "24d68b57aa05e3fe"),
+    ("FULL_FEW", "SPARSE"): (4, "658abcbb998dd95c"),
+    ("FULL_FEW", "FULL_FEW"): (4, "e884814d50b7ac5e"),
+    ("FULL_FEW", "FULL"): (4, "8d2c711a43ec0729"),
+    ("FULL", "EMPTY"): (4, "bf297dfc685f39e1"),
+    ("FULL", "EXPLICIT"): (4, "e0e2e5a99d6793df"),
+    ("FULL", "SPARSE"): (4, "e14b233624292cb5"),
+    ("FULL", "FULL_FEW"): (4, "8d2c711a43ec0729"),
+    ("FULL", "FULL"): (4, "bf297dfc685f39e1"),
+}
+
+
+def _lattice_states():
+    cfg = HLLConfig(11, 5)
+
+    def h(n, seed):
+        return np.random.default_rng(seed).integers(0, 2**64, size=n, dtype=np.uint64)
+
+    # a FULL blob with the sparse bit set and few registers: it stays FULL
+    # on decode, and so must every union it takes part in
+    few = HLL(cfg, explicit_threshold=0, sparse_on=False).add_raw64(h(30, 4))
+    blob = bytearray(few.to_bytes())
+    blob[2] |= 0x40
+    return {
+        "EMPTY": HLL(cfg),
+        "EXPLICIT": HLL(cfg).add_raw64(h(20, 1)),
+        "SPARSE": HLL(cfg, explicit_threshold=0).add_raw64(h(200, 2)),
+        "FULL_FEW": HLL.from_bytes(bytes(blob)),
+        "FULL": HLL(cfg, explicit_threshold=0).add_raw64(h(5000, 3)),
+    }
+
+
+def test_union_mode_lattice_pinned():
+    import hashlib
+
+    states = _lattice_states()
+    assert [s.storage_algorithm for s in states.values()] == [1, 2, 3, 4, 4]
+    got = {}
+    for a, sa in states.items():
+        for b, sb in states.items():
+            u = sa.clone().union(sb)
+            got[(a, b)] = (
+                u.storage_algorithm,
+                hashlib.sha256(u.to_bytes()).hexdigest()[:16],
+            )
+    assert got == _LATTICE
+
+
+def test_sparse_decode_last_write_wins():
+    """Duplicate indexes in a SPARSE body resolve to the last word
+    (src/hll.js:693-696), whatever order numpy assigns them in."""
+    from js_hll_spark.codec import _pack_words
+
+    words = [(5, 3), (9, 2), (5, 1), (9, 7), (700, 4)]
+    body = _pack_words(np.array([(i << 5) | v for i, v in words], dtype=np.uint64), 16)
+    s = HLL.from_bytes(bytes.fromhex("138b48") + body)
+    regs = s.registers()
+    assert np.flatnonzero(regs).tolist() == [5, 9, 700]
+    assert regs[[5, 9, 700]].tolist() == [1, 7, 4]
+    assert s.to_bytes().hex() == "138b4800a101275784"
+    assert s.algorithm_cardinality() == 3.0021994137521975

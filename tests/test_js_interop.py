@@ -17,6 +17,7 @@ import numpy as np
 import pytest
 
 from js_hll_spark import HLL, HLLConfig
+from js_hll_spark.config import ALG_SPARSE
 
 NODE = shutil.which("node")
 pytestmark = pytest.mark.skipif(NODE is None, reason="node not available")
@@ -175,7 +176,7 @@ def test_reference_decodes_random_config_sweep():
             s = HLL(cfg, explicit_threshold=0)
             n = max(1, int(cfg.sparse_threshold * 0.6))
             s.add_raw64(rand_hashes(n, 100 + i))
-            if s._sparse is None:
+            if s.storage_algorithm != ALG_SPARSE:
                 continue  # promotion crossed the threshold
             case_values = None
             mode = "Sparse"
