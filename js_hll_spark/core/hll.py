@@ -355,12 +355,15 @@ class HLL:
     ) -> "HLL":
         if target.log2m > self.config.log2m or target.regwidth > self.config.regwidth:
             raise ValueError("can only fold to smaller log2m / narrower regwidth")
+        # the folded sketch keeps the source's storage settings; its own
+        # promotion rule picks SPARSE or FULL for the folded registers
+        out = HLL(
+            target,
+            explicit_threshold=self.explicit_threshold,
+            sparse_on=self.sparse_on,
+            cutoff_byte=self.cutoff_byte,
+        )
         if self._explicit is not None:
-            out = HLL(
-                target,
-                explicit_threshold=self.explicit_threshold,
-                sparse_on=self.sparse_on,
-            )
             out._set_explicit(set(self._explicit))
             return out
         regs = self.registers()
@@ -371,8 +374,7 @@ class HLL:
         else:
             regs = regs.copy()
         np.minimum(regs, target.max_register_value, out=regs)
-        out = HLL(target, explicit_threshold=0, sparse_on=False)
-        out._set_registers(regs, full=True)
+        out._set_registers(regs, full=self._full)
         return out
 
     # --------------------------------------------------------- estimate --

@@ -5,13 +5,16 @@ of MurmurHash3 x64-128 under a constant seed shared by every sketch that
 will ever be unioned (/root/reference/README.markdown:47-58, example seed
 0x123456 at README.markdown:81).
 
-Two paths:
+Three paths:
 
 - **JVM fast path** (production pipelines): ``pyspark.sql.functions.xxhash64``
   — a 64-bit uniform hash computed JVM-side inside whole-stage codegen, so
   raw values never cross the Arrow boundary. The reference's own test
   vectors pin *post-hash* behavior only, so the hash function is a config
   knob; the only hard rule is the constant shared seed.
+- **The same xxhash64 in numpy** (``xxhash64``): for a Python kernel that
+  hashes strings it made itself (the Bloom contamination kernels hash the
+  shingles they window), so the strings need not go back to the JVM.
 - **Murmur3 x64-128 (AK convention)**: numpy-vectorized over uint64 lanes
   for already-fixed-width keys, plus a pure-Python scalar for arbitrary
   byte strings (tests / low-volume interop with AK-ecosystem sketches).
@@ -148,16 +151,12 @@ def _le64(bytes_mat: np.ndarray) -> np.ndarray:
     )
 
 
-def murmur3_64_bytes(values, seed: int = DEFAULT_SEED) -> np.ndarray:
-    """Vectorized murmur3 x64-128 lower-64 over VARIABLE-LENGTH byte
-    strings (list/Series of bytes or str, or an Arrow string/binary
-    array) — bit-identical to the scalar
-    ``murmur3_64`` (asserted in tests). Rows are processed in lockstep
-    over 16-byte blocks with per-row active masks; the gather is fancy
-    indexing into one concatenated buffer, so the whole batch stays in
-    numpy (no per-row Python in the loop body)."""
-    # pyarrow does the UTF-8 encode + offset layout in C (zero per-row
-    # Python)
+def _byte_rows(values, who: str):
+    """The Arrow binary layout of ``values`` (list/Series of bytes or str,
+    or an Arrow string/binary array, sliced or not): (the rows' bytes
+    followed by 16 zero bytes, each row's start in them, each row's
+    length). pyarrow does the UTF-8 encode and the offset layout in C (no
+    per-row Python); NULL raises."""
     import pyarrow as pa
 
     if isinstance(values, pa.Array):
@@ -170,19 +169,36 @@ def murmur3_64_bytes(values, seed: int = DEFAULT_SEED) -> np.ndarray:
     else:
         arr = pa.array(values, type=pa.string())
     if arr.null_count:
-        raise ValueError("murmur3_64_bytes: null values not supported")
+        raise ValueError(f"{who}: null values not supported")
     n = len(arr)
     if n == 0:
-        return np.zeros(0, dtype=_U)
-    voffset = arr.offset
-    raw_offsets = np.frombuffer(arr.buffers()[1], dtype=np.int32)
-    offsets = raw_offsets[voffset : voffset + n + 1].astype(np.int64)
+        return np.zeros(16, dtype=np.uint8), np.zeros(0, np.int64), np.zeros(0, np.int64)
+    _, raw_offsets, raw_data = arr.buffers()
+    offsets = np.frombuffer(raw_offsets, dtype=np.int32)[arr.offset : arr.offset + n + 1]
+    offsets = offsets.astype(np.int64)
     # a sliced array shares its parent's data buffer: copy only the
     # slice's bytes into the zero-padded buffer
-    data = np.frombuffer(arr.buffers()[2], dtype=np.uint8)[offsets[0] : offsets[-1]]
-    lengths = np.diff(offsets)
+    data = (
+        np.frombuffer(raw_data, dtype=np.uint8)[offsets[0] : offsets[-1]]
+        if raw_data is not None
+        else np.zeros(0, dtype=np.uint8)
+    )
     buf = np.concatenate([data, np.zeros(16, dtype=np.uint8)])
-    offsets = offsets[:-1] - offsets[0]
+    return buf, offsets[:-1] - offsets[0], np.diff(offsets)
+
+
+def murmur3_64_bytes(values, seed: int = DEFAULT_SEED) -> np.ndarray:
+    """Vectorized murmur3 x64-128 lower-64 over VARIABLE-LENGTH byte
+    strings (list/Series of bytes or str, or an Arrow string/binary
+    array) — bit-identical to the scalar
+    ``murmur3_64`` (asserted in tests). Rows are processed in lockstep
+    over 16-byte blocks with per-row active masks; the gather is fancy
+    indexing into one concatenated buffer, so the whole batch stays in
+    numpy (no per-row Python in the loop body)."""
+    buf, offsets, lengths = _byte_rows(values, "murmur3_64_bytes")
+    n = len(lengths)
+    if n == 0:
+        return np.zeros(0, dtype=_U)
 
     from numpy.lib.stride_tricks import sliding_window_view
 
@@ -229,6 +245,94 @@ def murmur3_64_bytes(values, seed: int = DEFAULT_SEED) -> np.ndarray:
         h1 = _np_fmix64(h1)
         h2 = _np_fmix64(h2)
         return h1 + h2
+
+
+# XXH64 primes (Yann Collet's xxHash spec, as in Spark's XXH64)
+_P1 = 0x9E3779B185EBCA87
+_P2 = 0xC2B2AE3D27D4EB4F
+_P3 = 0x165667B19E3779F9
+_P4 = 0x85EBCA77C2B2AE63
+_P5 = 0x27D4EB2F165667C5
+
+# Spark's ``xxhash64`` seed
+SPARK_XXHASH_SEED = 42
+
+
+def _le_words(buf: np.ndarray, width: int) -> np.ndarray:
+    """Zero-copy unaligned view of ``buf``: element i is the ``width``-byte
+    little-endian word starting at byte i."""
+    return np.ndarray(
+        (len(buf) - width + 1,), dtype=f"<u{width}", buffer=buf, strides=(1,)
+    )
+
+
+def xxhash64(values, seed: int = SPARK_XXHASH_SEED) -> np.ndarray:
+    """Vectorized XXH64 over VARIABLE-LENGTH byte strings (same inputs as
+    :func:`murmur3_64_bytes`), as uint64 — bit-identical to Spark's
+    ``F.xxhash64`` of a string or binary column at its seed 42 (asserted
+    against the JVM in tests; ``.view(np.int64)`` gives Spark's signed
+    value). Rows run in lockstep: the 32-byte stripes of rows that have
+    them, then up to three 8-byte words, one 4-byte word and three bytes,
+    each step a gather of unaligned little-endian words from one
+    buffer."""
+    buf, starts, lengths = _byte_rows(values, "xxhash64")
+    n = len(lengths)
+    if n == 0:
+        return np.zeros(0, dtype=_U)
+    w64, w32 = _le_words(buf, 8), _le_words(buf, 4)
+    p1, p2, p3, p4, p5 = _U(_P1), _U(_P2), _U(_P3), _U(_P4), _U(_P5)
+
+    def round_(acc, word):
+        return _np_rotl64(acc + word * p2, 31) * p1
+
+    with np.errstate(over="ignore"):
+        h = np.full(n, (seed + _P5) & _MASK64, dtype=_U)
+        nstripes = lengths // 32
+        big = np.flatnonzero(nstripes)
+        if big.size:
+            s, ns = starts[big], nstripes[big]
+            v = [
+                np.full(big.size, (seed + d) & _MASK64, dtype=_U)
+                for d in (_P1 + _P2, _P2, 0, -_P1)
+            ]
+            for b in range(int(ns.max())):
+                act = np.flatnonzero(ns > b)
+                off = s[act] + 32 * b
+                for j in range(4):
+                    v[j][act] = round_(v[j][act], w64[off + 8 * j])
+            hb = (
+                _np_rotl64(v[0], 1) + _np_rotl64(v[1], 7)
+                + _np_rotl64(v[2], 12) + _np_rotl64(v[3], 18)
+            )
+            for vj in v:
+                hb = (hb ^ round_(_U(0), vj)) * p1 + p4
+            h[big] = hb
+        h += lengths.astype(_U)
+
+        pos = starts + 32 * nstripes
+        nwords = (lengths % 32) // 8
+        for j in range(int(nwords.max())):
+            act = np.flatnonzero(nwords > j)
+            k = round_(_U(0), w64[pos[act] + 8 * j])
+            h[act] = _np_rotl64(h[act] ^ k, 27) * p1 + p4
+        pos = starts + (lengths & ~7)
+        act = np.flatnonzero(lengths & 4)
+        if act.size:
+            k = w32[pos[act]].astype(_U) * p1
+            h[act] = _np_rotl64(h[act] ^ k, 23) * p2 + p3
+            pos[act] += 4
+        nbytes = lengths & 3
+        for j in range(int(nbytes.max())):
+            act = np.flatnonzero(nbytes > j)
+            k = buf[pos[act] + j].astype(_U) * p5
+            h[act] = _np_rotl64(h[act] ^ k, 11) * p1
+
+        h ^= h >> _U(33)
+        h *= p2
+        h ^= h >> _U(29)
+        h *= p3
+        h ^= h >> _U(32)
+        return h
 
 
 def to_uint64(arr: np.ndarray) -> np.ndarray:

@@ -22,55 +22,64 @@ frac)``:
   driver np.unique-merges them (8 B per distinct eval shingle of driver
   memory — the small-eval-side assumption the operator rests on),
   auto-sizes the filter from the exact count, and builds the Bloom blob
-  locally. The blob broadcasts once and one scalar Arrow UDF probes it,
-  setting a hit flag per training posting in a vectorized numpy pass;
-  the ids never leave the JVM, and Catalyst's partial aggregate
-  collapses the flags per doc before the shuffle, so the eval shingles
-  themselves NEVER shuffle. (With an explicit ``n_bits`` the
-  driver-merge build still collects the distinct hash set — pick the
-  exact tier instead if eval-side driver memory is the constraint.)
-  Both tiers share one aggregate tail (``_per_doc``): count and hit sum
-  per ``__id`` -> ``frac`` -> ``min_frac``, so a NULL or 2^53-scale id
+  locally. The blob broadcasts once, and each side of the operator is
+  ONE Arrow map over the Catalyst tokens: the eval kernel windows,
+  hashes and dedups its partition's shingles; the probe kernel windows
+  each training doc's distinct shingles, hashes them, probes the blob
+  and emits one ``(__id, __n, __hit)`` row per doc (its shingle and hit
+  counts). No shingle string leaves the Python worker and no stage
+  chains a second Python runner, so the eval shingles themselves NEVER
+  shuffle and only one small row per doc reaches the aggregate. (With
+  an explicit ``n_bits`` the driver-merge build still collects the
+  distinct hash set — pick the exact tier instead if eval-side driver
+  memory is the constraint.)
+  Both tiers share one aggregate tail (``_per_doc``): shingle and hit
+  sums per ``__id`` -> ``frac`` -> ``min_frac``, so a NULL or 2^53-scale id
   groups the same way in both. Bloom's one-sided error means
   ``n_contaminated`` can only over-count (never a missed leak — the
   safe direction for decontamination); at the pytest sizing no false
   positive fires and the tier equals the exact one row-for-row.
 
-Shingle universe: distinct word n-gram shingles per doc. The training
-postings (``dedup.shingle_postings``) and the eval shingles
-(``eval_shingles``) come from the same Catalyst ``tokens()`` and the
-same Arrow window kernel, so an eval doc copied verbatim into training
+Shingle universe: distinct word n-gram shingles per doc. Both sides of
+both tiers (``dedup.shingle_postings``, ``eval_shingles`` and the Bloom
+kernels) come from the same Catalyst ``tokens()`` and the same window
+step (``dedup._distinct_shingles``), so an eval doc copied verbatim into training
 reports ``frac`` 1.0 whatever its characters, and ``frac`` is a
 fraction of the SAME distinct-shingle sets ``ngram_jaccard`` scores.
 Docs with NULL text produce no shingles and are never reported
 (consistent with count-distinct semantics: nothing to leak).
 
-Hash convention: the eval side's JVM ``xxhash64(sh)`` values are
-collected and the Bloom blob is built from them by
-``BloomFilter.add_hashed``; probes carry the same ``xxhash64(sh)`` of
-each training posting through ``contains_hashed``, so build and probe
-conventions match by construction.
+Hash convention: both tiers key a shingle by Spark's ``xxhash64`` at
+seed 42. The exact tier computes it in the JVM (``F.xxhash64``, which
+the DuckDB oracle and the plan audits read); the Bloom tier computes
+the same value in numpy (``hashing.xxhash64``, bit-identical, asserted
+against the JVM in tests) inside its two kernels, so the blob's bits
+and every probe derive from one hash of the same shingle string.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+import math
 
+import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import BinaryType, LongType, StructField, StructType
 
-from .dedup import _postings, _shingle_rows
+from ..core.bloom import BloomFilter
+from ..hashing import xxhash64
+from .dedup import _distinct_shingles, _postings, _shingle_rows, _token_rows, _token_slices
 
 
 def _per_doc(tagged: DataFrame, id_col: str, min_frac: float) -> DataFrame:
-    """The one aggregate tail of both tiers: ``(__id, __hit)`` posting
-    rows (``__hit`` 1 for an eval shingle, 0 or NULL otherwise) ->
-    ``(id_col, n_shingles, n_contaminated, frac)`` per doc, filtered on
-    the rounded ``frac``."""
+    """The one aggregate tail of both tiers: ``(__id, __n, __hit)`` rows
+    (``__n`` shingles, of which ``__hit`` are eval shingles; a NULL
+    ``__hit`` is 0) -> ``(id_col, n_shingles, n_contaminated, frac)`` per
+    doc, filtered on the rounded ``frac``."""
     out = (
         tagged.groupBy("__id")
         .agg(
-            F.count(F.lit(1)).alias("n_shingles"),
+            F.sum("__n").alias("n_shingles"),
             F.sum(F.coalesce("__hit", F.lit(0))).alias("n_contaminated"),
         )
         .select(
@@ -93,11 +102,11 @@ def eval_shingles(
 ) -> DataFrame:
     """The eval corpus' shingle stream (column ``sh``, per-doc
     distinct), from the same tokenizer and Arrow kernel as the training
-    postings (``dedup._shingle_rows``). Deliberately NOT globally
-    distinct: the exact tier dedups on 8-byte hashes (a string-keyed
-    distinct would shuffle the shingle text itself) and the Bloom build
-    is idempotent per value (duplicate updates OR the same bits), so
-    neither consumer needs — or should pay for — a string shuffle here."""
+    postings (``dedup._shingle_rows``); the exact tier's eval side.
+    Deliberately NOT globally distinct: the exact tier dedups on 8-byte
+    hashes (a string-keyed distinct would shuffle the shingle text
+    itself), so it neither needs nor should pay for a string shuffle
+    here."""
     return _shingle_rows(eval_df, text_col, None, shingle_n)
 
 
@@ -143,8 +152,61 @@ def contamination_exact(
     # ~2x the wall time at sf0.1 for zero benefit.
     tagged = tr.join(
         ev.withColumn("__hit", F.lit(1)), "__h", "left"
-    )  # no broadcast hint: AQE decides (module doc)
+    ).withColumn("__n", F.lit(1))  # no broadcast hint: AQE decides (module doc)
     return _per_doc(tagged, id_col, min_frac)
+
+
+def _eval_hashes(eval_df: DataFrame, text_col: str, shingle_n: int) -> DataFrame:
+    """The Bloom tier's eval side, collected as its one job: one Arrow map
+    over the eval tokens whose partitions each emit one ``__hs`` blob,
+    their distinct shingle hashes as little-endian uint64."""
+
+    def eval_hashes(batches):
+        parts = [
+            xxhash64(_distinct_shingles(lens, flat, shingle_n)[1])
+            for batch in batches
+            if batch.num_rows
+            for _, lens, flat in _token_slices(batch)
+        ]
+        if parts:
+            arr = np.unique(np.concatenate(parts))
+            yield pa.record_batch([pa.array([arr.tobytes()], pa.binary())], ["__hs"])
+
+    return _token_rows(eval_df, text_col, None).mapInArrow(
+        eval_hashes, schema=StructType([StructField("__hs", BinaryType())])
+    )
+
+
+def _bloom_probe(blob, shingle_n: int):
+    """mapInArrow kernel of the Bloom tier's probe side: ``(__id,
+    __toks)`` token rows, or the ``(__id, sh)`` rows of a posting table
+    (one shingle per row), in; one ``(__id, __n, __hit)`` row per row
+    with any shingle out: its distinct shingle count and how many of
+    them the broadcast Bloom ``blob`` holds."""
+
+    def bloom_probe(batches):
+        bf = BloomFilter.from_bytes(blob.value)
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            if "sh" in batch.schema.names:
+                pieces = [(batch, np.arange(batch.num_rows), batch.column("sh"))]
+            else:
+                pieces = (
+                    (part, *_distinct_shingles(lens, flat, shingle_n))
+                    for part, lens, flat in _token_slices(batch)
+                )
+            for part, owner, sh in pieces:
+                hit = bf.contains_hashed(xxhash64(sh))
+                n_sh = np.bincount(owner, minlength=part.num_rows)
+                n_hit = np.bincount(owner, weights=hit, minlength=part.num_rows)
+                keep = np.flatnonzero(n_sh)
+                yield pa.record_batch(
+                    [part.column("__id").take(keep), n_sh[keep], n_hit[keep].astype(np.int64)],
+                    names=["__id", "__n", "__hit"],
+                )
+
+    return bloom_probe
 
 
 def contamination_bloom(
@@ -178,46 +240,26 @@ def contamination_bloom(
     2^14-bit floor would otherwise ask for hundreds of index rows per
     probe batch for no FP benefit); a given ``n_hashes`` is used as is.
 
-    The eval side runs as ONE job (VERDICT r5 #3): each partition emits
-    its distinct 8-byte shingle hashes, the driver merges them with one
-    ``np.unique`` — giving the exact distinct count for sizing AND the
-    hash set to build the blob from, locally, with zero further jobs.
-    Driver materialization is 8 bytes per distinct eval shingle, the
-    same small-eval-side assumption the whole operator rests on (MBs for
-    real benchmark suites; the blob itself was already a driver
-    collect). Probe-side convention is unchanged: the blob's positions
-    are derived from the same JVM ``xxhash64(sh)`` the probe carries.
+    The eval side runs as ONE job (VERDICT r5 #3): one Arrow map per
+    partition windows, hashes and dedups the eval shingles and emits
+    their distinct 8-byte hashes (:func:`_eval_hashes`); the driver
+    merges them with one ``np.unique`` — giving the exact distinct count
+    for sizing AND the hash set to build the blob from, locally, with
+    zero further jobs. Driver materialization is 8 bytes per distinct
+    eval shingle, the same small-eval-side assumption the whole operator
+    rests on (MBs for real benchmark suites; the blob itself was already
+    a driver collect). The probe side is one Arrow map too
+    (:func:`_bloom_probe`), over the training tokens or the rows of a
+    ``postings`` table; both sides hash with ``hashing.xxhash64``.
     Construction stays EAGER (the one job fires now): the blob must
     exist before the probe plan can close over its broadcast.
     """
-    import math
-
-    import numpy as np
-    from pyspark.sql.types import BinaryType, StructField, StructType
-
-    from ..core.bloom import BloomFilter
-    from ..hashing import to_uint64
-
     if eval_df is None:
         raise ValueError("pass eval_df (the evaluation corpus)")
-    tr = _postings(train, postings, text_col, id_col, shingle_n).select(
-        "__id", F.xxhash64("sh").alias("__h")
-    )
-    ev = eval_shingles(eval_df, text_col, shingle_n=shingle_n).select(
-        F.xxhash64("sh").alias("__h")
-    )
-
-    def distinct_partial(batches):
-        parts = [
-            to_uint64(b.column(0).to_numpy()) for b in batches if b.num_rows
-        ]
-        if parts:
-            arr = np.unique(np.concatenate(parts))
-            yield pa.record_batch([pa.array([arr.tobytes()], pa.binary())], ["__hs"])
-
-    hash_rows = ev.mapInArrow(
-        distinct_partial, schema=StructType([StructField("__hs", BinaryType())])
-    ).collect()
+    src = _postings(train, postings, text_col, id_col, shingle_n, shingled=False)
+    if postings is not None:
+        src = src.select("__id", "sh")
+    hash_rows = _eval_hashes(eval_df, text_col, shingle_n).collect()
     hashes = np.unique(
         np.concatenate(
             [np.frombuffer(r[0], dtype=np.uint64) for r in hash_rows]
@@ -242,17 +284,13 @@ def contamination_bloom(
     # stamp the n_bits/8-byte binary onto EVERY posting row through the
     # Arrow boundary — measured as a netty direct-memory OOM at 30M
     # postings x 128 KiB.
-    bc = tr.sparkSession.sparkContext.broadcast(bf.to_bytes())
-
-    def bloom_hit(hs: Iterator[pa.Array]) -> Iterator[pa.Array]:
-        bf = BloomFilter.from_bytes(bc.value)
-        for h in hs:
-            hit = bf.contains_hashed(to_uint64(h.to_numpy()))
-            yield pa.array(hit.astype(np.int32))
-
-    tagged = tr.select(
-        "__id", F.arrow_udf(bloom_hit, "int")(F.col("__h")).alias("__hit")
-    )
+    bc = src.sparkSession.sparkContext.broadcast(bf.to_bytes())
+    schema = StructType([
+        StructField("__id", src.schema["__id"].dataType, True),
+        StructField("__n", LongType(), False),
+        StructField("__hit", LongType(), False),
+    ])
+    tagged = src.mapInArrow(_bloom_probe(bc, shingle_n), schema=schema)
     result = _per_doc(tagged, id_col, min_frac)
     # sizing introspection (advisory attributes on the result): what
     # the auto-sizer actually built

@@ -143,52 +143,69 @@ def _token_slices(batch):
         yield batch.slice(lo, hi - lo), lens[lo:hi], flat.slice(t0, ends[hi - 1] - t0)
 
 
+def _distinct_shingles(lens, flat, n: int):
+    """The one window step of the word n-gram shingles, over a token
+    slice (tokens per row ``lens``, the slice's flat ``tokens()``
+    strings): (owner row of each shingle, the shingle strings), distinct
+    per row. A doc of L tokens has max(L - n + 1, 1) windows, the
+    Catalyst ``slice``/``array_join`` semantics: a doc shorter than n is
+    one shingle of all its tokens. NULL text has none."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    nwin = np.where(lens > 0, np.maximum(lens - n + 1, 1), 0)
+    owner = np.repeat(np.arange(len(lens)), nwin)
+    first = (np.cumsum(lens) - lens)[owner]
+    pos = first + np.arange(len(owner)) - np.repeat(np.cumsum(nwin) - nwin, nwin)
+    end = first + lens[owner]
+    # past-the-end tokens of a short doc are NULL and skipped; the first
+    # is always present, so no window is all NULL (pyarrow 16's join
+    # drops an all-NULL row from its output)
+    grams = [flat.take(pa.array(pos + j, mask=pos + j >= end)) for j in range(n)]
+    sh = pc.binary_join_element_wise(*grams, " ", null_handling="skip")
+    rows = pa.table({"o": owner, "sh": sh})
+    rows = rows.group_by(["o", "sh"], use_threads=False).aggregate([])
+    return rows["o"].to_numpy(), rows["sh"].combine_chunks()
+
+
 def _shingle_kernel(n: int, keep_id: bool):
     """mapInArrow kernel of the word n-gram shingles: (``__id``?,
     ``__toks``) rows in, one (``__id``?, ``sh``) row per distinct shingle
-    of each row out. A doc of L tokens has max(L - n + 1, 1) windows, the
-    Catalyst ``slice``/``array_join`` semantics: a doc shorter than n is
-    one shingle of all its tokens. NULL text has none."""
+    of each row out (:func:`_distinct_shingles`)."""
     names = ["__id", "sh"] if keep_id else ["sh"]
 
     def shingle_kernel(batches):
         import pyarrow as pa
-        import pyarrow.compute as pc
 
         for batch in batches:
             if batch.num_rows == 0:
                 continue
             for part, lens, flat in _token_slices(batch):
-                nwin = np.where(lens > 0, np.maximum(lens - n + 1, 1), 0)
-                owner = np.repeat(np.arange(len(lens)), nwin)
-                first = (np.cumsum(lens) - lens)[owner]
-                pos = first + np.arange(len(owner)) - np.repeat(np.cumsum(nwin) - nwin, nwin)
-                end = first + lens[owner]
-                # past-the-end tokens of a short doc are NULL and skipped;
-                # the first is always present, so no window is all NULL
-                # (pyarrow 16's join drops an all-NULL row from its output)
-                grams = [flat.take(pa.array(pos + j, mask=pos + j >= end)) for j in range(n)]
-                sh = pc.binary_join_element_wise(*grams, " ", null_handling="skip")
-                rows = pa.table({"o": owner, "sh": sh})
-                rows = rows.group_by(["o", "sh"], use_threads=False).aggregate([])
-                cols = [rows["sh"]]
+                owner, sh = _distinct_shingles(lens, flat, n)
+                cols = [sh]
                 if keep_id:
-                    cols.insert(0, pc.take(part.column("__id"), rows["o"]))
-                yield from pa.table(cols, names=names).to_batches()
+                    cols.insert(0, part.column("__id").take(owner))
+                yield pa.record_batch(cols, names=names)
 
     return shingle_kernel
 
 
+def _token_rows(df: DataFrame, text_col: str, id_col: str | None) -> DataFrame:
+    """``(__id, __toks)`` rows, or ``(__toks)`` rows when ``id_col`` is
+    None: Catalyst normalizes and splits ``text_col`` (``text.tokens``,
+    the library's one tokenizer)."""
+    ids = [] if id_col is None else [F.col(id_col).alias("__id")]
+    return df.select(*ids, tokens(text_col).alias("__toks"))
+
+
 def _shingle_rows(df: DataFrame, text_col: str, id_col: str | None, n: int) -> DataFrame:
     """Per-row distinct shingles of ``text_col``: ``(__id, sh)`` rows, or
-    ``(sh)`` rows when ``id_col`` is None. Catalyst normalizes and splits
-    (``text.tokens``, the library's one tokenizer); one Arrow map windows
-    the tokens (:func:`_shingle_kernel`)."""
-    ids = [] if id_col is None else [F.col(id_col).alias("__id")]
-    src = df.select(*ids, tokens(text_col).alias("__toks"))
-    fields = [StructField("__id", src.schema["__id"].dataType, True)] if ids else []
+    ``(sh)`` rows when ``id_col`` is None. One Arrow map windows the
+    tokens (:func:`_shingle_kernel`)."""
+    src = _token_rows(df, text_col, id_col)
+    fields = [] if id_col is None else [StructField("__id", src.schema["__id"].dataType, True)]
     schema = StructType(fields + [StructField("sh", StringType(), True)])
-    return src.mapInArrow(_shingle_kernel(n, bool(ids)), schema=schema)
+    return src.mapInArrow(_shingle_kernel(n, id_col is not None), schema=schema)
 
 
 def _postings(
@@ -197,10 +214,14 @@ def _postings(
     text_col: str,
     id_col: str,
     shingle_n: int,
+    *,
+    shingled: bool = True,
 ) -> DataFrame:
     """The caller's ``postings`` (a :func:`shingle_postings` table), or
     else the lazy posting chain of the raw documents ``df``: every
-    shingle-based tier takes either one."""
+    shingle-based tier takes either one. ``shingled=False`` stops the
+    chain at the token rows (:func:`_token_rows`), for a kernel that
+    windows the tokens itself."""
     if postings is not None:
         return postings
     if df is None:
@@ -208,6 +229,8 @@ def _postings(
             "pass raw documents (df/train) or postings (a "
             "shingle_postings table) — with neither there is nothing to shingle"
         )
+    if not shingled:
+        return _token_rows(df, text_col, id_col)
     return _shingle_rows(df, text_col, id_col, shingle_n)
 
 

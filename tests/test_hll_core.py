@@ -288,6 +288,35 @@ def test_fold_validates_target():
         s.fold(12)
 
 
+def test_fold_keeps_storage_settings():
+    """A fold keeps the source's storage settings: a SPARSE sketch folds
+    to SPARSE with its cutoff byte, and its registers and estimate equal
+    the fold of the same values held FULL, which stays FULL. A
+    mismatched-config union of the SPARSE sketch stays SPARSE too."""
+    from js_hll_spark.config import ALG_FULL, ALG_SPARSE
+
+    values = rand_hashes(200, 11)
+    sparse = HLL(HLLConfig(11, 5))
+    sparse.add_raw64(values)
+    full = full_hll(11, 5)
+    full.add_raw64(values)
+    assert sparse.storage_algorithm == ALG_SPARSE
+    for folded in (sparse.fold(10), sparse.fold_to(HLLConfig(10, 4))):
+        ref = full.fold_to(folded.config)
+        assert folded.storage_algorithm == ALG_SPARSE
+        assert ref.storage_algorithm == ALG_FULL
+        assert folded.cutoff_byte == sparse.cutoff_byte
+        assert folded.to_bytes()[2] == sparse.to_bytes()[2]
+        np.testing.assert_array_equal(folded.registers(), ref.registers())
+        assert folded.algorithm_cardinality() == ref.algorithm_cardinality()
+    small = HLL(HLLConfig(10, 5))
+    small.add_raw64(rand_hashes(3, 12))
+    u = sparse.clone().union(small)
+    assert u.config == HLLConfig(10, 5)
+    assert u.storage_algorithm == ALG_SPARSE
+    assert full.clone().union(small).storage_algorithm == ALG_FULL
+
+
 def test_fold_same_log2m_is_clone():
     s = full_hll(11, 5)
     s.add_raw64(rand_hashes(100, 5))

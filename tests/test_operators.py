@@ -185,6 +185,30 @@ def test_null_and_wide_ids_through_shared_postings(spark):
     assert pairs == [(2**53, 2**53 + 1, 1.0)]
 
 
+def test_bloom_tier_postings_match_raw_documents(spark):
+    """The Bloom tier given shingle_postings reports the same rows as over
+    raw documents, a NULL id and ids past float64's exact range (2^53,
+    2^53+1) included."""
+    from js_hll_spark.operators import contamination
+
+    text = "the same five words here"
+    train = spark.createDataFrame(
+        [(None, text), (2**53, text), (2**53 + 1, text), (7, "other words in a row"), (8, None)],
+        "doc_id long, text string",
+    )
+    ev = spark.createDataFrame([(1, text)], "doc_id long, text string")
+
+    def rows(df):
+        return sorted(df.collect(), key=lambda r: (r[0] is not None, r[0] or 0))
+
+    raw = rows(contamination.contamination_bloom(train, ev))
+    shared = rows(contamination.contamination_bloom(None, ev, postings=dedup.shingle_postings(train)))
+    assert shared == raw
+    assert [(r["doc_id"], r["n_shingles"], r["frac"]) for r in raw] == [
+        (None, 3, 1.0), (7, 3, 0.0), (2**53, 3, 1.0), (2**53 + 1, 3, 1.0)
+    ]
+
+
 def test_connected_components_chain_and_singleton(spark):
     """A 4-node chain collapses to one component labeled by its min id
     (needs label propagation across diameter 3, not just direct
@@ -902,6 +926,55 @@ def test_scratch_dir_wipes_at_start_and_guard_raises(spark):
         _guard_explicit_window(df, ["g"], "v", 32, "probe")
 
 
+def _python_nodes(df):
+    """The names of the Python nodes (Arrow, pandas or Python UDF runners)
+    in a DataFrame's executed plan, top down."""
+    import re
+
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    names = re.findall(r"^[\s:+|-]*(\w+)", plan, re.M)
+    return [n for n in names if re.search("Python|Pandas|Arrow", n)]
+
+
+def test_xxhash64_matches_spark(spark, pages):
+    """``hashing.xxhash64`` is bit-identical to Spark's ``xxhash64``:
+    every tail class of the 32-byte stripe, 8-byte word, 4-byte word and
+    byte steps, multi-byte UTF-8 and control characters, binary input, a
+    sliced Arrow array with a nonzero offset and every shingle of the
+    ``pages`` fixture. NULL raises."""
+    import numpy as np
+    import pyarrow as pa
+
+    from js_hll_spark.hashing import xxhash64
+
+    def spark_hashes(values, dtype):
+        df = spark.createDataFrame([(i, v) for i, v in enumerate(values)], f"i int, v {dtype}")
+        rows = df.select("i", F.xxhash64("v").alias("h")).orderBy("i").collect()
+        return [r["h"] for r in rows]
+
+    sizes = list(range(10)) + [15, 16, 31, 32, 33, 63, 64, 65, 100]
+    base = "abcdefghijklmnopqrstuvwxyz0123456789ABCDEFGHIJKLMNOPQRSTUVWXYZ!?" * 2
+    strings = [base[:k] for k in sizes]
+    strings += ["héllo wörld", "日本語のテキスト", "emoji 🙂 here", "\x00\x01\x1f tab\t nl\n", "ß" * 33]
+    assert xxhash64(strings).view(np.int64).tolist() == spark_hashes(strings, "string")
+
+    blobs = [bytes(range(k)) for k in sizes] + [b"\xff" * 40, b"\x00" * 7]
+    assert xxhash64(blobs).view(np.int64).tolist() == spark_hashes(blobs, "binary")
+
+    sliced = pa.array(strings).slice(3, 12)
+    assert sliced.offset == 3
+    assert xxhash64(sliced).view(np.int64).tolist() == spark_hashes(strings[3:15], "string")
+
+    sh = dedup.shingle_postings(pages, "text", "row_id").select(
+        "sh", F.xxhash64("sh").alias("h")
+    ).collect()
+    assert len(sh) > 10_000
+    assert xxhash64([r["sh"] for r in sh]).view(np.int64).tolist() == [r["h"] for r in sh]
+
+    with pytest.raises(ValueError, match="null"):
+        xxhash64(pa.array(["a", None]))
+
+
 def test_contamination_tiers_agree_and_bloom_is_one_sided(spark, pages):
     """Decontamination contract: (1) the webtext construction plants
     true leakage (exact dups span any id split), and the exact tier
@@ -1001,10 +1074,11 @@ def test_contamination_tiers_agree_and_bloom_is_one_sided(spark, pages):
         (2**53, 1.0),
         (2**53 + 1, 0.0),
     ]
-    # the probe is one Arrow UDF over the hash: no pandas step on the path
+    # each side is one Arrow map: the probe's plan holds one MapInArrow
+    # and no other Python node, and so does the eval side's one job
     bloom = contamination.contamination_bloom(tr3, ev2, "text", "row_id")
-    plan = bloom._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" in plan and "MapInPandas" not in plan
+    assert _python_nodes(bloom) == ["MapInArrow"]
+    assert len(_python_nodes(contamination._eval_hashes(ev2, "text", 3))) == 1
 
 
 def test_contamination_requires_inputs(spark, pages):

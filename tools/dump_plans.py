@@ -88,12 +88,13 @@ SHOWCASE = [
         "contamination_check",
         "Decontamination, exact tier: ONE pass over the training posting "
         "chain (left join against the hash-distinct eval shingle keys + "
-        "a single count/sum aggregate — no second scan for sizes); the "
-        "eval side is broadcast by AQE when it fits, with no pinned "
-        "hint. The Bloom tier replaces the join entirely with a KB "
-        "broadcast VARIABLE probed by one scalar Arrow UDF over the "
-        "posting hash (a crossJoin against a blob row would stamp the "
-        "binary onto every posting row).",
+        "a single sum aggregate — no second scan for sizes); the eval "
+        "side is broadcast by AQE when it fits, with no pinned hint. "
+        "The Bloom tier replaces the join entirely with a KB broadcast "
+        "VARIABLE, probed inside ONE Arrow map per side: window, numpy "
+        "xxhash64, probe and per-doc counts in one Python runner (a "
+        "crossJoin against a blob row would stamp the binary onto every "
+        "posting row).",
     ),
 ]
 
